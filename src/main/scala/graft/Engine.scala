@@ -55,6 +55,15 @@ object Engine {
         (parts(0), parts(1))
       })
 
+  /** A numeric `spark.graft.*` setting, `None` when unset. A malformed
+    * value fails here with its key named, never as a bare
+    * NumberFormatException mid-query or a silent fall-back to a default.
+    */
+  def confLong(spark: SparkSession, key: String): Option[Long] =
+    spark.conf.getOption(key).map(raw => raw.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be an integer, got '$raw'")))
+
   /** Register every fixture table under `dir` as a temp view, making
     * `spark.sql(...)` a first-class entry point (SURVEY.md §3.2 entry
     * point 2). View names are the table names (`lineitem`, `orders`, ...).

@@ -75,30 +75,6 @@ object PlanAudit {
       "CartesianProduct(!)" -> plan.contains("CartesianProduct"),
       "SortMergeJoin" -> plan.contains("SortMergeJoin"))
   }
-  /** Execute `df` through ITS OWN QueryExecution (a sink would build a new
-    * one with empty metrics) and print the executed plan with per-node
-    * numOutputRows / time metrics — the tool that located the l2b
-    * single-task AQE-coalesce pathology (120M join rows pipelined into one
-    * partition because the upstream frame was small in bytes).
-    */
-  def dumpMetrics(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.queryExecution.toRdd.foreach(_ => ())
-    def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
-      val m = p.metrics.view
-        .filterKeys(k => k == "numOutputRows" || k.toLowerCase.contains("time"))
-        .map { case (k, v) => s"$k=${v.value}" }.mkString(" ")
-      println(("  " * depth) + p.nodeName + (if (m.isEmpty) "" else s"  $m"))
-      p.children.foreach(walk(_, depth + 1))
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan, depth + 1)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan, depth + 1)
-        case _ =>
-      }
-    }
-    walk(df.queryExecution.executedPlan, 0)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")

@@ -141,8 +141,6 @@ object ScaleProbe {
       val ops: Seq[(String, Long, () => Unit)] = Seq(
         ("l2_prefix_jaccard", nD,
          () => sink(DedupOps.prefixJaccardPairs(d, 0.8))),
-        ("l2b_minhash_lsh", nD,
-         () => sink(DedupOps.clusteredMinhashPairs(d, 0.8))),
         ("l7_simhash", nD, () => sink(DedupOps.simhash(d))),
         ("l10_srp_lsh_pairs", nE,
          () => sink(SimilarityOps.cosinePairsLsh(e, 0.9))),

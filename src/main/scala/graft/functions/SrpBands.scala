@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * into `bands` bands of `rowsPerBand` bits; element i of the result is
   * band i's packed bits. Two vectors with cosine s agree on one bit with
   * probability p = 1 − arccos(s)/π, so a pair collides in ≥1 band with
-  * probability 1 − (1 − p^r)^b — the same banding amplification
-  * [[graft.operators.DedupOps.lshCandidates]] uses for MinHash.
+  * probability 1 − (1 − p^r)^b — the standard LSH banding
+  * amplification.
   *
   * Default parameters for threshold-0.9 similarity joins (b=128, r=12):
   * miss probability at s = 0.9 is (1 − 0.8564^12)^128 ≈ 4·10⁻¹⁰ (lower

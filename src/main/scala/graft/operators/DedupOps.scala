@@ -9,29 +9,26 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators over a document corpus `(doc_id, text, ...)`:
   * exact (content-hash group-by), exact n-gram Jaccard (the verification
-  * pass), and MinHash+LSH banding (the 100 TB candidate-generation path).
+  * pass), and prefix-filtered near-dup joins (the candidate-generation
+  * path, [[prefixJaccardPairs]] / [[containmentPairs]]).
   *
   * Scale design: exact all-pairs Jaccard is inherently quadratic, so at scale
-  * the flow is shingle → minhash signature (one narrow pass) → LSH band
-  * buckets (equi-join shuffle keyed on (band, band-signature) — no cross
-  * product) → exact-Jaccard verification restricted to candidate pairs.
-  * The LSH parameters (64 hashes, 32 bands × 2 rows) put the false-negative
-  * probability at j≥0.8 below 1e-13, so the verified output is
-  * hash-identical to the exact computation — which is exactly what the
-  * oracle checks.
+  * the flow is shingle → prefix-filter candidates (equi-join on globally
+  * rare codes — no cross product, no false negatives) → exact-Jaccard
+  * verification restricted to candidate pairs, or, on a saturated shingle
+  * universe, one blocked bitset pass that generates and verifies at once.
   *
   * Two lessons from profiling are baked in:
   *  - shingles travel as compact LONG codes ([[TextFunctions.shingleCode]],
   *    injective for ASCII) from the first projection on — long equality and
-  *    hashing are several times cheaper than UTF8String's, and MinHash
-  *    needed the numeric form anyway;
+  *    hashing are several times cheaper than UTF8String's;
   *  - on corpora with HIGH background similarity (the fixture corpus draws
-  *    from a ~30-word vocabulary, background j ≈ 0.5) LSH banding cannot
-  *    prune — nearly every pair collides in some band. Verification must
-  *    therefore be strictly linear in candidates: one `array_intersect` of
-  *    the two docs' code sets per pair, explicitly repartitioned so AQE's
-  *    size-based coalescing (the arrays are small in BYTES) doesn't
-  *    serialize the CPU-heavy intersects into one task.
+  *    from a ~30-word vocabulary, background j ≈ 0.5) candidate generation
+  *    prunes poorly. Verification must therefore be strictly linear in
+  *    candidates: one sorted intersect of the two docs' code sets per
+  *    pair, explicitly repartitioned so AQE's size-based coalescing (the
+  *    arrays are small in BYTES) doesn't serialize the CPU-heavy
+  *    intersects into one task.
   */
 object DedupOps {
 
@@ -86,131 +83,12 @@ object DedupOps {
       .select(col("doc_id"), TextFunctions.shingleCode("sh").cast("long").as("code"))
 
   /** Exact Jaccard ≥ threshold over all pairs (the small-scale/verification
-    * formulation; quadratic in corpus size — see [[minhashPairs]] for scale).
+    * formulation; quadratic in corpus size — see [[prefixJaccardPairs]] for
+    * scale).
     */
   def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3): DataFrame =
     verifyJaccard(shingles(docs, n), allCandidates = true, candidates = null,
                   threshold = threshold)
-
-  /** MinHash signatures: k independent affine hashes over shingle codes,
-    * min per (doc, k). Affine family h_k(x) = ((2k+3)·x + (k² + 7k + 1))
-    * mod p, p = 2^31−1 prime; seeds are formula-generated so the DuckDB
-    * oracle could reproduce them. No overflow: codes are < 2^37 (ASCII
-    * packing) and 2k+3 ≤ 129 for k < 64, so the product stays < 2^44.
-    *
-    * Plan shape: ONE narrow shuffle (codes collected per doc), then all k
-    * mins evaluate inside a single codegen'd projection of nested array
-    * lambdas. The naive formulation — crossJoin with a k-row seed table
-    * and a (doc, k)-keyed aggregate — pushes |shingles|·k rows through a
-    * shuffle aggregate; at sf0.1 that was 64× the corpus through the
-    * exchange and dominated the minhash wall-clock (measured: l2b 52 s →
-    * ~14 s after this rewrite).
-    */
-  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame =
-    sh.groupBy(col("doc_id")).agg(collect_list(col("code")).as("codes"))
-      // The codes frame is tiny in BYTES (one row per doc) but everything
-      // downstream of it is CPU-heavy: k·|codes| hash evaluations here,
-      // then the bucket self-join and the candidate-distinct aggregate,
-      // all pipelined into this frame's stage by codegen. Left to AQE,
-      // the small shuffle coalesces to ONE partition and the whole LSH
-      // path runs single-threaded (measured: 60 s of a 73 s single-task
-      // pipeline at sf0.1). The explicit ROUND-ROBIN repartition with a
-      // pinned partition count restores real parallelism — a hash
-      // repartition on doc_id would be elided as redundant against the
-      // aggregate's own doc_id exchange, whose read AQE then coalesces.
-      .repartition(sh.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(numHashes - 1)),
-          k => array_min(transform(col("codes"),
-            c => (c * (k * 2 + 3) + (k * k + k * 7 + 1)) % 2147483647L)))))
-      .select(col("doc_id"), col("pos").cast("long").as("hk"),
-              col("col").as("mh"))
-
-  /** Candidate pairs via LSH banding: docs agreeing on all rows of any band.
-    * Bucket key = (band, sig) where sig is the position-weighted sum
-    * Σ mh·32^(hk mod r) of the band's r minhash rows — equal band contents
-    * always produce equal sigs (recall is EXACTLY that of the (band, row
-    * vector) key), and a spurious sum collision only adds a candidate that
-    * exact verification discards. One equi-join, no cross product; no
-    * overflow (mh < 2^31, weight ≤ 32^(r−1), so r ≤ 4 stays under 2^48).
-    *
-    * (b, r) choose the similarity the bands target — the S-curve midpoint
-    * is t* ≈ (1/b)^(1/r). The r=2 default (b = hashes/2) suits low
-    * thresholds; high-threshold dedup (t = 0.8) wants r = 4, which also
-    * collapses the bucket join cost by ~j_background^2 per band.
-    */
-  def lshCandidates(sigs: DataFrame, rowsPerBand: Int = 2,
-                    nBandRows: Long = -1L): DataFrame = {
-    require(rowsPerBand >= 1 && rowsPerBand <= 4, "sig weight caps r at 4")
-    val spark = sigs.sparkSession
-    val weight = pow(lit(32.0), (col("hk") % rowsPerBand).cast("double"))
-      .cast("long")
-    val banded = sigs
-      .groupBy(col("doc_id"), (col("hk") / rowsPerBand).cast("long").as("band"))
-      .agg(sum(col("mh") * weight).as("sig"))
-      // Same AQE hazard as in [[minhashSignatures]]: the banded frame is a
-      // few KB, so its aggregate's shuffle read coalesces to one partition
-      // — and the bucket self-join plus the candidate-distinct partial
-      // aggregate (hundreds of millions of rows on clustered corpora)
-      // pipeline into that single task. The explicit hash repartition on
-      // doc_id (not elidable: the aggregate's own exchange is keyed
-      // (doc_id, band)) pins join-stage parallelism AND co-locates every
-      // (da, db) pair's per-band duplicates — da alone determines the
-      // task, so the partial distinct collapses the bucket-join fan-out
-      // (119M rows at sf0.1) to the true candidate count (7.4M) BEFORE
-      // the exchange; round-robin left 80% of the fan-out for the
-      // shuffle (measured 18 s of cumulative shuffle write). Hot buckets
-      // don't skew this: a bucket's rows carry distinct doc_ids.
-      //
-      // TWO-LAYOUT SPLIT (r8 probe finding, SURVEY §5.2): this banding /
-      // partial-distinct stage wants FEW, LARGE partitions — the
-      // map-side collapse needs a pair's per-band duplicate rows in the
-      // same task, so over-partitioning trades away exactly the collapse
-      // (measured: the 8× rung DEGRADED 119 → 236 s at 256 session
-      // shuffle partitions). The layout is therefore PINNED to the
-      // coarse core count here, session-independent; the pipeline runs
-      // under [[withWideAqe]], so every downstream planner-inserted
-      // exchange sizes itself from measured bytes instead. The collapse
-      // itself depends on the build
-      // side broadcasting (a broadcast join preserves the streamed
-      // side's doc_id partitioning), which Catalyst cannot decide itself
-      // — aggregate stats are unknown — so the operator decides from the
-      // EXACT row count (every doc carries every band, nBandRows =
-      // |docs|·bands, pure arithmetic: no action, the pipeline stays
-      // fused); past the threshold the fallback shuffled join lets AQE
-      // own the bucket-join layout (collapse lost, scale kept).
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-    val a = banded.select(col("doc_id").as("da"), col("band"), col("sig"))
-    val b = banded.select(col("doc_id").as("db"), col("band"), col("sig"))
-    // The build side is three LONGs per (doc, band) row — 48 bytes — so
-    // the broadcast stays viable far past the session's dim-table
-    // threshold (10 MB ≈ 200k docs at 16 bands): the operator caps it at
-    // 256 MB (~5M docs' bands), because losing the broadcast loses the
-    // SYSTEMATIC map-side collapse (the r9 re-probe measured the SMJ
-    // fallback's collapse as width-coincidental: 119 s at 32 partitions,
-    // 213 s at AQE-fine width, vs the collapse-preserving broadcast
-    // plan). Past the cap, the fallback is a shuffled HASH join — the
-    // build side per partition is tiny and the 119M-row fan-out side
-    // must never be SORTED (SMJ's per-task sort of the fan-out is pure
-    // waste for an equi-join whose output feeds a hash aggregate).
-    // nBandRows < 0 means the caller had no cheap arithmetic for the
-    // count; estimate it with one action over `sigs` (banded rows =
-    // signature rows / r) rather than silently taking the no-broadcast
-    // path — r9 ADVICE: the -1 default must not change a caller's plan.
-    // COST NOTE (r10 ADVICE): this count is a full action over `sigs` —
-    // if the caller has NOT persisted it, the whole shingle→minhash
-    // pipeline upstream runs once for the estimate and again for the
-    // join, a silent 2× on the heaviest narrow stage. Gated callers
-    // (MicroLsh) persist; an ad-hoc caller taking this path should
-    // `sigs.persist()` around the call or pass an exact nBandRows.
-    val effRows =
-      if (nBandRows >= 0) nBandRows else sigs.count() / rowsPerBand
-    val joined = a.join(
-      attachStrategy(spark, effRows * 48L, bandingBroadcastCap(spark))(b),
-      Seq("band", "sig"))
-    joined.filter(col("da") < col("db"))
-      .select("da", "db").distinct()
-  }
 
   /** Operator-level broadcast cap for per-doc code-set frames in the
     * verify stages (8 B/code): shipping the candidate stream with arrays
@@ -221,17 +99,16 @@ object DedupOps {
     * past-cap shuffled-hash branches at test scale.
     */
   private def attachBroadcastCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.attachBroadcastCap")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
+    graft.Engine.confLong(spark, "spark.graft.dedup.attachBroadcastCap")
       .getOrElse(512L << 20)
 
-  /** Cap for the banding build side in [[lshCandidates]] (48 B/row exact
-    * arithmetic); same tunability rationale as [[attachBroadcastCap]].
+  /** Largest shingle universe the dense bitset paths take (verify
+    * representation and the regime pick alike): default 16 384 codes,
+    * ≤ 2 KB/doc bitsets; 0 disables them.
     */
-  private def bandingBroadcastCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.bandingBroadcastCap")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(256L << 20)
+  private def denseUniverseMax(spark: org.apache.spark.sql.SparkSession): Long =
+    graft.Engine.confLong(spark, "spark.graft.dedup.denseUniverseMax")
+      .getOrElse(16384L)
 
   /** Payload-size estimates understate the in-memory broadcast relation —
     * UnsafeRow field offsets, array headers, and the HashedRelation's
@@ -287,8 +164,7 @@ object DedupOps {
     * bytes — at 1× every exchange lands at the same ~32 partitions as
     * before (parallelismFirst targets the core count), at 8× the
     * byte-heavy exchanges keep the width they need. User-specified
-    * repartitions (the pinned-coarse banding layout, the verify spread)
-    * are untouched by AQE, so the two-layout split survives. Set/restore
+    * repartitions (the verify spread) are untouched by AQE. Set/restore
     * is session-scoped and exception-safe.
     *
     * CONCURRENCY CONTRACT: the set/restore mutates the SHARED session
@@ -385,9 +261,7 @@ object DedupOps {
           throw new IllegalArgumentException(
             s"spark.graft.dedup.bitsetVerify must be 'on' or 'off', got '$other'")
       }
-    val denseMax = spark.conf
-      .getOption("spark.graft.dedup.denseUniverseMax")
-      .map(_.toLong).getOrElse(16384L)
+    val denseMax = denseUniverseMax(spark)
     val denseU: Option[Long] =
       if (!bitsetOn || denseMax <= 0) None
       else Some(sh.agg(countDistinct(col("code"))).head().getLong(0))
@@ -474,12 +348,11 @@ object DedupOps {
     // candidate volume is too small to be spread-bound and the extra
     // exchange is pure cost, so the spread auto-disables on the ALREADY
     // MEASURED `nDocs` (the sets count the attach decision runs anyway —
-    // a candidate count() would re-execute the banding subtree, the 2×
-    // the estimate-path cost note warns about). Crossover sits between
-    // the measured −3 s at 10 000 docs and +40 s at 40 000; default
-    // 16 000 (`spark.graft.dedup.pairSpreadMinDocs`). Explicit
-    // `pairSpread=on`/`off` still forces either path (the probe ladders'
-    // A/B switch).
+    // a candidate count() would re-execute the whole candidate subtree).
+    // Crossover sits between the measured −3 s at 10 000 docs and +40 s
+    // at 40 000; default 16 000 (`spark.graft.dedup.pairSpreadMinDocs`).
+    // Explicit `pairSpread=on`/`off` still forces either path (the probe
+    // ladders' A/B switch).
     val spreadOn = spark.conf
       .getOption("spark.graft.dedup.pairSpread") match {
         case Some("off") => false
@@ -491,9 +364,8 @@ object DedupOps {
           throw new IllegalArgumentException(
             s"spark.graft.dedup.pairSpread must be 'on' or 'off', got '$other'")
         case None =>
-          nDocs >= spark.conf
-            .getOption("spark.graft.dedup.pairSpreadMinDocs")
-            .map(_.toLong).getOrElse(16000L)
+          nDocs >= graft.Engine.confLong(
+            spark, "spark.graft.dedup.pairSpreadMinDocs").getOrElse(16000L)
       }
     val repartitioned =
       if (spreadOn) candidates
@@ -635,14 +507,6 @@ object DedupOps {
                          symmetric: Boolean): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
-    val stageTiming = spark.conf
-      .getOption("spark.graft.dedup.stageTiming").contains("true")
-    val stageTag = if (symmetric) "[l2-dense]" else "[l25-stage]"
-    def lap(tag: String)(action: => Long): Unit = if (stageTiming) {
-      val t0 = System.nanoTime()
-      val got = action
-      println(f"$stageTag $tag%-12s rows=$got%10d ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     val w = ((codes.length + 63) / 64).max(1)
     val codeIdx = new java.util.HashMap[Long, Integer](codes.length * 2)
     codes.indices.foreach(i => codeIdx.put(codes(i), i))
@@ -655,17 +519,15 @@ object DedupOps {
         cs.foreach(c => { val i = m.get(c).intValue(); words(i >> 6) |= 1L << (i & 63) })
         (id, words, cs.size)
       }
-    if (stageTiming) vecs.persist()
-    lap("bitsets")(vecs.count())
     val rowBytes = w * 8L + 48L
-    val b = spark.conf.getOption("spark.graft.dedup.denseGrid")
-      .map { v =>
+    val b = graft.Engine.confLong(spark, "spark.graft.dedup.denseGrid")
+      .map { g =>
         // Fail fast on the driver (r12 ADVICE): 0 would divide-by-zero in
         // the block hash and negatives would index out of bounds — both
         // as confusing executor-side task failures.
-        val g = v.toInt
-        require(g >= 1, s"spark.graft.dedup.denseGrid must be >= 1, got $v")
-        g
+        require(g >= 1 && g.isValidInt,
+          s"spark.graft.dedup.denseGrid must be in [1, ${Int.MaxValue}], got $g")
+        g.toInt
       }.getOrElse {
         val memB = (nDocs * rowBytes + (64L << 20) - 1) / (64L << 20)
         val parB = math.ceil(
@@ -727,8 +589,6 @@ object DedupOps {
           .flatMap(j => test(p, rs(j)))
       }
     }.toDF("ida", "idb", "c", "den")
-    if (stageTiming) pairs.persist()
-    lap("densepairs")(pairs.count())
     // den carries the ratio's denominator out of the kernel: |x| for
     // containment, |x∪y| for Jaccard — round4Ratio is the shared
     // cross-engine rounding convention either way.
@@ -739,9 +599,7 @@ object DedupOps {
       else
         pairs.select(col("ida").as("contained_id"), col("idb").as("container_id"),
           graft.Q.round4Ratio(col("c"), col("den")).as("containment"))
-    val outDf = materialize(result)
-    if (stageTiming) { vecs.unpersist(blocking = false); pairs.unpersist(blocking = false) }
-    outDf
+    materialize(result)
   }
 
   def containmentPairs(docs: DataFrame, threshold: Double,
@@ -763,10 +621,9 @@ object DedupOps {
     // 4.33 G occurrence rows (346 of 414 s). Two candidate-cut designs
     // were built and MEASURED before this branch:
     //  - adaptive prefix extension (AdaptJoin pigeonhole, k=8): cut
-    //    DISTINCT candidates 15× but grew the aggregate's groups and its
-    //    input 2.3× — the actual cost drivers; ladder REGRESSED 35.2 →
-    //    86.3 s at 4×, 92.4 → 205.9 s at 8×. Rejected (default k=0; the
-    //    knob and its equivalence spec remain).
+    //    DISTINCT candidates 15× but grew the pair aggregate's groups and
+    //    its input 2.3× — the actual cost drivers; ladder REGRESSED 35.2 →
+    //    86.3 s at 4×, 92.4 → 205.9 s at 8×. Rejected and removed.
     //  - PPJoin+-style pair-of-prefix-codes join (the two smallest common
     //    codes both rank within each side's (len − ⌈t·len⌉ + 2)-prefix):
     //    evaluated offline in DuckDB at 16× — 6.87 G join occurrences,
@@ -794,9 +651,7 @@ object DedupOps {
     // There is no measured regime below the universe cap where the
     // sparse containment join wins; `denseUniverseMax=0` remains the
     // escape hatch.
-    val denseMax = docs.sparkSession.conf
-      .getOption("spark.graft.dedup.denseUniverseMax")
-      .map(_.toLong).getOrElse(16384L)
+    val denseMax = denseUniverseMax(docs.sparkSession)
     try {
       if (denseMax > 0) {
         // One bounded sorted-distinct collect decides the regime AND is
@@ -834,107 +689,40 @@ object DedupOps {
     // fine-grained and AQE coalesces it to the width its MEASURED bytes
     // need; at 1× that lands on the same ~core-count layout as before.
     try withWideAqe(sh.sparkSession) {
-      // ADAPTIVE PREFIX EXTENSION (round 12 — AdaptJoin, Wang et al.
-      // SIGMOD'12, on top of the PPJoin cuts). The r11 stage split showed
-      // candidate generation owning 346 of 414 s at 16× (591M distinct
-      // pairs) — and a DuckDB replay of the 1× rung showed WHY the PPJoin
-      // filters can't bite on a high-background-similarity corpus: 10.4M
-      // candidates for 160k true pairs (83% of ALL pairs pass — every
-      // char-3-gram is frequent under the fixture's ~30-word vocabulary,
-      // so a 1-code prefix collision is nearly free, and the positional
-      // bound is already saturated by the per-occurrence filter below).
-      // The pigeonhole fix: enumerate the CONTAINED side's prefix k codes
-      // PAST the minimal length ℓ = (na − o + 1) + k, and require a pair
-      // to collide on ≥ min(o, k+1) of them — at most na − o of x's codes
-      // can miss y when C(x→y) ≥ t, so a true pair matches at least
-      // ℓ − (na − o) = k+1 prefix codes (o of them when the whole doc fits
-      // in ℓ). Measured on the fixture at 1× (t = 0.9): k = 8 cuts
-      // candidates 10.4M → 707k (15×) for 2.3× more occurrence rows.
-      // MEASURED AND REJECTED AS DEFAULT (round 12 ladder): the cut lands
-      // on the wrong term — the α-count must aggregate MORE groups (every
-      // pair colliding in the EXTENDED prefix under the RELAXED test,
-      // ⊋ the k=0 set) over 2.3× the input before the filter applies, and
-      // those are the stage's actual cost drivers; the rungs regressed
-      // 35.2 → 86.3 s (4×) and 92.4 → 205.9 s (8×) against r11's k=0.
-      // Default k = 0 (the exact r11 PPJoin candidate set); the knob and
-      // the output-equality spec remain for A/B. The saturated-universe
-      // corpora that motivated it route to [[denseContainmentPairs]]
-      // before reaching this code.
-      val k = sh.sparkSession.conf
-        .getOption("spark.graft.dedup.prefixExt").map(_.toInt).getOrElse(0)
       val prefix = ranked
         .filter(col("r") <=
-          col("nsh") - expr(s"(nsh * ${T}L + 999999L) div 1000000L") + 1 + k)
+          col("nsh") - expr(s"(nsh * ${T}L + 999999L) div 1000000L") + 1)
         .select(col("doc_id").as("xa"), col("code"),
                 col("r").as("ra"), col("nsh").as("na"))
       val cont = ranked.select(col("doc_id").as("xb"), col("code"),
                                col("r").as("rb"), col("nsh").as("nb"))
-      // Per-occurrence tests, both integer-exact (T = ⌊t·10⁶⌋ scaled):
-      //  - RELAXED (kept by every common occurrence of a qualifying pair,
-      //    so it can gate the α count): common codes before this one sit
-      //    below (ra, rb) in BOTH rank orders — the global (cf, code)
-      //    order is shared — and codes after it above, so
-      //    |x∩y| ≤ min(ra−1, rb−1) + 1 + min(na−ra, nb−rb)
-      //          = min(ra, rb) + min(na−ra, nb−rb) ≥ o must hold.
-      //  - STRICT (the r11 filter; holds for the FIRST common code only,
-      //    where min(ra−1, rb−1) = 0): 1 + min(na−ra, nb−rb) ≥ o. The
-      //    first common code always ranks within x's minimal prefix, so
-      //    every qualifying pair keeps ≥ 1 strict occurrence — requiring
-      //    one alongside the α threshold is sound and prunes further.
+      // POSITIONAL bound per occurrence, integer-exact (T = ⌊t·10⁶⌋
+      // scaled): the global (cf, code) order is shared, so codes after
+      // this one sit above (ra, rb) in BOTH rank orders and
+      // |x∩y| ≤ 1 + min(na−ra, nb−rb) when this is the pair's FIRST
+      // common code. That first common code always ranks within x's
+      // prefix, so every qualifying pair keeps at least one occurrence.
       val candidates = prefix.join(cont, "code")
         .filter(col("xa") =!= col("xb"))
         .filter(col("na") < col("nb") ||
                 (col("na") === col("nb") && col("xa") < col("xb")))
-        .filter((least(col("ra"), col("rb")) +
-                 least(col("na") - col("ra"), col("nb") - col("rb")))
+        .filter((lit(1L) + least(col("na") - col("ra"),
+                                 col("nb") - col("rb")))
                   * 1000000L >= col("na") * T)
-        // Aggregate on the PAIR KEY ALONE (na re-derives from the verify
-        // arrays; carrying nb doubled the r11 exchange bytes): α +
-        // any-strict fold into the same hash aggregate the old distinct
-        // already paid for — same shuffle key, two tiny longs wider, and
-        // the map-side partial combine now collapses the per-pair
-        // occurrence fan-out instead of shipping it.
-        .groupBy(col("xa"), col("xb"))
-        .agg(count(lit(1)).as("alpha"),
-          max(when((lit(1L) + least(col("na") - col("ra"),
-                                    col("nb") - col("rb")))
-                     * 1000000L >= col("na") * T, 1).otherwise(0))
-            .as("any_strict"),
-          max(col("na")).as("na"))
-        .filter(col("any_strict") === 1 &&
-          col("alpha") >= least(lit(k + 1L),
-            expr(s"(na * ${T}L + 999999L) div 1000000L")))
-        .select("xa", "xb")
+        // Distinct on the PAIR KEY ALONE (na re-derives from the verify
+        // arrays; carrying nb doubled the r11 exchange bytes).
+        .select("xa", "xb").distinct()
         // NO explicit verify spread here, unlike [[verifyJaccard]] — a
         // round-10 probe tried pinning full-core width on the pair key
         // after the distinct and the 4×/8× rungs REGRESSED (26.8/108.4 s
-        // vs 24.8/92.5 without): the banded candidate volume is large
-        // enough in bytes that the distinct's AQE-owned exchange already
-        // lands at useful width, so the extra exchange of the candidate
-        // stream is pure cost. The r9 "CPU spread" residual at 8× is
-        // host-level scheduling noise, not a layout defect.
-      // `spark.graft.dedup.stageTiming=true`: per-stage wall-clock split
-      // (ranked build / candidate generation / sets aggregate / verify)
-      // for the probe ladder — r10 VERDICT "Next round" 6 asked which
-      // stage owns l25's 16× CPU before accepting "compute-bound". The
-      // mode persists `candidates` so the verify lap measures ONLY the
-      // attach+intersect work (production leaves it unpersisted — the
-      // verify join re-executes the candidate subtree there, which the
-      // `candidates` lap prices separately here).
-      val stageTiming = sh.sparkSession.conf
-        .getOption("spark.graft.dedup.stageTiming").contains("true")
-      def lap(tag: String)(action: => Long): Unit = if (stageTiming) {
-        val t0 = System.nanoTime()
-        val n = action
-        println(f"[l25-stage] $tag%-12s rows=$n%10d ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      }
-      lap("ranked")(ranked.count())
-      if (stageTiming) candidates.persist()
-      lap("candidates")(candidates.count())
+        // vs 24.8/92.5 without): the candidate volume is large enough in
+        // bytes that the distinct's AQE-owned exchange already lands at
+        // useful width, so the extra exchange of the candidate stream is
+        // pure cost. The r9 "CPU spread" residual at 8× is host-level
+        // scheduling noise, not a layout defect.
       val sets = ranked.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("code"))).as("codes"))
         .persist()
-      lap("sets")(sets.count())
       // Measured attach decision (the [[verifyJaccard]] rule, same
       // operator cap and the same rationale: shipping the candidate
       // stream with arrays attached costs ~50× broadcasting the sets
@@ -964,42 +752,10 @@ object DedupOps {
         .filter(col("c") * 1000000L >= col("na") * T)
         .select(col("xa").as("contained_id"), col("xb").as("container_id"),
                 graft.Q.round4Ratio(col("c"), col("na")).as("containment"))
-      val tV = System.nanoTime()
       val out = materialize(result)
-      if (stageTiming) {
-        println(f"[l25-stage] ${"verify"}%-12s rows=${out.count()}%10d " +
-                f"${(System.nanoTime() - tV) / 1e9}%8.2f s")
-        candidates.unpersist(blocking = false)
-      }
       sets.unpersist(blocking = false)
       out
     } finally ranked.unpersist(blocking = false)
-  }
-
-  /** MinHash+LSH near-dup pairs, exact-verified — same output contract as
-    * [[jaccardPairs]]. The right scale path when background similarity is
-    * low (real web corpora): bucket joins touch only docs agreeing on a
-    * band. On corpora whose background Jaccard approaches the threshold
-    * (the fixture's shared ~30-word vocabulary, j≈0.5 everywhere) band
-    * buckets degenerate toward "all docs" and the bucket self-join costs
-    * Σ bucket² — use [[prefixJaccardPairs]] there.
-    */
-  def minhashPairs(docs: DataFrame, threshold: Double,
-                   n: Int = 3, numHashes: Int = 64,
-                   rowsPerBand: Int = 2): DataFrame = {
-    val sh = shingles(docs, n).persist()
-    try withWideAqe(docs.sparkSession) {
-      // Exact banded-frame size by arithmetic (every doc carries every
-      // band) — drives lshCandidates' broadcast decision without an
-      // action; the doc count itself is a metadata-cheap scan.
-      val nBandRows = docs.count() * (numHashes / rowsPerBand)
-      val cand = lshCandidates(minhashSignatures(sh, numHashes), rowsPerBand,
-                               nBandRows)
-      // verifyJaccard materializes its (tiny) output eagerly — nothing
-      // downstream re-executes the candidate join.
-      verifyJaccard(sh, allCandidates = false, candidates = cand,
-                    threshold = threshold)
-    } finally sh.unpersist(blocking = false)
   }
 
   /** Eagerly compute a SMALL result and cut its lineage (`localCheckpoint`),
@@ -1137,9 +893,7 @@ object DedupOps {
     // `spark.graft.dedup.denseMinDocs` (default 14000); mis-picking near
     // the crossover costs ≤ ~1 s either way, while the old universe-only
     // pick cost the l2 gate +36% every run.
-    val denseMax = docs.sparkSession.conf
-      .getOption("spark.graft.dedup.denseUniverseMax")
-      .map(_.toLong).getOrElse(16384L)
+    val denseMax = denseUniverseMax(docs.sparkSession)
     // PROBE ORDER (round 13): the doc count alone settles routing below
     // the crossover and costs one narrow count (no explode), so the
     // shingle-frame aggregate — a full explode pass — only runs for
@@ -1172,8 +926,8 @@ object DedupOps {
     * dense whenever the universe saturates (the pre-r13 behavior).
     */
   private def denseMinDocs(spark: org.apache.spark.sql.SparkSession): Long = {
-    val v = spark.conf.getOption("spark.graft.dedup.denseMinDocs")
-      .map(_.toLong).getOrElse(14000L)
+    val v = graft.Engine.confLong(spark, "spark.graft.dedup.denseMinDocs")
+      .getOrElse(14000L)
     require(v >= 0, s"spark.graft.dedup.denseMinDocs must be >= 0, got $v")
     v
   }
@@ -1258,28 +1012,9 @@ object DedupOps {
                             n: Int = 3): DataFrame =
     clusteredPairs(docs, reps => prefixJaccardPairs(reps, threshold, n))
 
-  /** Cluster-aware MinHash+LSH: [[clusteredJaccardPairs]]'s exact-dedup
-    * contraction with [[minhashPairs]] as the representative-pair engine —
-    * the composition a web-scale pipeline actually runs (collapse exact
-    * twins, LSH-band the unique texts, exact-verify candidates, expand).
-    * Bands are tuned to the threshold: 16 bands × 4 rows put the S-curve
-    * midpoint at t* = (1/16)^(1/4) ≈ 0.5 — at t = 0.8 the per-pair miss
-    * prob is (1−0.8⁴)^16 ≈ 2·10⁻⁴, while background-similarity pairs
-    * (j ≈ 0.5 on shared-vocabulary corpora) collide on a band ~4× less
-    * often than the r=2 default, keeping the bucket join linear-ish.
-    * Candidate recall is thus probabilistic in theory but DETERMINISTIC
-    * for a fixed corpus: the affine hash family is seed-free, so the
-    * gated output is stable run to run and hash-checked against the
-    * exact oracle.
-    */
-  def clusteredMinhashPairs(docs: DataFrame, threshold: Double,
-                            n: Int = 3, numHashes: Int = 64): DataFrame =
-    clusteredPairs(docs,
-      reps => minhashPairs(reps, threshold, n, numHashes, rowsPerBand = 4))
-
   /** MinHash estimator CALIBRATION over the true near-dup pairs (the L57
     * gate) — the dedup-family counterpart of the ANN ladder's recall band
-    * (l5f): LSH gates so far prove the banded path returns the right PAIRS,
+    * (l5f): the pair gates prove the engine returns the right PAIRS,
     * but never measure how well the signature itself estimates Jaccard,
     * which is what every production tuning decision (bands × rows, number
     * of hashes) is computed FROM. For every exact near-dup representative
@@ -1298,10 +1033,10 @@ object DedupOps {
     * mis-seeded/broken hash family fails the gate while honest sampling
     * noise never does.
     *
-    * 100 TB posture: the pair set is l2's output (banded/blocked, never
-    * quadratic); signatures are computed array-locally per doc AFTER a
-    * left-semi contraction to the docs that actually appear in a pair, so
-    * the persisted frame is match-sized, not corpus-sized. All per-pair
+    * 100 TB posture: the pair set is l2's output (prefix-filtered or
+    * blocked, never quadratic); signatures are computed array-locally per
+    * doc AFTER a left-semi contraction to the docs that actually appear in
+    * a pair, so the persisted frame is match-sized, not corpus-sized. All per-pair
     * work (`array_intersect`, `zip_with`) is row-local codegen.
     */
   def minhashCalibration(docs: DataFrame, threshold: Double,
@@ -1332,10 +1067,12 @@ object DedupOps {
     val pairs = pairs0.select(col("da"), col("db"))
     val ids = pairs.select(col("da").as("doc_id"))
       .unionByName(pairs.select(col("db").as("doc_id"))).distinct()
-    // Same affine lane family as [[minhashSignatures]] (seed-free, DuckDB-
-    // replayable), evaluated as one array-local projection per doc; codes
-    // are the doc's DISTINCT shingle set, so array_min / array_intersect /
-    // size are all order-insensitive — collect_list order cannot leak.
+    // Lane k is h_k(x) = ((2k+3)·x + (k² + 7k + 1)) mod (2³¹ − 1), min over
+    // the doc's codes (seed-free, DuckDB-replayable; no overflow: codes are
+    // < 2³⁷ and 2k+3 ≤ 129), evaluated as one array-local projection per
+    // doc; codes are the doc's DISTINCT shingle set, so array_min /
+    // array_intersect / size are all order-insensitive — collect_list
+    // order cannot leak.
     // Contract BEFORE shingling: only pair participants re-explode.
     val sig = shingles(reps.join(ids, Seq("doc_id"), "left_semi"), n)
       .groupBy(col("doc_id")).agg(collect_list(col("code")).as("codes"))
@@ -1943,7 +1680,8 @@ object DedupOps {
   /** Distributed round-synchronous k-core peel at DOC level — the wide-
     * fingerprint route of [[simhashKCore]] (bits > 16, where the class
     * space is corpus-sized and the driver peel's collect would OOM), and
-    * the A/B control `graft.MicroKcore` measures the quotient against.
+    * the control the quotient's A/B was measured against (SURVEY §6 r15
+    * probe (g)).
     * Same contract: (doc_id, deg0, k, peel_round), k = the lower-median
     * doc degree (integer-exact, from a distinct-degree-sized histogram —
     * the only driver traffic besides per-round convergence counts). Each
@@ -2074,8 +1812,8 @@ object DedupOps {
     // both compute the min node id per component (min-label union-find ≡
     // converged min-label propagation), and GraphPropSpec pins the
     // equality on random graphs over both routes.
-    val localMax = spark.conf.getOption("spark.graft.cc.localMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
+    val localMax = graft.Engine.confLong(spark, "spark.graft.cc.localMaxRows")
+      .getOrElse(1000000L)
     if (rows <= localMax && localMax > 0) {
       import spark.implicits._
       val nodeIds = labels0.select(col("x")).collect().map(_.getLong(0))
@@ -2221,8 +1959,8 @@ object DedupOps {
     * every occurrence depends only on the corpus content, never on
     * partitioning or visit order.
     *
-    * Scale shape (formulation chosen by measurement — [[graft.MicroSpan]]
-    * races three plans over a planted-boilerplate corpus AND an
+    * Scale shape (formulation chosen by measurement — SURVEY §6 r15 probe
+    * (b) raced three plans over a planted-boilerplate corpus AND an
     * adversarial template corpus where six grams carry ~80% of all
     * occurrences): the verdict is a `row_number` window PARTITIONED BY
     * THE GRAM — one occurrence build, one shuffle, one per-gram sort,
@@ -2238,7 +1976,7 @@ object DedupOps {
     * The documented cliff: when hot grams are FEWER than the cluster's
     * lanes AND their occurrence count exceeds the per-lane share
     * (single-template corpora at ≥256 lanes), flip to the
-    * exchange-reuse join kept measured in MicroSpan. Then one doc-keyed
+    * exchange-reuse join that probe measured. Then one doc-keyed
     * collect_set of duplicate starts (bounded by the doc's OWN token
     * count) and an array-local mask — linear in corpus tokens end to
     * end, no all-pairs stage.

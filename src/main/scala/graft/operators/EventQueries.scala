@@ -881,9 +881,10 @@ object EventQueries {
     // S30 — STREAMING NEAR-DUP LSH INDEX: the BANDING twin of s28 (which
     // classifies exact fingerprint identity), the streaming form of l2b
     // the way s29 is of l62. Documents stream base-then-increment; each
-    // arrival carries its ROW-LOCAL 64-lane MinHash signature (the l2b
-    // affine family over its own distinct word-3-gram poly-hash codes —
-    // no aggregation before the stateful op) exploded into 16 band rows,
+    // arrival carries its ROW-LOCAL 64-lane MinHash signature (the
+    // seed-free affine family ((2k+3)·x + k²+7k+1) mod (2³¹−1) over its
+    // own distinct word-3-gram poly-hash codes — no aggregation before
+    // the stateful op) exploded into 16 band rows,
     // keyed by exact band content (band index + 4 lane values), and a
     // per-bucket transformWithState ListState is the persistent LSH
     // index: every arrival is verified against its bucket's stored docs

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * The reference has no analogue for any of these (its only pipeline is the
   * matrix multiply, reference `orchestrator/main.py`); they are the extended
   * surface BASELINE.json mandates, built Spark-first:
-  *  - dedup routes through MinHash+LSH banding ([[DedupOps.minhashPairs]]) —
-  *    candidate generation is an equi-join on band buckets, never all-pairs;
+  *  - near-dup routes through prefix filtering
+  *    ([[DedupOps.prefixJaccardPairs]]) — candidate generation is an
+  *    equi-join on globally rare shingle codes, never all-pairs;
   *  - similarity search broadcasts the small query set ([[SimilarityOps]]);
   *  - the centroid aggregate is a typed `Aggregator`
   *    ([[graft.functions.VectorMean]]) with fixed-size exact buffers;
@@ -83,10 +84,9 @@ object LlmQueries {
   // l50 8.01 + l57 6.08 + l61 6.99 s, every one re-running the same
   // engine the l64 build already timed. The from-scratch operators
   // remain in DedupOps ([[DedupOps.clusteredJaccardPairs]],
-  // [[DedupOps.clusteredMinhashPairs]], [[DedupOps.minhashCalibration]],
-  // [[scratchComponents]]) and ArtifactSpec pins staged ≡ from-scratch
-  // for every routed gate, so the routing is a pure refactor of the
-  // dataflow, never of the result.
+  // [[DedupOps.minhashCalibration]], [[scratchComponents]]) and
+  // ArtifactSpec pins staged ≡ from-scratch for every routed gate, so
+  // the routing is a pure refactor of the dataflow, never of the result.
   // ------------------------------------------------------------------
 
   /** Survivorship map — cluster + keeper per doc (longest text wins,
@@ -190,10 +190,9 @@ object LlmQueries {
     // candidates only from docs sharing a globally-RARE shingle within
     // their (1−t)·n prefix — exact by construction (no LSH
     // false-negative epsilon) and robust to this corpus's high
-    // background similarity, where MinHash-LSH banding
-    // ([[DedupOps.minhashPairs]], the low-similarity scale path)
-    // degenerates to a quadratic bucket join. Same output contract; the
-    // oracle is the exact all-pairs computation.
+    // background similarity, where MinHash-LSH banding degenerates to a
+    // quadratic bucket join. Same output contract; the oracle is the
+    // exact all-pairs computation.
     //
     // Round 16: the gated output reads the staged artifact's `pairs`
     // Parquet — l2 IS the artifact's declared contract
@@ -206,22 +205,9 @@ object LlmQueries {
       s.read.parquet(MatchGraph.ensure(s, d, 0.8).pairs)
         .orderBy("da", "db")),
 
-    // L2b — the MinHash+LSH banding path of the same contract, gated:
-    // exact-dedup contraction first (as l2), then 64-hash / 32-band LSH
-    // candidates over unique reps, each exact-verified. Recall is
-    // probabilistic in theory (miss ≤ (1−t²)^32 ≈ 6e-15 per true pair at
-    // t=0.8) but deterministic on a fixed corpus — the affine hash family
-    // is seed-free — so the output hash-matches the exact all-pairs
-    // oracle, same as l2. This is the low-background-similarity scale
-    // path; l2's prefix filter remains the high-background one.
-    //
-    // Round 16: gated output served from the staged artifact like l2 —
-    // both paths verify to the SAME exact pair set on a fixed corpus, so
-    // re-running a second candidate engine per bench/verify pass was a
-    // pure redundant corpus pass (guide §2.4). The banding algorithm
-    // stays in [[DedupOps.clusteredMinhashPairs]] as the documented
-    // low-background-similarity route; ArtifactSpec pins staged ≡ the
-    // from-scratch LSH path, so an LSH recall miss would still fail CI.
+    // L2b — the l2 contract under its second gate name, served from the
+    // same staged `pairs` (one engine run per corpus, guide §2.4); the
+    // oracle is the same exact all-pairs SQL.
     "l2b_minhash_lsh" -> ((s, d) =>
       s.read.parquet(MatchGraph.ensure(s, d, 0.8).pairs)
         .orderBy("da", "db")),
@@ -384,8 +370,8 @@ object LlmQueries {
     // shortlist) so the derived widths are themselves hash-gated. The
     // oracle re-derives the widths in SQL (integer range-scan minima —
     // no float boundary) and replays both pipelines; the 0.5 floor here
-    // holds BY the scaling rule at every corpus size (measured: the
-    // MicroAnn ladder, SURVEY §6), not by the fixture's luck.
+    // holds BY the scaling rule at every corpus size (measured: SURVEY §6
+    // r15 probe (a)), not by the fixture's luck.
     "l5g_ann_recall_scaled" -> { (s, d) =>
       val e = emb(s, d)
       val (n, cells) = SimilarityOps.corpusStats(e)
@@ -2212,8 +2198,7 @@ object LlmQueries {
          |WHERE CAST(c AS DOUBLE) / (sa.nsh + sb.nsh - c) >= 0.8
          |ORDER BY da, db""".stripMargin,
 
-    // The LSH path answers the SAME question exactly (candidates are
-    // exact-verified; banding recall is deterministic on a fixed corpus),
+    // l2b answers the SAME question as l2 (both read the staged pairs),
     // so its oracle is the identical exact all-pairs computation.
     "l2b_minhash_lsh" ->
       s"""WITH $duckShingles,
@@ -3160,9 +3145,10 @@ object LlmQueries {
     // Replays BOTH sides of the calibration: exact pairs over the rep
     // contraction (quadratic shared-shingle join — the semantic
     // definition, affordable at sf) AND the 64-lane affine MinHash
-    // (same seed-free formula as DedupOps.minhashSignatures), then the
-    // cross-multiplied integer band — so a broken hash family, a wrong
-    // lane count, or a drifted estimate all hash-fail.
+    // (seed-free lane k: min over codes of ((2k+3)·c + k²+7k+1) mod
+    // (2³¹−1)), then the cross-multiplied integer band — so a broken
+    // hash family, a wrong lane count, or a drifted estimate all
+    // hash-fail.
     "l57_minhash_calibration" ->
       s"""WITH reps AS (
          |  SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text),

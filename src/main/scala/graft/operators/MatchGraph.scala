@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
   * component_id = rep_id. `ArtifactSpec` pins from-scratch ≡ from-artifact
   * for every derived gate.
   *
-  * Lifecycle: one BUILD per JVM per corpus dir ([[ensure]] memoizes;
+  * Lifecycle: one BUILD per JVM per corpus ([[ensure]] memoizes on the
+  * dir plus its documents' file lengths and modification times;
   * [[rebuild]] — the l64 write gate — always recomputes and overwrites, so
   * every verify/bench process refreshes the artifact before any consumer
   * can read a stale one). Derived gates consume the PARQUET (a genuine
@@ -62,50 +63,48 @@ object MatchGraph {
     */
   private val jvmScope: String = s"jvm-${ProcessHandle.current().pid()}"
 
-  private def root(sfDir: String, threshold: Double, n: Int): String = {
+  private def root(s: SparkSession, sfDir: String, threshold: Double,
+                   n: Int): String = {
     // Full-digest corpus tag (truncated String.hashCode could collide
-    // two corpus dirs and silently serve one corpus' pairs to the other).
+    // two corpus dirs and silently serve one corpus' pairs to the other)
+    // over the dir AND the documents input's file lengths and modification
+    // times: a corpus rewritten under the same path gets a fresh artifact
+    // from `ensure` instead of the old one's pairs.
+    val docs = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
+    val it = docs.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listFiles(docs, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
+      .toSeq.sorted
     val tag = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(sfDir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+      .digest((sfDir +: files).mkString("\n").getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
     val t = math.round(threshold * 1e6)
     s"${System.getProperty("java.io.tmpdir")}/graft-artifacts/" +
       s"$jvmScope/match-t$t-n$n-$tag"
   }
 
-  /** Read-through: build once per JVM per corpus dir, then hand every
+  /** Read-through: build once per JVM per corpus, then hand every
     * caller the same on-disk artifact.
     */
   def ensure(s: SparkSession, sfDir: String, threshold: Double = 0.8,
              n: Int = 3): Artifact =
-    built.computeIfAbsent(root(sfDir, threshold, n),
-                          _ => build(s, sfDir, threshold, n))
+    built.computeIfAbsent(root(s, sfDir, threshold, n),
+                          r => build(s, sfDir, r, threshold, n))
 
   /** Force a fresh build (the l64 write gate's entry — the write IS the
     * measured operator, like io1's CSV sink).
     */
   def rebuild(s: SparkSession, sfDir: String, threshold: Double = 0.8,
               n: Int = 3): Artifact = {
-    val a = build(s, sfDir, threshold, n)
-    built.put(root(sfDir, threshold, n), a)
+    val r = root(s, sfDir, threshold, n)
+    val a = build(s, sfDir, r, threshold, n)
+    built.put(r, a)
     a
   }
 
-  /** GRAFT_MATCH_STAGES=1: per-phase wall attribution on stderr (profiling
-    * hook, same shape as MicroGemm's GEMM_STAGES — no effect on results).
-    */
-  private def staged[T](name: String)(body: => T): T =
-    if (!sys.env.get("GRAFT_MATCH_STAGES").contains("1")) body
-    else {
-      val t0 = System.nanoTime()
-      val out = body
-      System.err.println(
-        f"[match] $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      out
-    }
-
-  private def build(s: SparkSession, sfDir: String, threshold: Double,
-                    n: Int): Artifact = {
-    val r = root(sfDir, threshold, n)
+  private def build(s: SparkSession, sfDir: String, r: String,
+                    threshold: Double, n: Int): Artifact = {
     val docs = Tables.load(s, sfDir, "documents")
     // THE contraction definition — shared with the from-scratch clustered
     // wrappers ([[DedupOps.exactContraction]]), so the staged and
@@ -116,27 +115,21 @@ object MatchGraph {
     val members = members0.persist()
     try {
       // THE one pair-engine run this artifact amortizes.
-      staged("rep_pairs") {
-        DedupOps.prefixJaccardPairs(reps, threshold, n)
-          .write.mode("overwrite").parquet(s"$r/rep_pairs")
-      }
+      DedupOps.prefixJaccardPairs(reps, threshold, n)
+        .write.mode("overwrite").parquet(s"$r/rep_pairs")
       val repPairs = s.read.parquet(s"$r/rep_pairs")
 
       // Doc-level expansion — the l2 output contract, the shared
       // [[DedupOps.expandRepPairs]] definition.
-      staged("pairs") {
-        DedupOps.expandRepPairs(members, repPairs)
-          .write.mode("overwrite").parquet(s"$r/pairs")
-      }
+      DedupOps.expandRepPairs(members, repPairs)
+        .write.mode("overwrite").parquet(s"$r/pairs")
 
       // Components on the REP graph (match-sized iterative state), then
       // one broadcast-scale expansion back to docs — the shared
       // [[DedupOps.repComponents]] definition (round 15: l50/l61 now ride
       // the same rep-graph construction, so it lives in DedupOps).
-      staged("components") {
-        DedupOps.repComponents(members, repPairs)
-          .write.mode("overwrite").parquet(s"$r/components")
-      }
+      DedupOps.repComponents(members, repPairs)
+        .write.mode("overwrite").parquet(s"$r/components")
     } finally members.unpersist(blocking = false)
     Artifact(s"$r/rep_pairs", s"$r/pairs", s"$r/components")
   }

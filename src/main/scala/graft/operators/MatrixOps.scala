@@ -100,8 +100,8 @@ object MatrixOps {
     // O(bs²) = O(tile) regardless of matrix size or task concurrency.
     // Densifying HERE also drops the per-entry struct boxing the old
     // tile-pair stage paid when scattering lists into arrays.
-    // (Extracted as [[cooToTiles]] so the MicroGemm stage probe can time
-    // the densify pipeline in isolation — round 16.)
+    // (Extracted as [[cooToTiles]] so a benchmark can time the densify
+    // pipeline in isolation.)
     val aB0 = cooToTiles(a, bs).toDF("abi", "abj", "ad")
     val bB0 = cooToTiles(b, bs).toDF("bbi", "bbj", "bd")
 

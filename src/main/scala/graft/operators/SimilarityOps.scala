@@ -151,10 +151,10 @@ object SimilarityOps {
   /** Cosine near-dup pairs via sign-random-projection LSH banding + exact
     * re-rank — the 100 TB path (VERDICT r3 "Next round" 3). Candidate
     * generation is an equi-join on packed band keys
-    * ([[graft.functions.SrpBands]], same banding shape as
-    * [[DedupOps.lshCandidates]]) — no cartesian product anywhere in the
-    * plan; every candidate is then verified with the exact rounded cosine,
-    * so output values are identical to [[cosinePairs]]. The default
+    * ([[graft.functions.SrpBands]]; a pair meets when it agrees on all r
+    * bits of some band) — no cartesian product anywhere in the plan;
+    * every candidate is then verified with the exact rounded cosine, so
+    * output values are identical to [[cosinePairs]]. The default
     * b=128 × r=12 signature puts the per-pair miss probability at
     * cosine ≥ 0.9 below 5·10⁻¹⁰ (see SrpBands scaladoc) while pruning
     * near-orthogonal background pairs ~30×; callers with other thresholds
@@ -216,16 +216,9 @@ object SimilarityOps {
         col("vec_id") < lit(centroidStride * entries)
     else col("vec_id") % centroidStride === 0
 
-  /** Coarse cell count of the production-shape index (the l5e/l5f capped
-    * donor rule) — the input to the [[scaledNprobe]] width rule.
-    */
-  def donorCount(corpus: DataFrame, centroidStride: Long = 50,
-                 entries: Int = 256): Long =
-    corpus.filter(donorFilter(centroidStride, entries)).count()
-
   /** One-pass (corpus size, donor-cell count): the l5g width inputs from
-    * a SINGLE aggregate over the embeddings scan — separate `count()` +
-    * [[donorCount]] jobs would scan the corpus twice for two scalars.
+    * a SINGLE aggregate over the embeddings scan — separate counts of the
+    * corpus and of its donor cells would scan it twice for two scalars.
     */
   def corpusStats(corpus: DataFrame, centroidStride: Long = 50,
                   entries: Int = 256): (Long, Long) = {
@@ -250,7 +243,7 @@ object SimilarityOps {
     * everything. The √C core is computed in INTEGER arithmetic — the
     * smallest p with 25·p² ≥ 64·C, i.e. p² ≥ (1.6)²·C — so both engines
     * derive identical widths with no float-boundary hazard (the r37
-    * lesson). Measured (MicroAnn, SURVEY §6): recall@5 ≥ the fixed-width
+    * lesson). Measured (SURVEY §6 r15 probe (a)): recall@5 ≥ the fixed-width
     * gate at every rung, 1.00 vs 0.84 at the 50k synthetic rung where
     * fixed widths have begun their decay.
     */

@@ -173,8 +173,8 @@ object SqlQueries {
       // cents/hop per produced row, MAX per customer — and bails to the
       // distributed route past the engine's own recursion depth limit so
       // pathological inputs keep Spark's error behavior.
-      val localMax = s.conf.getOption("spark.graft.sql8.localMaxRows")
-        .map(_.toLong).getOrElse(1000000L)
+      val localMax = Engine.confLong(s, "spark.graft.sql8.localMaxRows")
+        .getOrElse(1000000L)
       val nOrders = s.table("orders").count()
       val localDone: Option[org.apache.spark.sql.DataFrame] =
         if (localMax > 0 && nOrders <= localMax) {

@@ -622,10 +622,11 @@ object EventStreams {
     * only trades away parallelism of the real per-batch work.
     */
   private def stateParts(spark: SparkSession): String = {
-    val v = spark.conf.getOption("spark.graft.stream.stateParts")
-      .getOrElse("8")
-    require(v.toInt >= 1, s"spark.graft.stream.stateParts must be >= 1, got $v")
-    v
+    val v = graft.Engine.confLong(spark, "spark.graft.stream.stateParts")
+      .getOrElse(8L)
+    require(v >= 1 && v.isValidInt,
+      s"spark.graft.stream.stateParts must be in [1, ${Int.MaxValue}], got $v")
+    v.toString
   }
 
   /** The stateParts conf scope exposed for gates that manage their own
@@ -994,8 +995,8 @@ object EventStreams {
     * arrival a NEAR-dup of anything already indexed". Each arriving
     * document carries its row-local 64-lane MinHash signature (computed
     * statelessly from its own shingle set — no aggregation before the
-    * stateful op) and is exploded into 16 band rows (l2b's t = 0.8
-    * tuning: 16 bands × 4 rows, S-curve midpoint (1/16)^(1/4) ≈ 0.5);
+    * stateful op) and is exploded into 16 band rows (tuned for t = 0.8:
+    * 16 bands × 4 rows, S-curve midpoint (1/16)^(1/4) ≈ 0.5);
     * the grouping key IS the band content (band index + the 4 lane
     * values — exact band equality, no bucket-hash collisions), and a
     * `transformWithState` ListState per bucket is the persistent LSH
@@ -1137,9 +1138,9 @@ object EventStreams {
   /** Row-local banding for [[lshIndexPairs]]: distinct word 3-grams →
     * poly-hash codes (the [[graft.functions.PolyTokenHash]] fold,
     * (acc·31 + codepoint) mod 1000003 — the arithmetic every oracle
-    * replays with `list_reduce`) → 64-lane MinHash (the
-    * [[graft.operators.DedupOps.minhashSignatures]] affine family
-    * h_k(x) = ((2k+3)x + k²+7k+1) mod 2³¹−1) → 16 four-lane band rows.
+    * replays with `list_reduce`) → 64-lane MinHash (the seed-free affine
+    * family h_k(x) = ((2k+3)x + k²+7k+1) mod 2³¹−1, min per lane) → 16
+    * four-lane band rows.
     * A typed map, not an expression chain: the exploded projection would
     * re-evaluate the whole signature per band row (measured 29.4 s →
     * 4.9 s at sf0.01 for the s30 gate), while this computes each doc's

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupOps, LlmQueries}
+import graft.operators.{DedupOps, LlmQueries, MatchGraph}
 
 /** The staged match-graph artifact (l64 family — and, since round 16,
   * every pair-derived gate: l2, l2b, l50, l57, l61) must be a PURE
@@ -39,9 +39,33 @@ class ArtifactSpec extends SparkSpec {
     same("l64_match_artifact", scratch)
   }
 
-  test("staged l2b pairs equal the from-scratch MinHash+LSH engine") {
-    same("l2b_minhash_lsh",
-         DedupOps.clusteredMinhashPairs(docs, 0.8).orderBy("da", "db"))
+  test("ensure rebuilds when the corpus is rewritten under the same path") {
+    // The memo key is the dir PLUS the documents' file lengths and mtimes:
+    // a rewritten corpus must never be served the previous corpus' pairs.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-artifact-").toString
+    def write(texts: Seq[String]): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text").write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+    def staged(): Set[(Long, Long)] =
+      spark.read.parquet(MatchGraph.ensure(spark, dir).pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      write(Seq("the quick brown fox jumps over the lazy dog",
+                "the quick brown fox jumps over the lazy dog",
+                "completely different text with other content"))
+      assert(staged() == Set((0L, 1L)))
+      write(Seq("spark engines shuffle partitions across executors",
+                "completely different text with other content",
+                "completely different text with other content!"))
+      val after = staged()
+      assert(after == Set((1L, 2L)), s"stale artifact served: $after")
+      assert(after == rows(DedupOps.clusteredJaccardPairs(
+        Tables.load(spark, dir, "documents"), 0.8)).map {
+          case Seq(a: Long, b: Long, _) => (a, b)
+        }.toSet)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("staged l50 / l64b survivorship equals the from-scratch map") {

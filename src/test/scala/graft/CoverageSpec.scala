@@ -47,6 +47,51 @@ class CoverageSpec extends AnyFunSuite {
       s"rows-only entries that grew oracles: ${(rowsOnly -- unGated).toSeq.sorted}")
   }
 
+  /** Every Scala source under src/main, as text. */
+  private lazy val mainSources: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val ws = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try ws.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    finally ws.close()
+  }
+
+  test("entry points are exactly the declared mains") {
+    // A one-off probe main must not slip back in: anything measured
+    // belongs in perfbench/ or a spec, not in a hand-run object.
+    val objectOrMain = """(?m)^\s*object\s+(\w+)|def\s+main\s*\(""".r
+    val mains = mainSources.flatMap { src =>
+      var current = ""
+      objectOrMain.findAllMatchIn(src).flatMap { m =>
+        if (m.group(1) != null) { current = m.group(1); None } else Some(current)
+      }.toList
+    }.toSet
+    assert(mains == Set("Bench", "Verify", "PlanAudit", "ScaleProbe", "StateProbe"),
+      s"objects defining main under src/main: ${mains.toSeq.sorted}")
+  }
+
+  test("spark.graft.* conf keys are exactly the declared knobs") {
+    val keys = mainSources.flatMap { src =>
+      "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    val declared = Set(
+      "spark.graft.cc.localMaxRows",
+      "spark.graft.dedup.attachBroadcastCap",
+      "spark.graft.dedup.bitsetVerify",
+      "spark.graft.dedup.denseGrid",
+      "spark.graft.dedup.denseMinDocs",
+      "spark.graft.dedup.denseUniverseMax",
+      "spark.graft.dedup.pairSpread",
+      "spark.graft.dedup.pairSpreadMinDocs",
+      "spark.graft.gemm.replicationHeadroom",
+      "spark.graft.kmeans.spreadMinK",
+      "spark.graft.sql8.localMaxRows",
+      "spark.graft.stream.stateParts")
+    assert(keys == declared,
+      s"undeclared: ${(keys -- declared).toSeq.sorted}; " +
+      s"gone: ${(declared -- keys).toSeq.sorted}")
+  }
+
   test("PlanAudit's default set only names declared queries") {
     val orphans = PlanAudit.defaultQueries -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"audited non-queries: ${orphans.toSeq.sorted}")

@@ -14,10 +14,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Also pins the r9 ADVICE contracts: a non-positive session
   * `autoBroadcastJoinThreshold` means NEVER broadcast (the operator caps
-  * widen the session threshold, they don't override the off-switch), the
-  * caps themselves are session-tunable via `spark.graft.dedup.*`, and
-  * `lshCandidates`' unknown-count default estimates instead of silently
-  * dropping the broadcast.
+  * widen the session threshold, they don't override the off-switch), and
+  * the caps themselves are session-tunable via `spark.graft.dedup.*` — a
+  * malformed value fails naming its key instead of falling back.
   */
 class DedupFallbackSpec extends SparkSpec {
   import spark.implicits._
@@ -77,15 +76,17 @@ class DedupFallbackSpec extends SparkSpec {
         s"array-attached stream was the r8 8× OOM; got:\n${badSmj.mkString("\n")}")
   }
 
-  test("minhashPairs fallback (session broadcast off) is hash-join and row-identical") {
-    val expected = pairsOf(DedupOps.minhashPairs(corpus, 0.5))
+  test("prefixJaccardPairs fallback (session broadcast off) is hash-join and row-identical") {
+    // 7 docs sit far below denseMinDocs, so this is the SPARSE prefix join
+    // whose verify attaches the code sets by (da, db).
+    val expected = pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5))
     assert(expected.nonEmpty)
     val (got, plans) =
       withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        capturePlans(pairsOf(DedupOps.minhashPairs(corpus, 0.5)))
+        capturePlans(pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5)))
       }
     assert(got == expected)
-    assertHashNeverSortMerge(plans, "minhashPairs", Seq("da", "db"))
+    assertHashNeverSortMerge(plans, "prefixJaccardPairs", Seq("da", "db"))
   }
 
   test("containmentPairs fallback (session broadcast off) is hash-join and row-identical") {
@@ -129,39 +130,21 @@ class DedupFallbackSpec extends SparkSpec {
     assertHashNeverSortMerge(plans, "verifyJaccard attach", Seq("da", "db"))
   }
 
-  test("lshCandidates broadcast decision: arithmetic count, tunable cap, estimate default") {
-    val sigs = DedupOps.minhashSignatures(DedupOps.shingles(corpus, 3), 16)
-    val nBandRows = corpus.count() * (16 / 2)
-
-    def run(df: DataFrame): (Set[(Long, Long)], String) = {
-      val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (out, df.queryExecution.executedPlan.toString) // AQE final plan
+  test("a malformed numeric dedup conf fails naming its key") {
+    // A typo'd cap must neither surface as a bare NumberFormatException
+    // mid-query nor silently run with the default.
+    Seq("spark.graft.dedup.denseUniverseMax" -> "16k",
+        "spark.graft.dedup.attachBroadcastCap" -> "512MB",
+        "spark.graft.dedup.pairSpreadMinDocs" -> "many").foreach {
+      case (key, bad) =>
+        val e = withConf(key -> bad) {
+          intercept[IllegalArgumentException] {
+            DedupOps.prefixJaccardPairs(corpus, 0.5).count()
+          }
+        }
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad),
+          s"$key: ${e.getMessage}")
     }
-
-    val (base, basePlan) = run(DedupOps.lshCandidates(sigs, 2, nBandRows))
-    assert(base.nonEmpty)
-    assert(basePlan.contains("BroadcastHashJoin"),
-      "in-cap arithmetic count must broadcast the banding build side")
-
-    // Past-cap by conf: the bucket join degrades to shuffled hash.
-    val (capped, cappedPlan) = withConf(
-      "spark.graft.dedup.bandingBroadcastCap" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "1") {
-      run(DedupOps.lshCandidates(sigs, 2, nBandRows))
-    }
-    assert(capped == base)
-    assert(cappedPlan.contains("ShuffledHashJoin") &&
-           !cappedPlan.contains("SortMergeJoin"),
-      s"past-cap bucket join must be shuffled hash, got:\n$cappedPlan")
-
-    // Unknown count (-1 default): estimated, NOT silently no-broadcast
-    // (r9 ADVICE) — on this tiny fixture the estimate must still land on
-    // the broadcast plan.
-    val (est, estPlan) = run(DedupOps.lshCandidates(sigs, 2))
-    assert(est == base)
-    assert(estPlan.contains("BroadcastHashJoin"),
-      "the unknown-count default must estimate and broadcast, not " +
-        "silently take the fallback")
   }
 
   test("verify pair spread is count-conditional: auto-off on a small corpus, forced by conf") {

@@ -5,7 +5,7 @@ import graft.multimodal.Multimodal
 import graft.operators.{DedupOps, OrderOps, SimilarityOps}
 import org.apache.spark.sql.functions._
 
-/** LLM-pipeline operator semantics: dedup (exact + LSH-equivalence),
+/** LLM-pipeline operator semantics: dedup (exact + prefix-filter equivalence),
   * similarity, text functions, the VectorMean Aggregator, multimodal
   * plumbing.
   */
@@ -43,24 +43,14 @@ class LlmSpec extends SparkSpec {
     assert(out == Set((0L, 2L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L)))
   }
 
-  test("minhashPairs (LSH) and prefixJaccardPairs both equal exact all-pairs") {
+  test("prefixJaccardPairs equals exact all-pairs") {
     val exact = DedupOps.jaccardPairs(corpus, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val lsh = DedupOps.minhashPairs(corpus, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val prefix = DedupOps.prefixJaccardPairs(corpus, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(exact.nonEmpty)             // dup + near-dup pairs exist
-    assert(lsh == exact)
     assert(prefix == exact)
     assert(exact.exists { case (a, b, j) => a == 0L && b == 1L && j == 1.0 })
-    // The gated composition (exact-dedup contraction + r=4 banding) at the
-    // gate's own threshold.
-    val clustered = DedupOps.clusteredMinhashPairs(corpus, 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exact08 = DedupOps.jaccardPairs(corpus, 0.8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(clustered == exact08)
   }
 
   test("prefixJaccardPairs exactness holds across thresholds (prefix-length boundary)") {
@@ -387,46 +377,21 @@ class LlmSpec extends SparkSpec {
     assert(!jac.contains((0L, 8L)) && !jac.contains((8L, 0L)))
   }
 
-  test("containmentPairs adaptive prefix (k>0) is output-identical to pure PPJoin (k=0)") {
-    // The round-12 candidate-cut experiment (measured and REJECTED as
-    // default — the extension grows the α-aggregate's groups and input,
-    // the stage's real cost drivers; DedupOps comment has the rung
-    // numbers): prefixExt=k enumerates k extra prefix codes and requires
-    // min(o, k+1) collisions per pair (AdaptJoin pigeonhole). The spec
-    // pins that the machinery only prunes FALSE candidates — k=8 output
-    // must equal k=0 output, including docs shorter than the extended
-    // prefix (where the α threshold clamps to o). denseUniverseMax=0
-    // forces BOTH runs onto the sparse path the knob belongs to (the
-    // fixture's 3-gram universe would otherwise route dense). Thresholds
-    // straddle high/low selectivity.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
-    try Seq(0.9, 0.6).foreach { t =>
-      val ppjoin = canon(DedupOps.containmentPairs(docs, t)) // default k=0
-      spark.conf.set("spark.graft.dedup.prefixExt", "8")
-      val adaptive = try canon(DedupOps.containmentPairs(docs, t))
-      finally spark.conf.unset("spark.graft.dedup.prefixExt")
-      assert(adaptive == ppjoin, s"threshold $t")
-      assert(ppjoin.nonEmpty, s"fixture must exercise the pair path at $t")
-    } finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
-  }
-
-  test("minhashPairs bitset verify ≡ array verify (representation-blind attach)") {
+  test("prefixJaccardPairs bitset verify ≡ array verify (representation-blind attach)") {
     // Round 12's verify-representation experiment — measured and left
     // OPT-IN (arrays default; the bitset build pass costs more than its
     // byte savings return at gate/16× scale, but erases the 32× rung's
     // ~20 GB scratch spill — DedupOps comment has the A/B numbers). The
     // spec pins what makes the knob safe to flip on disk-constrained
-    // hosts: bitset output ≡ array output through the LSH-candidate
-    // verify, same c/na/nb integers.
+    // hosts: bitset output ≡ array output through the prefix-candidate
+    // verify (500 docs < denseMinDocs: the sparse route), same c/na/nb
+    // integers.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val arrays = canon(DedupOps.minhashPairs(docs, 0.5)) // default: arrays
+    val arrays = canon(DedupOps.prefixJaccardPairs(docs, 0.5)) // default: arrays
     spark.conf.set("spark.graft.dedup.bitsetVerify", "on")
-    val bitsets = try canon(DedupOps.minhashPairs(docs, 0.5))
+    val bitsets = try canon(DedupOps.prefixJaccardPairs(docs, 0.5))
     finally spark.conf.unset("spark.graft.dedup.bitsetVerify")
     assert(bitsets == arrays)
     assert(arrays.nonEmpty, "fixture must produce verified pairs at t=0.5")
@@ -786,7 +751,7 @@ class LlmSpec extends SparkSpec {
     assert(kCoreMap(DedupOps.simhashKCore(docsDf, maxHamming = 1, bits = 32))
              == want)
     // And the route target agrees with the quotient at the narrow width
-    // (the MicroKcore A/B equality, pinned in-suite).
+    // (the k-core A/B's equality, SURVEY §6 r15 probe (g), pinned in-suite).
     assert(kCoreMap(DedupOps.docKCore(docsDf, maxHamming = 1, bits = 16))
              == kCoreMap(DedupOps.simhashKCore(docsDf)))
   }
@@ -1044,15 +1009,12 @@ class LlmSpec extends SparkSpec {
     // window + hash aggregates.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // The returned frame is localCheckpoint'd (lineage cut), so the route
-    // can't be read off its plan; observe it through the dense kernel's
-    // stage-timing laps instead ("bitsets" only ever prints from
-    // densePairs — the sparse engines have no such lap).
+    // can't be read off its plan; read it off the plans executed during
+    // the call instead.
     def usedDenseKernel(run: => org.apache.spark.sql.DataFrame): Boolean = {
-      val buf = new java.io.ByteArrayOutputStream()
-      spark.conf.set("spark.graft.dedup.stageTiming", "true")
-      try Console.withOut(new java.io.PrintStream(buf)) { run.count() }
-      finally spark.conf.unset("spark.graft.dedup.stageTiming")
-      buf.toString.contains("bitsets")
+      val (_, plans) = capturePlans(run.count())
+      awaitUntil(() => plans().nonEmpty)
+      plans().exists(_.contains("MapGroups"))
     }
     // 500-doc fixture < default 14 000 -> sparse.
     assert(!usedDenseKernel(DedupOps.prefixJaccardPairs(docs, 0.8)),
@@ -1252,7 +1214,7 @@ class LlmSpec extends SparkSpec {
     assert(r.getAs[Boolean]("within_band"),
       s"scaled-width recall@5 ${r.getAs[Double]("recall")} fell below " +
         s"${r.getAs[Double]("recall_floor")}")
-    // Rule sanity at the measured MicroAnn rungs: the reference point
+    // Rule sanity at the measured ANN-ladder rungs: the reference point
     // reproduces the production width, the capped index widens.
     import graft.operators.SimilarityOps.{scaledNprobe, scaledShortlistFactor}
     assert(scaledNprobe(100) == 16 && scaledShortlistFactor(5000) == 16)

@@ -229,7 +229,7 @@ class PlanAuditSpec extends SparkSpec {
     // by LlmSpec's synthetic quartet instead.
     "mm6_phash64_pairs" -> Set.empty[String],
     // Span dedup is linear in corpus tokens: one gram-partitioned window
-    // (gram-frequency-sized partitions, the measured winner in MicroSpan)
+    // (gram-frequency-sized partitions, the measured winner, SURVEY §6)
     // + a doc-keyed mask; the projections around the window stay inside
     // codegen, and a positional self-join would surface as a cartesian.
     "l65_span_dedup" -> Set("WholeStageCodegen"),
