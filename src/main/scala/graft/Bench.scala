@@ -56,8 +56,9 @@ object Bench {
       ).getOrCreate()
       // SPARK_GRAFT_CONF overrides (shared parser with ScaleProbe): how an
       // A/B bench run forces a non-default path (r10 VERDICT "Next round"
-      // 3: pairSpread on/off at gate scale). Applied per-build so a
-      // fatal-error session rebuild keeps the run's configuration.
+      // 3: the verify spread at gate scale, via pairSpreadMinDocs).
+      // Applied per-build so a fatal-error session rebuild keeps the
+      // run's configuration.
       Engine.applyConfOverrides(s)
       s.sparkContext.setLogLevel("WARN")
       s
@@ -103,33 +104,19 @@ object Bench {
       errors :+= ("warmup" -> errString(e))
     }
 
-    // Matrix scaling sweep, mirroring the reference's size sweep. The
-    // 50–400 rungs keep the handwritten block path (comparable across
-    // rounds); 1000²/2000² run through the PLANNER-selected node
-    // (m12's MatMulStrategy), whose cost statistics flip row-join →
-    // block-GEMM well before these sizes — the sweep records the flipped
-    // path's wall-clock where the reference's own baseline stops at
-    // 200² = 46.1 s (BASELINE.md). Strategy choice per size is pinned by
-    // MatMulPlanSpec; here the numbers show the chosen path WINNING.
+    // Matrix scaling sweep, mirroring the reference's size sweep, every
+    // rung through the PLANNER-selected node (m12's MatMulStrategy): its
+    // cost statistics flip row-join → block-GEMM between 200² and 400²,
+    // and on the block route it derives the tile width
+    // ([[MatrixOps.sweepTile]]) from the same statistics. The sweep
+    // records the chosen path's wall-clock where the reference's own
+    // baseline stops at 200² = 46.1 s (BASELINE.md). Strategy choice per
+    // size is pinned by MatMulPlanSpec; here the numbers show the chosen
+    // path WINNING.
     val sweep: Seq[(String, (SparkSession, String) => DataFrame)] =
-      Seq(50, 100, 200, 400).map { n =>
+      Seq(50, 100, 200, 400, 1000, 2000, 4000).map { n =>
         (s"m1_sweep_$n", (s: SparkSession, _: String) =>
-          MatrixOps.multiply(MatrixGen.matA(s, n, n), MatrixGen.matB(s, n, n)))
-      } ++ Seq(1000, 2000, 4000).map { n =>
-        // Path choice is the planner's (block GEMM at these sizes —
-        // MatMulPlanSpec); block size is the physical tuning knob: tile
-        // replication in the pair join AND the partial-tile shuffle both
-        // scale linearly with grid width n/bs, so pick the smallest grid
-        // that still saturates the cores (grid² pairs ≥ ~2·parallelism;
-        // bs = n/8 → 512 pairs ≥ 64) — UNTIL the dense tile arrays hit
-        // task memory: three bs² LONG arrays per tile multiply grow as
-        // (n/8)², so past n = 4096 the tile caps at 512 (3·2 MB arrays
-        // per task) and the grid widens instead ([[MatrixOps.sweepTile]]
-        // — the size-derived bs rule the r8 verdict asked to pin down).
-        (s"m1_sweep_$n", (s: SparkSession, _: String) =>
-          MatrixOps.multiplyPlanned(MatrixGen.matA(s, n, n),
-                                    MatrixGen.matB(s, n, n),
-                                    bs = MatrixOps.sweepTile(n)))
+          MatrixOps.multiplyPlanned(MatrixGen.matA(s, n, n), MatrixGen.matB(s, n, n)))
       }
 
     val everything = SparkEntry.queries.toSeq.sortBy(_._1) ++ sweep

@@ -39,11 +39,11 @@ object Engine {
   /** Apply `SPARK_GRAFT_CONF="k=v,k=v"` session-conf overrides — the probe
     * and bench harnesses' shared mechanism for forcing non-default paths
     * (`spark.graft.dedup.attachBroadcastCap=0` for past-cap fallback runs,
-    * `spark.graft.dedup.pairSpread=off` for the 1× spread A/B). Values
-    * containing ',' cannot be expressed (no probed conf needs one); empty
-    * segments (trailing comma) are skipped; a segment without '=' fails
-    * loudly with the offending text instead of an opaque MatchError
-    * (r10 ADVICE). Returns the overrides applied, for run-header logging.
+    * `spark.graft.dedup.pairSpreadMinDocs=0` to force the verify spread
+    * on). Values containing ',' cannot be expressed (no probed conf needs
+    * one); empty segments (trailing comma) are skipped; a segment without
+    * '=' fails loudly with the offending text instead of an opaque
+    * MatchError (r10 ADVICE). Returns the overrides applied, for run-header logging.
     */
   def applyConfOverrides(spark: SparkSession): Seq[(String, String)] =
     sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(

@@ -102,9 +102,8 @@ object DedupOps {
     graft.Engine.confLong(spark, "spark.graft.dedup.attachBroadcastCap")
       .getOrElse(512L << 20)
 
-  /** Largest shingle universe the dense bitset paths take (verify
-    * representation and the regime pick alike): default 16 384 codes,
-    * ≤ 2 KB/doc bitsets; 0 disables them.
+  /** Largest shingle universe the dense bitset regime takes: default
+    * 16 384 codes, ≤ 2 KB/doc bitsets; 0 disables it.
     */
   private def denseUniverseMax(spark: org.apache.spark.sql.SparkSession): Long =
     graft.Engine.confLong(spark, "spark.graft.dedup.denseUniverseMax")
@@ -225,66 +224,10 @@ object DedupOps {
             .as("jaccard"))
     }
     val spark = sh.sparkSession
-    import spark.implicits._
-    // VERIFY-REPRESENTATION pick (round 12): on a saturated universe each
-    // doc's code SET fits a ⌈U/64⌉-word bitset (~U/8 bytes vs 8 B/code
-    // arrays — 3.5× lighter at the fixture's ~143-code docs), shrinking
-    // the attach stream and the intersect to an AND/popcount loop
-    // ([[graft.functions.BitsetIntersectCount]], codegen'd). MEASURED AND
-    // LEFT OPT-IN: same-host A/B reads the bitset WORSE at gate scale
-    // (l2b 6.74 vs 5.34 s) and at 16× (117.2 vs ~95), NEUTRAL at 32×
-    // (386.7 vs 370.0 cross-round) — the extra build pass (index join +
-    // idx aggregate) costs more than the byte savings return on this
-    // host's fast local disks. What the bitset DOES buy is capacity risk:
-    // the array verify's 32× rung spilled ~20 GB of scratch; the bitset
-    // run's disk high-water was +3 GB — on disk-constrained executors
-    // that is the difference between completing and DNF, which is why
-    // the path ships behind `spark.graft.dedup.bitsetVerify=on` (with the
-    // universe cap still applied) instead of being deleted. Output is
-    // bit-identical either way (same c/na/nb integers; spec-pinned).
-    //
-    // CONF-ONLY BY DESIGN (round 13, r12 verdict item 6): an automatic
-    // pick was considered and rejected because both of its inputs are
-    // unknowable where the decision is made — the wall-clock side is
-    // executor disk THROUGHPUT under concurrent tenancy (no statfs
-    // reveals it), and the capacity side is each EXECUTOR's
-    // spark.local.dir free space, while this code picks the plan on the
-    // DRIVER, whose getUsableSpace reads the wrong disk by definition
-    // (and executors can be heterogeneous). A rule guessing either input
-    // wrong silently picks the slower — or the DNF — path; the conf is
-    // set once per deployment by whoever knows the hardware.
-    val bitsetOn = spark.conf
-      .getOption("spark.graft.dedup.bitsetVerify") match {
-        case Some("on")  => true
-        case Some("off") | None => false
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"spark.graft.dedup.bitsetVerify must be 'on' or 'off', got '$other'")
-      }
-    val denseMax = denseUniverseMax(spark)
-    val denseU: Option[Long] =
-      if (!bitsetOn || denseMax <= 0) None
-      else Some(sh.agg(countDistinct(col("code"))).head().getLong(0))
-        .filter(_ <= denseMax)
-    val sets = (denseU match {
-      case Some(u) =>
-        val w = ((u + 63) / 64).toInt
-        val index = sh.select(col("code")).distinct()
-          .withColumn("idx",
-            (row_number().over(Window.orderBy(col("code"))) - 1).cast("int"))
-        sh.join(broadcast(index), "code")
-          .groupBy(col("doc_id")).agg(collect_list(col("idx")).as("idxs"))
-          .as[(Long, Seq[Int])]
-          .map { case (id, idxs) =>
-            val words = new Array[Long](w)
-            idxs.foreach(i => words(i >> 6) |= 1L << (i & 63))
-            (id, words, idxs.size.toLong)
-          }.toDF("doc_id", "codes", "nsh")
-      case None =>
-        sh.groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(col("code"))).as("codes"),
-               count(lit(1)).cast("long").as("nsh"))
-    }).persist()
+    val sets = sh.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("code"))).as("codes"),
+           count(lit(1)).cast("long").as("nsh"))
+      .persist()
     // Measured (not estimated) broadcast decision: 8 bytes per code plus
     // per-row overhead, against the session's broadcast threshold. The two
     // driver actions run over the now-cached sets frame.
@@ -341,32 +284,19 @@ object DedupOps {
     // starts fine-grained and coalesces by measured bytes instead of
     // inheriting a pinned session width (the r8 l25 OOM).
     // COUNT-CONDITIONAL (round 11): the r10 gate-scale drift was real —
-    // the same-host A/B (`SPARK_GRAFT_CONF=spark.graft.dedup.pairSpread=
-    // off`, 2-query bench protocol) read l2 6.4 / l2b 7.8 s without the
-    // spread vs 10.4 / 10.5 s with it at 1× (5 000 docs), while the 8×
+    // the same-host A/B (spread forced off, 2-query bench protocol)
+    // read l2 6.4 / l2b 7.8 s without the spread vs 10.4 / 10.5 s with
+    // it at 1× (5 000 docs), while the 8×
     // rungs NEED it (l2 72.6 → 31.5 s). Below a corpus-size threshold the
     // candidate volume is too small to be spread-bound and the extra
     // exchange is pure cost, so the spread auto-disables on the ALREADY
     // MEASURED `nDocs` (the sets count the attach decision runs anyway —
     // a candidate count() would re-execute the whole candidate subtree).
     // Crossover sits between the measured −3 s at 10 000 docs and +40 s
-    // at 40 000; default 16 000 (`spark.graft.dedup.pairSpreadMinDocs`).
-    // Explicit `pairSpread=on`/`off` still forces either path (the probe
-    // ladders' A/B switch).
-    val spreadOn = spark.conf
-      .getOption("spark.graft.dedup.pairSpread") match {
-        case Some("off") => false
-        case Some("on")  => true
-        // Fail-loudly on anything else ("true", a typo): a forced A/B run
-        // silently becoming an auto run invalidates the measurement — the
-        // same convention Engine.applyConfOverrides establishes.
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"spark.graft.dedup.pairSpread must be 'on' or 'off', got '$other'")
-        case None =>
-          nDocs >= graft.Engine.confLong(
-            spark, "spark.graft.dedup.pairSpreadMinDocs").getOrElse(16000L)
-      }
+    // at 40 000; default 16 000 (`spark.graft.dedup.pairSpreadMinDocs`;
+    // 0 forces the spread on, Long.MaxValue forces it off).
+    val spreadOn = nDocs >= graft.Engine.confLong(
+      spark, "spark.graft.dedup.pairSpreadMinDocs").getOrElse(16000L)
     val repartitioned =
       if (spreadOn) candidates
         .repartition(spark.sparkContext.defaultParallelism, col("da"), col("db"))
@@ -377,25 +307,13 @@ object DedupOps {
       .filter(least(col("na"), col("nb")) * 1000000L >=
               greatest(col("na"), col("nb")) * T)
       .select("da", "db")
-    // Word-parallel AND/popcount for bitsets, sorted merge for code
-    // arrays — BOTH native codegen'd expressions producing the same exact
-    // integers. The first bitset probe used builtin HOFs here
-    // (aggregate ∘ zip_with ∘ bit_count) and the l2b 16× rung REGRESSED
-    // 95 → 120 s: higher-order functions evaluate interpreted, and one
-    // intersect per candidate pair made that the stage's new bottleneck —
-    // [[graft.functions.BitsetIntersectCount]] is the codegen'd fix.
-    // na/nb ride the sets frame (size(codes) would read WORD count in
-    // the bitset representation).
-    val intersectC =
-      if (denseU.isDefined)
-        graft.functions.BitsetIntersectCount(col("ca"), col("cb"))
-      else graft.functions.SortedIntersectCount(col("ca"), col("cb"))
     val result = lenFiltered
       .join(attach(sets.select(col("doc_id").as("da"), col("codes").as("ca"),
                                col("nsh").as("na"))), "da")
       .join(attach(sets.select(col("doc_id").as("db"), col("codes").as("cb"),
                                col("nsh").as("nb"))), "db")
-      .select(col("da"), col("db"), intersectC.as("c"),
+      .select(col("da"), col("db"),
+              graft.functions.SortedIntersectCount(col("ca"), col("cb")).as("c"),
               col("na"), col("nb"))
       // Threshold compares the unrounded double ratio — both engines divide
       // the same exact integers, so the comparison is engine-agnostic; the

@@ -151,10 +151,9 @@ object MatrixOps {
     // instead of O(grid³·bs²) cell rows through a hash aggregate — at
     // 2000²/bs=128 that is 4096 arrays vs 67M rows, and the final cell
     // emission needs NO further aggregate. Zero cells are dropped on
-    // emission; that matches the join formulation, which also never emits
-    // an (i,k) whose products are absent. (Cancellation to exact 0 can't
-    // occur: inputs are nonnegative in all fixtures; general case
-    // documented.)
+    // emission — including cells whose products cancel to exact 0, which
+    // [[matmul]] does emit; the planner's row-join route filters them so
+    // both routes return the same rows ([[graft.plans.MatMul]]).
     //
     // MEASURED NEGATIVE (round 16, 2026-08-20): a codegen emission —
     // mapGroups returning ONE (abi, bbj, bs²-array) row, then posexplode +
@@ -196,29 +195,6 @@ object MatrixOps {
       }.toDF("i", "k", "v")
   }
 
-  /** Density-dispatched multiply — the default entry point.
-    *
-    * Dense inputs route to [[blockMatmul]]: the row-level join emits
-    * |A⋈B| = m·n·p intermediate rows for dense operands (the scale-killer
-    * at 100×), while the block path shuffles O(tiles) grouped rows and
-    * does cache-friendly local GEMM per tile pair. Sparse inputs keep the
-    * row join ([[matmul]]), whose intermediate is proportional to the
-    * true nonzero structure. Callers state density (`denseHint`); an
-    * adaptive version would sample nnz/(rows·cols) — documented, not
-    * needed while all call sites know their operands.
-    */
-  def multiply(a: DataFrame, b: DataFrame, denseHint: Boolean = true,
-               bs: Int = 128): DataFrame =
-    if (denseHint) blockMatmul(a, b, bs) else matmul(a, b)
-
-  /** PLANNER-selected multiply: emits a [[graft.plans.MatMul]] logical node
-    * and lets [[graft.plans.MatMulStrategy]] (injected via
-    * `SparkSessionExtensions`) choose the physical formulation from the
-    * operands' cost statistics — broadcastable side ⇒ row join (no
-    * contraction shuffle), both sides big ⇒ block GEMM. Same result as
-    * [[multiply]]; the dispatch moves from the caller's `denseHint` into
-    * the planner, where Spark makes its own join-strategy calls.
-    */
   /** Size-derived tile width for dense n×n block GEMM: the widest tile
     * under the measured caps — fewer, bigger tiles shrink every exchange
     * (densify rows per tile, partial tiles = n³·8/bs bytes) and the
@@ -242,15 +218,18 @@ object MatrixOps {
     */
   def sweepTile(n: Int): Int = math.max(1, math.min(n / 4, 512))
 
-  /** `bs = 0` (the default) leaves the tile width to the planner —
-    * [[graft.plans.MatMulStrategy.deriveBs]] applies the measured
-    * [[sweepTile]] rule to the operands' cost statistics; a positive bs
-    * pins it (the probe ladders' A/B switch).
+  /** PLANNER-selected multiply — the one multiply dispatcher: emits a
+    * [[graft.plans.MatMul]] logical node and lets
+    * [[graft.plans.MatMulStrategy]] (injected via `SparkSessionExtensions`)
+    * choose the physical formulation from the operands' cost statistics —
+    * broadcastable side ⇒ row join (no contraction shuffle), both sides
+    * big ⇒ block GEMM with the tile width from
+    * [[graft.plans.MatMulStrategy.deriveBs]] (the measured [[sweepTile]]
+    * rule). Either route yields the same rows: zero cells are dropped.
     */
-  def multiplyPlanned(a: DataFrame, b: DataFrame, bs: Int = 0): DataFrame =
+  def multiplyPlanned(a: DataFrame, b: DataFrame): DataFrame =
     org.apache.spark.sql.GraftSqlShim.ofRows(a.sparkSession,
-      graft.plans.MatMul.node(
-        a.queryExecution.analyzed, b.queryExecution.analyzed, bs))
+      graft.plans.MatMul.node(a.queryExecution.analyzed, b.queryExecution.analyzed))
       .withColumnRenamed("j", "k")
 
   /** (A·B)·C through NESTED planner-selected [[graft.plans.MatMul]] nodes.
@@ -259,12 +238,11 @@ object MatrixOps {
     * the cost statistics say the right operand is the small one — the
     * matrix-chain-ordering decision as a Catalyst rule, not caller code.
     */
-  def multiplyPlannedChain(a: DataFrame, b: DataFrame, c: DataFrame,
-                           bs: Int = 0): DataFrame = {
+  def multiplyPlannedChain(a: DataFrame, b: DataFrame, c: DataFrame): DataFrame = {
     val inner = graft.plans.MatMul.node(
-      a.queryExecution.analyzed, b.queryExecution.analyzed, bs)
+      a.queryExecution.analyzed, b.queryExecution.analyzed)
     org.apache.spark.sql.GraftSqlShim.ofRows(a.sparkSession,
-      graft.plans.MatMul.node(inner, c.queryExecution.analyzed, bs))
+      graft.plans.MatMul.node(inner, c.queryExecution.analyzed))
       .withColumnRenamed("j", "k")
   }
 

@@ -14,11 +14,12 @@ object MatrixQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // M1 — the reference's exact live workload (50×50 dense multiply,
-    // orchestrator/main.py:43-48). Dense inputs dispatch to the block-GEMM
-    // path (MatrixOps.multiply); the row join plan stays the sparse path
-    // (M4). Same oracle either way — the paths are result-identical.
+    // orchestrator/main.py:43-48) through the planner-selected multiply:
+    // at 50² a side fits the broadcast threshold, so MatMulStrategy picks
+    // the broadcast row join. Same oracle on every route — the routes are
+    // result-identical (MatrixPropSpec).
     "m1_matmul" -> ((s, _) =>
-      MatrixOps.multiply(A50(s), B50(s)).orderBy("i", "k")),
+      MatrixOps.multiplyPlanned(A50(s), B50(s)).orderBy("i", "k")),
 
     // M2 — same product via 2-D block partitioning + local GEMM
     // (generalizes orchestrator/main.py:88-112's slabs); hash-identical to M1.
@@ -28,14 +29,13 @@ object MatrixQueries {
     // M3 — rectangular shapes: the case the reference's reducer loop bound
     // gets wrong (reducer/main.py:30). 30×50 · 50×20.
     "m3_matmul_rect" -> ((s, _) =>
-      MatrixOps.multiply(MatrixGen.matA(s, 30, 50), MatrixGen.matB(s, 50, 20))
+      MatrixOps.multiplyPlanned(MatrixGen.matA(s, 30, 50), MatrixGen.matB(s, 50, 20))
         .orderBy("i", "k")),
 
-    // M4 — sparse path: drop exact zeros, row-level join (denseHint=false).
+    // M4 — sparse operands: drop exact zeros before the multiply.
     "m4_matmul_sparse" -> ((s, _) =>
-      MatrixOps.multiply(A50(s).filter(col("v") =!= 0),
-                         B50(s).filter(col("v") =!= 0),
-                         denseHint = false).orderBy("i", "k")),
+      MatrixOps.multiplyPlanned(A50(s).filter(col("v") =!= 0),
+                                B50(s).filter(col("v") =!= 0)).orderBy("i", "k")),
 
     // M5 — transpose (narrow, no shuffle).
     "m5_transpose" -> ((s, _) =>
@@ -73,7 +73,7 @@ object MatrixQueries {
 
     // M8 — A·A self-join (alias disambiguation exercised).
     "m8_matpow" -> ((s, _) =>
-      MatrixOps.multiply(A50(s), A50(s)).orderBy("i", "k")),
+      MatrixOps.multiplyPlanned(A50(s), A50(s)).orderBy("i", "k")),
 
     // M10 — matrix-vector multiply iterated: y = A³·1, the power-iteration
     // shape (PageRank's inner loop). Exact LONG arithmetic throughout.
@@ -93,11 +93,11 @@ object MatrixQueries {
         .select(col("node").as("i"), col("r"))
         .orderBy("i")),
 
-    // M12 — the same 50×50 product through the PLANNER: a custom MatMul
-    // logical node whose row-join-vs-block-GEMM choice is made by
-    // MatMulStrategy from cost statistics (SparkSessionExtensions planner
-    // hook), not by the caller's denseHint. Shares the mm50 oracle — every
-    // formulation is result-identical.
+    // M12 — the planner gate: a custom MatMul logical node whose
+    // row-join-vs-block-GEMM choice is made by MatMulStrategy from cost
+    // statistics (SparkSessionExtensions planner hook). Since every matrix
+    // product goes through the planner it is the same query as M1; kept as
+    // the declared gate of the planner hook. Shares the mm50 oracle.
     "m12_matmul_planned" -> ((s, _) =>
       MatrixOps.multiplyPlanned(A50(s), B50(s)).orderBy("i", "k")),
 
@@ -116,7 +116,7 @@ object MatrixQueries {
     // fixtures hold exactly the formula matrices, so the result shares
     // the mm50 oracle.
     "m9_dense_json_io" -> ((s, _) =>
-      MatrixOps.multiply(
+      MatrixOps.multiplyPlanned(
         graft.sources.MatrixIO.readDenseJson(s, "/root/repo/fixtures/matrix_A_50x50.json"),
         graft.sources.MatrixIO.readDenseJson(s, "/root/repo/fixtures/matrix_B_50x50.json"))
         .orderBy("i", "k"))

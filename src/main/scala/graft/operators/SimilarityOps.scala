@@ -651,14 +651,10 @@ object SimilarityOps {
     // rounds beats the parallelism — while k=√N=100 wins −1.4 s);
     // crossover conf'd as spark.graft.kmeans.spreadMinK (default 32, the
     // geometric middle of the measured points), the denseMinDocs pattern.
-    val spreadMinK = s.conf.getOption("spark.graft.kmeans.spreadMinK")
-      .map { v =>
-        // Fail fast with the conf key named (r15 ADVICE): a malformed value
-        // must not surface as a bare NumberFormatException mid-query.
-        require(v.nonEmpty && v.forall(_.isDigit),
-          s"spark.graft.kmeans.spreadMinK must be a non-negative integer, got '$v'")
-        v.toInt
-      }.getOrElse(32)
+    val spreadMinK = graft.Engine.confLong(s, "spark.graft.kmeans.spreadMinK")
+      .getOrElse(32L)
+    require(spreadMinK >= 0,
+      s"spark.graft.kmeans.spreadMinK must be >= 0, got $spreadMinK")
     val fp = (if (k >= spreadMinK) graft.Tables.spread(corpus) else corpus)
       .select(col("vec_id"),
         transform(col("embedding"),

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BitsetIntersectCount, Hilbert2, NfcNormalize, PolyTokenHash, RollingMinHash, SortedIntersectCount, SrpBands, VecDot, WordNgramsGen, ZOrder2}
+import graft.functions.{Hilbert2, NfcNormalize, PolyTokenHash, RollingMinHash, SortedIntersectCount, SrpBands, VecDot, WordNgramsGen, ZOrder2}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -24,15 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2,
           "sorted_intersect_count expects exactly 2 arguments")
         SortedIntersectCount(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bitset_intersect_count"),
-      new ExpressionInfo(classOf[BitsetIntersectCount].getName,
-                         "bitset_intersect_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "bitset_intersect_count expects exactly 2 arguments")
-        BitsetIntersectCount(children(0), children(1))
       }))
     ext.injectFunction((
       new FunctionIdentifier("z_order2"),

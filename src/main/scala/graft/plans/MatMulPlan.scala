@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.operators.MatrixOps
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -12,16 +13,20 @@ import org.apache.spark.sql.types.LongType
   * [[MatrixOps.matmul]]'s convention). The node carries INTENT only; the
   * physical formulation — row-level join+aggregate vs 2-D block GEMM — is
   * chosen by [[MatMulStrategy]] at planning time from the children's cost
-  * statistics. This replaces the caller-supplied `denseHint` of
-  * [[MatrixOps.multiply]] with a planner decision, the way Spark itself
-  * picks broadcast vs sort-merge joins (SURVEY §7's declared-optional
-  * `extraStrategies` hook, r5 verdict item 9).
+  * statistics, the way Spark itself picks broadcast vs sort-merge joins
+  * (SURVEY §7's declared-optional `extraStrategies` hook, r5 verdict
+  * item 9).
+  *
+  * Zero rule: the result holds the NONZERO cells only. A cell whose
+  * products cancel to exact 0 is dropped on both routes — the block
+  * route's emission skips zero cells, so the row-join route filters
+  * `v ≠ 0` — and the rows returned never depend on which route ran.
   *
   * `output` is a constructor parameter so the attribute ids survive
   * `copy()`/`transform` — parents resolve against these exact ids, and the
   * strategy re-aligns the expansion's output to them with a final Project.
   */
-case class MatMul(left: LogicalPlan, right: LogicalPlan, blockSize: Int,
+case class MatMul(left: LogicalPlan, right: LogicalPlan,
                   output: Seq[Attribute]) extends BinaryNode {
   // The output attributes are PRODUCED here, not passed through from the
   // children — without this, CheckAnalysis counts them as missing inputs
@@ -47,8 +52,8 @@ object MatMul {
     * for the user-facing result ([[graft.operators.MatrixOps
     * .multiplyPlanned]]).
     */
-  def node(left: LogicalPlan, right: LogicalPlan, blockSize: Int): MatMul =
-    MatMul(left, right, blockSize, Seq(
+  def node(left: LogicalPlan, right: LogicalPlan): MatMul =
+    MatMul(left, right, Seq(
       AttributeReference("i", LongType)(),
       AttributeReference("j", LongType)(),
       AttributeReference("v", LongType)()))
@@ -70,9 +75,9 @@ object MatMul {
 object MatMulReassociate
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case MatMul(MatMul(a, b, bsInner, _), c, bs, out)
+    case MatMul(MatMul(a, b, _), c, out)
         if c.stats.sizeInBytes < a.stats.sizeInBytes =>
-      MatMul(a, MatMul.node(b, c, bsInner), bs, out)
+      MatMul(a, MatMul.node(b, c), out)
   }
 }
 
@@ -97,10 +102,10 @@ class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
       val a = GraftSqlShim.ofRows(spark, m.left)
       val b = GraftSqlShim.ofRows(spark, m.right)
       val composed =
-        if (bcThreshold > 0 && minSide <= bcThreshold) MatrixOps.matmul(a, b)
+        if (bcThreshold > 0 && minSide <= bcThreshold)
+          MatrixOps.matmul(a, b).filter(col("v") =!= 0L)
         else {
-          val bs = if (m.blockSize > 0) m.blockSize
-                   else MatMulStrategy.deriveBs(m.left, m.right)
+          val bs = MatMulStrategy.deriveBs(m.left, m.right)
           MatrixOps.blockMatmul(a, b, bs,
             MatMulStrategy.deriveReplication(
               m.left, m.right, bs,
@@ -126,8 +131,8 @@ object MatMulStrategy {
   @volatile var lastDerived: Option[(BigInt, Long, Int)] = None
 
   /** Planner-derived tile width (r11 VERDICT "Next round" 5): the measured
-    * [[MatrixOps.sweepTile]] rule — bs = min(n/8, 512), the 8×8-grid
-    * core-saturation floor under the r9-measured per-task memory cap —
+    * [[MatrixOps.sweepTile]] rule — bs = min(n/4, 512), the 4×4 grid
+    * under the measured per-task memory cap —
     * applied to a dimension estimate FROM THE SAME COST STATISTICS the
     * strategy's broadcast decision reads, so the planner owns the whole
     * physical choice and callers stop shipping a magic 128. A dense n×n
@@ -135,16 +140,13 @@ object MatMulStrategy {
     * sizeInBytes over the 32-byte (i, j, v) row footprint (3 longs + row
     * overhead — Catalyst's own size model for this schema). The estimate
     * only needs to land within a FACTOR of n: bs buckets are coarse
-    * (⌈n/8⌉ below 4096, the 512 cap above) and both the floor and the cap
+    * (n/4 below 2048, the 512 cap above) and both the floor and the cap
     * are safe on either side — a 2× low bs doubles grid parallelism at
     * identical task memory, a 2× high one stays under the measured 8
     * MB/task tile bound via the 512 cap.
     */
   def deriveBs(left: LogicalPlan, right: LogicalPlan): Int = {
-    val rowBytes = 32
-    val nnz = (left.stats.sizeInBytes.max(right.stats.sizeInBytes) /
-      rowBytes).max(BigInt(1))
-    val n = math.sqrt(nnz.min(BigInt(Long.MaxValue)).toDouble).toLong.max(1L)
+    val (nnz, n) = estimateN(left, right)
     val bs = MatrixOps.sweepTile(math.min(n, Int.MaxValue).toInt)
     lastDerived = Some((nnz, n, bs))
     bs
@@ -164,10 +166,7 @@ object MatMulStrategy {
     */
   def deriveReplication(left: LogicalPlan, right: LogicalPlan, bs: Int,
                         parallelism: Int, headroom: Int = 2): Int = {
-    val rowBytes = 32
-    val nnz = (left.stats.sizeInBytes.max(right.stats.sizeInBytes) /
-      rowBytes).max(BigInt(1))
-    val n = math.sqrt(nnz.min(BigInt(Long.MaxValue)).toDouble).toLong.max(1L)
+    val (_, n) = estimateN(left, right)
     val grid = ((n + bs - 1) / bs).max(1L)
     val target = headroom.toLong * parallelism
     if (grid >= target) 1
@@ -177,6 +176,16 @@ object MatMulStrategy {
     }
   }
 
+  /** `(nnz estimate, n)` of the larger operand, read as a dense n×n COO
+    * matrix: sizeInBytes over the 32-byte (i, j, v) row footprint, n = √nnz.
+    */
+  private def estimateN(left: LogicalPlan, right: LogicalPlan): (BigInt, Long) = {
+    val rowBytes = 32
+    val nnz = (left.stats.sizeInBytes.max(right.stats.sizeInBytes) /
+      rowBytes).max(BigInt(1))
+    (nnz, math.sqrt(nnz.min(BigInt(Long.MaxValue)).toDouble).toLong.max(1L))
+  }
+
   /** The replication target's headroom factor over the core count
     * (`spark.graft.gemm.replicationHeadroom`, default 2): R is chosen so
     * `grid·R ≥ headroom·parallelism`. 2 over-decomposes the join for load
@@ -184,13 +193,10 @@ object MatMulStrategy {
     * measuring that trade per host.
     */
   def replicationHeadroom(spark: SparkSession): Int = {
-    val key = "spark.graft.gemm.replicationHeadroom"
-    val v = spark.conf.getOption(key).map { raw =>
-      scala.util.Try(raw.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"$key must be a positive integer, got '$raw'"))
-    }.getOrElse(2)
-    require(v >= 1, s"$key must be >= 1, got $v")
-    v
+    val v = graft.Engine.confLong(spark, "spark.graft.gemm.replicationHeadroom")
+      .getOrElse(2L)
+    require(v >= 1 && v.isValidInt,
+      s"spark.graft.gemm.replicationHeadroom must be in [1, ${Int.MaxValue}], got $v")
+    v.toInt
   }
 }

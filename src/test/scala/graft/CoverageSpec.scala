@@ -71,17 +71,16 @@ class CoverageSpec extends AnyFunSuite {
   }
 
   test("spark.graft.* conf keys are exactly the declared knobs") {
-    val keys = mainSources.flatMap { src =>
+    val literals = mainSources.flatMap { src =>
       "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r.findAllMatchIn(src).map(_.group(1))
-    }.toSet
+    }
+    val keys = literals.toSet
     val declared = Set(
       "spark.graft.cc.localMaxRows",
       "spark.graft.dedup.attachBroadcastCap",
-      "spark.graft.dedup.bitsetVerify",
       "spark.graft.dedup.denseGrid",
       "spark.graft.dedup.denseMinDocs",
       "spark.graft.dedup.denseUniverseMax",
-      "spark.graft.dedup.pairSpread",
       "spark.graft.dedup.pairSpreadMinDocs",
       "spark.graft.gemm.replicationHeadroom",
       "spark.graft.kmeans.spreadMinK",
@@ -90,6 +89,15 @@ class CoverageSpec extends AnyFunSuite {
     assert(keys == declared,
       s"undeclared: ${(keys -- declared).toSeq.sorted}; " +
       s"gone: ${(declared -- keys).toSeq.sorted}")
+    // One parser: every key literal is the key argument of an
+    // Engine.confLong call, which fails naming the key on a malformed value.
+    val viaConfLong = mainSources.flatMap { src =>
+      "Engine\\.confLong\\(\\s*\\w+\\s*,\\s*\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
+        .findAllMatchIn(src).map(_.group(1))
+    }
+    val otherwiseRead = literals diff viaConfLong
+    assert(otherwiseRead.isEmpty,
+      s"keys read without Engine.confLong: ${otherwiseRead.sorted}")
   }
 
   test("PlanAudit's default set only names declared queries") {

@@ -152,10 +152,10 @@ class DedupFallbackSpec extends SparkSpec {
     // 72.6 → 31.5 s) but its extra exchange measured ~3 s per gate at 1×
     // (same-host A/B, SURVEY §5.2 round-11 (d)), so verifyJaccard now
     // auto-disables it below `pairSpreadMinDocs` (default 16 000) on the
-    // sets count it already measures. This pins all three paths — auto
-    // (tiny corpus → NO (da, db) exchange), conf-forced on, and
-    // threshold-lowered auto-on — and that output is identical across
-    // them (the spread is layout-only).
+    // sets count it already measures. This pins both paths — auto
+    // (tiny corpus → NO (da, db) exchange) and threshold-lowered auto-on —
+    // and that output is identical across them (the spread is
+    // layout-only).
     // The candidate DISTINCT inserts its own (da, db) exchange
     // (ENSURE_REQUIREMENTS); the spread is the EXPLICIT repartition,
     // which Spark tags REPARTITION_BY_NUM — that tag is the detector.
@@ -177,9 +177,6 @@ class DedupFallbackSpec extends SparkSpec {
     assert(auto.nonEmpty)
     assert(!autoSpread,
       "7 docs < pairSpreadMinDocs: the (da, db) repartition must be absent")
-    val (forced, forcedSpread) = run("spark.graft.dedup.pairSpread" -> "on")
-    assert(forced == auto && forcedSpread,
-      "pairSpread=on must force the (da, db) exchange at identical output")
     val (lowT, lowTSpread) = run("spark.graft.dedup.pairSpreadMinDocs" -> "1")
     assert(lowT == auto && lowTSpread,
       "a corpus at/above pairSpreadMinDocs must auto-enable the spread")

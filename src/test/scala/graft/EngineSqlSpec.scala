@@ -288,4 +288,26 @@ class EngineSqlSpec extends SparkSpec {
         java.nio.file.Paths.get(dir))
     }
   }
+
+  test("malformed gemm and kmeans confs fail naming their key") {
+    // Both keys parse through Engine.confLong; the range checks after it
+    // name the key too.
+    val corpus = spark.range(1).toDF("vec_id")
+    Seq(
+      ("spark.graft.gemm.replicationHeadroom", "two",
+        () => graft.plans.MatMulStrategy.replicationHeadroom(spark)),
+      ("spark.graft.gemm.replicationHeadroom", "0",
+        () => graft.plans.MatMulStrategy.replicationHeadroom(spark)),
+      ("spark.graft.kmeans.spreadMinK", "32k",
+        () => graft.operators.SimilarityOps.kmeansFp(corpus, 8, 1)),
+      ("spark.graft.kmeans.spreadMinK", "-1",
+        () => graft.operators.SimilarityOps.kmeansFp(corpus, 8, 1))
+    ).foreach { case (key, bad, read) =>
+      spark.conf.set(key, bad)
+      val e = try intercept[IllegalArgumentException](read())
+      finally spark.conf.unset(key)
+      assert(e.getMessage.contains(key) && e.getMessage.contains(bad),
+        s"$key=$bad: ${e.getMessage}")
+    }
+  }
 }

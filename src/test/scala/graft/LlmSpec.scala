@@ -377,26 +377,6 @@ class LlmSpec extends SparkSpec {
     assert(!jac.contains((0L, 8L)) && !jac.contains((8L, 0L)))
   }
 
-  test("prefixJaccardPairs bitset verify ≡ array verify (representation-blind attach)") {
-    // Round 12's verify-representation experiment — measured and left
-    // OPT-IN (arrays default; the bitset build pass costs more than its
-    // byte savings return at gate/16× scale, but erases the 32× rung's
-    // ~20 GB scratch spill — DedupOps comment has the A/B numbers). The
-    // spec pins what makes the knob safe to flip on disk-constrained
-    // hosts: bitset output ≡ array output through the prefix-candidate
-    // verify (500 docs < denseMinDocs: the sparse route), same c/na/nb
-    // integers.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val arrays = canon(DedupOps.prefixJaccardPairs(docs, 0.5)) // default: arrays
-    spark.conf.set("spark.graft.dedup.bitsetVerify", "on")
-    val bitsets = try canon(DedupOps.prefixJaccardPairs(docs, 0.5))
-    finally spark.conf.unset("spark.graft.dedup.bitsetVerify")
-    assert(bitsets == arrays)
-    assert(arrays.nonEmpty, "fixture must produce verified pairs at t=0.5")
-  }
-
   test("prefixJaccardPairs dense bitset regime ≡ sparse prefix join") {
     // The symmetric twin of the containment regime switch: the same
     // blocked-Boolean-GEMM kernel serves prefixJaccardPairs (and through
@@ -442,24 +422,6 @@ class LlmSpec extends SparkSpec {
         assert(e.getMessage.contains("denseGrid"), s"value $bad")
       } finally spark.conf.unset("spark.graft.dedup.denseGrid")
     }
-  }
-
-  test("bitset_intersect_count rejects nullable-element arrays at analysis") {
-    // r12 ADVICE (low): eval/codegen read elements with getLong unchecked,
-    // so a nullable-element array must be rejected up front, not produce
-    // garbage counts. Internal bitsets (Array[Long] encoders) are
-    // non-nullable by construction and must keep resolving.
-    import spark.implicits._
-    val ok = Seq((Array(5L), Array(7L))).toDF("a", "b")
-    assert(ok.select(graft.functions.BitsetIntersectCount(col("a"), col("b")))
-             .head().getLong(0) == 2L)
-    // array(when(...)) carries containsNull = true.
-    val bad = ok.select(array(when(col("a").isNotNull, lit(1L))).as("na"),
-                        col("b"))
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      bad.select(graft.functions.BitsetIntersectCount(col("na"), col("b"))).head()
-    }
-    assert(e.getMessage.contains("non-nullable"))
   }
 
   test("containment dense ≡ sparse at a degenerate threshold (T = 0)") {

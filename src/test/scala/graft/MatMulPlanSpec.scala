@@ -14,7 +14,7 @@ class MatMulPlanSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
 
   private def planned() = MatrixOps.multiplyPlanned(
-    MatrixGen.matA(spark, 40, 30), MatrixGen.matB(spark, 30, 20), bs = 16)
+    MatrixGen.matA(spark, 40, 30), MatrixGen.matB(spark, 30, 20))
 
   private def executedPlan(df: DataFrame): String = {
     df.queryExecution.toRdd.foreach(_ => ())
@@ -65,14 +65,14 @@ class MatMulPlanSpec extends SparkSpec {
   }
 
   test("the planner derives the block tile width from operand statistics") {
-    // bs = 0 (the multiplyPlanned default) hands the tile decision to
-    // MatMulStrategy.deriveBs — the measured sweepTile rule (min(n/8, 512))
+    // The tile decision is MatMulStrategy.deriveBs's — the measured
+    // sweepTile rule (min(n/4, 512))
     // over the SAME size statistics the broadcast decision reads. The
     // chosen bs is invisible in the plan string (it parameterizes the
     // mapGroups closures), so the strategy records its last derivation.
     // The pinned values encode Catalyst's size model for the crossJoin-of-
     // ranges COO children (nnz ≈ sizeInBytes/32 ⇒ n within ~2× of true n;
-    // both the n/8 floor and the 512 cap are safe on either side of that
+    // both the n/4 floor and the 512 cap are safe on either side of that
     // factor) — if the size model shifts across Spark versions, this spec
     // is MEANT to flag it.
     import graft.plans.MatMulStrategy
@@ -87,19 +87,12 @@ class MatMulPlanSpec extends SparkSpec {
     }
     val (n1, bs1) = derivedFor(1000)
     val (n2, bs2) = derivedFor(8000)
-    // 1000²: the n/8 regime — bs tracks the dimension estimate.
+    // 1000²: the n/4 regime — bs tracks the dimension estimate.
     assert(bs1 == MatrixOps.sweepTile(n1.toInt) && bs1 < 512 && bs1 >= 125,
       s"1000² derived (n=$n1, bs=$bs1)")
     // 8000²: the measured memory cap — bs clamps at 512 however large the
     // operands get (per-task tile memory stays O(512²); the GRID widens).
     assert(bs2 == 512, s"8000² derived (n=$n2, bs=$bs2)")
-    // An explicit bs still wins (the probe ladders' A/B switch): no
-    // derivation is recorded when the caller pins it.
-    MatMulStrategy.lastDerived = None
-    MatrixOps.multiplyPlanned(
-      MatrixGen.matA(spark, 1000, 1000), MatrixGen.matB(spark, 1000, 1000),
-      bs = 64).queryExecution.executedPlan
-    assert(MatMulStrategy.lastDerived.isEmpty, "explicit bs must not derive")
   }
 
   test("MatMulReassociate rotates (A·B)·C right-deep iff C is the small operand") {
@@ -112,19 +105,19 @@ class MatMulPlanSpec extends SparkSpec {
     // C tiny (30×2): the rule must rotate — right child becomes the inner
     // MatMul, left child is a base operand.
     val cSmall = MatrixGen.matB(spark, 30, 2)
-    val rotated = topNode(MatrixOps.multiplyPlannedChain(a, b, cSmall, 16))
+    val rotated = topNode(MatrixOps.multiplyPlannedChain(a, b, cSmall))
     assert(rotated.right.isInstanceOf[MatMul] && !rotated.left.isInstanceOf[MatMul],
            s"expected right-deep rotation:\n$rotated")
     // C big (30×200): left-deep is already the cheap association — no
     // rotation.
     val cBig = MatrixGen.matB(spark, 30, 200)
-    val kept = topNode(MatrixOps.multiplyPlannedChain(a, b, cBig, 16))
+    val kept = topNode(MatrixOps.multiplyPlannedChain(a, b, cBig))
     assert(kept.left.isInstanceOf[MatMul] && !kept.right.isInstanceOf[MatMul],
            s"expected left-deep chain kept:\n$kept")
     // Both associations are result-identical to the handwritten chain.
     val want = canon(MatrixOps.matmul(
       MatrixOps.matmul(a, b).withColumnRenamed("k", "j"), cSmall))
-    assert(canon(MatrixOps.multiplyPlannedChain(a, b, cSmall, 16)) == want)
+    assert(canon(MatrixOps.multiplyPlannedChain(a, b, cSmall)) == want)
   }
 
   test("downstream operators compose over the MatMul node's output") {

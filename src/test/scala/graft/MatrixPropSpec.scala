@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{MatrixGen, MatrixOps}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property-based matrix algebra (SURVEY.md §5.2 item 2): the invariants
@@ -33,7 +34,7 @@ class MatrixPropSpec extends SparkSpec {
       (m: Long, n: Long, p: Long, bs: Int) =>
         val a = MatrixGen.matA(spark, m, n)
         val b = MatrixGen.matB(spark, n, p)
-        toSet(MatrixOps.multiply(a, b)) == toSet(MatrixOps.blockMatmul(a, b, bs))
+        toSet(MatrixOps.matmul(a, b)) == toSet(MatrixOps.blockMatmul(a, b, bs))
     }, cases = 8)
   }
 
@@ -53,14 +54,55 @@ class MatrixPropSpec extends SparkSpec {
   }
 
   test("transpose(A·B) == transpose(B)·transpose(A) for all shapes") {
-    check(Prop.forAll(dims, dims, dims) { (m: Long, n: Long, p: Long) =>
-      val a = MatrixGen.matA(spark, m, n)
-      val b = MatrixGen.matB(spark, n, p)
-      // multiply labels the product's second index k; transpose is
-      // defined on the canonical (i, j, v) COO schema.
-      val ab = MatrixOps.multiply(a, b).withColumnRenamed("k", "j")
-      toSet(MatrixOps.transpose(ab)) ==
-        toSet(MatrixOps.multiply(MatrixOps.transpose(b), MatrixOps.transpose(a)))
+    check(Prop.forAll(dims, dims, dims, Gen.choose(1, 6)) {
+      (m: Long, n: Long, p: Long, bs: Int) =>
+        val a = MatrixGen.matA(spark, m, n)
+        val b = MatrixGen.matB(spark, n, p)
+        // The product labels its second index k; transpose is defined on
+        // the canonical (i, j, v) COO schema. Left side: the planner's
+        // (broadcast row-join) route; right side: the block route.
+        val ab = MatrixOps.multiplyPlanned(a, b).withColumnRenamed("k", "j")
+        toSet(MatrixOps.transpose(ab)) == toSet(MatrixOps.blockMatmul(
+          MatrixOps.transpose(b), MatrixOps.transpose(a), bs))
     }, cases = 5)
+  }
+
+  test("multiplyPlanned returns the same rows on both routes for signed values (incl. A·A)") {
+    // Values in {-1, 0, 1} make products cancel to exact 0. The block
+    // route drops zero cells on emission; the row-join route must drop
+    // them too, or the rows returned depend on the broadcast threshold.
+    def signed(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long) =
+      MatrixGen.formula(spark, rows, cols, fa, fb, fc, 3)
+        .select(col("i"), col("j"), (col("v") - 1L).as("v"))
+    def bothRoutes(product: => DataFrame): (Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
+      val rowJoin = product
+      assert(!rowJoin.queryExecution.executedPlan.toString.contains("SerializeFromObject"))
+      val rowJoinRows = toSet(rowJoin)
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val block = product
+        assert(block.queryExecution.executedPlan.toString.contains("SerializeFromObject"))
+        (rowJoinRows, toSet(block))
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    def nonzero(df: DataFrame) = toSet(df).filter(_._3 != 0L)
+    // The smallest cancelling case: C[0,0] = 1·1 + (−1)·1 = 0.
+    import spark.implicits._
+    val a0 = Seq((0L, 0L, 1L), (0L, 1L, -1L), (1L, 0L, 2L)).toDF("i", "j", "v")
+    val b0 = Seq((0L, 0L, 1L), (1L, 0L, 1L)).toDF("i", "j", "v")
+    val (r0, k0) = bothRoutes(MatrixOps.multiplyPlanned(a0, b0))
+    assert(r0 == Set((1L, 0L, 2L)) && k0 == r0, s"row join $r0, block $k0")
+    val coef = Gen.choose(1L, 5L)
+    check(Prop.forAllNoShrink(dims, dims, dims, coef, coef, coef) {
+      (m: Long, n: Long, p: Long, fa: Long, fb: Long, fc: Long) =>
+        val a = signed(m, n, fa, fb, fc)
+        val b = signed(n, p, fb, fc, fa)
+        val sq = signed(n, n, fc, fa, fb)
+        val (rAB, kAB) = bothRoutes(MatrixOps.multiplyPlanned(a, b))
+        val (rAA, kAA) = bothRoutes(MatrixOps.multiplyPlanned(sq, sq))
+        rAB == kAB && rAB == nonzero(MatrixOps.matmul(a, b)) &&
+          rAA == kAA && rAA == nonzero(MatrixOps.matmul(sq, sq))
+    }, cases = 8)
   }
 }
