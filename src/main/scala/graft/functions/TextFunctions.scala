@@ -27,17 +27,10 @@ object TextFunctions {
   def tokens(text: String): Column =
     expr(s"filter(split($text, ' '), t -> t != '')")
 
-  /** Distinct word n-grams (space-joined) over the token array. */
-  def wordShingles(text: String, n: Int): Column =
-    expr(s"""array_distinct(transform(
-               sequence(1, greatest(size(${tokensSql(text)}) - ${n - 1}, 0)),
-               i -> array_join(slice(${tokensSql(text)}, i, $n), ' ')))""")
-
   private def tokensSql(text: String) = s"filter(split($text, ' '), t -> t != '')"
 
   /** All word n-grams (space-joined, WITH multiplicity — the language-model
-    * counting form, vs [[wordShingles]]'s per-doc-distinct set form) over
-    * the token array. Array-local: no positional self-join, no shuffle —
+    * counting form) over the token array. Array-local: no positional self-join, no shuffle —
     * each doc's n-grams materialize inside the row's projection. The
     * explicit size guard matters: `sequence(1, 0)` is the DESCENDING
     * sequence [1, 0], not empty.

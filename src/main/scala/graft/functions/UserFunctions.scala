@@ -28,12 +28,12 @@ object UserFunctions {
     * .addExact) rather than wrapping silently.
     */
   object SumSqLong extends Aggregator[Long, Long, Long] {
-    def zero: Long = 0L
-    def reduce(b: Long, a: Long): Long = Math.addExact(b, Math.multiplyExact(a, a))
-    def merge(b1: Long, b2: Long): Long = Math.addExact(b1, b2)
-    def finish(r: Long): Long = r
-    def bufferEncoder: Encoder[Long] = Encoders.scalaLong
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
+    override def zero: Long = 0L
+    override def reduce(b: Long, a: Long): Long = Math.addExact(b, Math.multiplyExact(a, a))
+    override def merge(b1: Long, b2: Long): Long = Math.addExact(b1, b2)
+    override def finish(r: Long): Long = r
+    override def bufferEncoder: Encoder[Long] = Encoders.scalaLong
+    override def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
 
   /** Register both under their SQL names (idempotent — re-registration

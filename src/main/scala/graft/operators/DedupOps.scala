@@ -86,9 +86,21 @@ object DedupOps {
     * formulation; quadratic in corpus size — see [[prefixJaccardPairs]] for
     * scale).
     */
-  def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3): DataFrame =
-    verifyJaccard(shingles(docs, n), allCandidates = true, candidates = null,
-                  threshold = threshold)
+  def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3): DataFrame = {
+    val sh = shingles(docs, n)
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
+    val a = sh.select(col("doc_id").as("da"), col("code"))
+    val b = sh.select(col("doc_id").as("db"), col("code"))
+    a.join(b, "code").filter(col("da") < col("db"))
+      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
+      .join(sizes.select(col("doc_id").as("da"), col("nsh").as("na")), "da")
+      .join(sizes.select(col("doc_id").as("db"), col("nsh").as("nb")), "db")
+      .filter(col("c").cast("double") / (col("na") + col("nb") - col("c"))
+                >= threshold)
+      .select(col("da"), col("db"),
+        graft.Q.round4Ratio(col("c"), col("na") + col("nb") - col("c"))
+          .as("jaccard"))
+  }
 
   /** Operator-level broadcast cap for per-doc code-set frames in the
     * verify stages (8 B/code): shipping the candidate stream with arrays
@@ -118,16 +130,13 @@ object DedupOps {
     */
   private val BroadcastEstimatePad = 2L
 
-  /** The session's auto-broadcast threshold in bytes (the same knob
-    * Catalyst uses), for operators that make exact-arithmetic broadcast
+  /** The session's auto-broadcast threshold in bytes, as Spark parses it
+    * (`1k`, `20MB`, `-1`; the same value Catalyst uses), for operators that make exact-arithmetic broadcast
     * decisions on frames whose statistics Catalyst cannot see through
     * (aggregates).
     */
   private def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      .map(_.replace("b", "").replace("B", ""))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(10L * 1024 * 1024)
+    spark.sessionState.conf.autoBroadcastJoinThreshold
 
   /** The operator broadcast decision, shared by every attach site: widen
     * the session threshold to the operator cap (the attach economics are
@@ -185,14 +194,13 @@ object DedupOps {
     }
   }
 
-  /** Exact-Jaccard verification. With `allCandidates=true` computes all
-    * pairs via the shared-shingle join (exact mode — quadratic in hot
-    * shingles); otherwise verifies each candidate pair with one codegen'd
-    * two-pointer intersect over the two docs' sorted code sets — cost
-    * strictly linear in |candidates|·avg-set-size, immune to hot-shingle
-    * fan-out (the round-1 caveat, VERDICT.md "What's wrong" 5).
+  /** Exact-Jaccard verification of candidate pairs `(da, db)`: one
+    * codegen'd two-pointer intersect per pair over the two docs' sorted
+    * code sets — cost strictly linear in |candidates|·avg-set-size, immune
+    * to hot-shingle fan-out (the round-1 caveat, VERDICT.md "What's
+    * wrong" 5).
     *
-    * Candidate-path plan shape (profiled at sf0.1, 3.4M candidates on the
+    * Plan shape (profiled at sf0.1, 3.4M candidates on the
     * high-background fixture): exactly TWO joins attach the per-doc code
     * sets; set sizes ride along as `size(codes)` (an array-header read, no
     * separate sizes aggregate or join), so the threshold filter collapses
@@ -206,23 +214,8 @@ object DedupOps {
     * the verification rows are tiny in bytes but CPU-heavy, and AQE would
     * coalesce them into one task otherwise.
     */
-  def verifyJaccard(sh: DataFrame, allCandidates: Boolean,
-                    candidates: DataFrame, threshold: Double,
-                    lengthFilter: Boolean = true): DataFrame = {
-    if (allCandidates) {
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-      val a = sh.select(col("doc_id").as("da"), col("code"))
-      val b = sh.select(col("doc_id").as("db"), col("code"))
-      return a.join(b, "code").filter(col("da") < col("db"))
-        .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-        .join(sizes.select(col("doc_id").as("da"), col("nsh").as("na")), "da")
-        .join(sizes.select(col("doc_id").as("db"), col("nsh").as("nb")), "db")
-        .filter(col("c").cast("double") / (col("na") + col("nb") - col("c"))
-                  >= threshold)
-        .select(col("da"), col("db"),
-          graft.Q.round4Ratio(col("c"), col("na") + col("nb") - col("c"))
-            .as("jaccard"))
-    }
+  def verifyJaccard(sh: DataFrame, candidates: DataFrame,
+                    threshold: Double): DataFrame = {
     val spark = sh.sparkSession
     val sets = sh.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("code"))).as("codes"),
@@ -231,7 +224,6 @@ object DedupOps {
     // Measured (not estimated) broadcast decision: 8 bytes per code plus
     // per-row overhead, against the session's broadcast threshold. The two
     // driver actions run over the now-cached sets frame.
-    val bcThreshold = broadcastThreshold(spark)
     val Array(nDocs, nCodes) = sets
       .agg(count(lit(1)), sum(size(col("codes")))).head().toSeq
       .map(v => Option(v).fold(0L)(_.toString.toLong)).toArray
@@ -253,21 +245,6 @@ object DedupOps {
     // cost once per-doc sets outgrow cluster broadcast).
     val attach: DataFrame => DataFrame =
       attachStrategy(spark, estBytes, attachBroadcastCap(spark))
-    // LENGTH FILTER before the code-set joins (the PPJoin size bound the
-    // prefix path applies at DedupOps.containmentPairs): J(a,b) ≥ t forces
-    // min(na,nb) ≥ t·max(na,nb), so a banded candidate whose set sizes
-    // are too lopsided can be discarded from the size table alone — never
-    // paying the array attach (the verify stage's shuffle in the
-    // at-scale regime) or the intersect CPU. Integer-exact threshold
-    // (T = ⌊t·10^6⌋ scaled longs, floor keeps the bound conservative —
-    // no false negatives); the sizes frame is 16 bytes/doc, broadcast
-    // whenever it fits, falling back to the shuffled join exactly like
-    // the array attach.
-    val T = math.floor(threshold * 1e6).toLong
-    val sizesDf = sets.select(col("doc_id"), col("nsh"))
-    val attachSz: DataFrame => DataFrame =
-      if (bcThreshold > 0 && nDocs * 24L <= bcThreshold) broadcast
-      else _.hint("shuffle_hash")
     // The CPU-heavy verify spread: the candidate rows are tiny in bytes,
     // so AQE's byte-aware coalescing would squash them into a few tasks —
     // the explicit repartition pins full-CPU width for the intersects, on
@@ -301,13 +278,7 @@ object DedupOps {
       if (spreadOn) candidates
         .repartition(spark.sparkContext.defaultParallelism, col("da"), col("db"))
       else candidates
-    val lenFiltered = if (!lengthFilter) repartitioned else repartitioned
-      .join(attachSz(sizesDf.select(col("doc_id").as("da"), col("nsh").as("na"))), "da")
-      .join(attachSz(sizesDf.select(col("doc_id").as("db"), col("nsh").as("nb"))), "db")
-      .filter(least(col("na"), col("nb")) * 1000000L >=
-              greatest(col("na"), col("nb")) * T)
-      .select("da", "db")
-    val result = lenFiltered
+    val result = repartitioned
       .join(attach(sets.select(col("doc_id").as("da"), col("codes").as("ca"),
                                col("nsh").as("na"))), "da")
       .join(attach(sets.select(col("doc_id").as("db"), col("codes").as("cb"),
@@ -892,10 +863,6 @@ object DedupOps {
       .filter(col("nb") * M >= col("na") * T && col("na") * M >= col("nb") * T)
       .filter(cap * (M + T) >= (col("na") + col("nb")) * T)
       .select("da", "db").distinct()
-    // lengthFilter off: the PPJoin length bound above already pruned the
-    // candidate stream at generation — re-checking it in the verify stage
-    // would pay two size joins to discard nothing.
-    //
     // withWideAqe: the candidate self-join's volume grows superlinearly
     // with the corpus (the 8× probe measured 244 s at the pinned session
     // width vs ~90 s at 256) — AQE's byte-aware coalescing from a
@@ -903,8 +870,7 @@ object DedupOps {
     // its measured volume needs, at 1× landing on the same ~core-count
     // layout as before.
     try withWideAqe(sh.sparkSession) {
-      verifyJaccard(sh, allCandidates = false, candidates = cand,
-                    threshold = threshold, lengthFilter = false)
+      verifyJaccard(sh, cand, threshold)
     } finally prefix.unpersist(blocking = false)
   }
 
@@ -1190,115 +1156,78 @@ object DedupOps {
     *   r'_C       = (15·SCALE + 85·contrib_C) div 100
     *
     * — exactly [[graft.operators.GraphOps.pageRank]]'s update summed
-    * class-wise (the spec pins the equality), but the per-round join +
-    * aggregate runs over Σ class-adjacency edges instead of Σ doc pairs.
+    * class-wise (the spec pins the equality), but each round runs over
+    * Σ class-adjacency edges instead of Σ doc pairs.
     * At sf0.1 that is ~20 k weighted edges standing in for 1.16 M directed
     * doc edges × 5 rounds; at 100 TB the quotient is bounded by the
     * fingerprint space while the doc graph is bounded by nothing.
     * Output is doc-level — (doc_id, degree, pr_scaled), identical bits to
     * the generic operator on [[simhashPairs]] — via one class→doc join.
     */
-  def simhashPageRank(docs: DataFrame, maxHamming: Int = 1, bits: Int = 16,
+  def simhashPageRank(docs: DataFrame, maxHamming: Int = 1,
                       iters: Int = 5, scale: Long = 1000000L): DataFrame = {
-    val fpCol = s"simhash$bits"
-    val fp = simhash(docs, bits).persist()
-    val cls = fpClasses(fp, bits)
+    val fpCol = "simhash16"
+    val fp = simhash(docs).persist()
+    val cls = fpClasses(fp)
       .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("csize")), fpCol)
       .persist() // (fpCol, cid, csize) — bounded by the fingerprint space
     try {
-      val cp = classPairs(cls.select(col(fpCol), col("cid")), maxHamming, bits)
-        .select(col("ca"), col("cb"))
-      // DRIVER-LOCAL quotient iteration at bits ≤ 16 (round 15, guide
-      // §2.4): the class table and banded class adjacency are bounded by
-      // the fingerprint space (≤ 2^16 classes, ≤ 17·2^16/2 hamming-1
-      // pairs) — the SAME frames [[simhashKCore]] already collects for
-      // its judge-reviewed driver peel — so the five damped rounds run
-      // as a local integer loop instead of 5 × (broadcast join + shuffle
-      // aggregate) Spark jobs whose wall-clock is pure scheduling at this
-      // state size (measured: the distributed loop held l59 at ~6.7 s
-      // while l60's driver peel over the same frames runs the whole gate
-      // in ~1.6 s). Arithmetic is REPLAYED EXACTLY: same LONG `div`
-      // truncation, same contribution sum — LlmSpec pins quotient ≡
-      // generic [[graft.operators.GraphOps.pageRank]] on the doc graph.
-      // Wider fingerprints (unbounded class space) keep the distributed
-      // loop below, exactly like the kCore width routing.
-      if (bits <= 16) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val sizeArr = cls.select(col("cid"), col("csize")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1))
-        val size = sizeArr.toMap
-        val adj = cp.collect().map(r => (r.getLong(0), r.getLong(1)))
-        // Weighted quotient edges (s, t, w): cross-class both directions
-        // carry the SOURCE class size; csize ≥ 2 classes add a self-loop
-        // of weight csize − 1 — the doc graph's hamming-0 twin edges.
-        val edges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        adj.foreach { case (a, b) =>
-          edges += ((a, b, size(a))); edges += ((b, a, size(b)))
-        }
-        sizeArr.foreach { case (c, w) => if (w >= 2) edges += ((c, c, w - 1)) }
-        // d_C = in-weighted degree (= (c_C − 1) + Σ_{D~C} c_D by symmetry).
-        val d = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (_, t, w) => d(t) = d.getOrElse(t, 0L) + w }
-        // Rank init over nodes with ≥ 1 incident edge (the distributed
-        // loop's eD source set); isolated singleton classes never rank —
-        // they drop out of the final inner join either way.
-        var r = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (s0, _, _) => r(s0) = scale }
-        for (_ <- 1 to iters) {
-          val contrib = scala.collection.mutable.LongMap.empty[Long]
-          edges.foreach { case (s0, t, w) =>
-            // Inner-join semantics: only currently-ranked sources emit.
-            r.get(s0).foreach { rs =>
-              contrib(t) = contrib.getOrElse(t, 0L) + w * (rs / d(s0))
-            }
-          }
-          val next = scala.collection.mutable.LongMap.empty[Long]
-          contrib.foreach { case (t, c) =>
-            next(t) = (15L * scale + 85L * c) / 100L
-          }
-          r = next
-        }
-        val rankRows = sizeArr.collect {
-          case (c, _) if r.contains(c) => (c, d(c), r(c))
-        }.toSeq
-        return materialize(
-          fp.join(cls.select(col(fpCol), col("cid")), Seq(fpCol))
-            .join(broadcast(rankRows.toDF("cid", "d", "r")), Seq("cid"))
-            .select(col("doc_id"), col("d").as("degree"),
-                    col("r").as("pr_scaled")))
+      // DRIVER-LOCAL quotient iteration (round 15, guide §2.4): the class
+      // table and banded class adjacency are bounded by the fingerprint
+      // space (≤ 2^16 classes, ≤ 17·2^16/2 hamming-1 pairs) — the SAME
+      // frames [[simhashKCore]] already collects for its judge-reviewed
+      // driver peel — so the five damped rounds run as a local integer
+      // loop instead of 5 × (broadcast join + shuffle aggregate) Spark
+      // jobs whose wall-clock is pure scheduling at this state size
+      // (measured: the distributed loop held l59 at ~6.7 s while l60's
+      // driver peel over the same frames runs the whole gate in ~1.6 s).
+      // Arithmetic is REPLAYED EXACTLY: same LONG `div` truncation, same
+      // contribution sum — LlmSpec pins quotient ≡ generic
+      // [[graft.operators.GraphOps.pageRank]] on the doc graph.
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val sizeArr = cls.select(col("cid"), col("csize")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      val size = sizeArr.toMap
+      val adj = classPairs(cls.select(col(fpCol), col("cid")), maxHamming)
+        .select(col("ca"), col("cb")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      // Weighted quotient edges (s, t, w): cross-class both directions
+      // carry the SOURCE class size; csize ≥ 2 classes add a self-loop
+      // of weight csize − 1 — the doc graph's hamming-0 twin edges.
+      val edges = ArrayBuffer.empty[(Long, Long, Long)]
+      adj.foreach { case (a, b) =>
+        edges += ((a, b, size(a))); edges += ((b, a, size(b)))
       }
-      val cs = cls.select(col("cid"), col("csize"))
-      // Weighted quotient edges: cross-class both directions carry the
-      // SOURCE class size; a class's own twins contribute via a self-loop
-      // of weight c_C − 1 (hamming-0 edges of the doc graph).
-      val e = cp.select(col("ca").as("s"), col("cb").as("t"))
-        .unionByName(cp.select(col("cb").as("s"), col("ca").as("t")))
-        .join(cs.withColumnRenamed("cid", "s"), Seq("s"))
-        .select(col("s"), col("t"), col("csize").as("w"))
-        .unionByName(cs.filter(col("csize") >= 2)
-          .select(col("cid").as("s"), col("cid").as("t"),
-                  (col("csize") - 1).as("w")))
-      val deg = e.groupBy(col("t")).agg(sum(col("w")).as("d"))
-        .select(col("t").as("cid"), col("d"))
-      val eD = e.join(deg.select(col("cid").as("s"), col("d")), Seq("s"))
-        .localCheckpoint(true) // class-space-sized; consumed by every round
-      // The rank vector is class-space-sized (≤ 2^bits rows ≤ 65 536 at the
-      // default width) — broadcast it each round so the only exchange per
-      // iteration is the small contribution aggregate, not an eD re-shuffle.
-      // Wider fingerprints (unbounded class spaces) keep the shuffle join.
-      val bc: DataFrame => DataFrame =
-        if (bits <= 16) broadcast(_) else identity
-      var r = deg.select(col("cid").as("id"), lit(scale).as("r"))
-      for (_ <- 1 to iters)
-        r = eD.join(bc(r), col("s") === col("id"))
-          .select(col("t"), (col("w") * expr("r div d")).as("c"))
-          .groupBy(col("t"))
-          .agg(expr(s"(${15L * scale} + 85 * sum(c)) div 100").as("r"))
-          .select(col("t").as("id"), col("r"))
+      sizeArr.foreach { case (c, w) => if (w >= 2) edges += ((c, c, w - 1)) }
+      // d_C = in-weighted degree (= (c_C − 1) + Σ_{D~C} c_D by symmetry).
+      val d = scala.collection.mutable.LongMap.empty[Long]
+      edges.foreach { case (_, t, w) => d(t) = d.getOrElse(t, 0L) + w }
+      // Rank init over nodes with ≥ 1 incident edge (the generic
+      // operator's node set); isolated singleton classes never rank —
+      // they drop out of the final inner join either way.
+      var r = scala.collection.mutable.LongMap.empty[Long]
+      edges.foreach { case (s0, _, _) => r(s0) = scale }
+      for (_ <- 1 to iters) {
+        val contrib = scala.collection.mutable.LongMap.empty[Long]
+        edges.foreach { case (s0, t, w) =>
+          // Inner-join semantics: only currently-ranked sources emit.
+          r.get(s0).foreach { rs =>
+            contrib(t) = contrib.getOrElse(t, 0L) + w * (rs / d(s0))
+          }
+        }
+        val next = scala.collection.mutable.LongMap.empty[Long]
+        contrib.foreach { case (t, c) =>
+          next(t) = (15L * scale + 85L * c) / 100L
+        }
+        r = next
+      }
+      val rankRows = sizeArr.collect {
+        case (c, _) if r.contains(c) => (c, d(c), r(c))
+      }.toSeq
       materialize(
         fp.join(cls.select(col(fpCol), col("cid")), Seq(fpCol))
-          .join(r.join(deg, col("id") === deg("cid")).drop("id"), Seq("cid"))
+          .join(broadcast(rankRows.toDF("cid", "d", "r")), Seq("cid"))
           .select(col("doc_id"), col("d").as("degree"),
                   col("r").as("pr_scaled")))
     } finally {
@@ -1363,128 +1292,73 @@ object DedupOps {
     *              + Σ_{(A,B,C) class-triangle} wB·wC   — all distinct
     *
     * Only the last term enumerates triangles, and it runs on the class
-    * graph (sf0.1: 1195 nodes / ~3.1k edges vs 5000 nodes / ~578k edges)
-    * via [[GraphOps.triangles]]. Equals the direct doc-graph counts —
-    * spec-pinned. Output: (doc_id, n_triangles), only docs in ≥1 triangle
-    * (the direct formulation's contract).
+    * graph (sf0.1: 1195 nodes / ~3.1k edges vs 5000 nodes / ~578k edges).
+    * Equals the direct doc-graph counts — spec-pinned. Output: (doc_id,
+    * n_triangles), only docs in ≥1 triangle (the direct formulation's
+    * contract).
     */
-  def simhashTriangleCounts(docs: DataFrame, maxHamming: Int = 1,
-                            bits: Int = 16): DataFrame = {
-    val fpCol = s"simhash$bits"
-    val fp = simhash(docs, bits).persist()
+  def simhashTriangleCounts(docs: DataFrame, maxHamming: Int = 1): DataFrame = {
+    val fpCol = "simhash16"
+    val fp = simhash(docs).persist()
+    val cls = fpClasses(fp)
+      .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("w")), fpCol)
+      .persist()
     try {
-      // DRIVER-LOCAL closed form at bits ≤ 16 (round 15, guide §2.4): the
-      // class weights and banded class adjacency are the same fingerprint-
-      // space-bounded frames [[simhashKCore]] collects for its driver peel
-      // (≤ 2^16 classes, ≤ 17·2^16/2 hamming-1 pairs), and every term of
-      // the closed form — neighbor sums, C(w,2) sums, class-triangle
-      // products — is a local integer fold over them; the distributed
-      // evaluation paid two localCheckpoints plus ~8 tiny joins
-      // ([[graft.operators.GraphOps.triangles]] alone is 3) whose
-      // wall-clock is pure scheduling at this state size. The arithmetic
-      // is identical LONG math (GraphPropSpec pins contraction ≡ direct
-      // doc-graph counts); wider fingerprints keep the distributed
-      // formulation below — the kCore width routing.
-      if (bits <= 16) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val cls16 = fpClasses(fp, bits)
-          .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("w")), fpCol)
-          .persist()
-        try {
-          val wArr = cls16.select(col("cid"), col("w")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1))
-          val w = scala.collection.mutable.LongMap(wArr: _*)
-          val eArr = classPairs(cls16.select(col(fpCol), col("cid")),
-              maxHamming, bits)
-            .select(col("ca"), col("cb")).collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          val nbrs = scala.collection.mutable.LongMap
-            .empty[scala.collection.mutable.ArrayBuffer[Long]]
-          eArr.foreach { case (a, b) =>
-            nbrs.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-            nbrs.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-          }
-          val nbrSet = nbrs.map { case (c, l) => c -> l.toSet }
-          val tt = scala.collection.mutable.LongMap.empty[Long]
-          // Each class triangle (a, b, z) counted once: a < b from the
-          // ordered pair list, z > b from the intersection filter.
-          eArr.foreach { case (a0, b0) =>
-            val (a, b) = if (a0 < b0) (a0, b0) else (b0, a0)
-            nbrs(a).foreach { z =>
-              if (z > b && nbrSet(b).contains(z)) {
-                tt(a) = tt.getOrElse(a, 0L) + w(b) * w(z)
-                tt(b) = tt.getOrElse(b, 0L) + w(a) * w(z)
-                tt(z) = tt.getOrElse(z, 0L) + w(a) * w(b)
-              }
-            }
-          }
-          val perClass = wArr.flatMap { case (c, wc) =>
-            val s1 = nbrs.getOrElse(c, scala.collection.mutable.ArrayBuffer.empty[Long])
-              .iterator.map(w).sum
-            val s2 = nbrs.getOrElse(c, scala.collection.mutable.ArrayBuffer.empty[Long])
-              .iterator.map(n => w(n) * (w(n) - 1L) / 2L).sum
-            val n = (wc - 1L) * (wc - 2L) / 2L + (wc - 1L) * s1 + s2 +
-              tt.getOrElse(c, 0L)
-            if (n > 0L) Some((c, n)) else None
-          }.toSeq
-          return materialize(
-            fp.join(cls16.select(col(fpCol), col("cid")), Seq(fpCol))
-              .join(broadcast(perClass.toDF("cid", "n_triangles")), Seq("cid"))
-              .select(col("doc_id"), col("n_triangles")))
-        } finally cls16.unpersist(blocking = false)
+      // DRIVER-LOCAL closed form (round 15, guide §2.4): the class weights
+      // and banded class adjacency are the same fingerprint-space-bounded
+      // frames [[simhashKCore]] collects for its driver peel (≤ 2^16
+      // classes, ≤ 17·2^16/2 hamming-1 pairs), and every term of the
+      // closed form — neighbor sums, C(w,2) sums, class-triangle products
+      // — is a local integer fold over them; the distributed evaluation
+      // paid two localCheckpoints plus ~8 tiny joins whose wall-clock is
+      // pure scheduling at this state size. The arithmetic is identical
+      // LONG math (GraphPropSpec pins contraction ≡ direct doc-graph
+      // counts).
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val wArr = cls.select(col("cid"), col("w")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      val w = scala.collection.mutable.LongMap(wArr: _*)
+      val eArr = classPairs(cls.select(col(fpCol), col("cid")), maxHamming)
+        .select(col("ca"), col("cb")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val nbrs = scala.collection.mutable.LongMap.empty[ArrayBuffer[Long]]
+      eArr.foreach { case (a, b) =>
+        nbrs.getOrElseUpdate(a, ArrayBuffer.empty) += b
+        nbrs.getOrElseUpdate(b, ArrayBuffer.empty) += a
       }
-      val classes = fpClasses(fp, bits)
-      // Both small frames fan out into many consumers below (weights 5×,
-      // edges into the TWO nbr legs plus GraphOps.triangles) — checkpoint
-      // once, read many. triangles() checkpoints its own re-selection
-      // too; that second copy reads this one (a fast scan of a tiny
-      // frame), it does not re-run classPairs — the banding pipeline
-      // executes exactly once.
-      val weights = fp.groupBy(col(fpCol)).agg(count(lit(1)).as("w"))
-        .join(classes, fpCol).select(col("cid"), col("w"))
-        .localCheckpoint(true)
-      val e = classPairs(classes, maxHamming, bits).select("ca", "cb")
-        .localCheckpoint(true)
-      val nbr = e.select(col("ca").as("c"), col("cb").as("n"))
-        .unionByName(e.select(col("cb").as("c"), col("ca").as("n")))
-        .join(weights.select(col("cid").as("n"), col("w").as("wn")), "n")
-        .groupBy(col("c"))
-        .agg(sum(col("wn")).as("s1"),
-             // `div`, not `/`: Spark's `/` on LONGs is a DOUBLE divide.
-             sum(expr("wn * (wn - 1L) div 2L")).as("s2"))
-      val tri = GraphOps.triangles(e.select(col("ca").as("da"), col("cb").as("db")))
-        .join(weights.select(col("cid").as("x"), col("w").as("wx")), "x")
-        .join(weights.select(col("cid").as("y"), col("w").as("wy")), "y")
-        .join(weights.select(col("cid").as("z"), col("w").as("wz")), "z")
-        .select(explode(array(
-          struct(col("x").as("c"), (col("wy") * col("wz")).as("p")),
-          struct(col("y").as("c"), (col("wx") * col("wz")).as("p")),
-          struct(col("z").as("c"), (col("wx") * col("wy")).as("p")))).as("e"))
-        .select(col("e.c").as("c"), col("e.p").as("p"))
-        .groupBy(col("c")).agg(sum(col("p")).as("tt"))
-      val perClass = weights
-        .join(nbr, col("cid") === nbr("c"), "left").drop("c")
-        .join(tri, col("cid") === tri("c"), "left").drop("c")
-        .select(col("cid"),
-          (expr("(w - 1L) * (w - 2L) div 2L") +
-           (col("w") - 1L) * coalesce(col("s1"), lit(0L)) +
-           coalesce(col("s2"), lit(0L)) +
-           coalesce(col("tt"), lit(0L))).as("n_triangles"))
-        .filter(col("n_triangles") > 0L)
+      val nbrSet = nbrs.map { case (c, l) => c -> l.toSet }
+      val tt = scala.collection.mutable.LongMap.empty[Long]
+      // Each class triangle (a, b, z) counted once: a < b from the
+      // ordered pair list, z > b from the intersection filter.
+      eArr.foreach { case (a0, b0) =>
+        val (a, b) = if (a0 < b0) (a0, b0) else (b0, a0)
+        nbrs(a).foreach { z =>
+          if (z > b && nbrSet(b).contains(z)) {
+            tt(a) = tt.getOrElse(a, 0L) + w(b) * w(z)
+            tt(b) = tt.getOrElse(b, 0L) + w(a) * w(z)
+            tt(z) = tt.getOrElse(z, 0L) + w(a) * w(b)
+          }
+        }
+      }
+      val perClass = wArr.flatMap { case (c, wc) =>
+        val nc = nbrs.getOrElse(c, ArrayBuffer.empty[Long])
+        val s1 = nc.iterator.map(w).sum
+        val s2 = nc.iterator.map(n => w(n) * (w(n) - 1L) / 2L).sum
+        val n = (wc - 1L) * (wc - 2L) / 2L + (wc - 1L) * s1 + s2 +
+          tt.getOrElse(c, 0L)
+        if (n > 0L) Some((c, n)) else None
+      }.toSeq
       materialize(
-        fp.join(classes, fpCol).join(perClass, "cid")
+        fp.join(cls.select(col(fpCol), col("cid")), Seq(fpCol))
+          .join(broadcast(perClass.toDF("cid", "n_triangles")), Seq("cid"))
           .select(col("doc_id"), col("n_triangles")))
-    } finally fp.unpersist(blocking = false)
+    } finally {
+      cls.unpersist(blocking = false)
+      fp.unpersist(blocking = false)
+    }
   }
 
-  /** Dedup clusters in one call: SimHash fingerprints → class contraction →
-    * banded class pairs → [[connectedComponents]] on the CLASS graph →
-    * membership expansion. Output (doc_id, component_id) where
-    * component_id is the min doc_id of the cluster — equal to running CC
-    * over the full [[simhashPairs]] graph (unit-tested), but the iterative
-    * state is one row per distinct fingerprint instead of per document.
-    */
   /** k-core peel of the SimHash ≤`maxHamming` near-dup graph (the L60
     * gate): iteratively remove every doc whose surviving degree is below
     * k until a fixed point — the density-based graph filter (Seidman 1983
@@ -1507,7 +1381,7 @@ object DedupOps {
     * identical degree at every round, hence identical peel fate — the
     * whole peel collapses onto the class graph with node weights
     * (deg(doc ∈ A) = (w_A − 1) + Σ_{B~A, B alive} w_B). The class space
-    * is bounded by the fingerprint width (≤ 2^bits nodes, ≤ (d+1)-banded
+    * is bounded by the fingerprint width (≤ 2^16 nodes, ≤ (d+1)-banded
     * adjacency), so the class table and its adjacency collect to the
     * driver in KBs AT ANY CORPUS SIZE and the peel itself is a bounded
     * in-memory loop — the distributed work is one fingerprint pass, one
@@ -1519,29 +1393,17 @@ object DedupOps {
     * fingerprint universe); peel_round = 0 means the doc survives to the
     * k-core, t ≥ 1 the synchronous round that removed it. Deterministic:
     * round-synchronous removal has no tie-ordering freedom.
-    *
-    * WIDTH ROUTING (round 15, r14 ADVICE): the driver peel's "class table
-    * collects in KBs" bound holds only while the class space is bounded by
-    * the fingerprint width — at bits > 16 it is corpus-sized and the
-    * collect would OOM the driver, so wide fingerprints route to
-    * [[docKCore]], the distributed round-synchronous doc-level peel
-    * (one degree aggregate + one anti filter per round, no driver-sized
-    * state) — the same guard shape as [[simhashPageRank]]'s
-    * broadcast-vs-shuffle pick.
     */
-  def simhashKCore(docs: DataFrame, maxHamming: Int = 1,
-                   bits: Int = 16): DataFrame = {
-    if (bits > 16) return docKCore(docs, maxHamming, bits)
-    val fpCol = s"simhash$bits"
-    val fp = simhash(docs, bits).persist()
+  def simhashKCore(docs: DataFrame, maxHamming: Int = 1): DataFrame = {
+    val fpCol = "simhash16"
+    val fp = simhash(docs).persist()
     try {
-      val cls = fpClasses(fp, bits)
+      val cls = fpClasses(fp)
         .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("csize")), fpCol)
-        .persist() // ≤ 2^bits rows — bounded by the fingerprint space
+        .persist() // ≤ 2^16 rows — bounded by the fingerprint space
       try {
         val classRows = cls.select(col("cid"), col("csize")).collect()
-        val adjRows = classPairs(cls.select(col(fpCol), col("cid")),
-            maxHamming, bits)
+        val adjRows = classPairs(cls.select(col(fpCol), col("cid")), maxHamming)
           .select(col("ca"), col("cb")).collect()
         val size = classRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
         val nbrs = scala.collection.mutable.Map
@@ -1595,62 +1457,13 @@ object DedupOps {
     } finally fp.unpersist(blocking = false)
   }
 
-  /** Distributed round-synchronous k-core peel at DOC level — the wide-
-    * fingerprint route of [[simhashKCore]] (bits > 16, where the class
-    * space is corpus-sized and the driver peel's collect would OOM), and
-    * the control the quotient's A/B was measured against (SURVEY §6 r15
-    * probe (g)).
-    * Same contract: (doc_id, deg0, k, peel_round), k = the lower-median
-    * doc degree (integer-exact, from a distinct-degree-sized histogram —
-    * the only driver traffic besides per-round convergence counts). Each
-    * round is one degree aggregate over the surviving subgraph + one
-    * anti-join removal, frames pinned per round ([[connectedComponents]]'
-    * iterative-state pattern); rounds are bounded by the peel depth, and
-    * every per-round frame is match-graph-sized, never collected.
+  /** Dedup clusters in one call: SimHash fingerprints → class contraction →
+    * banded class pairs → [[connectedComponents]] on the CLASS graph →
+    * membership expansion. Output (doc_id, component_id) where
+    * component_id is the min doc_id of the cluster — equal to running CC
+    * over the full [[simhashPairs]] graph (unit-tested), but the iterative
+    * state is one row per distinct fingerprint instead of per document.
     */
-  def docKCore(docs: DataFrame, maxHamming: Int = 1,
-               bits: Int = 16): DataFrame = {
-    val pr = simhashPairs(docs, maxHamming, bits).select("da", "db")
-    val e = pr.select(col("da").as("s"), col("db").as("t"))
-      .unionByName(pr.select(col("db").as("s"), col("da").as("t")))
-      .localCheckpoint(true)
-    val nodes = simhash(docs, bits).select("doc_id").localCheckpoint(true)
-    val deg0 = nodes.join(e, nodes("doc_id") === e("s"), "left")
-      .groupBy(col("doc_id")).agg(count(col("t")).as("deg0"))
-      .localCheckpoint(true)
-    val hist = deg0.groupBy(col("deg0").as("d")).agg(count(lit(1)).as("c"))
-      .orderBy("d").collect()
-    val n = hist.map(_.getLong(1)).sum
-    var cum = 0L
-    val k = hist.collectFirst {
-      case r if { cum += r.getLong(1); 2 * cum >= n } => r.getLong(0)
-    }.getOrElse(0L)
-    var surv = deg0.select(col("doc_id")).localCheckpoint(true)
-    var peeled = surv.select(col("doc_id"), lit(0L).as("peel_round"))
-      .limit(0).localCheckpoint(true)
-    var round = 0L
-    var done = false
-    while (!done) {
-      round += 1
-      val dg = surv.join(
-          e.join(surv.select(col("doc_id").as("t")), Seq("t")),
-          surv("doc_id") === col("s"), "left")
-        .groupBy(surv("doc_id")).agg(count(col("t")).as("deg"))
-      val rm = dg.filter(col("deg") < k).select(col("doc_id"))
-        .localCheckpoint(true)
-      if (rm.count() == 0L) done = true
-      else {
-        peeled = peeled.unionByName(
-            rm.select(col("doc_id"), lit(round).as("peel_round")))
-          .localCheckpoint(true)
-        surv = surv.join(rm, Seq("doc_id"), "left_anti").localCheckpoint(true)
-      }
-    }
-    deg0.join(peeled, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("deg0"), lit(k).as("k"),
-              coalesce(col("peel_round"), lit(0L)).as("peel_round"))
-  }
-
   def simhashComponents(docs: DataFrame, maxHamming: Int = 1,
                         bits: Int = 16): DataFrame = {
     val fp = simhash(docs, bits).persist()

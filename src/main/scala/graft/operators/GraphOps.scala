@@ -6,7 +6,11 @@ import org.apache.spark.sql.functions._
 /** Distributed graph analytics over edge-list DataFrames — the family
   * [[DedupOps.connectedComponents]] opened (dedup clusters), extended with
   * triangle counting (the clustering-coefficient / community-density
-  * primitive; no reference analogue — the extended-surface mandate).
+  * primitive; no reference analogue — the extended-surface mandate) and
+  * PageRank. These are the arbitrary-graph operators; the dedup-graph
+  * gates run on the fingerprint-class quotient instead
+  * ([[DedupOps.simhashTriangleCounts]], [[DedupOps.simhashPageRank]]),
+  * and the specs pin each quotient equal to its operator here.
   *
   * Representation: undirected simple graph as distinct `(da, db)` rows with
   * `da < db` — exactly the near-dup pair contract of
@@ -33,24 +37,13 @@ object GraphOps {
     * wedge join is O(m^1.5) REGARDLESS of skew — the difference between a
     * star graph costing deg² and costing deg. All joins are equi-joins
     * (shuffle on node id / id pair); no driver loop, no cartesian product.
-    */
-  def triangleCounts(edges: DataFrame): DataFrame =
-    triangles(edges)
-      .select(explode(array(col("x"), col("y"), col("z"))).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_triangles"))
-
-  /** Triangle ENUMERATION: one row `(x, y, z)` per triangle (each triangle
-    * exactly once; x is the wedge apex under the (degree, id) order).
-    * [[triangleCounts]] folds this to per-node counts; weighted consumers
-    * (e.g. [[DedupOps.simhashTriangleCounts]]'s class contraction) join
-    * their own per-node weights onto the roles.
     *
-    * On dedup graphs, contract duplicate classes BEFORE calling this:
-    * identical-fingerprint docs form cliques, and clique wedge counts are
-    * quadratic in clique size — the class-contracted formulation computes
-    * the same per-doc counts from the class graph in closed form.
+    * On dedup graphs, contract duplicate classes first: identical-
+    * fingerprint docs form cliques, and clique wedge counts are quadratic
+    * in clique size — [[DedupOps.simhashTriangleCounts]] computes the same
+    * per-doc counts from the class graph in closed form.
     */
-  def triangles(edges: DataFrame): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = {
     // The edge frame is referenced SIX times below (degree table twice,
     // degree attach, both wedge sides, closure probe) — without cutting
     // lineage here, an expensive upstream (e.g. the simhash banding
@@ -87,9 +80,12 @@ object GraphOps {
       .filter(col("d1") < col("d2") ||
               (col("d1") === col("d2") && col("t1") < col("t2")))
       .select("s", "t1", "t2")
+    // Each closed wedge is one triangle, counted once at each of its
+    // three nodes.
     wedges.join(
       oriented.select(col("s").as("t1"), col("t").as("t2")), Seq("t1", "t2"))
-      .select(col("s").as("x"), col("t1").as("y"), col("t2").as("z"))
+      .select(explode(array(col("s"), col("t1"), col("t2"))).as("doc_id"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Fixed-point PageRank over an undirected pair graph (the L59 gate) —

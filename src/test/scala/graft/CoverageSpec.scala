@@ -47,14 +47,16 @@ class CoverageSpec extends AnyFunSuite {
       s"rows-only entries that grew oracles: ${(rowsOnly -- unGated).toSeq.sorted}")
   }
 
-  /** Every Scala source under src/main, as text. */
-  private lazy val mainSources: Seq[String] = {
+  /** Every Scala source under `root`, as text. */
+  private def scalaSources(root: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val ws = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val ws = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try ws.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
       .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
     finally ws.close()
   }
+
+  private lazy val mainSources: Seq[String] = scalaSources("src/main")
 
   test("entry points are exactly the declared mains") {
     // A one-off probe main must not slip back in: anything measured
@@ -98,6 +100,39 @@ class CoverageSpec extends AnyFunSuite {
     val otherwiseRead = literals diff viaConfLong
     assert(otherwiseRead.isEmpty,
       s"keys read without Engine.confLong: ${otherwiseRead.sorted}")
+  }
+
+  test("every def under src/main is reachable from the engine or the bench harness") {
+    // A def that nothing calls is a path no gate, bench or probe runs.
+    // Name-level and lenient: a def counts as reached when its name
+    // appears on any non-comment line of src/main or perfbench/src other
+    // than its own definition. Overrides are reached through their
+    // supertype; the test references below exist for the specs to compare
+    // the engine's routes against.
+    val testReferences = Set("jaccardPairs", "clusteredJaccardPairs",
+      "minhashCalibration", "cosinePairs", "triangleCounts",
+      "scratchComponents", "rollingFingerprintHof", "tokenHashHof",
+      "writeDenseJson")
+    def codeLines(sources: Seq[String]): Seq[String] =
+      sources.flatMap(_.linesIterator).filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+      }
+    val mainLines = codeLines(mainSources)
+    val allLines = mainLines ++ codeLines(scalaSources("perfbench/src"))
+    val defined = mainLines.flatMap { l =>
+      """\bdef\s+(\w+)""".r.findAllMatchIn(l)
+        .filterNot(m => l.substring(0, m.start).contains("override"))
+        .map(_.group(1))
+    }.toSet -- testReferences - "main"
+    val unreached = defined.filterNot { name =>
+      val use = s"\\b$name\\b".r
+      val definition = s"\\bdef\\s+$name\\b".r
+      allLines.exists(l =>
+        use.findAllMatchIn(l).size > definition.findAllMatchIn(l).size)
+    }
+    assert(unreached.isEmpty,
+      s"defs no engine or bench line mentions: ${unreached.toSeq.sorted}")
   }
 
   test("PlanAudit's default set only names declared queries") {

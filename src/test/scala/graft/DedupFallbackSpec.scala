@@ -113,21 +113,23 @@ class DedupFallbackSpec extends SparkSpec {
     val sh = DedupOps.shingles(corpus, 3)
     val cand = Seq((0L, 1L), (0L, 2L), (1L, 2L), (3L, 4L), (5L, 6L))
       .toDF("da", "db")
-    val expected = pairsOf(
-      DedupOps.verifyJaccard(sh, allCandidates = false, cand, 0.5))
+    val expected = pairsOf(DedupOps.verifyJaccard(sh, cand, 0.5))
     assert(expected.nonEmpty)
-    // Cap → 0 AND session threshold → 1 byte: the operator cap no longer
-    // admits the sets frame and the session threshold (still positive —
+    // Cap → 0 AND a session threshold below the sets frame: the operator
+    // cap no longer admits it and the session threshold (still positive —
     // broadcasts allowed in principle) is too small, so the attach must
-    // take the shuffled-hash branch.
-    val (got, plans) = withConf(
-      "spark.graft.dedup.attachBroadcastCap" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "1") {
-      capturePlans(pairsOf(
-        DedupOps.verifyJaccard(sh, allCandidates = false, cand, 0.5)))
+    // take the shuffled-hash branch. "1k" must be read the way Spark reads
+    // it (1024 bytes), not as a default — the 7-doc sets frame is ~3 KB.
+    Seq("1", "1k").foreach { threshold =>
+      val (got, plans) = withConf(
+        "spark.graft.dedup.attachBroadcastCap" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        capturePlans(pairsOf(DedupOps.verifyJaccard(sh, cand, 0.5)))
+      }
+      assert(got == expected, s"threshold $threshold")
+      assertHashNeverSortMerge(plans, s"verifyJaccard attach at $threshold",
+        Seq("da", "db"))
     }
-    assert(got == expected)
-    assertHashNeverSortMerge(plans, "verifyJaccard attach", Seq("da", "db"))
   }
 
   test("a malformed numeric dedup conf fails naming its key") {

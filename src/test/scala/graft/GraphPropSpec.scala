@@ -176,24 +176,6 @@ class GraphPropSpec extends SparkSpec {
     assert(direct.nonEmpty, "fixture must contain at least one triangle")
   }
 
-  test("simhashTriangleCounts width routing: bits > 16 stays distributed") {
-    // Round 15: bits ≤ 16 evaluates the closed form as a driver-local
-    // fold over the fingerprint-space-bounded class graph (the kCore
-    // driver-peel pattern); wider fingerprints keep the distributed
-    // class-graph formulation. Same direct-equality contract at the wide
-    // width pins that route.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val direct = graft.operators.GraphOps.triangleCounts(
-        DedupOps.simhashPairs(docs, maxHamming = 1, bits = 32)
-          .select("da", "db"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val contracted =
-      DedupOps.simhashTriangleCounts(docs, maxHamming = 1, bits = 32)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(contracted == direct,
-      s"sizes: direct=${direct.size} contracted=${contracted.size}")
-  }
-
   test("connectedComponents on a worst-case path graph (deep diameter)") {
     val n = 65L
     val nodes = (0L until n).map(i => (i, "")).toDF("doc_id", "text")

@@ -628,41 +628,18 @@ class LlmSpec extends SparkSpec {
     assert(quotient == generic)
   }
 
-  test("l59 width routing: bits > 16 iterates distributed, never a driver collect") {
-    // Round 15: bits ≤ 16 runs the damped rounds as a driver-local loop
-    // over the fingerprint-space-bounded class graph (the l60 driver-peel
-    // pattern); wider fingerprints — unbounded class space — must keep
-    // the distributed join/aggregate loop. Same generic-equality contract
-    // at the wide width pins that route.
-    val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def m(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("degree"), r.getAs[Long]("pr_scaled")))).toMap
-    val genericDf = graft.operators.GraphOps.pageRank(
-      DedupOps.simhashPairs(docsDf, maxHamming = 1, bits = 32)
-        .select(col("da"), col("db")))
-    val generic =
-      try m(genericDf.collect())
-      finally genericDf.unpersist(blocking = false)
-    val quotient = m(
-      DedupOps.simhashPageRank(docsDf, maxHamming = 1, bits = 32).collect())
-    assert(generic.nonEmpty, "fixture 32-bit graph unexpectedly empty")
-    assert(quotient == generic)
-  }
-
   /** Textbook round-synchronous doc-level peel in plain Scala, adjacency
     * from the already-spec'd pair engine, lower-median k — the reference
-    * both simhashKCore routes (quotient at bits ≤ 16, distributed
-    * doc-level at bits > 16) must reproduce. Returns (per-doc map, peel
-    * rounds, core-nonempty).
+    * the simhashKCore class-quotient peel must reproduce. Returns (per-doc
+    * map, peel rounds, core-nonempty).
     */
-  private def naiveKCore(docsDf: org.apache.spark.sql.DataFrame, bits: Int)
+  private def naiveKCore(docsDf: org.apache.spark.sql.DataFrame)
       : (Map[Long, (Long, Long, Long)], Long, Boolean) = {
-    val nodes = DedupOps.simhash(docsDf, bits).select("doc_id")
+    val nodes = DedupOps.simhash(docsDf).select("doc_id")
       .collect().map(_.getLong(0))
     val adj = scala.collection.mutable.Map(
       nodes.map(_ -> scala.collection.mutable.Set.empty[Long]).toSeq: _*)
-    DedupOps.simhashPairs(docsDf, maxHamming = 1, bits).select("da", "db")
+    DedupOps.simhashPairs(docsDf, maxHamming = 1).select("da", "db")
       .collect().foreach { r =>
         adj(r.getLong(0)) += r.getLong(1); adj(r.getLong(1)) += r.getLong(0)
       }
@@ -697,25 +674,10 @@ class LlmSpec extends SparkSpec {
     // peel — same symmetry argument as l59 (same-fingerprint docs share
     // degree at every round).
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (want, rounds, coreNonEmpty) = naiveKCore(docsDf, bits = 16)
+    val (want, rounds, coreNonEmpty) = naiveKCore(docsDf)
     assert(rounds >= 1, "fixture corpus unexpectedly peels nothing")
     assert(coreNonEmpty, "fixture corpus unexpectedly has an empty core")
     assert(kCoreMap(DedupOps.simhashKCore(docsDf)) == want)
-  }
-
-  test("l60 width routing: bits > 16 peels distributed, never a driver collect") {
-    // r14 ADVICE: the driver peel's '≤ 2^bits classes' bound only holds
-    // at bits ≤ 16 — wider fingerprints must route to the distributed
-    // doc-level peel (DedupOps.docKCore) instead of OOMing the driver.
-    // Same contract at the wide width, checked against the naive peel.
-    val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (want, _, _) = naiveKCore(docsDf, bits = 32)
-    assert(kCoreMap(DedupOps.simhashKCore(docsDf, maxHamming = 1, bits = 32))
-             == want)
-    // And the route target agrees with the quotient at the narrow width
-    // (the k-core A/B's equality, SURVEY §6 r15 probe (g), pinned in-suite).
-    assert(kCoreMap(DedupOps.docKCore(docsDf, maxHamming = 1, bits = 16))
-             == kCoreMap(DedupOps.simhashKCore(docsDf)))
   }
 
   test("BottomK aggregator equals sorted-distinct-take-k across partitionings") {
