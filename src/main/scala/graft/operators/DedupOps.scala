@@ -338,11 +338,13 @@ object DedupOps {
     * the k-centroid collects); (2) one aggregation pass builds each doc's
     * ⌈U/64⌉-word bitset; (3) docs hash into B blocks, every doc ships to
     * its B grid cells (row i of the upper-triangular B×B grid plus column
-    * i above the diagonal — the [[MatrixOps.blockMatmul]] replication
-    * pattern, N·B rows through one exchange), and each cell compares its
-    * two blocks ALL-PAIRS with an AND/popcount loop — candidate generation
-    * and verification are the same exact pass, so there is no candidate
-    * blow-up to mitigate and no second join.
+    * i above the diagonal — an output-grid split like
+    * [[MatrixOps.blockMatmul]]'s P×Q cuboid keys, with no contraction axis
+    * and one operand on both sides; N·B rows through one exchange), and
+    * each cell compares its two blocks ALL-PAIRS with an AND/popcount
+    * loop — candidate generation and verification are the same exact
+    * pass, so there is no candidate blow-up to mitigate and no second
+    * join.
     *
     * Scale: per-task memory is 2·(N/B)·⌈U/8⌉ bytes by construction — B is
     * derived from a 64 MB per-block cap plus a √(2·parallelism) floor
@@ -1464,11 +1466,10 @@ object DedupOps {
     * over the full [[simhashPairs]] graph (unit-tested), but the iterative
     * state is one row per distinct fingerprint instead of per document.
     */
-  def simhashComponents(docs: DataFrame, maxHamming: Int = 1,
-                        bits: Int = 16): DataFrame = {
-    val fp = simhash(docs, bits).persist()
-    val classes = fpClasses(fp, bits).persist()
-    val cp = classPairs(classes, maxHamming, bits)
+  def simhashComponents(docs: DataFrame, maxHamming: Int = 1): DataFrame = {
+    val fp = simhash(docs).persist()
+    val classes = fpClasses(fp).persist()
+    val cp = classPairs(classes, maxHamming)
       .select(col("ca").as("da"), col("cb").as("db"))
     val comp = connectedComponents(
       classes.select(col("cid").as("doc_id")), cp)
@@ -1479,7 +1480,7 @@ object DedupOps {
     // transitive-closure oracle (whose base case is every document) says.
     val out = materialize(
       docs.select(col("doc_id"))
-        .join(fp.join(classes, s"simhash$bits").join(comp, "cid")
+        .join(fp.join(classes, "simhash16").join(comp, "cid")
                 .select(col("doc_id"), col("component_id")),
               Seq("doc_id"), "left")
         .select(col("doc_id"),

@@ -59,9 +59,15 @@ object MatchGraph {
     * test suite beside a verify run) must never overwrite each other's
     * artifacts mid-read, so each process stages under its own pid-scoped
     * directory; `built` memoizes within the JVM, `rebuild` overwrites
-    * only this process's copy.
+    * only this process's copy. No other process ever reads it, so the
+    * tree is deleted when this JVM exits instead of piling up in
+    * `java.io.tmpdir` one directory per run.
     */
-  private val jvmScope: String = s"jvm-${ProcessHandle.current().pid()}"
+  private val jvmScope: String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-artifacts/" +
+      s"jvm-${ProcessHandle.current().pid()}"
+  sys.addShutdownHook(
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(jvmScope)))
 
   private def root(s: SparkSession, sfDir: String, threshold: Double,
                    n: Int): String = {
@@ -80,8 +86,7 @@ object MatchGraph {
       .digest((sfDir +: files).mkString("\n").getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
     val t = math.round(threshold * 1e6)
-    s"${System.getProperty("java.io.tmpdir")}/graft-artifacts/" +
-      s"$jvmScope/match-t$t-n$n-$tag"
+    s"$jvmScope/match-t$t-n$n-$tag"
   }
 
   /** Read-through: build once per JVM per corpus, then hand every

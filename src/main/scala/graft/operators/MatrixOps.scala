@@ -67,24 +67,37 @@ object MatrixOps {
     * summed. Shuffle volume is O(tiles) instead of O(entries·replication).
     * Result is hash-identical to [[matmul]].
     *
-    * `replicate` (round 16) is the tile join's PARALLELISM FLOOR: the only
-    * equi-key the contraction join has is the contraction block index,
-    * whose cardinality is the grid width — at bench sizes (grid 8 on 32
-    * cores) the join+GEMM stage therefore ran on ≤ 8 tasks whatever the
-    * core count (measured: the GEMM stage was ~43 core-s spread over 8
-    * tasks = 5.4 s of the 13.8 s m1_sweep_4000 wall). With replicate = R,
-    * each A tile is salted R ways and each B tile keyed by `bbj mod R`, so
-    * the join key becomes (contraction block, salt) with grid·R values —
-    * every tile pair still meets exactly once (each B tile has exactly one
-    * salt). Replication ships R extra copies of A's tiles (R·n²·8 bytes),
-    * so callers gate it on the grid being NARROWER than the core count
-    * ([[graft.plans.MatMulStrategy.deriveReplication]]); at scale
-    * grid ≥ cores and R stays 1 — the plan is byte-identical to round 15.
+    * `p` × `q` is the CUBOID SPLIT of the output tile grid (FuseME,
+    * PAPERS.md): the contraction join's only natural key is the k-block,
+    * whose cardinality is the grid width, so a grid narrower than the
+    * core count leaves cores idle. The join key is therefore (k-block,
+    * i-block mod p, j-block mod q): A tile (i, k) ships to its q keys
+    * (k, i mod p, ·), B tile (k, j) to its p keys (k, ·, j mod q), and each
+    * tile pair meets at exactly one key, (k, i mod p, j mod q). A split
+    * wider than the grid only adds keys that one side never reaches, so
+    * they match nothing. The cost is (q−1)·|A| + (p−1)·|B| extra tile
+    * copies; p = q = 1 is the plain k-keyed join
+    * ([[graft.plans.MatMulStrategy.deriveReplication]] picks the split).
+    *
+    * `parts` is the partition count of the tile exchanges and of the
+    * partial-tile exchange (the planner passes its estimated key count;
+    * 0 takes the session's shuffle partition count). Both tile sides are
+    * repartitioned to it on the join keys, so the sort-merge join reuses
+    * those exchanges, and the partial-tile reduce groups on exactly its
+    * repartition keys. AQE leaves an exchange with an explicit count
+    * alone: it neither coalesces its partitions nor splits skewed ones.
+    * Coalescing is what used to shrink the whole join (a few hundred KB
+    * of compressed tiles at 1000²) to ONE task running every GEMM. Skew
+    * splitting is not needed: every key holds tiles of one fixed size,
+    * bs² LONGs, at most ⌈grid/p⌉ of A's and ⌈grid/q⌉ of B's, so no key
+    * can grow past the others with the data.
     */
-  def blockMatmul(a: DataFrame, b: DataFrame, bs: Int,
-                  replicate: Int = 1): DataFrame = {
+  def blockMatmul(a: DataFrame, b: DataFrame, bs: Int, p: Int = 1, q: Int = 1,
+                  parts: Int = 0): DataFrame = {
     val spark = a.sparkSession
     import spark.implicits._
+    require(p >= 1 && q >= 1, s"cuboid split must be at least 1x1, got ${p}x$q")
+    val n = if (parts > 0) parts else spark.sessionState.conf.numShufflePartitions
 
     // COO → dense tiles through a SORT-BASED group (groupByKey/mapGroups),
     // not a collect_list hash aggregate. The former collect_list partial
@@ -102,24 +115,26 @@ object MatrixOps {
     // tile-pair stage paid when scattering lists into arrays.
     // (Extracted as [[cooToTiles]] so a benchmark can time the densify
     // pipeline in isolation.)
-    val aB0 = cooToTiles(a, bs).toDF("abi", "abj", "ad")
-    val bB0 = cooToTiles(b, bs).toDF("bbi", "bbj", "bd")
+    val aB = cooToTiles(a, bs)
+      .select(col("_1").as("abi"), col("_2").as("abj"), col("_3").as("ad"),
+              (col("_1") % p).cast("int").as("ap"),
+              explode(lit((0 until q).toArray)).as("aq"))
+      .repartition(n, col("abj"), col("ap"), col("aq"))
+    val bB = cooToTiles(b, bs)
+      .select(col("_1").as("bbi"), col("_2").as("bbj"), col("_3").as("bd"),
+              explode(lit((0 until p).toArray)).as("bp"),
+              (col("_2") % q).cast("int").as("bq"))
+      .repartition(n, col("bbi"), col("bp"), col("bq"))
 
-    // Tile pairs with matching contraction block; local dense GEMM per pair.
-    val r = math.max(1, replicate)
+    // Tile pairs meeting at one cuboid key; local dense GEMM per pair.
     // (A shuffle_hash hint on the tile join was tried and cannot apply
     // here: the expansion is composed inside MatMulStrategy from the
     // ANALYZED subtree, which never passes the optimizer rule that
     // consumes ResolvedHint — Spark raises INTERNAL_ERROR. The sort-merge
     // join's per-partition sort input is a handful of tile rows, so the
     // sort itself is cheap; kept.)
-    val (aB, bB, joinKeys) =
-      if (r == 1) (aB0, bB0, col("abj") === col("bbi"))
-      else (
-        aB0.withColumn("ra", explode(lit((0 until r).toArray))),
-        bB0.withColumn("rb", (col("bbj") % r).cast("int")),
-        col("abj") === col("bbi") && col("ra") === col("rb"))
-    val pairs = aB.join(bB, joinKeys)
+    val pairs = aB.join(bB, col("abj") === col("bbi") &&
+        col("ap") === col("bp") && col("aq") === col("bq"))
       .select(col("abi"), col("bbj"), col("ad"), col("bd"))
       .as[(Long, Long, Array[Long], Array[Long])]
 
@@ -154,6 +169,9 @@ object MatrixOps {
     // emission — including cells whose products cancel to exact 0, which
     // [[matmul]] does emit; the planner's row-join route filters them so
     // both routes return the same rows ([[graft.plans.MatMul]]).
+    // The group keys are exactly the repartition keys, so the group
+    // reuses that explicit-count exchange (a `groupByKey` would append a
+    // fresh key column and plan a second, coalescable one).
     //
     // MEASURED NEGATIVE (round 16, 2026-08-20): a codegen emission —
     // mapGroups returning ONE (abi, bbj, bs²-array) row, then posexplode +
@@ -167,14 +185,16 @@ object MatrixOps {
     // unchanged (plans/r16/gemm_emission_{before,after}.txt hold both
     // shapes).
     partialTiles
-      .groupByKey(t => (t._1, t._2))
+      .repartition(n, col("_1"), col("_2"))
+      .groupBy(col("_1"), col("_2"))
+      .as[(Long, Long), (Long, Long, Array[Long])]
       .flatMapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Array[Long])]) =>
         val (abi, bbj) = key
         val acc = Array.ofDim[Long](bs * bs)
         it.foreach { t =>
-          val p = t._3
+          val part = t._3
           var x = 0
-          while (x < p.length) { acc(x) += p(x); x += 1 }
+          while (x < part.length) { acc(x) += part(x); x += 1 }
         }
         // Nonzero scan as ONE iterator (round 16): the former
         // Iterator.range(..).flatMap(Iterator.single/empty) allocated two
@@ -207,11 +227,11 @@ object MatrixOps {
     *     bs = n/4 is also a latent OOM at 64k² (3·2 GB arrays per task).
     *   - n/4 RELATIVE (round 16; was n/8): the n/8 floor existed to give
     *     the contraction join ≥ 2·cores tile pairs, but the join's
-    *     parallelism is now guaranteed by salt replication
-    *     ([[blockMatmul]]'s `replicate`), not by shrinking tiles — and
+    *     parallelism now comes from the cuboid split of the output grid
+    *     ([[blockMatmul]]'s `p` × `q`), not from shrinking tiles — and
     *     grid 4 beats grid 8 at equal parallelism (2000²: 3.5 s at bs=500
-    *     vs 5.1 s at bs=250, replication on) because halving the grid
-    *     halves the densify-row and partial-tile traffic.
+    *     vs 5.1 s at bs=250, with the join widened) because halving the
+    *     grid halves the densify-row and partial-tile traffic.
     * Past n = 2048 the grid widens instead: per-task memory stays
     * constant while tile-pair parallelism grows as (n/512)³ — the
     * dimension a cluster actually scales with.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.LongType
 
@@ -93,36 +94,65 @@ object MatMulReassociate
   * both the planned and the handwritten entry points), analyzed into a
   * logical subtree handed back to the planner via `planLater`; a final
   * Project pins the expansion's output to the node's attribute ids.
+  *
+  * AQE plans the node once up front and again after every query stage
+  * completes: the stages sit inside the expansion, which AQE's logical
+  * plan does not hold, so it re-plans the whole node, seven times for one
+  * 1000² block multiply. Composing the expansion analyzes a dozen
+  * Datasets (0.09–0.12 s each time for that multiply on a 4-core host),
+  * so it is built once per node and kept in a tag, and each re-plan
+  * reuses it. The tag holds the children it was built from, so a node
+  * whose children AQE has rewritten (a finished broadcast stage inside an
+  * operand) gets a fresh expansion. A later query over the same frame
+  * optimizes its own copy of the node, so it decides its route afresh.
   */
 class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case m: MatMul =>
-      val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-      val minSide = m.left.stats.sizeInBytes.min(m.right.stats.sizeInBytes)
-      val a = GraftSqlShim.ofRows(spark, m.left)
-      val b = GraftSqlShim.ofRows(spark, m.right)
-      val composed =
-        if (bcThreshold > 0 && minSide <= bcThreshold)
-          MatrixOps.matmul(a, b).filter(col("v") =!= 0L)
-        else {
-          val bs = MatMulStrategy.deriveBs(m.left, m.right)
-          MatrixOps.blockMatmul(a, b, bs,
-            MatMulStrategy.deriveReplication(
-              m.left, m.right, bs,
-              spark.sparkContext.defaultParallelism,
-              MatMulStrategy.replicationHeadroom(spark)))
-        }
-      val expanded = composed.queryExecution.analyzed
-      val aligned = Project(
-        m.output.zip(expanded.output).map { case (target, src) =>
-          Alias(src, target.name)(exprId = target.exprId)
-        }, expanded)
+      val aligned = m.getTagValue(MatMulStrategy.expansionTag).collect {
+        case (l, r, plan) if l.eq(m.left) && r.eq(m.right) => plan
+      }.getOrElse {
+        val plan = expand(m)
+        m.setTagValue(MatMulStrategy.expansionTag, (m.left, m.right, plan))
+        plan
+      }
       planLater(aligned) :: Nil
     case _ => Nil
+  }
+
+  private def expand(m: MatMul): LogicalPlan = {
+    val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val minSide = m.left.stats.sizeInBytes.min(m.right.stats.sizeInBytes)
+    val a = GraftSqlShim.ofRows(spark, m.left)
+    val b = GraftSqlShim.ofRows(spark, m.right)
+    val composed =
+      if (bcThreshold > 0 && minSide <= bcThreshold)
+        MatrixOps.matmul(a, b).filter(col("v") =!= 0L)
+      else {
+        val bs = MatMulStrategy.deriveBs(m.left, m.right)
+        val split = MatMulStrategy.deriveReplication(
+          m.left, m.right, bs, spark.sparkContext.defaultParallelism,
+          MatMulStrategy.replicationHeadroom(spark))
+        // One exchange partition per estimated cuboid key.
+        val keys = MatMulStrategy.grid(m.left, m.right, bs) * split * split
+        MatrixOps.blockMatmul(a, b, bs, split, split,
+          math.min(keys, Int.MaxValue.toLong).toInt)
+      }
+    val expanded = composed.queryExecution.analyzed
+    Project(
+      m.output.zip(expanded.output).map { case (target, src) =>
+        Alias(src, target.name)(exprId = target.exprId)
+      }, expanded)
   }
 }
 
 object MatMulStrategy {
+  /** A node's expansion with the children it was built from. See
+    * [[MatMulStrategy]].
+    */
+  private val expansionTag =
+    TreeNodeTag[(LogicalPlan, LogicalPlan, LogicalPlan)]("graft.matmul.expansion")
+
   /** Last block-path tile decision `(nnz estimate, derived n, bs)` — a
     * planning-time observability hook for the plan specs (the chosen bs is
     * invisible in the physical plan string: it only parameterizes the
@@ -152,28 +182,38 @@ object MatMulStrategy {
     bs
   }
 
-  /** Tile-join parallelism floor (round 16, guide §2.2): the contraction
-    * join's only equi-key has `grid = ⌈n/bs⌉` distinct values, so when the
-    * grid is narrower than the core count the join+GEMM stage underuses
-    * the machine (measured: 8 tasks on 32 cores = 5.4 s of m1_sweep_4000's
-    * 13.8 s wall). Replicate A's tiles toward `grid·R ≥ 2·parallelism`
-    * join keys, capped at the grid width (more salts than B column blocks
-    * match nothing — pure waste). At scale grid ≥ cores ⇒ R = 1: the
-    * replication is strictly a small-grid fixup, never an at-scale cost.
-    * Derived from the SAME size statistics as [[deriveBs]] (a 2× estimate
-    * error moves R by 2× — both sides safe: R high wastes bounded tile
-    * copies, R low leaves some cores idle).
+  /** Per-axis cuboid split of the output tile grid — P = Q, the `p` and
+    * `q` of [[MatrixOps.blockMatmul]]. The contraction join's natural key
+    * has `grid = ⌈n/bs⌉` values, so on a grid narrower than the core
+    * count the join+GEMM stage underuses the machine (measured at round
+    * 16: 8 tasks on 32 cores = 5.4 s of m1_sweep_4000's 13.8 s wall).
+    * Splitting the output grid P×Q multiplies the keys to grid·P·Q, so
+    * P = Q = min(grid, ⌈√(headroom·parallelism / grid)⌉) reaches
+    * `headroom·parallelism` keys while growing each operand's copies by
+    * only √ of that factor (a one-sided salt R needs R = headroom·
+    * parallelism/grid copies of A for the same key count). At scale
+    * grid ≥ headroom·parallelism and P = Q = 1: the plain k-keyed join,
+    * no copies. The cap at the grid width is where a wider split adds
+    * only keys that match nothing. Derived from the SAME size statistics
+    * as [[deriveBs]]; an estimate 2× high lowers the split by about √2
+    * and one 2× low raises it, both safe: too few keys leaves some cores
+    * idle, too many ships bounded extra tile copies (the bench's 1000²
+    * operands estimate at n = 2309, still P = Q = 2, 8 keys on the true
+    * 2×2 grid). The keys stay tasks at run time: the tile exchanges carry
+    * an explicit partition count, which opts them out of AQE's coalescing
+    * and skew splitting ([[MatrixOps.blockMatmul]] says why that is safe).
     */
   def deriveReplication(left: LogicalPlan, right: LogicalPlan, bs: Int,
                         parallelism: Int, headroom: Int = 2): Int = {
+    val g = grid(left, right, bs)
+    val want = math.ceil(math.sqrt(headroom.toDouble * parallelism / g)).toLong
+    math.min(want, g).max(1L).toInt
+  }
+
+  /** Tile-grid width `⌈n/bs⌉` of the estimated dense n×n operand. */
+  private[plans] def grid(left: LogicalPlan, right: LogicalPlan, bs: Int): Long = {
     val (_, n) = estimateN(left, right)
-    val grid = ((n + bs - 1) / bs).max(1L)
-    val target = headroom.toLong * parallelism
-    if (grid >= target) 1
-    else {
-      val want = (target + grid - 1) / grid
-      math.min(want, grid).toInt.max(1)
-    }
+    ((n + bs - 1) / bs).max(1L)
   }
 
   /** `(nnz estimate, n)` of the larger operand, read as a dense n×n COO
@@ -186,11 +226,14 @@ object MatMulStrategy {
     (nnz, math.sqrt(nnz.min(BigInt(Long.MaxValue)).toDouble).toLong.max(1L))
   }
 
-  /** The replication target's headroom factor over the core count
-    * (`spark.graft.gemm.replicationHeadroom`, default 2): R is chosen so
-    * `grid·R ≥ headroom·parallelism`. 2 over-decomposes the join for load
-    * balance at the cost of extra A-tile copies; the A/B handle for
-    * measuring that trade per host.
+  /** The cuboid split's headroom factor over the core count
+    * (`spark.graft.gemm.replicationHeadroom`, default 2): the split is
+    * chosen so `grid·P·Q` reaches `headroom·parallelism` keys where the
+    * grid allows it. 2 over-decomposes
+    * the join for load balance at the cost of extra tile copies; the A/B
+    * handle for measuring that trade per host. The tile exchanges carry
+    * an explicit partition count, which AQE never coalesces, so the keys
+    * this factor asks for are the tasks the join stage runs.
     */
   def replicationHeadroom(spark: SparkSession): Int = {
     val v = graft.Engine.confLong(spark, "spark.graft.gemm.replicationHeadroom")

@@ -44,6 +44,74 @@ class MatMulPlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("the tile join and the partial-tile reduce keep one partition per cuboid key") {
+    // AQE coalesces a small shuffle it planned itself, which once ran the
+    // whole tile join and every GEMM as ONE task. The tile and partial-tile
+    // exchanges carry an explicit count instead: the executed plan must
+    // read each at its full width (no AQEShuffleRead over it) and the width
+    // must be the planner's estimated key count, grid·P·Q.
+    import graft.plans.MatMulStrategy
+    import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    // The node an operator reads its exchange through: past the sort and
+    // projections the planner puts between them.
+    def input(p: SparkPlan): SparkPlan = p match {
+      case s: SortExec => input(s.child)
+      case pr: ProjectExec => input(pr.child)
+      case other => other
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val a = MatrixGen.matA(spark, 40, 30)
+      val b = MatrixGen.matB(spark, 30, 20)
+      val df = MatrixOps.multiplyPlanned(a, b)
+      df.queryExecution.toRdd.foreach(_ => ())
+      val Some((_, nEst, bs)) = MatMulStrategy.lastDerived
+      val split = MatMulStrategy.deriveReplication(
+        a.queryExecution.analyzed, b.queryExecution.analyzed, bs,
+        spark.sparkContext.defaultParallelism,
+        MatMulStrategy.replicationHeadroom(spark))
+      val keys = (nEst + bs - 1) / bs * split * split
+      assert(split >= 2 && keys >= 2L * spark.sparkContext.defaultParallelism,
+        s"small grid should be split: n=$nEst bs=$bs split=$split")
+      val all = nodes(df.queryExecution.executedPlan)
+      val join = all.collect { case j: SortMergeJoinExec => j }
+      val reduce = all.filter(_.nodeName == "MapGroups").take(1)
+      assert(join.size == 1 && reduce.size == 1, df.queryExecution.executedPlan)
+      val reads = join.head.children ++ reduce.head.children
+      reads.map(input).foreach { r =>
+        assert(!r.isInstanceOf[AQEShuffleReadExec],
+          s"AQE re-read an explicit-count exchange:\n$r")
+        assert(r.outputPartitioning.numPartitions == keys,
+          s"expected $keys partitions:\n$r")
+      }
+      assert(canon(df) == canon(MatrixOps.matmul(a, b).filter("v != 0")))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("a MatMul node planned again under another broadcast setting takes that setting's route") {
+    // The strategy keeps each node's expansion for AQE's re-plans; a later
+    // query over the same frame must still take the route its own conf
+    // selects, not the one kept from the earlier query.
+    import org.apache.spark.sql.functions.col
+    val df = planned()
+    def route(): String = executedPlan(df.filter(col("v") > 0L))
+    assert(!route().contains("SerializeFromObject"), "expected the row join first")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(route().contains("SerializeFromObject"),
+               "the block route must be planned once broadcast is off")
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("cost statistics flip the physical path across the m1 size sweep") {
     // Planning only (no execution): MatMulStrategy decides from the
     // children's size estimates, before AQE ever runs — so the choice is

@@ -38,19 +38,31 @@ class MatrixPropSpec extends SparkSpec {
     }, cases = 8)
   }
 
-  test("salt-replicated blockMatmul equals the unreplicated path " +
-       "(all shapes, block sizes, and replication factors)") {
-    // Round 16: `replicate` floors the tile join's parallelism by salting
-    // A's tiles over B's column blocks — a pure execution-layout change.
-    // Covers r > column-grid (surplus salts must match nothing, not
-    // duplicate) and rectangular shapes.
-    check(Prop.forAll(dims, dims, dims, Gen.choose(1, 6), Gen.choose(2, 9)) {
-      (m: Long, n: Long, p: Long, bs: Int, r: Int) =>
+  test("cuboid-split blockMatmul equals the unsplit path " +
+       "(all shapes, block sizes, P×Q splits and exchange widths)") {
+    // The P×Q split of the output tile grid is a pure execution-layout
+    // change. Rows are compared as sorted sequences, not sets, so a tile
+    // pair meeting at two keys would show as a duplicate or a doubled
+    // sum. Splits reach past the tile grid (grid ≤ 9 here, P and Q up to
+    // 9): the surplus keys must match nothing.
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val split = Gen.choose(1, 9)
+    check(Prop.forAll(dims, dims, dims, Gen.choose(1, 6), split, split,
+                      Gen.choose(1, 12)) {
+      (m: Long, n: Long, p: Long, bs: Int, sp: Int, sq: Int, parts: Int) =>
         val a = MatrixGen.matA(spark, m, n)
         val b = MatrixGen.matB(spark, n, p)
-        toSet(MatrixOps.blockMatmul(a, b, bs)) ==
-          toSet(MatrixOps.blockMatmul(a, b, bs, replicate = r))
+        rows(MatrixOps.blockMatmul(a, b, bs)) ==
+          rows(MatrixOps.blockMatmul(a, b, bs, sp, sq, parts))
     }, cases = 8)
+    // One fixed case past the grid on both axes: a 2×3 output grid (bs 3
+    // over 5×7 · 7×8) split 9×9, so 75 of the 81 keys per k-block match
+    // nothing.
+    val a = MatrixGen.matA(spark, 5, 7)
+    val b = MatrixGen.matB(spark, 7, 8)
+    val want = rows(MatrixOps.matmul(a, b).filter(col("v") =!= 0L))
+    assert(rows(MatrixOps.blockMatmul(a, b, 3, 9, 9, 7)) == want)
   }
 
   test("transpose(A·B) == transpose(B)·transpose(A) for all shapes") {
