@@ -36,8 +36,8 @@ object Engine {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
 
-  /** Apply `SPARK_GRAFT_CONF="k=v,k=v"` session-conf overrides — the probe
-    * and bench harnesses' shared mechanism for forcing non-default paths
+  /** Apply `SPARK_GRAFT_CONF="k=v,k=v"` session-conf overrides — the probe,
+    * bench and verify harnesses' shared mechanism for forcing non-default paths
     * (`spark.graft.dedup.attachBroadcastCap=0` for past-cap fallback runs,
     * `spark.graft.dedup.pairSpreadMinDocs=0` to force the verify spread
     * on). Values containing ',' cannot be expressed (no probed conf needs

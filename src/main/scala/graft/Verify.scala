@@ -13,6 +13,12 @@ object Verify {
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
     ).getOrCreate()
+    // SPARK_GRAFT_CONF overrides (shared parser with Bench and ScaleProbe):
+    // how a verify run checks the forced side of a measured route switch
+    // against the oracles, e.g. spark.graft.dedup.denseUniverseMax=0.
+    Engine.applyConfOverrides(spark).foreach { case (k, v) =>
+      System.err.println(s"[verify] conf override: $k=$v")
+    }
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -304,6 +304,203 @@ object DedupOps {
     out
   }
 
+  /** The dense regime's code index, collected ONCE from the shingle frame
+    * with a LIMIT that bounds the driver regardless of the true universe
+    * (round 16, guide §2.4 "remove shuffles outright"): the callers used
+    * to pay a countDistinct probe pass to DECIDE the regime, then
+    * [[densePairs]] paid a second distinct pass for the row_number index
+    * plus a broadcast join to attach it. One sorted-distinct TOP-(max+1)
+    * collect answers both — `length > max` means "sparse regime" with at
+    * most max+1 rows ever reaching the driver (≤ 128 KB of longs at the
+    * default 16 384 cap, the k-centroid collect discipline), and the
+    * array's position IS the old `row_number() - 1` index (same
+    * ascending code order). The shingle frame loses one full aggregation
+    * pass and the bitset build loses its join.
+    */
+  private[graft] def denseCodeIndex(sh: DataFrame, denseMax: Long): Array[Long] =
+    sh.select(col("code")).distinct().orderBy(col("code"))
+      .limit(math.min(denseMax, Int.MaxValue - 2L).toInt + 1)
+      .collect().map(_.getLong(0))
+
+  /** Smallest AND/popcount work, in 64-bit word-ops, worth one grid cell
+    * of [[densePairs]]: 2^23 ≈ 8.4M.
+    *
+    * Measured on a 4-core host (`local[4]`, the sf0.1 corpus at 1×, 2× and
+    * 4×, grids 1–3 driven directly): the kernel runs 2–4 × 10^8 word-ops
+    * per CPU-second, so a 2^23 cell is 20–40 ms of kernel, the order of
+    * the 15–55 ms of CPU an extra cell task was measured to add; smaller
+    * cells cannot pay for their task. Splitting paid at every rung, down
+    * to cells of ~2^24: 5 000 docs × 6 words ran in 1.0–1.1 s on six
+    * cells against 1.2–1.7 s on one, 10 000 × 11 in 1.4–1.6 s against
+    * 3.2–3.5 s, 20 000 × 18 in 6.2–6.5 s against 15.1–15.8 s.
+    */
+  private val DenseCellWordOps = 1L << 23
+
+  /** Blocks per axis of [[densePairs]]' upper-triangular B×B grid for N
+    * bitset rows of w words under `parallelism` task slots.
+    *
+    * The pairs cost N²·w/2 word-ops in all. B is the largest width whose
+    * off-diagonal cells, (N/B)²·w word-ops each, still carry
+    * [[DenseCellWordOps]] — so a 500-doc, 6-word corpus runs as one cell
+    * instead of the 3×3 grid a 4-core width would force on it — capped at
+    * ⌈√(2·parallelism)⌉, whose B(B+1)/2 ≥ parallelism cells fill every
+    * slot. The 64 MB per-block memory bound floors the result: a cell
+    * holds two blocks of N/B rows of (8·w + 48) bytes, so B ≥
+    * ⌈N·(8·w + 48) / 64 MB⌉ whatever the work says.
+    */
+  private[graft] def denseGrid(nDocs: Long, w: Int, parallelism: Int): Int = {
+    val memB = (nDocs * (w * 8L + 48L) + (64L << 20) - 1) / (64L << 20)
+    val parB = math.ceil(math.sqrt(2.0 * parallelism)).toLong
+    val workB = (nDocs * math.sqrt(w.toDouble / DenseCellWordOps)).toLong
+    math.max(memB, math.min(parB, workB)).max(1L).min(Int.MaxValue).toInt
+  }
+
+  /** Dense-regime exact pair join: a blocked Boolean GEMM with popcount
+    * over per-doc bitsets, serving [[prefixJaccardPairs]] (`symmetric`,
+    * Jaccard ≥ `threshold`) and [[containmentPairs]] (containment ≥
+    * T/10^6) when the shingle universe saturates (see the regime-pick
+    * rationale in [[containmentPairs]]).
+    *
+    * Shape: (1) a dense code index 0..U−1 (`codes`, U ≤ denseUniverseMax
+    * by the caller's measured pick, [[denseCodeIndex]]); (2) one
+    * aggregation pass builds each doc's w = ⌈U/64⌉-word bitset, cached
+    * and counted — N is exactly the docs that carry shingles, and the
+    * grid pass then reads the cached rows, so the count costs no extra
+    * pass; (3) docs hash into B blocks (`grid`, or [[denseGrid]] of N
+    * when 0), every doc ships to its B grid cells (row i of the
+    * upper-triangular B×B grid plus column i above the diagonal — an
+    * output-grid split like [[MatrixOps.blockMatmul]]'s P×Q cuboid keys,
+    * with no contraction axis and one operand on both sides; N·B rows
+    * through one exchange with a partition per cell), and each cell
+    * compares its two blocks ALL-PAIRS with an AND/popcount loop —
+    * candidate generation and verification are the same exact pass, so
+    * there is no candidate blow-up to mitigate and no second join.
+    *
+    * The symmetric test and value replicate [[verifyJaccard]]'s exactly:
+    * c > 0 ∧ c/(na+nb−c) ≥ t on the same IEEE doubles, id-ordered pairs,
+    * the shared integer half-up ROUND ratio.
+    *
+    * Scale: per-task memory is 2·(N/B)·⌈U/8⌉ bytes by construction (the
+    * grid's memory floor), so "bigger corpus" becomes "more cells", the
+    * dimension a cluster scales with, exactly like the GEMM tile cap.
+    * Work is Θ(N²·U/64) — in the saturated-universe regime that
+    * activates this path, Θ(N²) candidate pairs are already genuine
+    * (measured: the r11 16× rung verified 591M distinct candidates for
+    * 2.57M true pairs), so the quadratic term is the problem's own; this
+    * kernel minimizes its constant (measured at 16×: the whole dense pass
+    * runs in seconds where the prefix join's candidate stage alone took
+    * 346 s).
+    */
+  private[graft] def densePairs(sh: DataFrame, T: Long, threshold: Double,
+                                codes: Array[Long], symmetric: Boolean,
+                                grid: Int = 0): DataFrame = {
+    val spark = sh.sparkSession
+    import spark.implicits._
+    val w = ((codes.length + 63) / 64).max(1)
+    val codeIdx = new java.util.HashMap[Long, Integer](codes.length * 2)
+    codes.indices.foreach(i => codeIdx.put(codes(i), i))
+    val bcIdx = spark.sparkContext.broadcast(codeIdx)
+    val vecs = sh.groupBy(col("doc_id")).agg(collect_list(col("code")).as("cs"))
+      .as[(Long, Seq[Long])]
+      .map { case (id, cs) =>
+        val m = bcIdx.value
+        val words = new Array[Long](w)
+        cs.foreach(c => { val i = m.get(c).intValue(); words(i >> 6) |= 1L << (i & 63) })
+        (id, words, cs.size)
+      }
+      // Cached as JVM objects, not as a columnar Dataset cache: building
+      // the columnar cache of the array column cost ~1.2 CPU-s more at
+      // 10 000 docs × 11 words on a 4-core host (its plan also keeps every
+      // shuffle partition), and the cell shuffle below is an RDD shuffle
+      // anyway.
+      .rdd.persist()
+    try {
+      val b =
+        if (grid > 0) grid
+        else denseGrid(vecs.count(), w, spark.sparkContext.defaultParallelism)
+      // Upper-triangular cell (i, j), i ≤ j, numbered row-major 0..C−1.
+      // Each cell is its own partition of an RDD shuffle: HashPartitioner
+      // puts Int key c (hash code c) in partition c, and AQE never
+      // coalesces an RDD exchange, so compute-heavy cells (a few MB of
+      // bitsets, N²-sized work) cannot be folded into one task.
+      val nCells = b * (b + 1) / 2
+      def cell(i: Int, j: Int): Int = i * b - i * (i - 1) / 2 + (j - i)
+      val diagCells = (0 until b).map(i => cell(i, i)).toSet
+      val pairs = vecs.flatMap { case (id, words, na) =>
+        val blk = ((id * 0x9E3779B97F4A7C15L >>> 33) % b).toInt
+        val out = new Array[(Int, (Byte, Long, Array[Long], Int))](b)
+        var o = 0
+        var j = blk
+        while (j < b) { out(o) = (cell(blk, j), (0: Byte, id, words, na)); j += 1; o += 1 }
+        var i = 0
+        while (i < blk) { out(o) = (cell(i, blk), (1: Byte, id, words, na)); i += 1; o += 1 }
+        out
+      }.partitionBy(new org.apache.spark.HashPartitioner(nCells))
+      .mapPartitionsWithIndex { (part, it) =>
+        val left = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Int)]
+        val right = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Int)]
+        it.foreach { case (_, (side, id, words, na)) =>
+          (if (side == 0) left else right) += ((id, words, na))
+        }
+        val diag = diagCells(part)
+        def test(p: (Long, Array[Long], Int),
+                 q: (Long, Array[Long], Int)): Option[(Long, Long, Long, Long)] = {
+          var c = 0L
+          var k = 0
+          val wp = p._2; val wq = q._2
+          while (k < w) { c += java.lang.Long.bitCount(wp(k) & wq(k)); k += 1 }
+          if (symmetric) {
+            // verifyJaccard's exact test and orientation: c > 0, the SAME
+            // IEEE double compare (both engines divide the same integers),
+            // pairs id-ordered.
+            if (c > 0 && c.toDouble / (p._3 + q._3 - c) >= threshold) {
+              val (da, db) = if (p._1 < q._1) (p._1, q._1) else (q._1, p._1)
+              Some((da, db, c, p._3.toLong + q._3 - c))
+            } else None
+          } else {
+            // Orient smaller-set-into-larger, id tie-break — the sparse
+            // path's contract; the threshold compares the same scaled
+            // integers. c > 0 matches the sparse path's shared-prefix-code
+            // precondition (r12 ADVICE: at a degenerate threshold < 1e-6,
+            // T = 0 and a zero intersection would otherwise pass).
+            val (xa, xb) =
+              if (p._3 < q._3 || (p._3 == q._3 && p._1 < q._1)) (p, q) else (q, p)
+            if (c > 0 && c * 1000000L >= xa._3.toLong * T)
+              Some((xa._1, xb._1, c, xa._3.toLong))
+            else None
+          }
+        }
+        // Pairs stream out LAZILY (r12 ADVICE): the per-task memory bound
+        // 2·(N/B)·⌈U/8⌉ covers the cell's INPUT rows; the passing-pair
+        // output can approach (N/B)² tuples at low thresholds and must
+        // never be buffered whole. One left row's hits (≤ N/B tuples) are:
+        // a plain loop per row instead of a nested iterator per pair
+        // cuts the kernel's CPU by ~40% (measured on a 4-core host at
+        // 20 000 docs × 18 words, 3×3 grid, two JVMs each: 9.0–11.1 vs
+        // 15.7–17.6 CPU-s).
+        val rs = if (diag) left else right
+        Iterator.range(0, left.length).flatMap { i =>
+          val p = left(i)
+          val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+          var j = if (diag) i + 1 else 0
+          while (j < rs.length) { test(p, rs(j)).foreach(hits += _); j += 1 }
+          hits
+        }
+      }.setName("densePairs").toDF("ida", "idb", "c", "den")
+      // den carries the ratio's denominator out of the kernel: |x| for
+      // containment, |x∪y| for Jaccard — round4Ratio is the shared
+      // cross-engine rounding convention either way.
+      val result =
+        if (symmetric)
+          pairs.select(col("ida").as("da"), col("idb").as("db"),
+            graft.Q.round4Ratio(col("c"), col("den")).as("jaccard"))
+        else
+          pairs.select(col("ida").as("contained_id"), col("idb").as("container_id"),
+            graft.Q.round4Ratio(col("c"), col("den")).as("containment"))
+      materialize(result)
+    } finally vecs.unpersist(blocking = false)
+  }
+
   /** CONTAINMENT near-dup pairs — ASYMMETRIC Jaccard: C(x→y) = |x∩y|/|x|,
     * the quote/excerpt/boilerplate detector symmetric Jaccard misses (a
     * paragraph lifted into a 100× longer doc has Jaccard ≈ 0.01 but
@@ -329,170 +526,6 @@ object DedupOps {
     * the same global (cf, code) order. Both sides therefore join from the
     * `ranked` frame (rank + size attached), which is what gets persisted.
     */
-  /** Dense-regime exact containment join: blocked Boolean GEMM with
-    * popcount (see the regime-pick rationale in [[containmentPairs]]).
-    *
-    * Shape: (1) a dense code index 0..U−1 (U ≤ denseUniverseMax by the
-    * caller's measured pick — the single-partition row_number window is
-    * bounded ≤ 64k rows by construction, the same small-side discipline as
-    * the k-centroid collects); (2) one aggregation pass builds each doc's
-    * ⌈U/64⌉-word bitset; (3) docs hash into B blocks, every doc ships to
-    * its B grid cells (row i of the upper-triangular B×B grid plus column
-    * i above the diagonal — an output-grid split like
-    * [[MatrixOps.blockMatmul]]'s P×Q cuboid keys, with no contraction axis
-    * and one operand on both sides; N·B rows through one exchange), and
-    * each cell compares its two blocks ALL-PAIRS with an AND/popcount
-    * loop — candidate generation and verification are the same exact
-    * pass, so there is no candidate blow-up to mitigate and no second
-    * join.
-    *
-    * Scale: per-task memory is 2·(N/B)·⌈U/8⌉ bytes by construction — B is
-    * derived from a 64 MB per-block cap plus a √(2·parallelism) floor
-    * (`spark.graft.dedup.denseGrid` overrides for probes), so "bigger
-    * corpus" becomes "more cells", the dimension a cluster scales with,
-    * exactly like the GEMM tile cap. Work is Θ(N²·U/64) — in the
-    * saturated-universe regime that activates this path, Θ(N²) candidate
-    * pairs are already genuine (measured: the r11 16× rung verified 591M
-    * distinct candidates for 2.57M true pairs), so the quadratic term is
-    * the problem's own; this kernel minimizes its constant (measured at
-    * 16×: the whole dense pass runs in seconds where the prefix join's
-    * candidate stage alone took 346 s).
-    */
-  private def denseContainmentPairs(sh: DataFrame, T: Long,
-                                    codes: Array[Long], nDocs: Long): DataFrame =
-    densePairs(sh, T, Double.NaN, codes, nDocs, symmetric = false)
-
-  /** Dense-regime exact SYMMETRIC Jaccard join — the same blocked Boolean
-    * GEMM kernel serving [[prefixJaccardPairs]] when the universe
-    * saturates (l2's candidate self-join has the same Θ(N²) enumeration
-    * mass there as l25's, measured 91.2 s at the 16× rung; the clustered
-    * gate inherits this through its representative-pair engine). The
-    * per-pair test and value replicate [[verifyJaccard]]'s exactly:
-    * c > 0 ∧ c/(na+nb−c) ≥ t on the same IEEE doubles, reported as the
-    * shared integer half-up ROUND ratio.
-    */
-  private def denseJaccardPairs(sh: DataFrame, threshold: Double,
-                                codes: Array[Long], nDocs: Long): DataFrame =
-    densePairs(sh, 0L, threshold, codes, nDocs, symmetric = true)
-
-  /** The dense regime's code index, collected ONCE from the shingle frame
-    * with a LIMIT that bounds the driver regardless of the true universe
-    * (round 16, guide §2.4 "remove shuffles outright"): the callers used
-    * to pay a countDistinct probe pass to DECIDE the regime, then
-    * [[densePairs]] paid a second distinct pass for the row_number index
-    * plus a broadcast join to attach it. One sorted-distinct TOP-(max+1)
-    * collect answers both — `length > max` means "sparse regime" with at
-    * most max+1 rows ever reaching the driver (≤ 128 KB of longs at the
-    * default 16 384 cap, the k-centroid collect discipline), and the
-    * array's position IS the old `row_number() - 1` index (same
-    * ascending code order). The shingle frame loses one full aggregation
-    * pass and the bitset build loses its join.
-    */
-  private def denseCodeIndex(sh: DataFrame, denseMax: Long): Array[Long] =
-    sh.select(col("code")).distinct().orderBy(col("code"))
-      .limit(math.min(denseMax, Int.MaxValue - 2L).toInt + 1)
-      .collect().map(_.getLong(0))
-
-  private def densePairs(sh: DataFrame, T: Long, threshold: Double,
-                         codes: Array[Long], nDocs: Long,
-                         symmetric: Boolean): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val w = ((codes.length + 63) / 64).max(1)
-    val codeIdx = new java.util.HashMap[Long, Integer](codes.length * 2)
-    codes.indices.foreach(i => codeIdx.put(codes(i), i))
-    val bcIdx = spark.sparkContext.broadcast(codeIdx)
-    val vecs = sh.groupBy(col("doc_id")).agg(collect_list(col("code")).as("cs"))
-      .as[(Long, Seq[Long])]
-      .map { case (id, cs) =>
-        val m = bcIdx.value
-        val words = new Array[Long](w)
-        cs.foreach(c => { val i = m.get(c).intValue(); words(i >> 6) |= 1L << (i & 63) })
-        (id, words, cs.size)
-      }
-    val rowBytes = w * 8L + 48L
-    val b = graft.Engine.confLong(spark, "spark.graft.dedup.denseGrid")
-      .map { g =>
-        // Fail fast on the driver (r12 ADVICE): 0 would divide-by-zero in
-        // the block hash and negatives would index out of bounds — both
-        // as confusing executor-side task failures.
-        require(g >= 1 && g.isValidInt,
-          s"spark.graft.dedup.denseGrid must be in [1, ${Int.MaxValue}], got $g")
-        g.toInt
-      }.getOrElse {
-        val memB = (nDocs * rowBytes + (64L << 20) - 1) / (64L << 20)
-        val parB = math.ceil(
-          math.sqrt(2.0 * spark.sparkContext.defaultParallelism)).toInt
-        math.max(memB.toInt, parB).max(1)
-      }
-    val pairs = vecs.flatMap { case (id, words, na) =>
-      val blk = ((id * 0x9E3779B97F4A7C15L >>> 33) % b).toInt
-      val out = new Array[(Int, Byte, Long, Array[Long], Int)](b)
-      var o = 0
-      var j = blk
-      while (j < b) { out(o) = (blk * b + j, 0: Byte, id, words, na); j += 1; o += 1 }
-      var i = 0
-      while (i < blk) { out(o) = (i * b + blk, 1: Byte, id, words, na); i += 1; o += 1 }
-      out.toSeq
-    }.groupByKey(_._1).flatMapGroups { (cell, it) =>
-      val left = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Int)]
-      val right = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Int)]
-      it.foreach { case (_, side, id, words, na) =>
-        (if (side == 0) left else right) += ((id, words, na))
-      }
-      val diag = cell / b == cell % b
-      def test(p: (Long, Array[Long], Int),
-               q: (Long, Array[Long], Int)): Option[(Long, Long, Long, Long)] = {
-        var c = 0L
-        var k = 0
-        val wp = p._2; val wq = q._2
-        while (k < w) { c += java.lang.Long.bitCount(wp(k) & wq(k)); k += 1 }
-        if (symmetric) {
-          // verifyJaccard's exact test and orientation: c > 0, the SAME
-          // IEEE double compare (both engines divide the same integers),
-          // pairs id-ordered.
-          if (c > 0 && c.toDouble / (p._3 + q._3 - c) >= threshold) {
-            val (da, db) = if (p._1 < q._1) (p._1, q._1) else (q._1, p._1)
-            Some((da, db, c, p._3.toLong + q._3 - c))
-          } else None
-        } else {
-          // Orient smaller-set-into-larger, id tie-break — the sparse
-          // path's contract; the threshold compares the same scaled
-          // integers. c > 0 matches the sparse path's shared-prefix-code
-          // precondition (r12 ADVICE: at a degenerate threshold < 1e-6,
-          // T = 0 and a zero intersection would otherwise pass).
-          val (xa, xb) =
-            if (p._3 < q._3 || (p._3 == q._3 && p._1 < q._1)) (p, q) else (q, p)
-          if (c > 0 && c * 1000000L >= xa._3.toLong * T)
-            Some((xa._1, xb._1, c, xa._3.toLong))
-          else None
-        }
-      }
-      // Pairs stream out LAZILY (r12 ADVICE): the per-task memory bound
-      // 2·(N/B)·⌈U/8⌉ covers the cell's INPUT rows; the passing-pair
-      // output can approach (N/B)² tuples at low thresholds and must
-      // never be buffered. The popcount loop dominates the per-pair
-      // iterator overhead (~w = ⌈U/64⌉ words per test).
-      val rs = if (diag) left else right
-      Iterator.range(0, left.length).flatMap { i =>
-        val p = left(i)
-        Iterator.range(if (diag) i + 1 else 0, rs.length)
-          .flatMap(j => test(p, rs(j)))
-      }
-    }.toDF("ida", "idb", "c", "den")
-    // den carries the ratio's denominator out of the kernel: |x| for
-    // containment, |x∪y| for Jaccard — round4Ratio is the shared
-    // cross-engine rounding convention either way.
-    val result =
-      if (symmetric)
-        pairs.select(col("ida").as("da"), col("idb").as("db"),
-          graft.Q.round4Ratio(col("c"), col("den")).as("jaccard"))
-      else
-        pairs.select(col("ida").as("contained_id"), col("idb").as("container_id"),
-          graft.Q.round4Ratio(col("c"), col("den")).as("containment"))
-    materialize(result)
-  }
-
   def containmentPairs(docs: DataFrame, threshold: Double,
                        n: Int = 3): DataFrame = {
     val T = math.floor(threshold * 1e6).toLong
@@ -532,16 +565,14 @@ object DedupOps {
     // `spark.graft.dedup.denseUniverseMax` (default 16 384 → ≤ 2 KB/doc
     // bitsets; 0 disables) routes dense, else the prefix join below.
     //
-    // NO doc-count crossover here, unlike [[prefixJaccardPairs]] — that
-    // is measured, not an oversight (round 13): the asymmetric prefix
-    // join lacks the symmetric path's PPJoin length filter (a short doc
-    // contained in a long one is exactly what it must NOT prune), so its
-    // candidate mass is larger at every corpus size — same-host A/B at
-    // the SMALLEST rung (5 000 docs, min-of-3): dense 6.65 s vs sparse
-    // 8.87 s, and the gap only widens (16×: 33.4 vs 363.7 s, r12).
-    // There is no measured regime below the universe cap where the
-    // sparse containment join wins; `denseUniverseMax=0` remains the
-    // escape hatch.
+    // The pick reads the universe alone, as [[prefixJaccardPairs]]' does:
+    // at no measured corpus size below the universe cap does the sparse
+    // containment join win. Same-host A/B at the SMALLEST rung (5 000
+    // docs, min-of-3): dense 6.65 s vs sparse 8.87 s, and the gap only
+    // widens (16×: 33.4 vs 363.7 s) — the asymmetric prefix join lacks
+    // the symmetric path's PPJoin length filter (a short doc contained in
+    // a long one is exactly what it must NOT prune). `denseUniverseMax=0`
+    // remains the escape hatch.
     val denseMax = denseUniverseMax(docs.sparkSession)
     try {
       if (denseMax > 0) {
@@ -549,13 +580,10 @@ object DedupOps {
         // the dense kernel's code index ([[denseCodeIndex]]) — the old
         // flow paid a separate two-countDistinct probe pass (Expand ×2
         // over the whole shingle frame) before the kernel's own index
-        // pass. nDocs sizes the block grid only (partitioning, never the
-        // result): the doc-table count is metadata-cheap vs the old
-        // countDistinct(doc_id), and counting shingle-less docs only
-        // rounds the grid up.
+        // pass. The kernel sizes its grid from its own bitset rows.
         val codes = denseCodeIndex(sh, denseMax)
         if (codes.length <= denseMax)
-          return denseContainmentPairs(sh, T, codes, docs.count())
+          return densePairs(sh, T, Double.NaN, codes, symmetric = false)
       }
       containmentSparse(sh, T)
     } finally sh.unpersist(blocking = false)
@@ -759,68 +787,37 @@ object DedupOps {
     */
   def prefixJaccardPairs(docs: DataFrame, threshold: Double,
                          n: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // REGIME PICK (round 12, shared with [[containmentPairs]] — full
     // rationale there): on a saturated shingle universe the candidate
     // self-join below is Θ(N²) occurrence mass with a join-sized constant
-    // (measured 91.2 s at the l2 ladder's 16× rung), so route to the
-    // dense-bitset blocked Boolean GEMM, whose one exact pass replaces
+    // (measured 91.2 s at the l2 ladder's 16× rung; at sf0.01 the prefix
+    // rule alone pairs 94% of all doc pairs), so route to the dense-bitset
+    // blocked Boolean GEMM ([[densePairs]]), whose one exact pass replaces
     // candidates + verify. The clustered gate inherits the pick through
     // its representative-pair engine — contraction FIRST still matters
     // (exact-dup clusters multiply every df, and the dense path's N² term
     // shrinks quadratically with the rep count).
     //
-    // DOC-COUNT CROSSOVER (round 13, the r12 verdict's one `weak`): the
-    // dense kernel's bitset build + grid shuffle is a FIXED cost the
-    // sparse join does not pay, so below a corpus size the sparse path
-    // wins even on a saturated universe. Measured on the bare probe
-    // ladder (this host, min-of-3): dense 6.67 / 7.31 / 7.62 s vs sparse
-    // 4.29 / 5.40 / 9.92 s at 5k / 10k / 20k docs — the curves cross at
-    // ≈14.5k docs (linear interpolation between the 10k and 20k rungs,
-    // where dense is near-flat at +0.03 s/k and sparse grows at
-    // +0.45 s/k). Gate-level confirmation (clustered l2, 4 992 reps at
-    // sf0.1): sparse floors at 4.43 s vs dense 6.89 s warm. Routing
-    // therefore requires BOTH a saturated universe and nd ≥
-    // `spark.graft.dedup.denseMinDocs` (default 14000); mis-picking near
-    // the crossover costs ≤ ~1 s either way, while the old universe-only
-    // pick cost the l2 gate +36% every run.
+    // The pick reads the universe ALONE, as [[containmentPairs]]' does:
+    // the dense kernel wins at every measured corpus size (ScaleProbe l2
+    // at sf0.1, `local[32]` on a 4-core host, min of 3, several runs):
+    // 5 000 docs 16.7–19.8 s sparse vs 5.0–5.4 s dense, 10 000 docs
+    // 29.0–34.2 s vs 5.2–5.5 s.
     val denseMax = denseUniverseMax(docs.sparkSession)
-    // PROBE ORDER (round 13): the doc count alone settles routing below
-    // the crossover and costs one narrow count (no explode), so the
-    // shingle-frame aggregate — a full explode pass — only runs for
-    // corpora that might actually route dense. The length filter keeps
-    // this count ≡ the shingle frame's countDistinct(doc_id): sub-n-char
-    // docs contribute zero shingle rows, and counting them would both
-    // shift the measured crossover and over-size the dense grid relative
-    // to the bitset rows the kernel actually builds.
-    val nd =
-      if (denseMax > 0) docs.filter(length(col("text")) >= n).count() else 0L
     // One shingle frame shared by the regime probe and BOTH engines (r12
     // ADVICE: the probe previously re-exploded the corpus once per call).
     val sh = shingles(docs, n).persist()
     try {
-      if (denseMax > 0 && nd >= denseMinDocs(docs.sparkSession)) {
+      if (denseMax > 0) {
         // Bounded sorted-distinct collect = regime decision + dense code
         // index in one pass ([[denseCodeIndex]]; r16 — replaces the
         // countDistinct probe pass and the kernel's index join).
         val codes = denseCodeIndex(sh, denseMax)
         if (codes.length <= denseMax)
-          return denseJaccardPairs(sh, threshold, codes, nd)
+          return densePairs(sh, 0L, threshold, codes, symmetric = true)
       }
       prefixJaccardSparse(sh, threshold)
     } finally sh.unpersist(blocking = false)
-  }
-
-  /** The measured dense-vs-sparse doc-count crossover (see
-    * [[prefixJaccardPairs]] for the ladder): the dense bitset kernel
-    * routes only at or above this many distinct documents. 0 forces
-    * dense whenever the universe saturates (the pre-r13 behavior).
-    */
-  private def denseMinDocs(spark: org.apache.spark.sql.SparkSession): Long = {
-    val v = graft.Engine.confLong(spark, "spark.graft.dedup.denseMinDocs")
-      .getOrElse(14000L)
-    require(v >= 0, s"spark.graft.dedup.denseMinDocs must be >= 0, got $v")
-    v
   }
 
   /** The sparse (prefix-filter) engine of [[prefixJaccardPairs]] over an

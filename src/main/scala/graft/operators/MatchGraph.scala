@@ -69,6 +69,22 @@ object MatchGraph {
   sys.addShutdownHook(
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(jvmScope)))
 
+  /** Deletes the `jvm-<pid>` trees under `base` whose process is gone: a
+    * JVM killed with SIGKILL, or one that predates the exit hook, leaves
+    * its tree behind. Live processes' trees, this JVM's among them, stay.
+    */
+  private[graft] def sweepDeadScopes(base: java.io.File): Unit =
+    Option(base.listFiles()).toSeq.flatten.foreach { d =>
+      val pid = Some(d.getName).filter(_.startsWith("jvm-"))
+        .flatMap(_.stripPrefix("jvm-").toLongOption)
+      if (pid.exists(ProcessHandle.of(_).isEmpty))
+        org.apache.commons.io.FileUtils.deleteQuietly(d)
+    }
+
+  /** The sweep, once per JVM, before its first build stages anything. */
+  private lazy val swept: Unit =
+    sweepDeadScopes(new java.io.File(jvmScope).getParentFile)
+
   private def root(s: SparkSession, sfDir: String, threshold: Double,
                    n: Int): String = {
     // Full-digest corpus tag (truncated String.hashCode could collide
@@ -110,6 +126,7 @@ object MatchGraph {
 
   private def build(s: SparkSession, sfDir: String, r: String,
                     threshold: Double, n: Int): Artifact = {
+    swept
     val docs = Tables.load(s, sfDir, "documents")
     // THE contraction definition — shared with the from-scratch clustered
     // wrappers ([[DedupOps.exactContraction]]), so the staged and

@@ -650,7 +650,7 @@ object SimilarityOps {
     // a k floor (measured at sf0.1: k=8 regresses +0.4 s — task overhead ×
     // rounds beats the parallelism — while k=√N=100 wins −1.4 s);
     // crossover conf'd as spark.graft.kmeans.spreadMinK (default 32, the
-    // geometric middle of the measured points), the denseMinDocs pattern.
+    // geometric middle of the measured points), the pairSpreadMinDocs pattern.
     val spreadMinK = graft.Engine.confLong(s, "spark.graft.kmeans.spreadMinK")
       .getOrElse(32L)
     require(spreadMinK >= 0,

@@ -68,6 +68,27 @@ class ArtifactSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("staging sweeps artifact trees whose JVM is gone and keeps live ones") {
+    // No pid reaches 10^9 (Linux caps pid_max at 2^22), so that tree's
+    // process is gone; pid 1 and this JVM are alive.
+    val base = java.nio.file.Files.createTempDirectory("graft-sweep-").toFile
+    def tree(name: String): java.io.File = {
+      val f = new java.io.File(base, s"$name/match-t800000-n3-00/rep_pairs")
+      f.mkdirs()
+      new java.io.File(base, name)
+    }
+    try {
+      val dead = tree("jvm-1000000000")
+      val own = tree(s"jvm-${ProcessHandle.current().pid()}")
+      val live = tree("jvm-1")
+      val other = tree("not-a-jvm-tree")
+      MatchGraph.sweepDeadScopes(base)
+      assert(!dead.exists(), "a dead JVM's tree must be swept")
+      assert(own.exists() && live.exists() && other.exists(),
+        "live JVMs' trees and non-JVM entries must stay")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
+
   test("staged l50 / l64b survivorship equals the from-scratch map") {
     val dd = docs
     val scratch =

@@ -80,8 +80,6 @@ class CoverageSpec extends AnyFunSuite {
     val declared = Set(
       "spark.graft.cc.localMaxRows",
       "spark.graft.dedup.attachBroadcastCap",
-      "spark.graft.dedup.denseGrid",
-      "spark.graft.dedup.denseMinDocs",
       "spark.graft.dedup.denseUniverseMax",
       "spark.graft.dedup.pairSpreadMinDocs",
       "spark.graft.gemm.replicationHeadroom",

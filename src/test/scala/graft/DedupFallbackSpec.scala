@@ -77,12 +77,16 @@ class DedupFallbackSpec extends SparkSpec {
   }
 
   test("prefixJaccardPairs fallback (session broadcast off) is hash-join and row-identical") {
-    // 7 docs sit far below denseMinDocs, so this is the SPARSE prefix join
-    // whose verify attaches the code sets by (da, db).
-    val expected = pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5))
+    // denseUniverseMax=0 pins the SPARSE prefix join whose verify attaches
+    // the code sets by (da, db); the tiny corpus's 3-gram universe would
+    // otherwise route to the dense bitset path, which has no attach join.
+    val expected = withConf("spark.graft.dedup.denseUniverseMax" -> "0") {
+      pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5))
+    }
     assert(expected.nonEmpty)
     val (got, plans) =
-      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+               "spark.graft.dedup.denseUniverseMax" -> "0") {
         capturePlans(pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5)))
       }
     assert(got == expected)
@@ -139,7 +143,12 @@ class DedupFallbackSpec extends SparkSpec {
         "spark.graft.dedup.attachBroadcastCap" -> "512MB",
         "spark.graft.dedup.pairSpreadMinDocs" -> "many").foreach {
       case (key, bad) =>
-        val e = withConf(key -> bad) {
+        // The two caps are read on the sparse route only, which a
+        // saturated universe reaches under denseUniverseMax=0.
+        val route =
+          if (key == "spark.graft.dedup.denseUniverseMax") Nil
+          else Seq("spark.graft.dedup.denseUniverseMax" -> "0")
+        val e = withConf((key -> bad) +: route: _*) {
           intercept[IllegalArgumentException] {
             DedupOps.prefixJaccardPairs(corpus, 0.5).count()
           }

@@ -41,7 +41,14 @@ class DedupPropSpec extends SparkSpec {
       def canon(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val exact = canon(DedupOps.jaccardPairs(docs, t))
-      canon(DedupOps.prefixJaccardPairs(docs, t)) == exact &&
+      // The random corpora's small universe routes the default to the
+      // dense bitset kernel; denseUniverseMax=0 takes the sparse prefix
+      // join. Both must equal the exact all-pairs reference.
+      spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
+      val sparse = try canon(DedupOps.prefixJaccardPairs(docs, t))
+      finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
+      sparse == exact &&
+        canon(DedupOps.prefixJaccardPairs(docs, t)) == exact &&
         canon(DedupOps.clusteredJaccardPairs(docs, t)) == exact
     }
     val res = SCTest.check(

@@ -12,6 +12,18 @@ import org.apache.spark.sql.functions._
 class LlmSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A pair frame's (id, id, ratio) rows as a set. */
+  private def canonPairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** `body` with the pair engines forced onto the sparse prefix join (a
+    * universe past denseUniverseMax); small fixtures route dense by default.
+    */
+  private def onSparseRoute[A](body: => A): A = {
+    spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
+    try body finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
+  }
+
   private def corpus = Seq(
     (0L, "the quick brown fox jumps over the lazy dog"),
     (1L, "the quick brown fox jumps over the lazy dog"),     // exact dup of 0
@@ -44,22 +56,25 @@ class LlmSpec extends SparkSpec {
   }
 
   test("prefixJaccardPairs equals exact all-pairs") {
-    val exact = DedupOps.jaccardPairs(corpus, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val prefix = DedupOps.prefixJaccardPairs(corpus, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // Both routes: the fixture's universe takes the dense bitset kernel by
+    // default and the sparse prefix join under denseUniverseMax=0.
+    val exact = canonPairs(DedupOps.jaccardPairs(corpus, 0.5))
     assert(exact.nonEmpty)             // dup + near-dup pairs exist
-    assert(prefix == exact)
+    assert(canonPairs(DedupOps.prefixJaccardPairs(corpus, 0.5)) == exact, "dense")
+    assert(onSparseRoute(canonPairs(DedupOps.prefixJaccardPairs(corpus, 0.5))) == exact,
+      "sparse")
     assert(exact.exists { case (a, b, j) => a == 0L && b == 1L && j == 1.0 })
   }
 
   test("prefixJaccardPairs exactness holds across thresholds (prefix-length boundary)") {
+    // The prefix-length boundary lives on the sparse route; the dense
+    // default must agree at the same thresholds.
     for (t <- Seq(0.3, 0.6, 0.8, 0.9)) {
-      val exact = DedupOps.jaccardPairs(corpus, t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val prefix = DedupOps.prefixJaccardPairs(corpus, t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(prefix == exact, s"threshold $t")
+      val exact = canonPairs(DedupOps.jaccardPairs(corpus, t))
+      assert(onSparseRoute(canonPairs(DedupOps.prefixJaccardPairs(corpus, t))) == exact,
+        s"threshold $t sparse")
+      assert(canonPairs(DedupOps.prefixJaccardPairs(corpus, t)) == exact,
+        s"threshold $t dense")
     }
   }
 
@@ -383,45 +398,24 @@ class LlmSpec extends SparkSpec {
     // it the clustered l2 gate) on saturated universes. The dense pass
     // must replicate verifyJaccard's exact test (c > 0, IEEE double
     // compare, id-ordered pairs, round4Ratio value) — pinned against the
-    // sparse path at two thresholds and a degenerate grid.
+    // sparse path at two thresholds, on the derived grid (the default
+    // route) and on grids 1, 3 and 5 driven through the kernel directly.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    Seq(0.8, 0.5).foreach { t =>
-      spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
-      val sparse = try canon(DedupOps.prefixJaccardPairs(docs, t))
-      finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
-      // denseMinDocs=0 forces the dense route on the 500-doc fixture —
-      // the r13 doc-count crossover (default 14 000) would otherwise
-      // route this corpus sparse and the spec would compare sparse to
-      // itself.
-      spark.conf.set("spark.graft.dedup.denseMinDocs", "0")
-      try {
-        val dense = canon(DedupOps.prefixJaccardPairs(docs, t))
-        assert(dense == sparse, s"threshold $t")
+    val sh = DedupOps.shingles(docs).persist()
+    try {
+      val codes = DedupOps.denseCodeIndex(sh, 16384)
+      Seq(0.8, 0.5).foreach { t =>
+        val sparse = onSparseRoute(canonPairs(DedupOps.prefixJaccardPairs(docs, t)))
         assert(sparse.nonEmpty, s"fixture must produce pairs at $t")
-        spark.conf.set("spark.graft.dedup.denseGrid", "3")
-        val gridded = try canon(DedupOps.prefixJaccardPairs(docs, t))
-        finally spark.conf.unset("spark.graft.dedup.denseGrid")
-        assert(gridded == sparse, s"threshold $t grid 3")
-      } finally spark.conf.unset("spark.graft.dedup.denseMinDocs")
-    }
-  }
-
-  test("denseGrid misconfiguration fails fast on the driver") {
-    // r12 ADVICE (low): 0 used to reach the executor as a % 0
-    // ArithmeticException and negatives as out-of-bounds cell indices —
-    // confusing task failures for a driver-side config error.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    Seq("0", "-3").foreach { bad =>
-      spark.conf.set("spark.graft.dedup.denseGrid", bad)
-      try {
-        val e = intercept[IllegalArgumentException] {
-          DedupOps.containmentPairs(docs, 0.9).count()
+        assert(canonPairs(DedupOps.prefixJaccardPairs(docs, t)) == sparse,
+          s"threshold $t (derived grid)")
+        Seq(1, 3, 5).foreach { g =>
+          val gridded = canonPairs(
+            DedupOps.densePairs(sh, 0L, t, codes, symmetric = true, grid = g))
+          assert(gridded == sparse, s"threshold $t grid $g")
         }
-        assert(e.getMessage.contains("denseGrid"), s"value $bad")
-      } finally spark.conf.unset("spark.graft.dedup.denseGrid")
-    }
+      }
+    } finally sh.unpersist()
   }
 
   test("containment dense ≡ sparse at a degenerate threshold (T = 0)") {
@@ -922,15 +916,14 @@ class LlmSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("symmetric dense pick consults BOTH universe size and doc count") {
-    // The r12 `weak`: the regime pick routed on universe size alone, so
-    // small saturated-universe corpora (the l2 gate's 4 992 reps) paid the
-    // dense kernel's fixed cost where the sparse join wins — measured
-    // gate floors 4.43 s sparse vs 6.89 s dense at sf0.1. The pick must
-    // route sparse below `denseMinDocs` and dense at/above it. Routing is
-    // observed through the physical plan: only the dense kernel carries a
-    // MapGroups (groupByKey over grid cells); the sparse path is joins +
-    // window + hash aggregates.
+  test("a saturated universe routes dense at any doc count; past denseUniverseMax routes sparse") {
+    // The pick reads the shingle universe alone: the 500-doc fixture's
+    // 3-gram universe saturates, so both pair engines take the dense
+    // bitset kernel by default, and denseUniverseMax=0 (a universe past
+    // the cap) takes the sparse prefix join. Routing is observed through
+    // the physical plan: only the dense kernel scans its named cell RDD
+    // ("Scan densePairs"); the sparse path is joins + window + hash
+    // aggregates.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // The returned frame is localCheckpoint'd (lineage cut), so the route
     // can't be read off its plan; read it off the plans executed during
@@ -938,20 +931,62 @@ class LlmSpec extends SparkSpec {
     def usedDenseKernel(run: => org.apache.spark.sql.DataFrame): Boolean = {
       val (_, plans) = capturePlans(run.count())
       awaitUntil(() => plans().nonEmpty)
-      plans().exists(_.contains("MapGroups"))
+      plans().exists(_.contains("Scan densePairs"))
     }
-    // 500-doc fixture < default 14 000 -> sparse.
-    assert(!usedDenseKernel(DedupOps.prefixJaccardPairs(docs, 0.8)),
-           "below the crossover the pick must route sparse")
-    // Crossover lowered to the corpus size -> dense (universe saturated).
-    spark.conf.set("spark.graft.dedup.denseMinDocs", "500")
-    try assert(usedDenseKernel(DedupOps.prefixJaccardPairs(docs, 0.8)),
-               "at/above the crossover the pick must route dense")
-    finally spark.conf.unset("spark.graft.dedup.denseMinDocs")
-    // Containment stays universe-only by measurement (dense wins at every
-    // rung): the default must route dense regardless of doc count.
+    assert(usedDenseKernel(DedupOps.prefixJaccardPairs(docs, 0.8)),
+           "a saturated universe must route the symmetric join dense at 500 docs")
     assert(usedDenseKernel(DedupOps.containmentPairs(docs, 0.9)),
-           "containment routes dense on a saturated universe at any N")
+           "a saturated universe must route containment dense at 500 docs")
+    onSparseRoute {
+      assert(!usedDenseKernel(DedupOps.prefixJaccardPairs(docs, 0.8)),
+             "past denseUniverseMax the symmetric join must route sparse")
+      assert(!usedDenseKernel(DedupOps.containmentPairs(docs, 0.9)),
+             "past denseUniverseMax containment must route sparse")
+    }
+  }
+
+  test("densePairs derives its grid from the work, floored by the per-block memory bound") {
+    // 500 docs × 6 words is ~750k word-ops of pairs: one cell, not the
+    // 3×3 grid a 4-core width used to force on it (8×8 at 32 cores).
+    assert(DedupOps.denseGrid(500, 6, 4) == 1)
+    assert(DedupOps.denseGrid(500, 6, 32) == 1)
+    assert(DedupOps.denseGrid(0, 1, 4) == 1)
+    // Enough work for many cells: the parallelism width caps it.
+    assert(DedupOps.denseGrid(20000, 256, 4) == 3)
+    assert(DedupOps.denseGrid(20000, 256, 32) == 8)
+    // 10M docs × 256 words of bitsets is ~21 GB: the 64 MB per-block
+    // memory bound wins over the parallelism cap.
+    val memB = (10000000L * (256 * 8 + 48) + (64L << 20) - 1) / (64L << 20)
+    assert(DedupOps.denseGrid(10000000, 256, 4) == memB)
+    assert(memB > 3)
+  }
+
+  test("densePairs runs each grid cell as its own task") {
+    // The cell exchange has one partition per cell and is an RDD shuffle,
+    // which AQE never coalesces: a grid of B blocks per axis must run its
+    // B(B+1)/2 cells as that many tasks, however few bytes they carry
+    // (on this 6-doc corpus some cells are empty, and still one task each).
+    val sh = DedupOps.shingles(corpus).persist()
+    val cellStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "densePairs"))
+          cellStages.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val codes = DedupOps.denseCodeIndex(sh, 16384)
+      Seq(1, 3, 5).foreach { g =>
+        cellStages.clear()
+        DedupOps.densePairs(sh, 0L, 0.5, codes, symmetric = true, grid = g)
+        awaitUntil(() => !cellStages.isEmpty)
+        assert(cellStages.toArray.toSeq == Seq(g * (g + 1) / 2), s"grid $g")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      sh.unpersist()
+    }
   }
 
   test("containmentPairs dense bitset regime ≡ sparse prefix join, across grid widths") {
@@ -960,25 +995,25 @@ class LlmSpec extends SparkSpec {
     // blocked-Boolean-GEMM bitset path, real shingle spaces to the prefix
     // join. The two paths must be output-IDENTICAL — the dense pass IS the
     // exact verify, so any divergence is a bitset/orientation/threshold
-    // bug. Grid width must not matter (denseGrid=1 collapses to one cell,
-    // 5 exercises diagonal + off-diagonal cells with uneven blocks).
+    // bug. Grid width must not matter (grid 1 collapses to one cell, 3
+    // and 5 exercise diagonal + off-diagonal cells with uneven blocks).
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    Seq(0.9, 0.6).foreach { t =>
-      spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
-      val sparse = try canon(DedupOps.containmentPairs(docs, t))
-      finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
-      val dense = canon(DedupOps.containmentPairs(docs, t)) // default: dense
-      assert(dense == sparse, s"threshold $t (derived grid)")
-      assert(sparse.nonEmpty, s"fixture must produce pairs at $t")
-      Seq(1, 5).foreach { g =>
-        spark.conf.set("spark.graft.dedup.denseGrid", g.toString)
-        val gridded = try canon(DedupOps.containmentPairs(docs, t))
-        finally spark.conf.unset("spark.graft.dedup.denseGrid")
-        assert(gridded == sparse, s"threshold $t grid $g")
+    val sh = DedupOps.shingles(docs).persist()
+    try {
+      val codes = DedupOps.denseCodeIndex(sh, 16384)
+      Seq(0.9, 0.6).foreach { t =>
+        val sparse = onSparseRoute(canonPairs(DedupOps.containmentPairs(docs, t)))
+        assert(sparse.nonEmpty, s"fixture must produce pairs at $t")
+        assert(canonPairs(DedupOps.containmentPairs(docs, t)) == sparse,
+          s"threshold $t (derived grid)")
+        val T = math.floor(t * 1e6).toLong
+        Seq(1, 3, 5).foreach { g =>
+          val gridded = canonPairs(DedupOps.densePairs(
+            sh, T, Double.NaN, codes, symmetric = false, grid = g))
+          assert(gridded == sparse, s"threshold $t grid $g")
+        }
       }
-    }
+    } finally sh.unpersist()
   }
 
   test("incrementalClassify covers all three statuses (fixture has no exact dups)") {
