@@ -107,8 +107,8 @@ object Bench {
     // Matrix scaling sweep, mirroring the reference's size sweep, every
     // rung through the PLANNER-selected node (m12's MatMulStrategy): its
     // cost statistics flip row-join → block-GEMM between 200² and 400²,
-    // and on the block route it derives the tile width
-    // ([[MatrixOps.sweepTile]]) from the same statistics. The sweep
+    // and on the block route it derives the tile layout
+    // ([[graft.plans.BlockShape.choose]]) from the same statistics. The sweep
     // records the chosen path's wall-clock where the reference's own
     // baseline stops at 200² = 46.1 s (BASELINE.md). Strategy choice per
     // size is pinned by MatMulPlanSpec; here the numbers show the chosen

@@ -1,24 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Matrix algebra over COO DataFrames with schema `(i: LONG, j: LONG, v: LONG)`.
   *
   * Re-expresses the reference's dense one-pass MapReduce multiply
-  * (reference `mapper/main.py:24-41`, `reducer/main.py:28-32`) as the
-  * shuffle-minimal Spark plan: an equi-join on the contraction index `j`
-  * followed by a partial+final hash aggregate on `(i, k)`.
-  *
-  * Why this beats the reference's formulation at scale: the reference's
-  * mapper replicates every A-element cols(B) times and every B-element
-  * rows(A) times (`mapper/main.py:26-32`), so its shuffle volume is
-  * O(|A|·p + |B|·m). The join formulation shuffles O(|A| + |B|) rows once on
-  * `j`, then O(|A⋈B|) partially-aggregated rows on `(i,k)` — with map-side
-  * combine the second exchange carries at most one row per (i,k) per task.
-  * At 100 TB the join is a sort-merge join with AQE skew splitting; dense
-  * blocks go through [[blockMatmul]] which does a local GEMM per block pair
-  * (the FuseME insight, PAPERS.md:5).
+  * (reference `mapper/main.py:24-41`, `reducer/main.py:28-32`) two ways,
+  * and the planner picks per multiply ([[multiplyPlanned]]):
+  *   - [[matmul]], the row join: an equi-join on the contraction index `j`
+  *     followed by a partial+final hash aggregate on `(i, k)`. The
+  *     reference's mapper replicates every A-element cols(B) times and
+  *     every B-element rows(A) times (`mapper/main.py:26-32`), so its
+  *     shuffle volume is O(|A|·p + |B|·m); the join shuffles O(|A| + |B|)
+  *     rows once on `j`, then at most one partially aggregated row per
+  *     (i, k) per task. With a broadcastable side it shuffles neither.
+  *   - the block route, one physical operator
+  *     ([[graft.plans.BlockMatMulExec]]): the mapper densifies its rows
+  *     into bs×bs tiles, each tile is shuffled once to the cuboid keys
+  *     that need it, and each key runs a local GEMM per tile pair that
+  *     meets there (the FuseME insight, PAPERS.md:5). For dense operands
+  *     this ships O(tiles) instead of the row join's m·n·p products.
   */
 object MatrixOps {
 
@@ -36,216 +38,63 @@ object MatrixOps {
       .agg(sum(col("va") * col("vb")).as("v"))
   }
 
-  /** COO → dense bs×bs tiles `(bi, bj, Array[Long])` — [[blockMatmul]]'s
-    * densify stage (see the scale/memory rationale at its call site).
-    * Package-visible so the GEMM stage probe can time it in isolation.
+  /** `m`'s bs×bs tiles `(bi, bj, cells)` as the block route's map side
+    * folds them: per input partition, duplicate cells added, no shuffle,
+    * so a tile split across partitions comes out once per partition.
+    * Lets a benchmark time the densify step on its own.
     */
-  private[graft] def cooToTiles(m: DataFrame, bs: Int) = {
+  private[graft] def cooToTiles(m: DataFrame, bs: Int): Dataset[(Long, Long, Array[Long])] = {
     val spark = m.sparkSession
     import spark.implicits._
-    m.select((col("i") / bs).cast("long").as("_1"),
-             (col("j") / bs).cast("long").as("_2"),
-             ((col("i") % bs).cast("int") * bs + (col("j") % bs).cast("int"))
-               .as("_3"),
-             col("v").as("_4"))
-      .as[(Long, Long, Int, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Int, Long)]) =>
-        val d = Array.ofDim[Long](bs * bs)
-        it.foreach(t => d(t._3) = t._4)
-        (key._1, key._2, d)
+    val budget = graft.plans.BlockShape.taskBudget(spark)
+    val rows = m.select(col("i").cast("long"), col("j").cast("long"), col("v").cast("long"))
+      .queryExecution.toRdd
+    val metrics = org.apache.spark.sql.execution.metric.SQLMetrics
+    val time = metrics.createNanoTimingMetric(spark.sparkContext, "densify time")
+    val peak = metrics.createSizeMetric(spark.sparkContext, "densify buffer peak")
+    spark.createDataset(rows.mapPartitions { it =>
+      graft.plans.BlockMatMulExec.densify(it, bs, budget, time, peak).map { t =>
+        val d = new Array[Long](bs * bs)
+        t.addTo(d)
+        (t.row, t.col, d)
       }
+    })
   }
 
-  /** C = A·B via 2-D block partitioning — the scale path for dense inputs.
+  /** C = A·B on the block route with a caller-fixed layout: bs×bs tiles,
+    * the output tile grid split `p`×`q`, the contraction axis split `r`
+    * ways, and `budget` bytes per task for the densify buffer (0 derives it
+    * from task-slot memory). It plans the same [[graft.plans.MatMul]] node
+    * as [[multiplyPlanned]], pinned to the block route with this layout,
+    * so [[graft.plans.BlockMatMulExec]] is the one block implementation.
+    * Result (i, k, v) holds the nonzero cells; hash-identical to [[matmul]]
+    * wherever that has no cell cancelling to exact 0.
     *
     * Generalizes the reference's 1-D row/column slabs
-    * (`orchestrator/main.py:88-112`) to a block grid: COO entries are
-    * grouped into bs×bs tiles, tile pairs sharing a contraction block are
-    * joined, each pair is multiplied locally as a dense array (GEMM —
-    * cache-friendly, no per-element shuffle rows), and partial tiles are
-    * summed. Shuffle volume is O(tiles) instead of O(entries·replication).
-    * Result is hash-identical to [[matmul]].
-    *
-    * `p` × `q` is the CUBOID SPLIT of the output tile grid (FuseME,
-    * PAPERS.md): the contraction join's only natural key is the k-block,
-    * whose cardinality is the grid width, so a grid narrower than the
-    * core count leaves cores idle. The join key is therefore (k-block,
-    * i-block mod p, j-block mod q): A tile (i, k) ships to its q keys
-    * (k, i mod p, ·), B tile (k, j) to its p keys (k, ·, j mod q), and each
-    * tile pair meets at exactly one key, (k, i mod p, j mod q). A split
-    * wider than the grid only adds keys that one side never reaches, so
-    * they match nothing. The cost is (q−1)·|A| + (p−1)·|B| extra tile
-    * copies; p = q = 1 is the plain k-keyed join
-    * ([[graft.plans.MatMulStrategy.deriveReplication]] picks the split).
-    *
-    * `parts` is the partition count of the tile exchanges and of the
-    * partial-tile exchange (the planner passes its estimated key count;
-    * 0 takes the session's shuffle partition count). Both tile sides are
-    * repartitioned to it on the join keys, so the sort-merge join reuses
-    * those exchanges, and the partial-tile reduce groups on exactly its
-    * repartition keys. AQE leaves an exchange with an explicit count
-    * alone: it neither coalesces its partitions nor splits skewed ones.
-    * Coalescing is what used to shrink the whole join (a few hundred KB
-    * of compressed tiles at 1000²) to ONE task running every GEMM. Skew
-    * splitting is not needed: every key holds tiles of one fixed size,
-    * bs² LONGs, at most ⌈grid/p⌉ of A's and ⌈grid/q⌉ of B's, so no key
-    * can grow past the others with the data.
+    * (`orchestrator/main.py:88-112`) to a block grid. Any split is
+    * correct: each tile triple (i, j, k) meets at exactly one key, and a
+    * split wider than the tile grid only adds keys that one side never
+    * reaches. R > 1 adds a reduce of partial output tiles.
     */
   def blockMatmul(a: DataFrame, b: DataFrame, bs: Int, p: Int = 1, q: Int = 1,
-                  parts: Int = 0): DataFrame = {
+                  r: Int = 1, budget: Long = 0L): DataFrame = {
     val spark = a.sparkSession
-    import spark.implicits._
-    require(p >= 1 && q >= 1, s"cuboid split must be at least 1x1, got ${p}x$q")
-    val n = if (parts > 0) parts else spark.sessionState.conf.numShufflePartitions
-
-    // COO → dense tiles through a SORT-BASED group (groupByKey/mapGroups),
-    // not a collect_list hash aggregate. The former collect_list partial
-    // aggregate buffered, PER MAP TASK, every entry struct of every group
-    // the task touched — O(n²/tasks) heap before one byte shuffled, the
-    // stage that OOM'd the 16000² one-off at the 24 GB envelope under
-    // 32-way task concurrency (r10 VERDICT "Next round" 5; generation
-    // itself streams — CartesianProduct and the shuffle writer are
-    // iterator-to-iterator). Here the map side streams raw 28-byte
-    // (bi, bj, off, v) rows into the exchange (spill-safe by
-    // construction), the reduce side sorts by key (external, spill-safe)
-    // and materializes ONE dense bs² tile at a time — per-task memory is
-    // O(bs²) = O(tile) regardless of matrix size or task concurrency.
-    // Densifying HERE also drops the per-entry struct boxing the old
-    // tile-pair stage paid when scattering lists into arrays.
-    // (Extracted as [[cooToTiles]] so a benchmark can time the densify
-    // pipeline in isolation.)
-    val aB = cooToTiles(a, bs)
-      .select(col("_1").as("abi"), col("_2").as("abj"), col("_3").as("ad"),
-              (col("_1") % p).cast("int").as("ap"),
-              explode(lit((0 until q).toArray)).as("aq"))
-      .repartition(n, col("abj"), col("ap"), col("aq"))
-    val bB = cooToTiles(b, bs)
-      .select(col("_1").as("bbi"), col("_2").as("bbj"), col("_3").as("bd"),
-              explode(lit((0 until p).toArray)).as("bp"),
-              (col("_2") % q).cast("int").as("bq"))
-      .repartition(n, col("bbi"), col("bp"), col("bq"))
-
-    // Tile pairs meeting at one cuboid key; local dense GEMM per pair.
-    // (A shuffle_hash hint on the tile join was tried and cannot apply
-    // here: the expansion is composed inside MatMulStrategy from the
-    // ANALYZED subtree, which never passes the optimizer rule that
-    // consumes ResolvedHint — Spark raises INTERNAL_ERROR. The sort-merge
-    // join's per-partition sort input is a handful of tile rows, so the
-    // sort itself is cheap; kept.)
-    val pairs = aB.join(bB, col("abj") === col("bbi") &&
-        col("ap") === col("bp") && col("aq") === col("bq"))
-      .select(col("abi"), col("bbj"), col("ad"), col("bd"))
-      .as[(Long, Long, Array[Long], Array[Long])]
-
-    // Per pair: cache-friendly ikj GEMM over the primitive bs² arrays —
-    // no boxing, no per-entry hash lookups (the round-7 formulation's
-    // Seq.groupBy + boxed-tuple inner loop was the CPU bottleneck of the
-    // 1000²/2000² sweep rungs; measured ~2x on the whole query at 2000²).
-    val partialTiles = pairs.map { case (abi, bbj, ad, bd) =>
-      val acc = Array.ofDim[Long](bs * bs)
-      var li = 0
-      while (li < bs) {
-        var lj = 0
-        while (lj < bs) {
-          val av = ad(li * bs + lj)
-          if (av != 0L) {
-            val aOff = li * bs; val bOff = lj * bs
-            var lk = 0
-            while (lk < bs) { acc(aOff + lk) += av * bd(bOff + lk); lk += 1 }
-          }
-          lj += 1
-        }
-        li += 1
-      }
-      (abi, bbj, acc)
-    }
-
-    // Reduce partial TILES, not per-cell rows: the result-tile shuffle
-    // carries one dense bs² array per contraction step (O(grid³) arrays)
-    // instead of O(grid³·bs²) cell rows through a hash aggregate — at
-    // 2000²/bs=128 that is 4096 arrays vs 67M rows, and the final cell
-    // emission needs NO further aggregate. Zero cells are dropped on
-    // emission — including cells whose products cancel to exact 0, which
-    // [[matmul]] does emit; the planner's row-join route filters them so
-    // both routes return the same rows ([[graft.plans.MatMul]]).
-    // The group keys are exactly the repartition keys, so the group
-    // reuses that explicit-count exchange (a `groupByKey` would append a
-    // fresh key column and plan a second, coalescable one).
-    //
-    // MEASURED NEGATIVE (round 16, 2026-08-20): a codegen emission —
-    // mapGroups returning ONE (abi, bbj, bs²-array) row, then posexplode +
-    // filter(v≠0) + integer projection — was built, oracle-verified
-    // (15/15 m-gates, MatrixPropSpec green), and A/B'd against this
-    // iterator on an interleaved 4-round ladder (min wall, same host):
-    // 2000² 13.12 vs 13.25 s, 4000² 13.04 vs 12.10 s — neutral within the
-    // host band. The object boundary crosses 16 rows of 2 MB arrays either
-    // way; per-cell tuple serde is not the bottleneck once cells are
-    // emitted from the reduce side. Rejected to keep the executed plan
-    // unchanged (plans/r16/gemm_emission_{before,after}.txt hold both
-    // shapes).
-    partialTiles
-      .repartition(n, col("_1"), col("_2"))
-      .groupBy(col("_1"), col("_2"))
-      .as[(Long, Long), (Long, Long, Array[Long])]
-      .flatMapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Array[Long])]) =>
-        val (abi, bbj) = key
-        val acc = Array.ofDim[Long](bs * bs)
-        it.foreach { t =>
-          val part = t._3
-          var x = 0
-          while (x < part.length) { acc(x) += part(x); x += 1 }
-        }
-        // Nonzero scan as ONE iterator (round 16): the former
-        // Iterator.range(..).flatMap(Iterator.single/empty) allocated two
-        // iterators per CELL — n² cells per matrix made it a measurable
-        // slice of the emission pipeline at the 2000²/4000² rungs.
-        new Iterator[(Long, Long, Long)] {
-          private[this] var x = 0
-          private[this] def skipZeros(): Unit = {
-            while (x < acc.length && acc(x) == 0L) x += 1
-          }
-          skipZeros()
-          override def hasNext: Boolean = x < acc.length
-          override def next(): (Long, Long, Long) = {
-            val t = (abi * bs + x / bs, bbj * bs + x % bs, acc(x))
-            x += 1; skipZeros(); t
-          }
-        }
-      }.toDF("i", "k", "v")
+    val shape = graft.plans.BlockShape(bs, p, q, r,
+      if (budget > 0) budget else graft.plans.BlockShape.taskBudget(spark))
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      graft.plans.MatMul.node(a.queryExecution.analyzed,
+        b.queryExecution.analyzed, Some(shape)))
+      .withColumnRenamed("j", "k")
   }
-
-  /** Size-derived tile width for dense n×n block GEMM: the widest tile
-    * under the measured caps — fewer, bigger tiles shrink every exchange
-    * (densify rows per tile, partial tiles = n³·8/bs bytes) and the
-    * per-pair GEMM gets more arithmetic per byte moved. Two caps:
-    *   - 512 ABSOLUTE (memory + cache, re-measured round 16): tiles are
-    *     three bs² LONG arrays per task; past ~2 MB the GEMM's streamed B
-    *     tile falls out of per-core cache and the kernel goes
-    *     DRAM-bandwidth-bound — 4000² at bs=1000 measured 25.1 s vs
-    *     14.7 s at bs=500 (reproducible, interleaved A/B). Uncapped,
-    *     bs = n/4 is also a latent OOM at 64k² (3·2 GB arrays per task).
-    *   - n/4 RELATIVE (round 16; was n/8): the n/8 floor existed to give
-    *     the contraction join ≥ 2·cores tile pairs, but the join's
-    *     parallelism now comes from the cuboid split of the output grid
-    *     ([[blockMatmul]]'s `p` × `q`), not from shrinking tiles — and
-    *     grid 4 beats grid 8 at equal parallelism (2000²: 3.5 s at bs=500
-    *     vs 5.1 s at bs=250, with the join widened) because halving the
-    *     grid halves the densify-row and partial-tile traffic.
-    * Past n = 2048 the grid widens instead: per-task memory stays
-    * constant while tile-pair parallelism grows as (n/512)³ — the
-    * dimension a cluster actually scales with.
-    */
-  def sweepTile(n: Int): Int = math.max(1, math.min(n / 4, 512))
 
   /** PLANNER-selected multiply — the one multiply dispatcher: emits a
     * [[graft.plans.MatMul]] logical node and lets
     * [[graft.plans.MatMulStrategy]] (injected via `SparkSessionExtensions`)
     * choose the physical formulation from the operands' cost statistics —
     * broadcastable side ⇒ row join (no contraction shuffle), both sides
-    * big ⇒ block GEMM with the tile width from
-    * [[graft.plans.MatMulStrategy.deriveBs]] (the measured [[sweepTile]]
-    * rule). Either route yields the same rows: zero cells are dropped.
+    * big ⇒ [[graft.plans.BlockMatMulExec]] with the layout
+    * [[graft.plans.BlockShape.choose]] derives. Either route yields the
+    * same rows: zero cells are dropped, duplicate cells add.
     */
   def multiplyPlanned(a: DataFrame, b: DataFrame): DataFrame =
     org.apache.spark.sql.GraftSqlShim.ofRows(a.sparkSession,

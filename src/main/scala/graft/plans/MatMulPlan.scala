@@ -3,7 +3,7 @@ package graft.plans
 import graft.operators.MatrixOps
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -16,19 +16,25 @@ import org.apache.spark.sql.types.LongType
   * chosen by [[MatMulStrategy]] at planning time from the children's cost
   * statistics, the way Spark itself picks broadcast vs sort-merge joins
   * (SURVEY §7's declared-optional `extraStrategies` hook, r5 verdict
-  * item 9).
+  * item 9). `pinned` fixes the block route and its layout instead
+  * ([[MatrixOps.blockMatmul]]).
   *
   * Zero rule: the result holds the NONZERO cells only. A cell whose
   * products cancel to exact 0 is dropped on both routes — the block
   * route's emission skips zero cells, so the row-join route filters
   * `v ≠ 0` — and the rows returned never depend on which route ran.
   *
+  * Duplicate rule: two COO entries at the same (i, j) of an operand add,
+  * as if the operand held their sum there. The row join sums their
+  * products; the block route adds them while it densifies.
+  *
   * `output` is a constructor parameter so the attribute ids survive
   * `copy()`/`transform` — parents resolve against these exact ids, and the
-  * strategy re-aligns the expansion's output to them with a final Project.
+  * strategy plans both routes to produce them.
   */
 case class MatMul(left: LogicalPlan, right: LogicalPlan,
-                  output: Seq[Attribute]) extends BinaryNode {
+                  output: Seq[Attribute],
+                  pinned: Option[BlockShape] = None) extends BinaryNode {
   // The output attributes are PRODUCED here, not passed through from the
   // children — without this, CheckAnalysis counts them as missing inputs
   // (MISSING_ATTRIBUTES) because they appear in this node's expression list.
@@ -37,7 +43,7 @@ case class MatMul(left: LogicalPlan, right: LogicalPlan,
   // And the node CONSUMES every child column (both COO triples): with the
   // default (empty) references, ColumnPruning decides no child column is
   // needed and rewrites the children to zero-column Projects, which the
-  // strategy's expansion then fails to resolve against.
+  // strategy then fails to resolve (i, j, v) against.
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(left.output ++ right.output)
   override protected def withNewChildrenInternal(
@@ -53,11 +59,12 @@ object MatMul {
     * for the user-facing result ([[graft.operators.MatrixOps
     * .multiplyPlanned]]).
     */
-  def node(left: LogicalPlan, right: LogicalPlan): MatMul =
+  def node(left: LogicalPlan, right: LogicalPlan,
+           pinned: Option[BlockShape] = None): MatMul =
     MatMul(left, right, Seq(
       AttributeReference("i", LongType)(),
       AttributeReference("j", LongType)(),
-      AttributeReference("v", LongType)()))
+      AttributeReference("v", LongType)()), pinned)
 }
 
 /** Optimizer rule: reassociate LEFT-DEEP MatMul chains toward the cheaper
@@ -71,12 +78,13 @@ object MatMul {
   * rotation strictly shortens the left spine, so the fixed-point batch
   * terminates; a rotated plan no longer matches the pattern. The top
   * node keeps its attribute ids (parents resolve against them); the new
-  * inner node mints fresh ones.
+  * inner node mints fresh ones. A pinned node is left where its caller
+  * put it.
   */
 object MatMulReassociate
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case MatMul(MatMul(a, b, _), c, out)
+    case MatMul(MatMul(a, b, _, None), c, out, None)
         if c.stats.sizeInBytes < a.stats.sizeInBytes =>
       MatMul(a, MatMul.node(b, c), out)
   }
@@ -85,161 +93,123 @@ object MatMulReassociate
 /** Plans [[MatMul]]: if either operand's estimated size fits the broadcast
   * threshold, the row-level join+aggregate wins (the join becomes a
   * broadcast hash join — no shuffle on the contraction index, and the
-  * block path's two collect_list groupings + object serde would be pure
-  * overhead). Otherwise both sides are big: the 2-D block GEMM path, whose
-  * shuffle volume is O(tiles) of grouped rows rather than the dense row
-  * join's |A⋈B| = m·n·p intermediate (the r3 scale-killer).
-  *
-  * The expansion reuses the DataFrame builders (one formulation, used by
-  * both the planned and the handwritten entry points), analyzed into a
-  * logical subtree handed back to the planner via `planLater`; a final
-  * Project pins the expansion's output to the node's attribute ids.
+  * block route's tile shuffles would be pure overhead). Otherwise both
+  * sides are big: the block route, [[BlockMatMulExec]], returned directly
+  * as the physical node over the planned children, with the layout
+  * [[BlockShape.choose]] derives from the same size statistics. Its
+  * shuffle volume is O(tiles) rather than the dense row join's
+  * |A⋈B| = m·n·p intermediate (the r3 scale-killer).
   *
   * AQE plans the node once up front and again after every query stage
-  * completes: the stages sit inside the expansion, which AQE's logical
-  * plan does not hold, so it re-plans the whole node, seven times for one
-  * 1000² block multiply. Composing the expansion analyzes a dozen
-  * Datasets (0.09–0.12 s each time for that multiply on a 4-core host),
-  * so it is built once per node and kept in a tag, and each re-plan
-  * reuses it. The tag holds the children it was built from, so a node
-  * whose children AQE has rewritten (a finished broadcast stage inside an
-  * operand) gets a fresh expansion. A later query over the same frame
+  * completes. A re-plan of the block route only reruns the cost function.
+  * The row-join route composes [[MatrixOps.matmul]] into an analyzed subtree
+  * handed back via `planLater`, with a final Project pinning its output to
+  * the node's attribute ids. Analyzing it takes a noticeable share of a
+  * small query, so it is built once per node and kept in a tag, and each
+  * re-plan reuses it. The tag holds the children it was built from, so a
+  * node whose children AQE has rewritten (a finished broadcast stage
+  * inside an operand) gets a fresh one. A later query over the same frame
   * optimizes its own copy of the node, so it decides its route afresh.
   */
 class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case m: MatMul =>
-      val aligned = m.getTagValue(MatMulStrategy.expansionTag).collect {
-        case (l, r, plan) if l.eq(m.left) && r.eq(m.right) => plan
-      }.getOrElse {
-        val plan = expand(m)
-        m.setTagValue(MatMulStrategy.expansionTag, (m.left, m.right, plan))
-        plan
+      m.pinned.orElse(MatMulStrategy.blockShape(spark, m)) match {
+        case Some(shape) =>
+          BlockMatMulExec(planLater(coo(m.left)), planLater(coo(m.right)),
+            m.output, shape) :: Nil
+        case None =>
+          val joined = m.getTagValue(MatMulStrategy.rowJoinTag).collect {
+            case (l, r, plan) if l.eq(m.left) && r.eq(m.right) => plan
+          }.getOrElse {
+            val plan = rowJoin(m)
+            m.setTagValue(MatMulStrategy.rowJoinTag, (m.left, m.right, plan))
+            plan
+          }
+          planLater(joined) :: Nil
       }
-      planLater(aligned) :: Nil
     case _ => Nil
   }
 
-  private def expand(m: MatMul): LogicalPlan = {
-    val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val minSide = m.left.stats.sizeInBytes.min(m.right.stats.sizeInBytes)
+  /** `p`'s (i, j, v) columns as LONGs in that order; `p` itself when it
+    * already is exactly that.
+    */
+  private def coo(p: LogicalPlan): LogicalPlan = {
+    val resolver = spark.sessionState.conf.resolver
+    val cols = Seq("i", "j", "v").map(n => p.output.find(a => resolver(a.name, n))
+      .getOrElse(throw new IllegalArgumentException(
+        s"MatMul operand needs columns (i, j, v), got ${p.output.map(_.name).mkString(", ")}")))
+    if (cols == p.output && cols.forall(_.dataType == LongType)) p
+    else Project(cols.map(a =>
+      if (a.dataType == LongType) a else Alias(Cast(a, LongType), a.name)()), p)
+  }
+
+  private def rowJoin(m: MatMul): LogicalPlan = {
     val a = GraftSqlShim.ofRows(spark, m.left)
     val b = GraftSqlShim.ofRows(spark, m.right)
-    val composed =
-      if (bcThreshold > 0 && minSide <= bcThreshold)
-        MatrixOps.matmul(a, b).filter(col("v") =!= 0L)
-      else {
-        val bs = MatMulStrategy.deriveBs(m.left, m.right)
-        val split = MatMulStrategy.deriveReplication(
-          m.left, m.right, bs, spark.sparkContext.defaultParallelism,
-          MatMulStrategy.replicationHeadroom(spark))
-        // One exchange partition per estimated cuboid key.
-        val keys = MatMulStrategy.grid(m.left, m.right, bs) * split * split
-        MatrixOps.blockMatmul(a, b, bs, split, split,
-          math.min(keys, Int.MaxValue.toLong).toInt)
-      }
-    val expanded = composed.queryExecution.analyzed
+    val joined = MatrixOps.matmul(a, b).filter(col("v") =!= 0L)
+      .queryExecution.analyzed
     Project(
-      m.output.zip(expanded.output).map { case (target, src) =>
+      m.output.zip(joined.output).map { case (target, src) =>
         Alias(src, target.name)(exprId = target.exprId)
-      }, expanded)
+      }, joined)
   }
 }
 
 object MatMulStrategy {
-  /** A node's expansion with the children it was built from. See
+  /** A node's row-join subtree with the children it was built from. See
     * [[MatMulStrategy]].
     */
-  private val expansionTag =
-    TreeNodeTag[(LogicalPlan, LogicalPlan, LogicalPlan)]("graft.matmul.expansion")
+  private val rowJoinTag =
+    TreeNodeTag[(LogicalPlan, LogicalPlan, LogicalPlan)]("graft.matmul.rowJoin")
 
-  /** Last block-path tile decision `(nnz estimate, derived n, bs)` — a
-    * planning-time observability hook for the plan specs (the chosen bs is
-    * invisible in the physical plan string: it only parameterizes the
-    * mapGroups closures). Written ONLY by [[deriveBs]].
+  /** Last block-route decision `(nnz estimate, derived n, bs)`, kept for
+    * the benchmark harness. The planned [[BlockMatMulExec]] carries the
+    * whole layout; read it there.
     */
   @volatile var lastDerived: Option[(BigInt, Long, Int)] = None
 
-  /** Planner-derived tile width (r11 VERDICT "Next round" 5): the measured
-    * [[MatrixOps.sweepTile]] rule — bs = min(n/4, 512), the 4×4 grid
-    * under the measured per-task memory cap —
-    * applied to a dimension estimate FROM THE SAME COST STATISTICS the
-    * strategy's broadcast decision reads, so the planner owns the whole
-    * physical choice and callers stop shipping a magic 128. A dense n×n
-    * COO child has n² rows; without CBO row counts the estimate is
-    * sizeInBytes over the 32-byte (i, j, v) row footprint (3 longs + row
-    * overhead — Catalyst's own size model for this schema). The estimate
-    * only needs to land within a FACTOR of n: bs buckets are coarse
-    * (n/4 below 2048, the 512 cap above) and both the floor and the cap
-    * are safe on either side — a 2× low bs doubles grid parallelism at
-    * identical task memory, a 2× high one stays under the measured 8
-    * MB/task tile bound via the 512 cap.
+  /** The block route's layout for `m`, or None when a side fits the
+    * broadcast threshold and the row join wins.
     */
-  def deriveBs(left: LogicalPlan, right: LogicalPlan): Int = {
-    val (nnz, n) = estimateN(left, right)
-    val bs = MatrixOps.sweepTile(math.min(n, Int.MaxValue).toInt)
-    lastDerived = Some((nnz, n, bs))
-    bs
+  private def blockShape(spark: SparkSession, m: MatMul): Option[BlockShape] = {
+    val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val minSide = m.left.stats.sizeInBytes.min(m.right.stats.sizeInBytes)
+    if (bcThreshold > 0 && minSide <= bcThreshold) None
+    else Some(choose(m.left, m.right, spark.sparkContext.defaultParallelism,
+      BlockShape.taskBudget(spark)))
   }
 
-  /** Per-axis cuboid split of the output tile grid — P = Q, the `p` and
-    * `q` of [[MatrixOps.blockMatmul]]. The contraction join's natural key
-    * has `grid = ⌈n/bs⌉` values, so on a grid narrower than the core
-    * count the join+GEMM stage underuses the machine (measured at round
-    * 16: 8 tasks on 32 cores = 5.4 s of m1_sweep_4000's 13.8 s wall).
-    * Splitting the output grid P×Q multiplies the keys to grid·P·Q, so
-    * P = Q = min(grid, ⌈√(headroom·parallelism / grid)⌉) reaches
-    * `headroom·parallelism` keys while growing each operand's copies by
-    * only √ of that factor (a one-sided salt R needs R = headroom·
-    * parallelism/grid copies of A for the same key count). At scale
-    * grid ≥ headroom·parallelism and P = Q = 1: the plain k-keyed join,
-    * no copies. The cap at the grid width is where a wider split adds
-    * only keys that match nothing. Derived from the SAME size statistics
-    * as [[deriveBs]]; an estimate 2× high lowers the split by about √2
-    * and one 2× low raises it, both safe: too few keys leaves some cores
-    * idle, too many ships bounded extra tile copies (the bench's 1000²
-    * operands estimate at n = 2309, still P = Q = 2, 8 keys on the true
-    * 2×2 grid). The keys stay tasks at run time: the tile exchanges carry
-    * an explicit partition count, which opts them out of AQE's coalescing
-    * and skew splitting ([[MatrixOps.blockMatmul]] says why that is safe).
+  /** [[BlockShape.choose]] over the operands' size statistics: each is
+    * read as a dense n×n COO matrix of sizeInBytes / 32 cells (3 longs +
+    * row overhead, Catalyst's own size model for this schema), n from the
+    * larger. The estimate runs high for range-generated operands (n = 2309
+    * for a true 1000); tiles stay ≤ 512 wide either way, and a split sized
+    * for the estimated grid only leaves some keys without tiles.
+    */
+  private def choose(left: LogicalPlan, right: LogicalPlan, parallelism: Int,
+                     budget: Long): BlockShape = {
+    val rowBytes = 32
+    def cells(p: LogicalPlan): BigInt = (p.stats.sizeInBytes / rowBytes).max(BigInt(1))
+    def clamp(x: BigInt): Long = x.min(BigInt(Long.MaxValue)).toLong
+    val nnz = cells(left).max(cells(right))
+    val n = math.sqrt(clamp(nnz).toDouble).toLong.max(1L)
+    val shape = BlockShape.choose(n, n, n, clamp(cells(left)), clamp(cells(right)),
+      parallelism, budget)
+    lastDerived = Some((nnz, n, shape.bs))
+    shape
+  }
+
+  /** The cuboid split P the cost function picks for these operands on
+    * `parallelism` cores. `bs` and `headroom` are ignored: the tile width
+    * is part of the same choice, and the key target is the core count.
     */
   def deriveReplication(left: LogicalPlan, right: LogicalPlan, bs: Int,
-                        parallelism: Int, headroom: Int = 2): Int = {
-    val g = grid(left, right, bs)
-    val want = math.ceil(math.sqrt(headroom.toDouble * parallelism / g)).toLong
-    math.min(want, g).max(1L).toInt
-  }
+                        parallelism: Int, headroom: Int = 1): Int =
+    choose(left, right, parallelism, BlockShape.taskBudget(SparkSession.active)).p
 
-  /** Tile-grid width `⌈n/bs⌉` of the estimated dense n×n operand. */
-  private[plans] def grid(left: LogicalPlan, right: LogicalPlan, bs: Int): Long = {
-    val (_, n) = estimateN(left, right)
-    ((n + bs - 1) / bs).max(1L)
-  }
-
-  /** `(nnz estimate, n)` of the larger operand, read as a dense n×n COO
-    * matrix: sizeInBytes over the 32-byte (i, j, v) row footprint, n = √nnz.
+  /** Always 1: the cost function takes its key target from the core
+    * count. Kept for callers of [[deriveReplication]]'s old signature.
     */
-  private def estimateN(left: LogicalPlan, right: LogicalPlan): (BigInt, Long) = {
-    val rowBytes = 32
-    val nnz = (left.stats.sizeInBytes.max(right.stats.sizeInBytes) /
-      rowBytes).max(BigInt(1))
-    (nnz, math.sqrt(nnz.min(BigInt(Long.MaxValue)).toDouble).toLong.max(1L))
-  }
-
-  /** The cuboid split's headroom factor over the core count
-    * (`spark.graft.gemm.replicationHeadroom`, default 2): the split is
-    * chosen so `grid·P·Q` reaches `headroom·parallelism` keys where the
-    * grid allows it. 2 over-decomposes
-    * the join for load balance at the cost of extra tile copies; the A/B
-    * handle for measuring that trade per host. The tile exchanges carry
-    * an explicit partition count, which AQE never coalesces, so the keys
-    * this factor asks for are the tasks the join stage runs.
-    */
-  def replicationHeadroom(spark: SparkSession): Int = {
-    val v = graft.Engine.confLong(spark, "spark.graft.gemm.replicationHeadroom")
-      .getOrElse(2L)
-    require(v >= 1 && v.isValidInt,
-      s"spark.graft.gemm.replicationHeadroom must be in [1, ${Int.MaxValue}], got $v")
-    v.toInt
-  }
+  def replicationHeadroom(spark: SparkSession): Int = 1
 }

@@ -82,7 +82,6 @@ class CoverageSpec extends AnyFunSuite {
       "spark.graft.dedup.attachBroadcastCap",
       "spark.graft.dedup.denseUniverseMax",
       "spark.graft.dedup.pairSpreadMinDocs",
-      "spark.graft.gemm.replicationHeadroom",
       "spark.graft.kmeans.spreadMinK",
       "spark.graft.sql8.localMaxRows",
       "spark.graft.stream.stateParts")

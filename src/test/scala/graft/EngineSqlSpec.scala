@@ -289,15 +289,11 @@ class EngineSqlSpec extends SparkSpec {
     }
   }
 
-  test("malformed gemm and kmeans confs fail naming their key") {
-    // Both keys parse through Engine.confLong; the range checks after it
-    // name the key too.
+  test("a malformed kmeans conf fails naming its key") {
+    // The key parses through Engine.confLong; the range check after it
+    // names the key too.
     val corpus = spark.range(1).toDF("vec_id")
     Seq(
-      ("spark.graft.gemm.replicationHeadroom", "two",
-        () => graft.plans.MatMulStrategy.replicationHeadroom(spark)),
-      ("spark.graft.gemm.replicationHeadroom", "0",
-        () => graft.plans.MatMulStrategy.replicationHeadroom(spark)),
       ("spark.graft.kmeans.spreadMinK", "32k",
         () => graft.operators.SimilarityOps.kmeansFp(corpus, 8, 1)),
       ("spark.graft.kmeans.spreadMinK", "-1",

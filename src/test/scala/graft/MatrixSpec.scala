@@ -73,7 +73,7 @@ class MatrixSpec extends SparkSpec {
 
   test("sparse path (zero-filtered join) equals dense path on the same product") {
     val (a, b) = (matA(16, 16), matB(16, 16))
-    val dense = toMap(MatrixOps.blockMatmul(a, b, MatrixOps.sweepTile(16)))
+    val dense = toMap(MatrixOps.blockMatmul(a, b, 4))
     val sparse = toMap(MatrixOps.multiplyPlanned(
       a.filter(col("v") =!= 0), b.filter(col("v") =!= 0)))
     // Sparse path omits cells whose every product term is zero; on these

@@ -61,6 +61,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (r, () => plans.synchronized(plans.toSeq))
   }
 
+  /** The layout of every block-route multiply in `df`'s physical plan,
+    * looking inside adaptive plans and their query stages.
+    */
+  protected def blockShapes(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BlockShape] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    nodes(df.queryExecution.executedPlan).collect {
+      case b: graft.plans.BlockMatMulExec => b.shape
+    }
+  }
+
   protected def awaitUntil(cond: () => Boolean, timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond() && System.currentTimeMillis() < deadline) Thread.sleep(50)
