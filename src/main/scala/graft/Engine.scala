@@ -36,33 +36,58 @@ object Engine {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
 
-  /** Apply `SPARK_GRAFT_CONF="k=v,k=v"` session-conf overrides — the probe,
-    * bench and verify harnesses' shared mechanism for forcing non-default paths
+  /** Apply `spec`, by default `SPARK_GRAFT_CONF="k=v,k=v"`, as session-conf
+    * overrides — the probe, bench and verify harnesses' shared mechanism
+    * for forcing non-default paths
     * (`spark.graft.dedup.attachBroadcastCap=0` for past-cap fallback runs,
     * `spark.graft.dedup.pairSpreadMinDocs=0` to force the verify spread
     * on). Values containing ',' cannot be expressed (no probed conf needs
     * one); empty segments (trailing comma) are skipped; a segment without
     * '=' fails loudly with the offending text instead of an opaque
-    * MatchError (r10 ADVICE). Returns the overrides applied, for run-header logging.
+    * MatchError (r10 ADVICE). A `spark.graft.*` pair must name a
+    * [[GraftConf]] key and hold a value in its range, or this fails
+    * naming the key before any pair is set: a misspelled knob would
+    * otherwise be set and never read. Returns the overrides applied, for
+    * run-header logging.
     */
-  def applyConfOverrides(spark: SparkSession): Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(
-      _.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-        val parts = kv.split("=", 2)
-        require(parts.length == 2 && parts(0).nonEmpty,
-          s"bad SPARK_GRAFT_CONF override (expected key=value): '$kv'")
-        spark.conf.set(parts(0), parts(1))
-        (parts(0), parts(1))
-      })
+  def applyConfOverrides(spark: SparkSession,
+      spec: String = sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+      : Seq[(String, String)] = {
+    val pairs = spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val parts = kv.split("=", 2)
+      require(parts.length == 2 && parts(0).nonEmpty,
+        s"bad SPARK_GRAFT_CONF override (expected key=value): '$kv'")
+      GraftConf.validate(parts(0), parts(1))
+      (parts(0), parts(1))
+    }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    pairs
+  }
 
-  /** A numeric `spark.graft.*` setting, `None` when unset. A malformed
-    * value fails here with its key named, never as a bare
-    * NumberFormatException mid-query or a silent fall-back to a default.
+  /** Run `body` with the session conf pairs `kvs` set, then restore each
+    * key to its prior value, or unset it if it was unset, also when `body`
+    * throws.
+    *
+    * CONCURRENCY CONTRACT: the set/restore mutates the SHARED session
+    * conf non-atomically, so scoped bodies must not run concurrently on
+    * one SparkSession: interleaved scopes could leak a scoped value or
+    * restore a stale one (r9 ADVICE). This matches how the engine runs
+    * them (Verify/Bench execute queries serially); a caller that needs
+    * concurrency should give each pipeline its own `spark.newSession()`
+    * (per-session conf, shared state untouched).
     */
-  def confLong(spark: SparkSession, key: String): Option[Long] =
-    spark.conf.getOption(key).map(raw => raw.toLongOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"$key must be an integer, got '$raw'")))
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val conf = spark.sessionState.conf // explicit settings, not defaults
+    val prior = kvs.map { case (k, _) =>
+      k -> Option.when(conf.contains(k))(conf.getConfString(k))
+    }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   /** Register every fixture table under `dir` as a temp view, making
     * `spark.sql(...)` a first-class entry point (SURVEY.md §3.2 entry
@@ -218,11 +243,9 @@ object Tables {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
-        val spark = raw.sparkSession
-        val prior = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        try raw.withColumn("ts", col("ts").cast("timestamp"))
-        finally spark.conf.set("spark.sql.session.timeZone", prior)
+        Engine.withConf(raw.sparkSession, "spark.sql.session.timeZone" -> "UTC") {
+          raw.withColumn("ts", col("ts").cast("timestamp"))
+        }
       case _ => raw
     }
   }

@@ -102,25 +102,6 @@ object DedupOps {
           .as("jaccard"))
   }
 
-  /** Operator-level broadcast cap for per-doc code-set frames in the
-    * verify stages (8 B/code): shipping the candidate stream with arrays
-    * attached costs ~50× the sets frame, so the break-even sits far past
-    * the session's dim-table threshold. Tunable per session (bytes) via
-    * `spark.graft.dedup.attachBroadcastCap` — the escape hatch for
-    * memory-constrained drivers, and how [[DedupFallbackSpec]] forces the
-    * past-cap shuffled-hash branches at test scale.
-    */
-  private def attachBroadcastCap(spark: org.apache.spark.sql.SparkSession): Long =
-    graft.Engine.confLong(spark, "spark.graft.dedup.attachBroadcastCap")
-      .getOrElse(512L << 20)
-
-  /** Largest shingle universe the dense bitset regime takes: default
-    * 16 384 codes, ≤ 2 KB/doc bitsets; 0 disables it.
-    */
-  private def denseUniverseMax(spark: org.apache.spark.sql.SparkSession): Long =
-    graft.Engine.confLong(spark, "spark.graft.dedup.denseUniverseMax")
-      .getOrElse(16384L)
-
   /** Payload-size estimates understate the in-memory broadcast relation —
     * UnsafeRow field offsets, array headers, and the HashedRelation's
     * load-factor slack roughly double the raw 8 B/value arithmetic — so
@@ -172,27 +153,12 @@ object DedupOps {
     * bytes — at 1× every exchange lands at the same ~32 partitions as
     * before (parallelismFirst targets the core count), at 8× the
     * byte-heavy exchanges keep the width they need. User-specified
-    * repartitions (the verify spread) are untouched by AQE. Set/restore
-    * is session-scoped and exception-safe.
-    *
-    * CONCURRENCY CONTRACT: the set/restore mutates the SHARED session
-    * conf non-atomically, so near-dup pipelines must not run concurrently
-    * on one SparkSession — interleaved set/restore could leak the 256
-    * width or restore a stale value (r9 ADVICE). This matches how the
-    * engine runs them (Verify/Bench execute queries serially); a caller
-    * that needs concurrency should give each pipeline its own
-    * `spark.newSession()` (per-session conf, shared state untouched).
+    * repartitions (the verify spread) are untouched by AQE. Scoped by
+    * [[graft.Engine.withConf]], whose concurrency contract applies.
     */
-  private def withWideAqe[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "256")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private def withWideAqe[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+    graft.Engine.withConf(spark,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256")(body)
 
   /** Exact-Jaccard verification of candidate pairs `(da, db)`: one
     * codegen'd two-pointer intersect per pair over the two docs' sorted
@@ -244,7 +210,8 @@ object DedupOps {
     // disk-bandwidth-bound by the attached stream (the honest 100 TB
     // cost once per-doc sets outgrow cluster broadcast).
     val attach: DataFrame => DataFrame =
-      attachStrategy(spark, estBytes, attachBroadcastCap(spark))
+      attachStrategy(spark, estBytes,
+                     graft.GraftConf.attachBroadcastCap.get(spark))
     // The CPU-heavy verify spread: the candidate rows are tiny in bytes,
     // so AQE's byte-aware coalescing would squash them into a few tasks —
     // the explicit repartition pins full-CPU width for the intersects, on
@@ -272,8 +239,7 @@ object DedupOps {
     // Crossover sits between the measured −3 s at 10 000 docs and +40 s
     // at 40 000; default 16 000 (`spark.graft.dedup.pairSpreadMinDocs`;
     // 0 forces the spread on, Long.MaxValue forces it off).
-    val spreadOn = nDocs >= graft.Engine.confLong(
-      spark, "spark.graft.dedup.pairSpreadMinDocs").getOrElse(16000L)
+    val spreadOn = nDocs >= graft.GraftConf.pairSpreadMinDocs.get(spark)
     val repartitioned =
       if (spreadOn) candidates
         .repartition(spark.sparkContext.defaultParallelism, col("da"), col("db"))
@@ -573,7 +539,7 @@ object DedupOps {
     // the symmetric path's PPJoin length filter (a short doc contained in
     // a long one is exactly what it must NOT prune). `denseUniverseMax=0`
     // remains the escape hatch.
-    val denseMax = denseUniverseMax(docs.sparkSession)
+    val denseMax = graft.GraftConf.denseUniverseMax.get(docs.sparkSession)
     try {
       if (denseMax > 0) {
         // One bounded sorted-distinct collect decides the regime AND is
@@ -661,7 +627,7 @@ object DedupOps {
         .map(v => Option(v).fold(0L)(_.toString.toLong)).toArray
       val attach: DataFrame => DataFrame =
         attachStrategy(sh.sparkSession, nCodesL * 8L + nDocsL * 32L,
-                       attachBroadcastCap(sh.sparkSession))
+                       graft.GraftConf.attachBroadcastCap.get(sh.sparkSession))
       val result = candidates
         .join(attach(sets.select(col("doc_id").as("xa"), col("codes").as("ca"))), "xa")
         .join(attach(sets.select(col("doc_id").as("xb"), col("codes").as("cb"))), "xb")
@@ -803,7 +769,7 @@ object DedupOps {
     // at sf0.1, `local[32]` on a 4-core host, min of 3, several runs):
     // 5 000 docs 16.7–19.8 s sparse vs 5.0–5.4 s dense, 10 000 docs
     // 29.0–34.2 s vs 5.2–5.5 s.
-    val denseMax = denseUniverseMax(docs.sparkSession)
+    val denseMax = graft.GraftConf.denseUniverseMax.get(docs.sparkSession)
     // One shingle frame shared by the regime probe and BOTH engines (r12
     // ADVICE: the probe previously re-exploded the corpus once per call).
     val sh = shingles(docs, n).persist()
@@ -1541,8 +1507,7 @@ object DedupOps {
     // both compute the min node id per component (min-label union-find ≡
     // converged min-label propagation), and GraphPropSpec pins the
     // equality on random graphs over both routes.
-    val localMax = graft.Engine.confLong(spark, "spark.graft.cc.localMaxRows")
-      .getOrElse(1000000L)
+    val localMax = graft.GraftConf.ccLocalMaxRows.get(spark)
     if (rows <= localMax && localMax > 0) {
       import spark.implicits._
       val nodeIds = labels0.select(col("x")).collect().map(_.getLong(0))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Engine, Q, Tables}
 import graft.functions.TextFunctions
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -100,15 +100,16 @@ object EventQueries {
     }
   }
 
+  private val rocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val changelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
   /** Run `body` with the RocksDB state-store provider pinned (the
     * transformWithState gates s28/s29/s30 — the arbitrary-state API
-    * requires it), restoring the previous provider after.
+    * requires it).
     */
-  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val chKey = "spark.sql.streaming.stateStore.rocksdb." +
-                "changelogCheckpointing.enabled"
-    val prev = s.conf.getOption(key)
+  private def withRocksDb[A](s: SparkSession)(body: => A): A =
     // Changelog checkpointing for every RocksDB-backed bounded gate
     // (round 16): each micro-batch commit ships the batch's CHANGE SET
     // instead of a full store snapshot — commit cost ∝ changes, not state
@@ -116,17 +117,9 @@ object EventQueries {
     // that survives 100 TB state. Measured at sf0.1 (6-gate TWS subset,
     // min-of-3, the changelog side under the HEAVIER host load by its own
     // gauge): 16.44 → 15.71 s, s28 2.57 → 1.89 s. Respect a caller/A-B
-    // override (SPARK_GRAFT_CONF can force =false), restore after.
-    val chPrev = s.conf.getOption(chKey)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                    "RocksDBStateStoreProvider")
-    if (chPrev.isEmpty) s.conf.set(chKey, "true")
-    try body
-    finally {
-      prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
-      chPrev.fold(s.conf.unset(chKey))(v => s.conf.set(chKey, v))
-    }
-  }
+    // override (SPARK_GRAFT_CONF can force =false).
+    Engine.withConf(s, rocksDbProvider,
+      changelogKey -> s.conf.getOption(changelogKey).getOrElse("true"))(body)
 
   /** The s28/s29/s30 two-batch accretion setup (factored round 15 — the
     * r14-self-review no-verbatim-copies rule): split `df` into a base
@@ -444,14 +437,8 @@ object EventQueries {
       val raw = Tables.loadEventsRaw(s, d)
       val dir = java.nio.file.Files.createTempDirectory("graft-chlog-")
       val tmp = java.nio.file.Files.createTempDirectory("graft-chlog-tmp-")
-      val confs = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try EventStreams.withBoundedStateParts(s) {
+      try EventStreams.withBoundedStateParts(
+          s, rocksDbProvider, changelogKey -> "true") {
         def addHalf(m: Int): Unit = {
           val out = tmp.resolve(s"half$m").toString
           raw.filter(col("event_id") % 2 === m).coalesce(1).write.parquet(out)
@@ -475,10 +462,6 @@ object EventQueries {
         run()                              // incarnation 2: changelog replay + odds
           .orderBy("ws", "event_type").localCheckpoint(true)
       } finally {
-        prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None)    => s.conf.unset(k)
-        }
         EventStreams.deleteRecursively(dir)
         EventStreams.deleteRecursively(tmp)
       }
@@ -727,17 +710,13 @@ object EventQueries {
     // S13 — the S11 sessionization through Spark 4's transformWithState
     // (the successor arbitrary-state API): named ValueState + explicit
     // event-time timers on RocksDB-backed state. The provider conf is
-    // query-scoped (set/restore around the bounded run — the operator
+    // query-scoped (around the bounded run — the operator
     // REQUIRES RocksDB; the other gates keep the default store). Same
     // sentinel close-of-books pattern and the same gaps-and-islands
     // oracle as S11 — two arbitrary-state APIs, one declared semantics.
     "s13_tws_sessions" -> { (s, d) =>
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                      "RocksDBStateStoreProvider")
-      try {
+      Engine.withConf(s, rocksDbProvider) {
         sentinelStream(s, d, Seq("sentinel")) { stream =>
           val typed = stream
             .select(col("user_id"), col("ts"), col("value"))
@@ -747,7 +726,7 @@ object EventQueries {
             .filter(col("user_id") >= 0)
             .orderBy("user_id", "session_start")
         }
-      } finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+      }
     },
 
     // S21 — transformWithState MAP STATE (`MapState[event_type → agg]` +
@@ -760,11 +739,7 @@ object EventQueries {
     // summed sink equals the batch per-(user, type) group-by (the oracle).
     "s21_tws_typecounts" -> { (s, d) =>
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                      "RocksDBStateStoreProvider")
-      try {
+      Engine.withConf(s, rocksDbProvider) {
         sentinelStream(s, d, Seq("sentinel")) { stream =>
           val typed = stream
             .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -776,7 +751,7 @@ object EventQueries {
             .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
             .orderBy("user_id", "event_type")
         }
-      } finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+      }
     },
 
     // S27 — transformWithState LIST STATE: the third state shape of the
@@ -793,11 +768,7 @@ object EventQueries {
     // exists instead of rewriting a ValueState[Seq].
     "s27_tws_liststate" -> { (s, d) =>
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                      "RocksDBStateStoreProvider")
-      try {
+      Engine.withConf(s, rocksDbProvider) {
         sentinelStream(s, d, Seq("sentinel")) { stream =>
           val typed = stream
             .select(col("user_id"), col("event_id"), col("ts"), col("value"))
@@ -807,7 +778,7 @@ object EventQueries {
             .filter(col("user_id") >= 0)
             .orderBy("user_id", "session_start")
         }
-      } finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+      }
     },
 
     // S28 — STREAMING FINGERPRINT DEDUP INDEX: the streaming twin of

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Engine, Q, Tables}
 import graft.functions.{Hilbert2, ZOrder2}
 import graft.sources.LayoutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -217,7 +217,7 @@ object IoQueries {
     // every other partition's files are untouched — the incremental-load
     // primitive of a partitioned lake (static overwrite mode would wipe
     // the whole table; dynamic replaces exactly the partitions present in
-    // the incoming frame). The conf is query-scoped (set/restore); the
+    // the incoming frame). The conf is query-scoped; the
     // gate aggregates the post-overwrite table against an oracle that
     // restates F from the source — proving both the replacement and the
     // non-replacement.
@@ -228,13 +228,11 @@ object IoQueries {
                 Q.dec2(col("o_totalprice")).as("price"))
       orders.write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(path)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try orders.filter(col("o_orderstatus") === "F")
-        .withColumn("price", Q.dec2(col("price") * 2))
-        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-      finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+      Engine.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        orders.filter(col("o_orderstatus") === "F")
+          .withColumn("price", Q.dec2(col("price") * 2))
+          .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
+      }
       s.read.parquet(path)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
@@ -432,18 +430,14 @@ object IoQueries {
     // disables the pushdown (stats can't answer those), which is why
     // the gate is the bare-audit shape.
     "io25_agg_pushdown" -> { (s, d) =>
-      val confs = Seq(
-        "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
-        "spark.sql.parquet.aggregatePushdown" -> "true")
-      val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try s.read.parquet(s"$d/orders.parquet")
-        .agg(count(lit(1)).as("n"),
-             min(col("o_orderkey")).as("min_key"),
-             max(col("o_orderkey")).as("max_key"))
-        .localCheckpoint(true)
-      finally prior.foreach { case (k, v) =>
-        v.fold(s.conf.unset(k))(s.conf.set(k, _))
+      Engine.withConf(s,
+          "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
+          "spark.sql.parquet.aggregatePushdown" -> "true") {
+        s.read.parquet(s"$d/orders.parquet")
+          .agg(count(lit(1)).as("n"),
+               min(col("o_orderkey")).as("min_key"),
+               max(col("o_orderkey")).as("max_key"))
+          .localCheckpoint(true)
       }
     },
 
@@ -724,23 +718,15 @@ object IoQueries {
       .orderBy("l_returnflag")
   }
 
-  /** Runs `body` with the runtime-bloom-filter levers on and broadcast off
-    * (set/restore — the io10 conf-scoping pattern): the rule targets
-    * shuffle joins, and the application-side size floor is fixture-scaled
-    * (the 10 GB default assumes a real cluster).
+  /** Runs `body` with the runtime-bloom-filter levers on and broadcast
+    * off: the rule targets shuffle joins, and the application-side size
+    * floor is fixture-scaled (the 10 GB default assumes a real cluster).
     */
-  private[graft] def withBloomFilterConf[T](s: SparkSession)(body: => T): T = {
-    val scoped = Seq(
+  private[graft] def withBloomFilterConf[T](s: SparkSession)(body: => T): T =
+    Engine.withConf(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   val oracles: Map[String, String] = Map(
     // The embedded bloom filter is metadata — the IN-list probe result

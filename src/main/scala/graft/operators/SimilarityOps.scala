@@ -649,12 +649,9 @@ object SimilarityOps {
     // in one task. Per-round work is N·k·dim, so the spread only pays past
     // a k floor (measured at sf0.1: k=8 regresses +0.4 s — task overhead ×
     // rounds beats the parallelism — while k=√N=100 wins −1.4 s);
-    // crossover conf'd as spark.graft.kmeans.spreadMinK (default 32, the
+    // crossover conf'd as `GraftConf.kmeansSpreadMinK` (default 32, the
     // geometric middle of the measured points), the pairSpreadMinDocs pattern.
-    val spreadMinK = graft.Engine.confLong(s, "spark.graft.kmeans.spreadMinK")
-      .getOrElse(32L)
-    require(spreadMinK >= 0,
-      s"spark.graft.kmeans.spreadMinK must be >= 0, got $spreadMinK")
+    val spreadMinK = graft.GraftConf.kmeansSpreadMinK.get(s)
     val fp = (if (k >= spreadMinK) graft.Tables.spread(corpus) else corpus)
       .select(col("vec_id"),
         transform(col("embedding"),

@@ -173,8 +173,7 @@ object SqlQueries {
       // cents/hop per produced row, MAX per customer — and bails to the
       // distributed route past the engine's own recursion depth limit so
       // pathological inputs keep Spark's error behavior.
-      val localMax = Engine.confLong(s, "spark.graft.sql8.localMaxRows")
-        .getOrElse(1000000L)
+      val localMax = graft.GraftConf.sql8LocalMaxRows.get(s)
       val nOrders = s.table("orders").count()
       val localDone: Option[org.apache.spark.sql.DataFrame] =
         if (localMax > 0 && nOrders <= localMax) {
@@ -438,18 +437,16 @@ object SqlQueries {
     // asserts the hinted plan broadcasts where the unhinted one
     // sort-merges; the result is hint-invariant (the oracle).
     "sql20_hints" -> { (s, d) =>
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "-1")
-      try graft.Engine.sql(s, d,
-        """SELECT /*+ BROADCAST(customer) */ c_mktsegment,
-          |  COUNT(*) AS n,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS revenue
-          |FROM orders JOIN customer ON o_custkey = c_custkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin)
-        .localCheckpoint(true)
-      finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+      Engine.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        Engine.sql(s, d,
+          """SELECT /*+ BROADCAST(customer) */ c_mktsegment,
+            |  COUNT(*) AS n,
+            |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+            |    AS revenue
+            |FROM orders JOIN customer ON o_custkey = c_custkey
+            |GROUP BY 1 ORDER BY 1""".stripMargin)
+          .localCheckpoint(true)
+      }
     },
 
     // SQL24 — STATISTICS-DRIVEN PLANNING (the r8 verdict's last
@@ -843,11 +840,8 @@ object SqlQueries {
         s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${analyzeCols(i)}")
       }
       val Seq(lt, ot, ct) = tables.map(_._1)
-      val confs = Seq("spark.sql.cbo.enabled" -> cbo.toString,
-                      "spark.sql.cbo.joinReorder.enabled" -> cbo.toString)
-      val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      Engine.withConf(s, "spark.sql.cbo.enabled" -> cbo.toString,
+                      "spark.sql.cbo.joinReorder.enabled" -> cbo.toString) {
         val df = s.sql(
           s"""SELECT o.o_orderstatus AS status, COUNT(*) AS n,
              |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
@@ -859,8 +853,6 @@ object SqlQueries {
              |GROUP BY 1 ORDER BY 1""".stripMargin)
         inspect(df)
         df.localCheckpoint(true)
-      } finally prior.foreach { case (k, v) =>
-        v.fold(s.conf.unset(k))(s.conf.set(k, _))
       }
     } finally drop()
   }

@@ -613,37 +613,44 @@ object EventStreams {
     * snapshots one state store PER shuffle partition, so each partition
     * is a fixed per-batch cost (store init + delta write + fsync) the
     * bounded gates pay regardless of data volume. Conf'd
-    * (`spark.graft.stream.stateParts`) so a production deployment sizes
+    * (`GraftConf.streamStateParts`) so a production deployment sizes
     * it to cluster width × state volume and the A/B bench can force
     * either width. The local default 8 is MEASURED, not assumed: the
     * 40-gate s-family bench at sf0.1 read 50.2 s at 8, 51.3 s at 4,
     * 53.0 s at 2 (min-of-2 each; OPTIMIZATION_r15.md) — per-partition
     * state-store overhead is NOT the bounded gates' floor, and narrowing
     * only trades away parallelism of the real per-batch work.
-    */
-  private def stateParts(spark: SparkSession): String = {
-    val v = graft.Engine.confLong(spark, "spark.graft.stream.stateParts")
-      .getOrElse(8L)
-    require(v >= 1 && v.isValidInt,
-      s"spark.graft.stream.stateParts must be in [1, ${Int.MaxValue}], got $v")
-    v.toString
-  }
-
-  /** The stateParts conf scope exposed for gates that manage their own
-    * writeStream lifecycle (the s19/s26 two-incarnation restarts — round
-    * 16: they were the only bounded gates still planning their stateful
+    *
+    * The scope also serves gates that manage their own writeStream
+    * lifecycle (the s19/s26 two-incarnation restarts — round 16: they
+    * were the only bounded gates still planning their stateful
     * aggregation at the batch engine's 32 shuffle partitions, paying 32
     * state-store opens/commits per micro-batch × 2 incarnations where the
-    * measured-optimal 8 suffice). Sets `spark.sql.shuffle.partitions` for
-    * the duration of `body`, restoring after — same width for both
-    * incarnations, as the checkpoint's recorded partitioning requires.
+    * measured-optimal 8 suffice): same width for both incarnations, as
+    * the checkpoint's recorded partitioning requires. `kvs` are scoped
+    * alongside.
     */
-  def withBoundedStateParts[A](spark: SparkSession)(body: => A): A = {
-    val partKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(partKey)
-    spark.conf.set(partKey, stateParts(spark))
-    try body finally spark.conf.set(partKey, prev)
-  }
+  def withBoundedStateParts[A](spark: SparkSession, kvs: (String, String)*)(
+      body: => A): A =
+    graft.Engine.withConf(spark, kvs :+ ("spark.sql.shuffle.partitions" ->
+      graft.GraftConf.streamStateParts.get(spark).toString): _*)(body)
+
+  /** Start `streaming` into the memory sink `name` under the bounded
+    * state-partition scope. A query takes its session conf at `start()`,
+    * so the scope ends there.
+    */
+  private def startMemorySink(spark: SparkSession, streaming: DataFrame,
+                              name: String, mode: String,
+                              availableNow: Boolean = false)(
+      ckpt: String): org.apache.spark.sql.streaming.StreamingQuery =
+    withBoundedStateParts(spark) {
+      val w = streaming.writeStream
+        .format("memory").queryName(name).outputMode(mode)
+        .option("checkpointLocation", ckpt)
+      (if (availableNow)
+         w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+       else w).start()
+    }
 
   /** Run a streaming frame to completion against a bounded source and return
     * the final result as a batch DataFrame (memory sink, complete mode).
@@ -658,25 +665,9 @@ object EventStreams {
     * location, not the operator, is the deployment-specific part.
     */
   def runToCompletion(spark: SparkSession, streaming: DataFrame,
-                      name: String, mode: String = "complete"): DataFrame = {
-    withScratchCheckpoint(name) { ckpt =>
-      // Stateful-operator parallelism: every micro-batch opens, commits,
-      // and snapshots one state store PER shuffle partition, so a bounded
-      // gate at the batch engine's 32 partitions pays 32x state overhead
-      // for data that fits comfortably in 8. The conf is read at query
-      // planning; restored after the run (gates execute sequentially). A
-      // production deployment sizes this to cluster width x state volume.
-      val partKey = "spark.sql.shuffle.partitions"
-      val prevParts = spark.conf.get(partKey)
-      spark.conf.set(partKey, stateParts(spark))
-      try streaming.writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-      finally spark.conf.set(partKey, prevParts)
-    }
-    spark.table(name)
-  }
+                      name: String, mode: String = "complete"): DataFrame =
+    withScratchCheckpoint(name)(startMemorySink(spark, streaming, name, mode))(
+      _ => spark.table(name))
 
   /** S18 — run a streaming frame to completion, then read the FINAL
     * AGGREGATION STATE back out of the checkpoint through Spark's
@@ -693,50 +684,36 @@ object EventStreams {
     */
   def runThenReadState(spark: SparkSession, streaming: DataFrame,
                        name: String, mode: String = "complete")(
-      read: String => DataFrame): DataFrame = {
-    val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
-      System.getProperty("java.io.tmpdir")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(base), s"graft-ckpt-$name-")
-    try {
-      val partKey = "spark.sql.shuffle.partitions"
-      val prevParts = spark.conf.get(partKey)
-      spark.conf.set(partKey, stateParts(spark))
-      val q = try streaming.writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      finally spark.conf.set(partKey, prevParts)
-      try q.processAllAvailable() finally q.stop()
-      read(ckpt.toString).localCheckpoint(true)
-    } finally deleteRecursively(ckpt)
-  }
+      read: String => DataFrame): DataFrame =
+    withScratchCheckpoint(name)(startMemorySink(spark, streaming, name, mode))(
+      read(_).localCheckpoint(true))
 
   /** Shared bounded-gate checkpoint scaffolding: tmpfs-backed scratch
     * checkpoint dir, start the query via `start(ckptPath)`, run to
-    * completion, stop, and best-effort delete the checkpoint (bounded-
-    * gate checkpoints have no value after the run; leaking them would
-    * bloat tmpfs across a long bench).
+    * completion, stop, hand the checkpoint path to `read`, and best-effort
+    * delete the checkpoint (bounded-gate checkpoints have no value after
+    * the run; leaking them would bloat tmpfs across a long bench).
     */
-  private def withScratchCheckpoint(
+  private def withScratchCheckpoint[A](
       tag: String,
       wait: org.apache.spark.sql.streaming.StreamingQuery => Unit =
         _.processAllAvailable())(
-      start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      start: String => org.apache.spark.sql.streaming.StreamingQuery)(
+      read: String => A): A = {
     val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
       System.getProperty("java.io.tmpdir")
     val ckpt = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get(base), s"graft-ckpt-$tag-")
-    val q = start(ckpt.toString)
-    // stop() before delete on EVERY exit path: deleting the checkpoint
-    // under a still-running query (e.g. an interrupted wait) turns the
-    // next micro-batch commit into checkpoint IO errors and leaks the
-    // query registration for the session's lifetime. stop() after a
-    // self-terminated AvailableNow run is a no-op.
-    try wait(q) finally {
-      q.stop()
-      deleteRecursively(ckpt)
-    }
+    try {
+      val q = start(ckpt.toString)
+      // stop() before delete on EVERY exit path: deleting the checkpoint
+      // under a still-running query (e.g. an interrupted wait) turns the
+      // next micro-batch commit into checkpoint IO errors and leaks the
+      // query registration for the session's lifetime. stop() after a
+      // self-terminated AvailableNow run is a no-op.
+      try wait(q) finally q.stop()
+      read(ckpt.toString)
+    } finally deleteRecursively(ckpt)
   }
 
   /** S23 — run a streaming frame under `Trigger.AvailableNow`: the
@@ -749,23 +726,10 @@ object EventStreams {
     * waits on the query's own termination — nothing external stops it.
     */
   def runAvailableNow(spark: SparkSession, streaming: DataFrame,
-                      name: String, mode: String = "complete"): DataFrame = {
-    // Same scratch-checkpoint + state-parallelism scaffolding as
-    // [[runToCompletion]]; only the wait strategy differs (the query
-    // terminates itself, so the gate awaits rather than drains).
-    withScratchCheckpoint(name, wait = _.awaitTermination()) { ckpt =>
-      val partKey = "spark.sql.shuffle.partitions"
-      val prevParts = spark.conf.get(partKey)
-      spark.conf.set(partKey, stateParts(spark))
-      try streaming.writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .start()
-      finally spark.conf.set(partKey, prevParts)
-    }
-    spark.table(name)
-  }
+                      name: String, mode: String = "complete"): DataFrame =
+    withScratchCheckpoint(name, wait = _.awaitTermination())(
+      startMemorySink(spark, streaming, name, mode, availableNow = true))(
+      _ => spark.table(name))
 
   /** Best-effort recursive delete of a scratch directory. */
   def deleteRecursively(dir: java.nio.file.Path): Unit =
@@ -817,7 +781,7 @@ object EventStreams {
         .foreachBatch(idempotentBatchWrite(outDir) _)
         .option("checkpointLocation", ckpt)
         .start()
-    }
+    }(_ => ())
     val landed = Option(new java.io.File(outDir).listFiles()).toSeq.flatten
     if (!landed.exists(_.getName.startsWith("graft_sink_batch=")))
       spark.createDataFrame(
@@ -842,8 +806,7 @@ object EventStreams {
         .option("path", outDir)
         .option("checkpointLocation", ckpt)
         .start()
-    }
-    spark.read.parquet(outDir)
+    }(_ => spark.read.parquet(outDir))
   }
 
   /** STREAMING FINGERPRINT DEDUP INDEX (the s28 gate) — the steady-state

@@ -47,16 +47,18 @@ class CoverageSpec extends AnyFunSuite {
       s"rows-only entries that grew oracles: ${(rowsOnly -- unGated).toSeq.sorted}")
   }
 
-  /** Every Scala source under `root`, as text. */
-  private def scalaSources(root: String): Seq[String] = {
+  /** Every Scala source under `root`, as (path, text). */
+  private def scalaFiles(root: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val ws = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try ws.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .map(p => p.toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
     finally ws.close()
   }
 
-  private lazy val mainSources: Seq[String] = scalaSources("src/main")
+  private lazy val mainFiles = scalaFiles("src/main")
+  private lazy val mainSources: Seq[String] = mainFiles.map(_._2)
 
   test("entry points are exactly the declared mains") {
     // A one-off probe main must not slip back in: anything measured
@@ -73,10 +75,6 @@ class CoverageSpec extends AnyFunSuite {
   }
 
   test("spark.graft.* conf keys are exactly the declared knobs") {
-    val literals = mainSources.flatMap { src =>
-      "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r.findAllMatchIn(src).map(_.group(1))
-    }
-    val keys = literals.toSet
     val declared = Set(
       "spark.graft.cc.localMaxRows",
       "spark.graft.dedup.attachBroadcastCap",
@@ -85,18 +83,26 @@ class CoverageSpec extends AnyFunSuite {
       "spark.graft.kmeans.spreadMinK",
       "spark.graft.sql8.localMaxRows",
       "spark.graft.stream.stateParts")
-    assert(keys == declared,
-      s"undeclared: ${(keys -- declared).toSeq.sorted}; " +
-      s"gone: ${(declared -- keys).toSeq.sorted}")
-    // One parser: every key literal is the key argument of an
-    // Engine.confLong call, which fails naming the key on a malformed value.
-    val viaConfLong = mainSources.flatMap { src =>
-      "Engine\\.confLong\\(\\s*\\w+\\s*,\\s*\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
-        .findAllMatchIn(src).map(_.group(1))
+    val keys = GraftConf.keys.map(_.name)
+    assert(keys.toSet == declared && keys.size == declared.size,
+      s"registry: ${keys.sorted}")
+    // One registry: a key literal anywhere else under src/main is a read
+    // that bypasses GraftConf's default and range check.
+    val (registry, others) =
+      mainFiles.partition(_._1.endsWith("/GraftConf.scala"))
+    val elsewhere = others.flatMap { case (path, src) =>
+      "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r.findAllMatchIn(src)
+        .map(m => s"$path: ${m.group(1)}")
     }
-    val otherwiseRead = literals diff viaConfLong
-    assert(otherwiseRead.isEmpty,
-      s"keys read without Engine.confLong: ${otherwiseRead.sorted}")
+    assert(elsewhere.isEmpty, s"key literals outside GraftConf: $elsewhere")
+    // Every declared key is read somewhere.
+    val vals = registry.flatMap { case (_, src) =>
+      """val\s+(\w+)\s*=\s*Key\(""".r.findAllMatchIn(src).map(_.group(1))
+    }
+    assert(vals.size == declared.size, s"Key vals: $vals")
+    val unread = vals.filterNot(v =>
+      others.exists(_._2.contains(s"GraftConf.$v.get(")))
+    assert(unread.isEmpty, s"declared but never read: $unread")
   }
 
   test("every def under src/main is reachable from the engine or the bench harness") {
@@ -116,7 +122,7 @@ class CoverageSpec extends AnyFunSuite {
         t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
       }
     val mainLines = codeLines(mainSources)
-    val allLines = mainLines ++ codeLines(scalaSources("perfbench/src"))
+    val allLines = mainLines ++ codeLines(scalaFiles("perfbench/src").map(_._2))
     val defined = mainLines.flatMap { l =>
       """\bdef\s+(\w+)""".r.findAllMatchIn(l)
         .filterNot(m => l.substring(0, m.start).contains("override"))

@@ -36,17 +36,6 @@ class DedupFallbackSpec extends SparkSpec {
   private def pairsOf(df: DataFrame): Set[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-  /** Run `body` with session conf overrides, restoring afterwards. */
-  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
-    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** The fallback contract is per-JOIN, not per-plan: with broadcasts
     * globally off the PLANNER may legitimately sort-merge the
     * candidate-generation joins (big-big equi-joins on `code` — SMJ is
@@ -80,13 +69,14 @@ class DedupFallbackSpec extends SparkSpec {
     // denseUniverseMax=0 pins the SPARSE prefix join whose verify attaches
     // the code sets by (da, db); the tiny corpus's 3-gram universe would
     // otherwise route to the dense bitset path, which has no attach join.
-    val expected = withConf("spark.graft.dedup.denseUniverseMax" -> "0") {
-      pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5))
-    }
+    val expected =
+      Engine.withConf(spark, "spark.graft.dedup.denseUniverseMax" -> "0") {
+        pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5))
+      }
     assert(expected.nonEmpty)
     val (got, plans) =
-      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-               "spark.graft.dedup.denseUniverseMax" -> "0") {
+      Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+                      "spark.graft.dedup.denseUniverseMax" -> "0") {
         capturePlans(pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.5)))
       }
     assert(got == expected)
@@ -98,14 +88,15 @@ class DedupFallbackSpec extends SparkSpec {
     // the attach strategy under a disabled session broadcast; the tiny
     // corpus's 3-gram universe would otherwise route to the dense bitset
     // path (round 12), which has no attach join to assert on.
-    val (expected, _) = withConf("spark.graft.dedup.denseUniverseMax" -> "0") {
-      capturePlans(DedupOps.containmentPairs(corpus, 0.9).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
-    }
+    val (expected, _) =
+      Engine.withConf(spark, "spark.graft.dedup.denseUniverseMax" -> "0") {
+        capturePlans(DedupOps.containmentPairs(corpus, 0.9).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+      }
     assert(expected.nonEmpty)
     val (got, plans) =
-      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-               "spark.graft.dedup.denseUniverseMax" -> "0") {
+      Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+                      "spark.graft.dedup.denseUniverseMax" -> "0") {
         capturePlans(DedupOps.containmentPairs(corpus, 0.9).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
       }
@@ -125,7 +116,7 @@ class DedupFallbackSpec extends SparkSpec {
     // take the shuffled-hash branch. "1k" must be read the way Spark reads
     // it (1024 bytes), not as a default — the 7-doc sets frame is ~3 KB.
     Seq("1", "1k").foreach { threshold =>
-      val (got, plans) = withConf(
+      val (got, plans) = Engine.withConf(spark,
         "spark.graft.dedup.attachBroadcastCap" -> "0",
         "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
         capturePlans(pairsOf(DedupOps.verifyJaccard(sh, cand, 0.5)))
@@ -137,18 +128,20 @@ class DedupFallbackSpec extends SparkSpec {
   }
 
   test("a malformed numeric dedup conf fails naming its key") {
-    // A typo'd cap must neither surface as a bare NumberFormatException
-    // mid-query nor silently run with the default.
+    // A typo'd or negative cap must neither surface as a bare
+    // NumberFormatException mid-query nor silently run with the default
+    // or read as "off".
     Seq("spark.graft.dedup.denseUniverseMax" -> "16k",
         "spark.graft.dedup.attachBroadcastCap" -> "512MB",
-        "spark.graft.dedup.pairSpreadMinDocs" -> "many").foreach {
+        "spark.graft.dedup.pairSpreadMinDocs" -> "many",
+        "spark.graft.dedup.denseUniverseMax" -> "-1").foreach {
       case (key, bad) =>
         // The two caps are read on the sparse route only, which a
         // saturated universe reaches under denseUniverseMax=0.
         val route =
           if (key == "spark.graft.dedup.denseUniverseMax") Nil
           else Seq("spark.graft.dedup.denseUniverseMax" -> "0")
-        val e = withConf((key -> bad) +: route: _*) {
+        val e = Engine.withConf(spark, (key -> bad) +: route: _*) {
           intercept[IllegalArgumentException] {
             DedupOps.prefixJaccardPairs(corpus, 0.5).count()
           }
@@ -178,7 +171,8 @@ class DedupFallbackSpec extends SparkSpec {
       // exchange this spec is about (round 12: the tiny corpus's 3-gram
       // universe would otherwise route to the dense bitset kernel, which
       // has no verify exchange to detect).
-      withConf(conf :+ ("spark.graft.dedup.denseUniverseMax" -> "0"): _*) {
+      Engine.withConf(spark,
+          conf :+ ("spark.graft.dedup.denseUniverseMax" -> "0"): _*) {
         val (rows, plans) = capturePlans(
           pairsOf(DedupOps.prefixJaccardPairs(corpus, 0.8)))
         awaitUntil(() => plans().nonEmpty)

@@ -44,9 +44,10 @@ class DedupPropSpec extends SparkSpec {
       // The random corpora's small universe routes the default to the
       // dense bitset kernel; denseUniverseMax=0 takes the sparse prefix
       // join. Both must equal the exact all-pairs reference.
-      spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
-      val sparse = try canon(DedupOps.prefixJaccardPairs(docs, t))
-      finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
+      val sparse = Engine.withConf(spark,
+        "spark.graft.dedup.denseUniverseMax" -> "0") {
+        canon(DedupOps.prefixJaccardPairs(docs, t))
+      }
       sparse == exact &&
         canon(DedupOps.prefixJaccardPairs(docs, t)) == exact &&
         canon(DedupOps.clusteredJaccardPairs(docs, t)) == exact

@@ -186,14 +186,13 @@ class EngineSqlSpec extends SparkSpec {
     val key = "spark.graft.sql8.localMaxRows"
     val local = operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
     val localRows = local.collect().toSeq
-    spark.conf.set(key, "0")
-    try {
+    Engine.withConf(spark, key -> "0") {
       val dist = operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
       assert(local.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
              dist.schema.fields.map(f => (f.name, f.dataType)).toSeq)
       assert(localRows == dist.collect().toSeq)
       assert(localRows.nonEmpty)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("recursive CTE fixpoint UNION is still unsupported (the sql8 boundary canary)") {
@@ -290,8 +289,8 @@ class EngineSqlSpec extends SparkSpec {
   }
 
   test("a malformed kmeans conf fails naming its key") {
-    // The key parses through Engine.confLong; the range check after it
-    // names the key too.
+    // The key parses and range-checks through GraftConf, which names the
+    // key on either failure.
     val corpus = spark.range(1).toDF("vec_id")
     Seq(
       ("spark.graft.kmeans.spreadMinK", "32k",
@@ -299,11 +298,57 @@ class EngineSqlSpec extends SparkSpec {
       ("spark.graft.kmeans.spreadMinK", "-1",
         () => graft.operators.SimilarityOps.kmeansFp(corpus, 8, 1))
     ).foreach { case (key, bad, read) =>
-      spark.conf.set(key, bad)
-      val e = try intercept[IllegalArgumentException](read())
-      finally spark.conf.unset(key)
+      val e = Engine.withConf(spark, key -> bad) {
+        intercept[IllegalArgumentException](read())
+      }
       assert(e.getMessage.contains(key) && e.getMessage.contains(bad),
         s"$key=$bad: ${e.getMessage}")
+    }
+  }
+
+  test("withConf restores a set key, unsets an unset one, also when the body throws") {
+    val setKey = "spark.sql.shuffle.partitions"
+    val unsetKey = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.get(setKey)
+    spark.conf.unset(unsetKey) // has a default, but is not set
+    def check(): Unit = {
+      assert(spark.conf.get(setKey) == prior)
+      assert(!spark.conf.getAll.contains(unsetKey),
+        s"$unsetKey left set to ${spark.conf.getAll.get(unsetKey)}")
+    }
+    val seen = Engine.withConf(spark, setKey -> "3", unsetKey -> "dynamic") {
+      (spark.conf.get(setKey), spark.conf.get(unsetKey))
+    }
+    assert(seen == ("3", "dynamic"))
+    check()
+    val e = intercept[IllegalStateException] {
+      Engine.withConf(spark, setKey -> "3", unsetKey -> "dynamic") {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    check()
+  }
+
+  test("SPARK_GRAFT_CONF overrides fail naming an unknown or out-of-range graft key") {
+    val valid = "spark.sql.shuffle.partitions=5"
+    Seq("spark.graft.dedup.denseUniversMax" -> "0",
+        "spark.graft.cc.localMaxRows" -> "-1",
+        "spark.graft.stream.stateParts" -> "0").foreach { case (key, bad) =>
+      val before = spark.conf.getAll
+      val e = intercept[IllegalArgumentException] {
+        Engine.applyConfOverrides(spark, s"$valid,$key=$bad")
+      }
+      assert(e.getMessage.contains(key), s"$key=$bad: ${e.getMessage}")
+      assert(spark.conf.getAll == before, s"$key=$bad: a pair was applied")
+    }
+    Engine.withConf(spark, "spark.sql.shuffle.partitions" -> "4",
+                    "spark.graft.cc.localMaxRows" -> "1") {
+      assert(Engine.applyConfOverrides(spark,
+        s"$valid, spark.graft.cc.localMaxRows=0,") ==
+        Seq("spark.sql.shuffle.partitions" -> "5",
+            "spark.graft.cc.localMaxRows" -> "0"))
+      assert(GraftConf.ccLocalMaxRows.get(spark) == 0L)
     }
   }
 }

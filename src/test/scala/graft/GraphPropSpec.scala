@@ -73,8 +73,7 @@ class GraphPropSpec extends SparkSpec {
         DedupOps.connectedComponents(nodes, pairs).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toMap
       val local = run() // default cap: these graphs always route local
-      spark.conf.set(key, "0")
-      val dist = try run() finally spark.conf.unset(key)
+      val dist = Engine.withConf(spark, key -> "0")(run())
       local == dist && local == unionFind(n, edges)
     }
     val res = SCTest.check(

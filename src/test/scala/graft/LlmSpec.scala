@@ -19,10 +19,8 @@ class LlmSpec extends SparkSpec {
   /** `body` with the pair engines forced onto the sparse prefix join (a
     * universe past denseUniverseMax); small fixtures route dense by default.
     */
-  private def onSparseRoute[A](body: => A): A = {
-    spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
-    try body finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
-  }
+  private def onSparseRoute[A](body: => A): A =
+    Engine.withConf(spark, "spark.graft.dedup.denseUniverseMax" -> "0")(body)
 
   private def corpus = Seq(
     (0L, "the quick brown fox jumps over the lazy dog"),
@@ -428,9 +426,7 @@ class LlmSpec extends SparkSpec {
       .limit(60) // ~all pairs share a code at T=0: keep the output small
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    spark.conf.set("spark.graft.dedup.denseUniverseMax", "0")
-    val sparse = try canon(DedupOps.containmentPairs(docs, 1e-7))
-    finally spark.conf.unset("spark.graft.dedup.denseUniverseMax")
+    val sparse = onSparseRoute(canon(DedupOps.containmentPairs(docs, 1e-7)))
     val dense = canon(DedupOps.containmentPairs(docs, 1e-7))
     assert(dense == sparse)
     assert(sparse.nonEmpty)

@@ -7,6 +7,11 @@
 #              planner-selected multiply takes the block operator
 #   sparse     every gate with the near-dup dense kernel off
 #              (spark.graft.dedup.denseUniverseMax=0)
+#   local-off  every gate with the driver-local cc union-find and sql8
+#              chain walk off and the near-dup verify spread forced on
+#              (cc.localMaxRows=0, sql8.localMaxRows=0,
+#              dedup.pairSpreadMinDocs=0; the three switches serve
+#              different gates, so one run forces all three)
 # Usage: tools/route_matrix.sh <sfDir> [outDir]
 # Exits nonzero when any configuration has a failing gate.
 set -u
@@ -37,4 +42,5 @@ print(' '.join(sorted(n for n in json.load(open(sys.argv[1]))
                       if re.match(r'm[0-9]+_', n))))" "$OUT/default/oracle_sql.json")
 run m-nobcast "spark.sql.autoBroadcastJoinThreshold=-1" $gates
 run sparse "spark.graft.dedup.denseUniverseMax=0"
+run local-off "spark.graft.cc.localMaxRows=0,spark.graft.sql8.localMaxRows=0,spark.graft.dedup.pairSpreadMinDocs=0"
 exit $status
