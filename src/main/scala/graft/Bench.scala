@@ -164,9 +164,15 @@ object Bench {
     // machine, not JVM state). One clean pass is enough for a truthful
     // min; three passes make it likely at least one dodges an episode.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    // Generated classes compiled per entry and pass (JVM-wide: in local
+    // mode task-side compiles count too). A warm pass that compiles again
+    // means the codegen cache no longer holds the working set.
+    def compiled(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val timings = (1 to passes).map { pass =>
       all.map { case (name, fn) =>
         val s = session(s"pass$pass.$name")
+        val c0 = compiled()
         val t0 = System.nanoTime()
         val ok =
           try { sink(fn(s, sfDir)); true }
@@ -176,14 +182,15 @@ object Bench {
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] pass$pass $name%-28s $dt%9.3f s${if (ok) "" else "  FAILED"}")
-        (name, dt, ok)
+        val nc = compiled() - c0
+        System.err.println(f"[bench] pass$pass $name%-28s $dt%9.3f s $nc%5d compiles${if (ok) "" else "  FAILED"}")
+        (name, dt, ok, nc)
       }
     }
     // min over successful runs only; a query that failed every pass reports -1
     // alongside its errors entry (rc=1), never a bogus fast-failure timing.
     val results = all.map { case (name, _) =>
-      val okRuns = timings.flatMap(_.collect { case (`name`, dt, true) => dt })
+      val okRuns = timings.flatMap(_.collect { case (`name`, dt, true, _) => dt })
       name -> (if (okRuns.nonEmpty) okRuns.min else -1.0)
     }
 
@@ -194,6 +201,10 @@ object Bench {
         case c => c.toString
       } + "\""
     val qs = results.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val cs = all.map { case (name, _) =>
+      val perPass = timings.flatMap(_.collect { case (`name`, _, _, nc) => nc })
+      s"${jstr(name)}:${perPass.mkString("[", ",", "]")}"
+    }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // Host-load bracket for the whole run: a quiet host sits near the
@@ -209,7 +220,7 @@ object Bench {
       else gauge.map { case (k, v) => s"${jstr(k)}:$v" }
         .mkString("\"gauge\":{", ",", "},")
     val loads = s"""$ov$gj"load1_start":$loadStart,"load1_end":${load1()}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec",$loads,"queries":$qs,"errors":$es,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec",$loads,"queries":$qs,"compiles":$cs,"errors":$es,"sf":"$sfDir"}"""
     // Round-5 postmortem: the single full line outgrew the driver's stdout
     // tail-capture window, so BENCH_r05.json came back `parsed: null` with
     // the per-query head truncated. Emit the full map FIRST (and persist it

@@ -35,6 +35,22 @@ object Engine {
     // Set here, not as a read-time side effect in the loader.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // Spark's JVM-wide cache of generated classes defaults to 100 entries,
+    // fewer than one perfbench query_mix pass generates (~146), so its LRU
+    // missed on every reuse and each warm pass recompiled them all. With an
+    // unbounded cache (maxEntries=0), one full graft.Verify on local[4]
+    // compiles 3,246 distinct classes at sf0.001 and 3,226 at sf0.01 (2,869
+    // and 2,885 once the isolation below is off), at most 77 in one gate;
+    // 4096 is the next power of two. Static conf: the first codegen in a
+    // JVM fixes the cache size.
+    .config("spark.sql.codegen.cache.maxEntries", 4096)
+    // The cache is keyed on the compiling thread's class loader as well.
+    // Each streaming query runs in a clone of the session, and with
+    // per-session artifact isolation the clone's tasks get a class loader
+    // of their own, so every stream run recompiled its classes (21 per
+    // s3_session_stream run). The engine adds no per-session jars or
+    // files, so the isolation guards nothing here.
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Apply `spec`, by default `SPARK_GRAFT_CONF="k=v,k=v"`, as session-conf
     * overrides — the probe, bench and verify harnesses' shared mechanism

@@ -1474,6 +1474,64 @@ object DedupOps {
     * labels — one scalar per round, not a data collect.
     */
   def connectedComponents(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    // LOCAL FINISH (round 15, guide §2.4 "remove shuffles outright"): when
+    // the graph fits the driver comfortably, run the union-find there
+    // instead of paying O(log d) rounds × ~6 stages of near-empty
+    // distributed jobs — the "finish small graphs on one machine" step of
+    // the MapReduce-CC literature (Kiveris et al. SOCC'14 run their final
+    // rounds locally once the contracted graph is small; GraphFrames' CC
+    // has the same endgame). The route is decided by one bounded collect
+    // per input: at most ⌊localMax/2⌋ + 1 pairs and localMax + 1 nodes
+    // come back, and the graph is local when max(nodes, 2·pairs) ≤
+    // localMax (each pair is two directed edges) — a measured size, not
+    // an estimate (the attachStrategy discipline), and one job per input
+    // instead of checkpoint + count + collect. The distributed pointer-
+    // jumping loop below is the at-scale route: match graphs at 100 TB are
+    // corpus-sized and must never be collected, and the bound caps what a
+    // too-large graph costs the driver before it gets there. The cap is
+    // rows, not bytes: both inputs are two LONGs per row (≤ 16 B + row
+    // overhead), so the default 1M-row cap bounds each collect at ~16 MB
+    // — dim-table scale. `spark.graft.cc.localMaxRows=0` forces the
+    // distributed loop (the A/B and property-test handle). Output is
+    // provably identical: both compute the min node id per component
+    // (min-label union-find ≡ converged min-label propagation), and
+    // GraphPropSpec pins the equality on random graphs over both routes
+    // and at the cap's boundary.
+    val localMax = math.min(graft.GraftConf.ccLocalMaxRows.get(spark),
+                            Int.MaxValue - 1L).toInt
+    if (localMax > 0) {
+      val edgeRows = pairs.select(col("da"), col("db"))
+        .limit(localMax / 2 + 1).collect()
+      lazy val nodeIds = docs.select(col("doc_id")).limit(localMax + 1)
+        .collect().map(_.getLong(0))
+      if (2L * edgeRows.length <= localMax && nodeIds.length <= localMax) {
+        import spark.implicits._
+        val parent = new java.util.HashMap[Long, Long](nodeIds.length * 2)
+        nodeIds.foreach(n => parent.put(n, n))
+        def find(x0: Long): Long = {
+          var r = x0
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x0
+          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+          r
+        }
+        edgeRows.foreach { e =>
+          // An edge with an endpoint absent from `docs` is inert — exactly
+          // the distributed loop's semantics (the neighbor join only
+          // propagates labels between nodes that HAVE labels; an unlabeled
+          // endpoint neither receives nor conducts). Every current caller
+          // passes nodes ⊇ endpoints, so this only matters for exactness.
+          val a0 = e.getLong(0); val b0 = e.getLong(1)
+          if (parent.containsKey(a0) && parent.containsKey(b0)) {
+            val a = find(a0); val b = find(b0)
+            if (a < b) parent.put(b, a) else if (b < a) parent.put(a, b)
+          }
+        }
+        return nodeIds.toSeq.map(n => (n, find(n)))
+          .toDF("doc_id", "component_id")
+      }
+    }
     val edges0 = pairs.select(col("da").as("x"), col("db").as("y"))
       .unionByName(pairs.select(col("db").as("x"), col("da").as("y")))
       .localCheckpoint(true)
@@ -1483,59 +1541,9 @@ object DedupOps {
     // default: each round re-scans these frames across ~6 stages, so 32
     // near-empty tasks per stage is pure scheduler latency on small graphs
     // (measured: np=4 vs np=32 halves round time at 1.2k nodes) while big
-    // graphs still fan out to full parallelism. The counts are free — both
-    // frames were just checkpointed.
-    val spark = docs.sparkSession
-    val nNodes = labels0.count()
-    val nEdges = edges0.count()
-    val rows = math.max(nNodes, nEdges)
-    // LOCAL FINISH (round 15, guide §2.4 "remove shuffles outright"): when
-    // the MEASURED graph fits the driver comfortably, run the union-find
-    // there instead of paying O(log d) rounds × ~6 stages of near-empty
-    // distributed jobs — the "finish small graphs on one machine" step of
-    // the MapReduce-CC literature (Kiveris et al. SOCC'14 run their final
-    // rounds locally once the contracted graph is small; GraphFrames' CC
-    // has the same endgame). The decision input is the two counts just
-    // taken on CHECKPOINTED frames — a measured size, not an estimate
-    // (the attachStrategy discipline), with the distributed pointer-
-    // jumping loop below as the at-scale route: match graphs at 100 TB
-    // are corpus-sized and must never be collected. The cap is rows, not
-    // bytes: both frames are two LONGs per row (≤ 16 B + row overhead),
-    // so the default 1M-row cap bounds the collect at ~16 MB — dim-table
-    // scale. `spark.graft.cc.localMaxRows=0` forces the distributed loop
-    // (the A/B and property-test handle). Output is provably identical:
-    // both compute the min node id per component (min-label union-find ≡
-    // converged min-label propagation), and GraphPropSpec pins the
-    // equality on random graphs over both routes.
-    val localMax = graft.GraftConf.ccLocalMaxRows.get(spark)
-    if (rows <= localMax && localMax > 0) {
-      import spark.implicits._
-      val nodeIds = labels0.select(col("x")).collect().map(_.getLong(0))
-      val edgeRows = edges0.collect()
-      val parent = new java.util.HashMap[Long, Long](nodeIds.length * 2)
-      nodeIds.foreach(n => parent.put(n, n))
-      def find(x0: Long): Long = {
-        var r = x0
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x0
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      edgeRows.foreach { e =>
-        // An edge with an endpoint absent from `docs` is inert — exactly
-        // the distributed loop's semantics (the neighbor join only
-        // propagates labels between nodes that HAVE labels; an unlabeled
-        // endpoint neither receives nor conducts). Every current caller
-        // passes nodes ⊇ endpoints, so this only matters for exactness.
-        val a0 = e.getLong(0); val b0 = e.getLong(1)
-        if (parent.containsKey(a0) && parent.containsKey(b0)) {
-          val a = find(a0); val b = find(b0)
-          if (a < b) parent.put(b, a) else if (b < a) parent.put(a, b)
-        }
-      }
-      return nodeIds.toSeq.map(n => (n, find(n)))
-        .toDF("doc_id", "component_id")
-    }
+    // graphs still fan out to full parallelism. The counts are cheap —
+    // both frames were just checkpointed.
+    val rows = math.max(labels0.count(), edges0.count())
     val np = math.max(4L, math.min(spark.sparkContext.defaultParallelism.toLong,
                                    rows / 50000L + 1L)).toInt
     val edges = edges0.repartition(np).localCheckpoint(true)

@@ -136,10 +136,11 @@ object MatchGraph {
     val (members0, reps) = DedupOps.exactContraction(docs)
     val members = members0.persist()
     try {
-      // THE one pair-engine run this artifact amortizes.
-      DedupOps.prefixJaccardPairs(reps, threshold, n)
-        .write.mode("overwrite").parquet(s"$r/rep_pairs")
-      val repPairs = s.read.parquet(s"$r/rep_pairs")
+      // THE one pair-engine run this artifact amortizes. Its result is
+      // already an eager local checkpoint on both routes, so the two
+      // expansions below read that frame, not the file just written.
+      val repPairs = DedupOps.prefixJaccardPairs(reps, threshold, n)
+      repPairs.write.mode("overwrite").parquet(s"$r/rep_pairs")
 
       // Doc-level expansion — the l2 output contract, the shared
       // [[DedupOps.expandRepPairs]] definition.

@@ -160,25 +160,29 @@ object SqlQueries {
       // pattern applied to the recursion): Spark's UnionLoop re-plans and
       // re-launches the step join EVERY iteration, so a depth-24 walk pays
       // 24 job rounds of scheduling + broadcast builds on a relation that
-      // is one edge row per order. When the MEASURED edge count (== the
-      // orders row count: the window neither filters nor explodes) fits
-      // the driver, walk the chains there — one window pass, one collect,
-      // a hash-map pointer chase — with the recursive SQL below kept as
-      // the at-scale route (a 100 TB orders table must never be
-      // collected). `spark.graft.sql8.localMaxRows=0` forces the
-      // distributed loop (the A/B + dual-route-equality-test handle);
-      // the default 1M-row cap bounds the collect at ~40 MB of longs.
+      // is one edge row per order. When the edge relation (one row per
+      // order: the window neither filters nor explodes) fits the driver,
+      // walk the chains there — one window pass, one collect, a hash-map
+      // pointer chase — with the recursive SQL below kept as the at-scale
+      // route (a 100 TB orders table must never be collected). The route
+      // is decided by that same collect, bounded at localMax + 1 rows: at
+      // most localMax rows walk locally, more take the recursion.
+      // `spark.graft.sql8.localMaxRows=0` forces the distributed loop (the
+      // A/B + dual-route-equality-test handle); the default 1M-row cap
+      // bounds the collect at ~40 MB of longs.
       // The walk mirrors the recursion's JOIN semantics exactly — follow
       // next_key to ANY edge row keyed by that o_orderkey, accumulate
       // cents/hop per produced row, MAX per customer — and bails to the
       // distributed route past the engine's own recursion depth limit so
       // pathological inputs keep Spark's error behavior.
-      val localMax = graft.GraftConf.sql8LocalMaxRows.get(s)
-      val nOrders = s.table("orders").count()
+      val localMax = math.min(graft.GraftConf.sql8LocalMaxRows.get(s),
+                              Int.MaxValue - 1L).toInt
+      val rows =
+        if (localMax > 0) s.sql(edgeSelect).limit(localMax + 1).collect()
+        else Array.empty[org.apache.spark.sql.Row]
       val localDone: Option[org.apache.spark.sql.DataFrame] =
-        if (localMax > 0 && nOrders <= localMax) {
+        if (localMax > 0 && rows.length <= localMax) {
           import s.implicits._
-          val rows = s.sql(edgeSelect).collect()
           // o_orderkey -> edge rows (orderkeys are unique in practice, but
           // the join semantics allow fan-out; mirror them).
           val byKey = new java.util.HashMap[Long, List[Int]](rows.length * 2)

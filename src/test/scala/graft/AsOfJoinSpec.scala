@@ -96,12 +96,8 @@ class AsOfJoinSpec extends SparkSpec {
     // would re-merge the tiny test partitions), then we assert the hot
     // key's probe rows actually land in >1 shuffle task AND that the join
     // shuffles on the widened (key, salt).
-    val conf = spark.conf
-    val prevBc = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevCo = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+                    "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val left = ((1 to 4000).map(i => (1L, i.toLong)) ++
                   (1 to 20).map(i => (i.toLong % 5 + 2, i.toLong)))
         .toDF("k", "payload")
@@ -115,9 +111,6 @@ class AsOfJoinSpec extends SparkSpec {
       val hotTasks = joined.filter(col("k") === 1L)
         .select(spark_partition_id().as("pid")).distinct().count()
       assert(hotTasks > 1, s"hot key serialized into $hotTasks task")
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCo)
     }
   }
 

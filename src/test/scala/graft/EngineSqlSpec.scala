@@ -57,10 +57,7 @@ class EngineSqlSpec extends SparkSpec {
 
   test("sql20: the BROADCAST hint overrides a disabled auto-broadcast threshold") {
     Engine.registerViews(spark, sfDir)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try {
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def plan(hint: String): String = {
         val df = spark.sql(
           s"""SELECT $hint c_mktsegment, COUNT(*) AS n
@@ -75,7 +72,7 @@ class EngineSqlSpec extends SparkSpec {
       val unhinted = plan("")
       assert(!unhinted.contains("BroadcastHashJoin"),
              s"without the hint, -1 threshold must forbid broadcast:\n$unhinted")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("sql24: ANALYZE + CBO reorders the mis-written star join; without CBO the written order stands") {
@@ -183,15 +180,28 @@ class EngineSqlSpec extends SparkSpec {
     // r16: the gate runs a driver-local chain walk when the measured edge
     // count fits (guide §2.4); spark.graft.sql8.localMaxRows=0 forces the
     // UnionLoop route. Both must produce identical rows AND schema.
+    // The route is one collect bounded at localMax + 1 edge rows (one per
+    // order): exactly localMax rows walk locally, one more recurses.
     val key = "spark.graft.sql8.localMaxRows"
-    val local = operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
+    val nOrders = Engine.sql(spark, sfDir, "SELECT * FROM orders").count()
+    def run(cap: Long): org.apache.spark.sql.DataFrame =
+      Engine.withConf(spark, key -> cap.toString) {
+        operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
+      }
+    // The local walk returns a driver-built relation; the recursion does not.
+    def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val local = run(GraftConf.sql8LocalMaxRows.default)
     val localRows = local.collect().toSeq
-    Engine.withConf(spark, key -> "0") {
-      val dist = operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
-      assert(local.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-             dist.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      assert(localRows == dist.collect().toSeq)
-      assert(localRows.nonEmpty)
+    assert(localRows.nonEmpty && isLocal(local))
+    Seq(nOrders -> true, (nOrders - 1) -> false, 0L -> false).foreach {
+      case (cap, wantLocal) =>
+        val df = run(cap)
+        assert(isLocal(df) == wantLocal, s"localMaxRows=$cap over $nOrders orders")
+        assert(local.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+               df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+        assert(df.collect().toSeq == localRows, s"localMaxRows=$cap")
     }
   }
 
@@ -219,14 +229,11 @@ class EngineSqlSpec extends SparkSpec {
   }
 
   test("Tables.loadEvents works under a bare session conf (defensive nanos)") {
-    // Simulate a session missing the Engine.configure conf: unset, load,
-    // restore. The loader must set it itself (r3 ADVICE).
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    spark.conf.unset(key)
-    try {
-      val n = Tables.loadEvents(spark, sfDir).count()
-      assert(n > 0)
-    } finally spark.conf.set(key, "true")
+    // Simulate a session without the Engine.configure conf (false is the
+    // unset default). The loader must set it itself (r3 ADVICE).
+    Engine.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+      assert(Tables.loadEvents(spark, sfDir).count() > 0)
+    }
   }
 
   test("sql23 gaps-and-islands sessions match a brute-force per-user scan") {
@@ -304,6 +311,37 @@ class EngineSqlSpec extends SparkSpec {
       assert(e.getMessage.contains(key) && e.getMessage.contains(bad),
         s"$key=$bad: ${e.getMessage}")
     }
+  }
+
+  test("a warm re-run of a working set wider than 100 generated classes compiles nothing") {
+    // Spark's default codegen cache holds 100 classes; Engine.configure
+    // sizes it to the engine's working set. Primitive literals are inlined
+    // into the generated source, so every i below is its own class.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Long = {
+      val c0 = compiled()
+      (0 until 200).foreach { i =>
+        spark.range(64).selectExpr(s"id * $i + $i AS x")
+          .filter(s"x % ${i + 2} = 0").collect()
+      }
+      compiled() - c0
+    }
+    val cold = pass()
+    assert(cold >= 200, s"the first pass compiled only $cold classes")
+    val warm = pass()
+    assert(warm <= cold / 20, s"the warm pass recompiled $warm of $cold classes")
+    // A streaming query runs in a clone of the session; its re-run must
+    // find the classes its first run compiled.
+    def stream(): Long = {
+      val c0 = compiled()
+      operators.EventQueries.queries("s3_session_stream")(spark, sfDir).collect()
+      compiled() - c0
+    }
+    val streamCold = stream()
+    val streamWarm = stream()
+    assert(streamWarm <= streamCold / 20,
+      s"the stream's re-run recompiled $streamWarm of $streamCold classes")
   }
 
   test("withConf restores a set key, unsets an unset one, also when the body throws") {

@@ -79,6 +79,29 @@ class GraphPropSpec extends SparkSpec {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
     assert(res.passed, res.status.toString)
+
+    // At the cap's boundary: a graph of max(nodes, 2·pairs) = cap rows
+    // finishes locally (a driver-built relation), one row more takes the
+    // distributed loop, with equal outputs. One graph bound by its nodes,
+    // one by its pairs.
+    Seq((10L, Seq((0L, 1L), (1L, 2L), (5L, 7L))),
+        (6L, Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 3L), (4L, 5L), (1L, 3L))))
+      .foreach { case (n, edges) =>
+        val rows = math.max(n, 2L * edges.size)
+        val nodes = (0L until n).map(i => (i, "")).toDF("doc_id", "text")
+        val pairs = edges.toDF("da", "db")
+        val want = unionFind(n, edges)
+        Seq(rows -> true, (rows - 1) -> false).foreach { case (cap, wantLocal) =>
+          Engine.withConf(spark, key -> cap.toString) {
+            val out = DedupOps.connectedComponents(nodes, pairs)
+            val isLocal = out.queryExecution.analyzed.collectLeaves().forall(
+              _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+            assert(isLocal == wantLocal, s"localMaxRows=$cap, $rows rows")
+            assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toMap == want,
+              s"localMaxRows=$cap")
+          }
+        }
+      }
   }
 
   test("connectedComponents walks CYCLIC graphs (the sql8 recursion boundary)") {

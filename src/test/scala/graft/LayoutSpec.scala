@@ -150,28 +150,22 @@ class LayoutSpec extends SparkSpec {
     val base = System.getProperty("java.io.tmpdir") + "/graft-layout-spec/split"
     spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
       .repartition(8).write.mode("overwrite").parquet(base)
-    val confs = Seq("spark.sql.files.maxPartitionBytes",
-                    "spark.sql.files.openCostInBytes")
-    val prev = confs.map(k => k -> spark.conf.getOption(k))
-    def tasksAt(maxPartitionBytes: Long): Int = {
-      spark.conf.set("spark.sql.files.maxPartitionBytes",
-                     maxPartitionBytes.toString)
-      // openCost=0 isolates the byte arithmetic from the per-file seek
-      // padding (which would blur the 2x ratio on 8 small files).
-      spark.conf.set("spark.sql.files.openCostInBytes", "0")
-      spark.read.parquet(base).rdd.getNumPartitions
-    }
-    try {
-      val fine = tasksAt(512 * 1024)
-      val coarse = tasksAt(1024 * 1024)
-      assert(fine > coarse,
-        s"fine(512KB)=$fine tasks must exceed coarse(1MB)=$coarse")
-      val ratio = fine.toDouble / coarse
-      assert(ratio > 1.5 && ratio < 2.6,
-        s"halving maxPartitionBytes: $coarse tasks @1MB -> $fine tasks " +
-          s"@512KB (ratio $ratio, expected ~2x)")
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    // openCost=0 isolates the byte arithmetic from the per-file seek
+    // padding (which would blur the 2x ratio on 8 small files).
+    def tasksAt(maxPartitionBytes: Long): Int =
+      Engine.withConf(spark,
+          "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes.toString,
+          "spark.sql.files.openCostInBytes" -> "0") {
+        spark.read.parquet(base).rdd.getNumPartitions
+      }
+    val fine = tasksAt(512 * 1024)
+    val coarse = tasksAt(1024 * 1024)
+    assert(fine > coarse,
+      s"fine(512KB)=$fine tasks must exceed coarse(1MB)=$coarse")
+    val ratio = fine.toDouble / coarse
+    assert(ratio > 1.5 && ratio < 2.6,
+      s"halving maxPartitionBytes: $coarse tasks @1MB -> $fine tasks " +
+        s"@512KB (ratio $ratio, expected ~2x)")
   }
 
   test("io10: dynamic overwrite replaces only the written partition's files") {
@@ -187,11 +181,10 @@ class LayoutSpec extends SparkSpec {
         .map(f => f.getPath.getName -> f.getModificationTime).toMap
     val oBefore = files("O")
     val fBefore = files("F")
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.set(key, "dynamic")
-    try orders.filter(col("o_orderstatus") === "F")
-      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
-    finally spark.conf.unset(key)
+    Engine.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      orders.filter(col("o_orderstatus") === "F")
+        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
+    }
     assert(files("O") == oBefore, "untouched partition's files must not change")
     assert(files("F") != fBefore, "overwritten partition must have new files")
   }
@@ -326,9 +319,7 @@ class LayoutSpec extends SparkSpec {
     val confs = Seq(
       "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
       "spark.sql.parquet.aggregatePushdown" -> "true")
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Engine.withConf(spark, confs: _*) {
       val df = spark.read.parquet(s"$dir/orders.parquet")
         .agg(count(lit(1)).as("n"),
              min(col("o_orderkey")).as("min_key"),
@@ -339,13 +330,13 @@ class LayoutSpec extends SparkSpec {
              plan.contains("COUNT(*)") && plan.contains("MIN(o_orderkey)"),
              s"aggregate must reach the scan's footer stats:\n$plan")
       // The stats-answered result must equal the data-scanned one.
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-      val scanned = spark.read.parquet(s"$dir/orders.parquet")
-        .agg(count(lit(1)), min(col("o_orderkey")), max(col("o_orderkey")))
-        .collect()
+      val scanned =
+        Engine.withConf(spark, "spark.sql.parquet.aggregatePushdown" -> "false") {
+          spark.read.parquet(s"$dir/orders.parquet")
+            .agg(count(lit(1)), min(col("o_orderkey")), max(col("o_orderkey")))
+            .collect()
+        }
       assert(pushed.map(_.toSeq).toSeq == scanned.map(_.toSeq).toSeq)
-    } finally prior.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 

@@ -32,9 +32,7 @@ class MatMulPlanSpec extends SparkSpec {
   }
 
   test("without broadcast the strategy switches to the block-GEMM path") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = planned()
       val plan = executedPlan(df)
       assert(blockShapes(df).size == 1, s"expected one BlockMatMulExec:\n$plan")
@@ -47,7 +45,7 @@ class MatMulPlanSpec extends SparkSpec {
         s"R=${shape.r} keys=${shape.keys}"), plan)
       assert(canon(df) == canon(MatrixOps.blockMatmul(
         MatrixGen.matA(spark, 40, 30), MatrixGen.matB(spark, 30, 20), 16)))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("the GEMM stage runs one task per cuboid key; R = 1 has no partial-tile shuffle") {
@@ -75,10 +73,8 @@ class MatMulPlanSpec extends SparkSpec {
     val a = MatrixGen.matA(spark, 40, 30)
     val b = MatrixGen.matB(spark, 30, 20)
     val want = canon(MatrixOps.matmul(a, b).filter("v != 0"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.sparkContext.addSparkListener(listener)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = MatrixOps.multiplyPlanned(a, b)
       run(df)
       val Seq(shape) = blockShapes(df)
@@ -93,10 +89,7 @@ class MatMulPlanSpec extends SparkSpec {
       assert(tasksOf("BlockMatMul gemm") == Seq(12), stages)
       assert(tasksOf("BlockMatMul partial C") == Seq(6), stages)
       assert(canon(split) == want)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a MatMul node planned again under another broadcast setting takes that setting's route") {
@@ -111,10 +104,9 @@ class MatMulPlanSpec extends SparkSpec {
       blockShapes(q)
     }
     assert(route().isEmpty, "expected the row join first")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try assert(route().nonEmpty, "the block route must be planned once broadcast is off")
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(route().nonEmpty, "the block route must be planned once broadcast is off")
+    }
   }
 
   test("cost statistics flip the physical path across the m1 size sweep") {

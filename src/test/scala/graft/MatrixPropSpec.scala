@@ -100,13 +100,11 @@ class MatrixPropSpec extends SparkSpec {
     val rowJoin = product
     assert(blockShapes(rowJoin).isEmpty, "expected the row join")
     val rowJoinRows = toSet(rowJoin)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val block = product
       assert(blockShapes(block).nonEmpty, "expected the block route")
       (rowJoinRows, toSet(block))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("transpose(A·B) == transpose(B)·transpose(A) for all shapes") {

@@ -296,16 +296,14 @@ class PlanAuditSpec extends SparkSpec {
 
   test("a deliberately-broken plan (non-broadcast crossJoin) trips the audit") {
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // Catalyst plans a small crossJoin as BroadcastNestedLoopJoin; disable
     // broadcast so the physical plan is the CartesianProduct the flag hunts.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Engine.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = (1L to 50L).toDF("x")
       val b = (1L to 50L).toDF("y")
       val flags = PlanAudit.audit(a.crossJoin(b).agg(count(lit(1))))
       assert(flags("CartesianProduct(!)"),
              "the audit failed to flag an actual cartesian product")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }

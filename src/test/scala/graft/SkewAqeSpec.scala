@@ -30,9 +30,7 @@ class SkewAqeSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "131072",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "131072")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Engine.withConf(spark, confs: _*) {
       // 5/6 of the fact lands on ONE key (plus a uniform 2000-key tail),
       // so one shuffle partition carries ~100x the median bytes — the
       // key-skew shape AQE must catch at runtime.
@@ -49,9 +47,6 @@ class SkewAqeSpec extends SparkSpec {
       // Splitting must not change semantics: every fact row matches its
       // one dim key exactly once.
       assert(joined.count() == 120000L)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

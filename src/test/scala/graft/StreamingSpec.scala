@@ -20,6 +20,11 @@ class StreamingSpec extends SparkSpec {
   /** Epoch micros of 2024-01-01 00:00 UTC + h hours — window-start values. */
   private def ws(h: Int): Long = 1704067200000000L + h * 3600000000L
 
+  /** Run `body` with the RocksDB state-store provider. */
+  private def withRocksDb[A](body: => A): A =
+    Engine.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
   private def runStream(events: Seq[Seq[Ev]],
                         build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
                         mode: String, name: String) = {
@@ -236,11 +241,7 @@ class StreamingSpec extends SparkSpec {
     // 'nofp', canonical = self — in the same batch AND across batches.
     import graft.streaming.EventStreams.{FpDoc, FpStatus}
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                        "RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[FpDoc]
       val statuses = EventStreams.fpIndexStatuses(ms.toDS())
       val q = statuses.writeStream
@@ -259,7 +260,7 @@ class StreamingSpec extends SparkSpec {
         10L -> ((10L, "nofp")), 11L -> ((11L, "nofp")),
         12L -> ((12L, "first")), 20L -> ((20L, "nofp")),
         21L -> ((12L, "dup"))), s"got $got")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("s30 LSH index: gate pairs equal an independent replay, cross-batch") {
@@ -304,11 +305,7 @@ class StreamingSpec extends SparkSpec {
   test("LSH index state: the pair emits in the batch its later doc arrives") {
     import graft.streaming.EventStreams.{BandRow, LshPair}
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                        "RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[BandRow]
       val q = EventStreams.lshIndexPairs(ms.toDS()).toDF.writeStream
         .format("memory").queryName("t_lsh_idx").outputMode("append").start()
@@ -331,7 +328,7 @@ class StreamingSpec extends SparkSpec {
       } finally q.stop()
       val got = spark.table("t_lsh_idx").as[LshPair].collect().toSeq.distinct
       assert(got == Seq(LshPair(1, 2, 63)), s"got $got")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("s31 span index: gate masks equal an independent arrival-order replay") {
@@ -387,11 +384,7 @@ class StreamingSpec extends SparkSpec {
   test("span index state: an increment occurrence masks against base state") {
     import graft.streaming.EventStreams.{GramOcc, SpanDup}
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                        "RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[GramOcc]
       val q = EventStreams.spanIndexDups(ms.toDS()).toDF.writeStream
         .format("memory").queryName("t_span_idx").outputMode("append").start()
@@ -408,7 +401,7 @@ class StreamingSpec extends SparkSpec {
       } finally q.stop()
       val got = spark.table("t_span_idx").as[SpanDup].collect().toSet
       assert(got == Set(SpanDup(4L, 3L), SpanDup(3L, 1L)), s"got $got")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("s29 KMV monitor: per-batch sketch readings equal the phase replays") {
@@ -469,10 +462,8 @@ class StreamingSpec extends SparkSpec {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
         "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     val ckpt = java.nio.file.Files.createTempDirectory("t-chlog-")
-    try {
+    try Engine.withConf(spark, confs: _*) {
       val ms = MemoryStream[Ev]
       val q = EventStreams.tumblingCounts(ms.toDF()).writeStream
         .format("memory").queryName("t_s26c").outputMode("complete")
@@ -488,11 +479,7 @@ class StreamingSpec extends SparkSpec {
         .count()
       assert(changelogs > 0,
         "RocksDB changelog checkpointing produced no .changelog files")
-    } finally {
-      prev.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      EventStreams.deleteRecursively(ckpt)
-    }
+    } finally EventStreams.deleteRecursively(ckpt)
   }
 
   test("s10 replayed micro-batch lands idempotently (batchId-keyed overwrite)") {
@@ -610,11 +597,7 @@ class StreamingSpec extends SparkSpec {
   test("transformWithState sessions: extension deletes the stale timer, emits once") {
     import graft.streaming.EventStreams.{UserEvent, UserSession}
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                        "RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[UserEvent]
       val sessions = EventStreams.twsSessions(ms.toDS(), gapMinutes = 30)
       val q = sessions.writeStream
@@ -638,17 +621,13 @@ class StreamingSpec extends SparkSpec {
         .map(s => (s.user_id, s.n_events, s.sum_cents)).toSeq.sorted
       assert(got.count(_._1 == 1L) == 1, s"user-1 session must emit once: $got")
       assert(got.contains((1L, 3L, 450L)), s"3 events, 450 cents: $got")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("transformWithState map state: eviction flushes partials that sum to the total") {
     import graft.streaming.EventStreams.{TypedEvent, UserTypeCount}
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                        "RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[TypedEvent]
       val counts = EventStreams.twsTypeCounts(ms.toDS(), gapMinutes = 30)
       val q = counts.writeStream
@@ -682,17 +661,13 @@ class StreamingSpec extends SparkSpec {
       // Partials sum to the per-(user, type) totals.
       val clickTotal = u1.filter(_._2 == "click").map(_._4).sum
       assert(clickTotal == 900L, s"click partials must sum to 900: $got")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("transformWithState list state: out-of-order appends digest in event order") {
     import graft.streaming.EventStreams.{IdEvent, SessionDigest}
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-                        "RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[IdEvent]
       val digests = EventStreams.twsSessionDigests(ms.toDS(), gapMinutes = 30)
       val q = digests.writeStream
@@ -722,7 +697,7 @@ class StreamingSpec extends SparkSpec {
         s"session-1 digest must weight by event order: $got")
       assert(got.contains((1L, 1L, 400L, 400L)), s"session-2 digest: $got")
       assert(got.count(_._1 == 1L) == 2, s"user 1 closes exactly twice: $got")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("file sink: _spark_metadata manifest governs the read; stray files are invisible") {
