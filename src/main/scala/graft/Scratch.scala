@@ -1,0 +1,84 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
+
+/** The one owner of this JVM's scratch directories.
+  *
+  * Every scratch path the engine writes lives under `graft-scratch/jvm-<pid>`
+  * in one of two bases: the JVM's temp dir (a harness may point it at a
+  * per-run directory, so it is read from the property, never assumed) and a
+  * tmpfs twin under `/dev/shm` where the host has one. The pid scope keeps
+  * two JVMs over one fixture off each other's files, and no other process
+  * reads them, so an exit hook deletes both of this JVM's roots. A JVM
+  * killed before its hook ran leaves its roots behind; the first use of
+  * this object in any later JVM sweeps the roots whose process is gone.
+  */
+object Scratch {
+
+  private val bases: Seq[File] =
+    (new File(System.getProperty("java.io.tmpdir")) +:
+      Some(new File("/dev/shm")).filter(_.isDirectory).toSeq)
+      .map(new File(_, "graft-scratch"))
+
+  private val scope = s"jvm-${ProcessHandle.current().pid()}"
+  private val disk = new File(bases.head, scope)
+  private val tmpfs = new File(bases.last, scope)
+
+  sweep(bases)
+  sys.addShutdownHook(Seq(disk, tmpfs).foreach(f => delete(f.toPath)))
+
+  /** A stable directory for `kind` and `key` (a fixture dir, a corpus
+    * digest input), the same path on every call in this JVM: the home of
+    * results memoized across calls. The key enters as a 64-bit SHA-256
+    * prefix, so two keys never share a directory in practice. The writer
+    * creates the directory.
+    */
+  def dir(kind: String, key: String): String = {
+    val tag = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+    s"$disk/$kind-$tag"
+  }
+
+  /** A fresh empty directory, deleted when `body` returns or throws. With
+    * `tmpfs` it sits on the tmpfs base where the host has one (streaming
+    * checkpoints: dozens of small synced files per micro-batch).
+    */
+  def using[A](kind: String, tmpfs: Boolean = false)(body: Path => A): A = {
+    val root = if (tmpfs) this.tmpfs else disk
+    root.mkdirs()
+    val d = Files.createTempDirectory(root.toPath, s"$kind-")
+    try body(d) finally delete(d)
+  }
+
+  /** Best-effort recursive delete. */
+  private def delete(path: Path): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(path.toFile)
+
+  /** Writes `df` as exactly one Parquet file at `target`. Spark writes a
+    * directory, so the part file is staged under `staging` (which must not
+    * lie inside a directory a file source lists) and moved into place; the
+    * staging directory is deleted afterwards.
+    */
+  def writeSingleParquet(df: DataFrame, staging: Path, target: Path): Unit = {
+    df.coalesce(1).write.parquet(staging.toString)
+    val parts = staging.toFile.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    require(parts.length == 1,
+      s"expected one staged part file in $staging, got ${parts.length}")
+    Files.move(parts.head.toPath, target)
+    delete(staging)
+  }
+
+  /** Deletes the `jvm-<pid>` roots under each base whose process is gone.
+    * Live processes' roots, this JVM's among them, and entries that are not
+    * a JVM root stay.
+    */
+  private[graft] def sweep(bases: Seq[File]): Unit =
+    bases.flatMap(b => Option(b.listFiles()).toSeq.flatten).foreach { d =>
+      val pid = Some(d.getName).filter(_.startsWith("jvm-"))
+        .flatMap(_.stripPrefix("jvm-").toLongOption)
+      if (pid.exists(ProcessHandle.of(_).isEmpty)) delete(d.toPath)
+    }
+}

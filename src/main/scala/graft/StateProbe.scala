@@ -87,13 +87,10 @@ object StateProbe {
     // land entirely inside the 1× rung and invert the ladder's shape —
     // the first probe run read 1× bulk_s 11.4 s vs 8× 3.7 s on identical
     // code, a pure first-touch artifact.
-    locally {
-      val root = java.nio.file.Files.createTempDirectory("graft-stateprobe-warm-")
-      val srcDir = root.resolve("src"); java.nio.file.Files.createDirectory(srcDir)
-      base.limit(5000).coalesce(1).write.parquet(root.resolve("w").toString)
-      val part = new java.io.File(root.resolve("w").toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, srcDir.resolve("warm.parquet"))
+    Scratch.using("stateprobe-warm") { root =>
+      val srcDir = java.nio.file.Files.createDirectory(root.resolve("src"))
+      Scratch.writeSingleParquet(base.limit(5000), root.resolve("w"),
+                                 srcDir.resolve("warm.parquet"))
       val stream = spark.readStream.schema(base.schema).parquet(srcDir.toString)
       val q = EventStreams.twsSessionDigests(
         stream.select(col("user_id"), col("event_id"), col("ts"), col("value"))
@@ -103,7 +100,6 @@ object StateProbe {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      EventStreams.deleteRecursively(root)
     }
 
     println(f"${"x"}%3s ${"chlog"}%5s ${"events"}%8s ${"bulk_s"}%8s " +
@@ -136,18 +132,13 @@ object StateProbe {
         // multi-second stall episodes (first probe: a 24.5 s outlier at
         // 1× next to 3.1 s at 8× on identical code), and an 8-commit run
         // is short enough that one stall dominates the cell.
-        val reps = (1 to 3).map { _ =>
-          val root = java.nio.file.Files.createTempDirectory("graft-stateprobe-")
-          val srcDir = root.resolve("src"); java.nio.file.Files.createDirectory(srcDir)
+        val reps = (1 to 3).map(_ => Scratch.using("stateprobe") { root =>
+          val srcDir = java.nio.file.Files.createDirectory(root.resolve("src"))
           val ckpt = root.resolve("ckpt").toString
           // 8 ts-ordered bulk files → 8 time-ordered micro-batches per rung.
           (0 until 8).foreach { b =>
-            val scratch = root.resolve(s"w$b").toString
-            evx.filter(bucketCol === b)
-              .coalesce(1).write.parquet(scratch)
-            val part = new java.io.File(scratch).listFiles()
-              .find(_.getName.endsWith(".parquet")).get
-            java.nio.file.Files.copy(part.toPath, srcDir.resolve(f"bulk_$b%02d.parquet"))
+            Scratch.writeSingleParquet(evx.filter(bucketCol === b),
+              root.resolve("w"), srcDir.resolve(f"bulk_$b%02d.parquet"))
           }
           def run(): (Double, Long) = {
             val stream = spark.readStream.schema(evx.schema)
@@ -169,15 +160,11 @@ object StateProbe {
           }
           val (bulkS, stateRows) = run()
           val ckptMb = dirBytes(root.resolve("ckpt")) / 1e6
-          delta.coalesce(1).write.mode("overwrite")
-            .parquet(root.resolve("wd").toString)
-          val dpart = new java.io.File(root.resolve("wd").toString).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(dpart.toPath, srcDir.resolve("delta.parquet"))
+          Scratch.writeSingleParquet(delta, root.resolve("w"),
+                                     srcDir.resolve("delta.parquet"))
           val (deltaS, _) = run()
-          EventStreams.deleteRecursively(root)
           (bulkS, stateRows, ckptMb, deltaS)
-        }
+        })
         println(f"$x%3d ${if (changelog) "on" else "off"}%5s $n%8d " +
                 f"${reps.map(_._1).min}%8.2f ${reps.map(_._2).max}%10d " +
                 f"${reps.map(_._3).max}%8.1f ${reps.map(_._4).min}%8.2f")

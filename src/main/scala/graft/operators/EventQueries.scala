@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Engine, Q, Tables}
+import graft.{Engine, Q, Scratch, Tables}
 import graft.functions.TextFunctions
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,9 +49,8 @@ object EventQueries {
   private def sentinelStream(s: SparkSession, d: String, types: Seq[String])(
       body: DataFrame => DataFrame): DataFrame = {
     val raw = Tables.loadEventsRaw(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sentinel-")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sentinel-tmp-")
-    try {
+    Scratch.using("sentinel") { root =>
+      val dir = java.nio.file.Files.createDirectory(root.resolve("stream"))
       // Files.copy on a directory copies it as an EMPTY dir — a regenerated
       // Spark-written fixture (a directory of part files) would silently
       // stream zero rows. Fail loudly instead.
@@ -79,24 +78,18 @@ object EventQueries {
           java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
             sentinelMicros / 1000000L, (sentinelMicros % 1000000L) * 1000L))
       }
-      // Written OUTSIDE the stream dir (the file source lists it).
-      val tmpOut = tmp.resolve("out").toString
       val rows: java.util.List[org.apache.spark.sql.Row] =
         scala.jdk.CollectionConverters.SeqHasAsJava(
           types.zipWithIndex.map { case (t, i) =>
             org.apache.spark.sql.Row(-1L - i, sentinelTs, -1L, t, 0.0, "{}")
           }).asJava
-      s.createDataFrame(rows, raw.schema).coalesce(1).write.parquet(tmpOut)
-      val part = new java.io.File(tmpOut).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, dir.resolve("zz_sentinel.parquet"))
+      // Staged OUTSIDE the stream dir (the file source lists it).
+      Scratch.writeSingleParquet(s.createDataFrame(rows, raw.schema),
+        root.resolve("staging"), dir.resolve("zz_sentinel.parquet"))
       body(Tables.withEventTime(
         s.readStream.schema(raw.schema)
           .option("pathGlobFilter", "*.parquet")
           .parquet(dir.toString)))
-    } finally {
-      EventStreams.deleteRecursively(tmp)
-      EventStreams.deleteRecursively(dir)
     }
   }
 
@@ -129,17 +122,12 @@ object EventQueries {
     * directory, clean up after.
     */
   private def withBaseIncrementStream[A](df: DataFrame)
-      (body: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-phasestream-")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-phasestream-tmp-")
-    try {
+      (body: String => A): A =
+    Scratch.using("phasestream") { root =>
+      val dir = java.nio.file.Files.createDirectory(root.resolve("stream"))
       def writeOne(part: DataFrame, name: String, mtime: Long): Unit = {
-        val out = tmp.resolve(name + "-out").toString
-        part.coalesce(1).write.parquet(out)
-        val f = new java.io.File(out).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
         val dst = dir.resolve(name)
-        java.nio.file.Files.copy(f.toPath, dst)
+        Scratch.writeSingleParquet(part, root.resolve("staging"), dst)
         require(dst.toFile.setLastModified(mtime),
           s"cannot pin mtime of $dst — batch order would be undefined")
       }
@@ -149,9 +137,36 @@ object EventQueries {
       writeOne(df.filter(col("doc_id") % 2 === 1), "1_inc.parquet",
                now - 30000)
       body(dir.toString)
-    } finally {
-      EventStreams.deleteRecursively(tmp)
-      EventStreams.deleteRecursively(dir)
+    }
+
+  /** The s19/s26 two-incarnation restart run (see s19) under the bounded
+    * state width plus `stateConfs`, the state backend's confs.
+    */
+  private def restartRecovery(s: SparkSession, d: String, sink: String,
+                              stateConfs: (String, String)*): DataFrame = {
+    val raw = Tables.loadEventsRaw(s, d)
+    Scratch.using("restart") { root =>
+      val dir = java.nio.file.Files.createDirectory(root.resolve("stream"))
+      EventStreams.withBoundedStateParts(s, stateConfs: _*) {
+        def addHalf(m: Int): Unit =
+          Scratch.writeSingleParquet(raw.filter(col("event_id") % 2 === m),
+            root.resolve("staging"), dir.resolve(s"half$m.parquet"))
+        def run(): DataFrame = {
+          val stream = Tables.withEventTime(
+            s.readStream.schema(raw.schema).parquet(dir.toString))
+          val q = EventStreams.tumblingCounts(stream).writeStream
+            .format("memory").queryName(sink).outputMode("complete")
+            .option("checkpointLocation", root.resolve("ckpt").toString)
+            .start()
+          try q.processAllAvailable() finally q.stop()
+          s.table(sink)
+        }
+        addHalf(0)
+        run()                              // incarnation 1: evens only
+        addHalf(1)
+        run()                              // incarnation 2: resumes, adds odds
+          .orderBy("ws", "event_type").localCheckpoint(true)
+      }
     }
   }
 
@@ -388,38 +403,7 @@ object EventQueries {
     // state, so hashing the final table against the whole-input batch
     // oracle pins the exactly-once resume path, the streaming guarantee
     // a production pipeline actually lives on (failover, deploys).
-    "s19_restart_recovery" -> { (s, d) =>
-      val raw = Tables.loadEventsRaw(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-restart-")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-restart-tmp-")
-      try EventStreams.withBoundedStateParts(s) {
-        def addHalf(m: Int): Unit = {
-          val out = tmp.resolve(s"half$m").toString
-          raw.filter(col("event_id") % 2 === m).coalesce(1).write.parquet(out)
-          val part = new java.io.File(out).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, dir.resolve(s"half$m.parquet"))
-        }
-        def run(): DataFrame = {
-          val stream = Tables.withEventTime(
-            s.readStream.schema(raw.schema).parquet(dir.toString))
-          val q = EventStreams.tumblingCounts(stream).writeStream
-            .format("memory").queryName("s19_sink").outputMode("complete")
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .start()
-          try q.processAllAvailable() finally q.stop()
-          s.table("s19_sink")
-        }
-        addHalf(0)
-        run()                              // incarnation 1: evens only
-        addHalf(1)
-        run()                              // incarnation 2: resumes, adds odds
-          .orderBy("ws", "event_type").localCheckpoint(true)
-      } finally {
-        EventStreams.deleteRecursively(dir)
-        EventStreams.deleteRecursively(tmp)
-      }
-    },
+    "s19_restart_recovery" -> ((s, d) => restartRecovery(s, d, "s19_sink")),
 
     // S26 — s19's restart-recovery contract on ROCKSDB state with
     // CHANGELOG CHECKPOINTING: instead of uploading a full state-store
@@ -433,39 +417,8 @@ object EventQueries {
     // the oracle is the same batch twin as s19 — one contract, third
     // state backend configuration (default HDFS ckpt → RocksDB →
     // RocksDB+changelog).
-    "s26_changelog_restart" -> { (s, d) =>
-      val raw = Tables.loadEventsRaw(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft-chlog-")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-chlog-tmp-")
-      try EventStreams.withBoundedStateParts(
-          s, rocksDbProvider, changelogKey -> "true") {
-        def addHalf(m: Int): Unit = {
-          val out = tmp.resolve(s"half$m").toString
-          raw.filter(col("event_id") % 2 === m).coalesce(1).write.parquet(out)
-          val part = new java.io.File(out).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, dir.resolve(s"half$m.parquet"))
-        }
-        def run(): DataFrame = {
-          val stream = Tables.withEventTime(
-            s.readStream.schema(raw.schema).parquet(dir.toString))
-          val q = EventStreams.tumblingCounts(stream).writeStream
-            .format("memory").queryName("s26_sink").outputMode("complete")
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .start()
-          try q.processAllAvailable() finally q.stop()
-          s.table("s26_sink")
-        }
-        addHalf(0)
-        run()                              // incarnation 1: evens only
-        addHalf(1)
-        run()                              // incarnation 2: changelog replay + odds
-          .orderBy("ws", "event_type").localCheckpoint(true)
-      } finally {
-        EventStreams.deleteRecursively(dir)
-        EventStreams.deleteRecursively(tmp)
-      }
-    },
+    "s26_changelog_restart" -> ((s, d) =>
+      restartRecovery(s, d, "s26_sink", rocksDbProvider, changelogKey -> "true")),
 
     // J5 — JSON GENERATION roundtrip: typed struct → `to_json` string →
     // `from_json` back to the struct, aggregated. J1/J2/J3 prove the
@@ -1008,8 +961,7 @@ object EventQueries {
     // batch-writer path loses nothing: counts, exact cents sums, and
     // micro timestamps must survive stream → parquet → scan.
     "s10_foreachbatch" -> { (s, d) =>
-      val scratch = java.nio.file.Files.createTempDirectory("graft-s10-")
-      try {
+      Scratch.using("s10") { scratch =>
         val projected = evStream(s, d).select(
           col("event_type"), col("value"), Q.micros(col("ts")).as("ts_us"))
         // Eagerly materialize the (tiny) aggregate so the landed parquet
@@ -1021,7 +973,7 @@ object EventQueries {
                max(col("ts_us")).as("last_us"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally EventStreams.deleteRecursively(scratch)
+      }
     },
 
     // S22 — the NATIVE parquet file sink: micro-batches commit atomically
@@ -1031,8 +983,7 @@ object EventQueries {
     // must aggregate identically to the source (the oracle); the manifest
     // listing itself (stray files invisible) is pinned by StreamingSpec.
     "s22_file_sink" -> { (s, d) =>
-      val scratch = java.nio.file.Files.createTempDirectory("graft-s22-")
-      try {
+      Scratch.using("s22") { scratch =>
         val projected = evStream(s, d).select(
           col("event_id"), col("event_type"), col("value"),
           Q.micros(col("ts")).as("ts_us"))
@@ -1042,7 +993,7 @@ object EventQueries {
                min(col("event_id")).as("min_id"), max(col("ts_us")).as("last_us"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally EventStreams.deleteRecursively(scratch)
+      }
     },
 
     // S5 (batch form) — dedup by event_id keeping the MIN-ts row (total

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Engine, Q, Tables}
+import graft.{Engine, Q, Scratch, Tables}
 import graft.functions.{Hilbert2, ZOrder2}
 import graft.sources.LayoutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -22,18 +22,13 @@ import org.apache.spark.sql.functions._
   */
 object IoQueries {
 
-  private def scratch(kind: String, dir: String): String = {
-    val tag = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
-    s"${System.getProperty("java.io.tmpdir")}/graft-io/$kind-$tag"
-  }
-
   /** io22's layout write, shared with `LayoutSpec`'s footer assertions:
     * date-sorted orders, one output file, `parquet.block.size` forced
     * far below the 128 MB default (8 KB) so the file splits into many row groups
     * with tight per-group date stats. Returns the scratch path.
     */
   def writeRowGrouped(s: SparkSession, d: String): String = {
-    val path = scratch("rowgroup", d)
+    val path = Scratch.dir("rowgroup", d)
     Tables.load(s, d, "orders")
       .select(col("o_orderkey"), col("o_orderdate"),
               (Q.dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
@@ -51,7 +46,7 @@ object IoQueries {
     // The write is part of the measured query: this is a sink+source
     // operator, not a disguised parquet aggregate.
     "io1_csv_roundtrip" -> { (s, d) =>
-      val path = scratch("csv", d)
+      val path = Scratch.dir("csv", d)
       Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
                 Q.dec2(col("l_quantity")).as("qty"),
@@ -72,7 +67,7 @@ object IoQueries {
     // (a LONG) — the one JSON-format choice that is bit-exact and
     // timezone-proof across engines.
     "io2_jsonl_roundtrip" -> { (s, d) =>
-      val path = scratch("jsonl", d)
+      val path = Scratch.dir("jsonl", d)
       Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
                 Q.dec2(col("o_totalprice")).as("price"),
@@ -96,7 +91,7 @@ object IoQueries {
     // needs no explicit schema — the roundtrip proves type fidelity
     // (LONG/STRING/INT/DECIMAL) through the ORC writer/reader pair.
     "io5_orc_roundtrip" -> { (s, d) =>
-      val path = scratch("orc", d)
+      val path = Scratch.dir("orc", d)
       Tables.load(s, d, "part")
         .select(col("p_partkey"), col("p_brand"), col("p_size"),
                 Q.dec2(col("p_retailprice")).as("price"))
@@ -115,7 +110,7 @@ object IoQueries {
     // proves the non-default codec path is byte-faithful through the
     // writer/reader pair. Timestamps travel natively (micros INT64).
     "io6_zstd_roundtrip" -> { (s, d) =>
-      val path = scratch("zstd", d)
+      val path = Scratch.dir("zstd", d)
       Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"),
                 Q.dec2(col("o_totalprice")).as("price"),
@@ -170,7 +165,7 @@ object IoQueries {
     // new column as NULL, and the aggregate counts them per group. The
     // oracle replays the generation split from the original table.
     "io8_schema_evolution" -> { (s, d) =>
-      val path = scratch("evolve", d)
+      val path = Scratch.dir("evolve", d)
       val orders = Tables.load(s, d, "orders")
       // Generation 1: written before o_orderpriority existed.
       orders.filter(col("o_orderkey") % 2 === 0)
@@ -200,7 +195,7 @@ object IoQueries {
     // table oracle; LayoutSpec asserts the file-count collapse and the
     // exchange-free rewrite plan.
     "io9_compaction" -> { (s, d) =>
-      val path = scratch("compact", d)
+      val path = Scratch.dir("compact", d)
       Tables.load(s, d, "documents")
         .repartition(48).write.mode("overwrite").parquet(s"$path/frag")
       LayoutOps.compact(s, s"$path/frag", s"$path/compacted",
@@ -222,7 +217,7 @@ object IoQueries {
     // restates F from the source — proving both the replacement and the
     // non-replacement.
     "io10_partition_overwrite" -> { (s, d) =>
-      val path = scratch("dynover", d)
+      val path = Scratch.dir("dynover", d)
       val orders = Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
                 Q.dec2(col("o_totalprice")).as("price"))
@@ -249,7 +244,7 @@ object IoQueries {
     // format; doc_id is recovered from the file name, and length + sha256
     // of the bytes must match the oracle's view of the same text.
     "io13_binary_file" -> { (s, d) =>
-      val path = scratch("binfiles", d)
+      val path = Scratch.dir("binfiles", d)
       val dir = java.nio.file.Paths.get(path)
       java.nio.file.Files.createDirectories(dir)
       Tables.load(s, d, "documents").filter(col("doc_id") < 20)
@@ -287,7 +282,7 @@ object IoQueries {
     // amortize away — which is why this boundary feeds a parquet
     // landing table rather than serving queries directly.
     "io23_text_source" -> { (s, d) =>
-      val path = scratch("textfiles", d)
+      val path = Scratch.dir("textfiles", d)
       val dir = java.nio.file.Paths.get(path)
       java.nio.file.Files.createDirectories(dir)
       Tables.load(s, d, "documents").filter(col("doc_id") < 40)
@@ -367,7 +362,7 @@ object IoQueries {
     },
 
     "io12_zorder_layout" -> { (s, d) =>
-      val path = scratch("zorder", d)
+      val path = Scratch.dir("zorder", d)
       Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
                 col("l_suppkey"), Q.dec2(col("l_quantity")).as("qty"))
@@ -398,7 +393,7 @@ object IoQueries {
     // replay bit-for-bit. Filter on the SECOND key — the axis a
     // single-column sort cannot serve.
     "io24_hilbert_layout" -> { (s, d) =>
-      val path = scratch("hilbert", d)
+      val path = Scratch.dir("hilbert", d)
       Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
                 col("l_suppkey"), Q.dec2(col("l_quantity")).as("qty"))
@@ -464,7 +459,7 @@ object IoQueries {
     // extra full pass); money travels as DECIMAL(18,2) text — exact on
     // both sides of the boundary.
     "io14_xml_roundtrip" -> { (s, d) =>
-      val path = scratch("xml", d)
+      val path = Scratch.dir("xml", d)
       Tables.load(s, d, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"),
                 Q.dec2(col("s_acctbal")).as("bal"))
@@ -489,7 +484,7 @@ object IoQueries {
     // Avro decimal logical type.
     "io15_avro_roundtrip" -> { (s, d) =>
       val avro = "org.apache.spark.sql.avro.AvroFileFormat"
-      val path = scratch("avro", d)
+      val path = Scratch.dir("avro", d)
       Tables.load(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"),
                 Q.dec2(col("c_acctbal")).as("bal"))
@@ -511,7 +506,7 @@ object IoQueries {
     // the quarantined raw lines are replayable; the gate hashes good-row
     // aggregates AND the corrupt-row count.
     "io16_corrupt_records" -> { (s, d) =>
-      val path = scratch("corrupt", d)
+      val path = Scratch.dir("corrupt", d)
       Tables.load(s, d, "orders")
         .select(col("o_orderkey"),
           to_json(struct(col("o_orderkey"), col("o_orderstatus"),
@@ -545,7 +540,7 @@ object IoQueries {
     // are all pinned. (A metadata-transactional table format adds commit
     // atomicity on top; the dataflow is exactly this.)
     "io17_merge_upsert" -> { (s, d) =>
-      val path = scratch("merge", d)
+      val path = Scratch.dir("merge", d)
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
                 (Q.dec2(col("o_totalprice")) * 100).cast("long").as("cents"))
@@ -611,7 +606,7 @@ object IoQueries {
     // that unconfigured columns don't pay for one. The gate proves the
     // roundtrip is lossless under an IN-list probe.
     "io19_parquet_bloom" -> { (s, d) =>
-      val path = scratch("pqbloom", d)
+      val path = Scratch.dir("pqbloom", d)
       Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
                 Q.dec2(col("o_totalprice")).as("price"))
@@ -644,7 +639,7 @@ object IoQueries {
     // io1-style clean CSV or parquet. The oracle replays the computed
     // values from the source table — the CSV cycle must be lossless.
     "io20_csv_multiline" -> { (s, d) =>
-      val path = scratch("csvml", d)
+      val path = Scratch.dir("csvml", d)
       Tables.load(s, d, "orders")
         .filter(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -671,7 +666,7 @@ object IoQueries {
     // without the glob). recursiveFileLookup deliberately disables
     // partition inference — nothing in the dir names is data.
     "io21_glob_discovery" -> { (s, d) =>
-      val base = scratch("glob", d)
+      val base = Scratch.dir("glob", d)
       val part = Tables.load(s, d, "part")
         .select(col("p_partkey"), col("p_brand"),
                 Q.dec2(col("p_retailprice")).as("price"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,6 +46,8 @@ import org.apache.spark.sql.functions._
   * every verify/bench process refreshes the artifact before any consumer
   * can read a stale one). Derived gates consume the PARQUET (a genuine
   * sink→source cycle, like the io-family roundtrips), not the lineage.
+  * The artifact lives in this JVM's [[Scratch]] root, so no other process
+  * reads or overwrites it.
   */
 object MatchGraph {
 
@@ -55,54 +57,19 @@ object MatchGraph {
   private val built =
     new java.util.concurrent.ConcurrentHashMap[String, Artifact]()
 
-  /** This process's artifact namespace: two JVMs sharing one tmpdir (a
-    * test suite beside a verify run) must never overwrite each other's
-    * artifacts mid-read, so each process stages under its own pid-scoped
-    * directory; `built` memoizes within the JVM, `rebuild` overwrites
-    * only this process's copy. No other process ever reads it, so the
-    * tree is deleted when this JVM exits instead of piling up in
-    * `java.io.tmpdir` one directory per run.
-    */
-  private val jvmScope: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-artifacts/" +
-      s"jvm-${ProcessHandle.current().pid()}"
-  sys.addShutdownHook(
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(jvmScope)))
-
-  /** Deletes the `jvm-<pid>` trees under `base` whose process is gone: a
-    * JVM killed with SIGKILL, or one that predates the exit hook, leaves
-    * its tree behind. Live processes' trees, this JVM's among them, stay.
-    */
-  private[graft] def sweepDeadScopes(base: java.io.File): Unit =
-    Option(base.listFiles()).toSeq.flatten.foreach { d =>
-      val pid = Some(d.getName).filter(_.startsWith("jvm-"))
-        .flatMap(_.stripPrefix("jvm-").toLongOption)
-      if (pid.exists(ProcessHandle.of(_).isEmpty))
-        org.apache.commons.io.FileUtils.deleteQuietly(d)
-    }
-
-  /** The sweep, once per JVM, before its first build stages anything. */
-  private lazy val swept: Unit =
-    sweepDeadScopes(new java.io.File(jvmScope).getParentFile)
-
   private def root(s: SparkSession, sfDir: String, threshold: Double,
                    n: Int): String = {
-    // Full-digest corpus tag (truncated String.hashCode could collide
-    // two corpus dirs and silently serve one corpus' pairs to the other)
-    // over the dir AND the documents input's file lengths and modification
-    // times: a corpus rewritten under the same path gets a fresh artifact
-    // from `ensure` instead of the old one's pairs.
+    // Keyed on the dir AND the documents input's file lengths and
+    // modification times: a corpus rewritten under the same path gets a
+    // fresh artifact from `ensure` instead of the old one's pairs.
     val docs = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
     val it = docs.getFileSystem(s.sparkContext.hadoopConfiguration)
       .listFiles(docs, true)
     val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
       .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
       .toSeq.sorted
-    val tag = java.security.MessageDigest.getInstance("SHA-256")
-      .digest((sfDir +: files).mkString("\n").getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
     val t = math.round(threshold * 1e6)
-    s"$jvmScope/match-t$t-n$n-$tag"
+    Scratch.dir("match", (s"t$t-n$n" +: sfDir +: files).mkString("\n"))
   }
 
   /** Read-through: build once per JVM per corpus, then hand every
@@ -126,7 +93,6 @@ object MatchGraph {
 
   private def build(s: SparkSession, sfDir: String, r: String,
                     threshold: Double, n: Int): Artifact = {
-    swept
     val docs = Tables.load(s, sfDir, "documents")
     // THE contraction definition — shared with the from-scratch clustered
     // wrappers ([[DedupOps.exactContraction]]), so the staged and

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Engine
+import graft.{Engine, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Declared queries routed through the engine's SECOND entry point —
@@ -796,15 +796,6 @@ object SqlQueries {
         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin
   )
 
-  /** Scratch-table lifecycle shared by the DDL gates (sql18/sql21):
-    * register views, derive an sf-scoped table name + tmp LOCATION, drop
-    * any leftover table AND clear the location (an explicit LOCATION
-    * makes the table external — DROP leaves the files, and CTAS/CREATE
-    * refuse a non-empty dir, so without the clear the gate is not
-    * re-runnable across Bench's three passes), run `body(tbl, loc)`, and
-    * always DROP on the way out. `body` must materialize its result
-    * (localCheckpoint) — the table is gone when it returns.
-    */
   /** The sql24 dataflow, parameterized so EngineSqlSpec can run it with
     * and without CBO and inspect the (pre-checkpoint) plan via `inspect`.
     * Three scratch catalog tables are CTAS'd from the fixture views
@@ -817,66 +808,54 @@ object SqlQueries {
   def cboReorder(s: SparkSession, d: String, cbo: Boolean = true,
                  inspect: DataFrame => Unit = _ => ()): DataFrame = {
     graft.Engine.registerViews(s, d)
-    val tag = java.lang.Integer.toHexString(d.hashCode & 0x7fffffff) +
-      "p" + java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tmp = System.getProperty("java.io.tmpdir")
     val tables = Seq(
-      ("graft_cbo_l_" + tag,
-       "SELECT l_orderkey, l_extendedprice FROM lineitem"),
-      ("graft_cbo_o_" + tag,
-       "SELECT o_orderkey, o_custkey, o_orderstatus FROM orders"),
-      ("graft_cbo_c_" + tag,
-       "SELECT c_custkey, c_mktsegment FROM customer"))
+      ("graft_cbo_l", "SELECT l_orderkey, l_extendedprice FROM lineitem"),
+      ("graft_cbo_o", "SELECT o_orderkey, o_custkey, o_orderstatus FROM orders"),
+      ("graft_cbo_c", "SELECT c_custkey, c_mktsegment FROM customer"))
     val analyzeCols = Map(
       0 -> "l_orderkey", 1 -> "o_orderkey, o_custkey",
       2 -> "c_custkey, c_mktsegment")
-    def drop(): Unit = tables.foreach { case (t, _) =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      graft.streaming.EventStreams.deleteRecursively(
-        java.nio.file.Paths.get(s"$tmp/$t"))
+    Scratch.using("cbo") { dir =>
+      try {
+        tables.zipWithIndex.foreach { case ((t, sel), i) =>
+          s.sql(s"CREATE TABLE $t USING parquet LOCATION '$dir/$t' AS $sel")
+          // FOR COLUMNS computes table stats (rowCount/sizeInBytes) AND the
+          // per-column NDV/min/max the filter-selectivity estimator needs.
+          s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${analyzeCols(i)}")
+        }
+        val Seq(lt, ot, ct) = tables.map(_._1)
+        Engine.withConf(s, "spark.sql.cbo.enabled" -> cbo.toString,
+                        "spark.sql.cbo.joinReorder.enabled" -> cbo.toString) {
+          val df = s.sql(
+            s"""SELECT o.o_orderstatus AS status, COUNT(*) AS n,
+               |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
+               |                AS BIGINT)) AS BIGINT) AS cents
+               |FROM $lt l
+               |JOIN $ot o ON l.l_orderkey = o.o_orderkey
+               |JOIN $ct c ON o.o_custkey = c.c_custkey
+               |WHERE c.c_mktsegment = 'BUILDING'
+               |GROUP BY 1 ORDER BY 1""".stripMargin)
+          inspect(df)
+          df.localCheckpoint(true)
+        }
+      } finally tables.foreach { case (t, _) => s.sql(s"DROP TABLE IF EXISTS $t") }
     }
-    drop()
-    try {
-      tables.zipWithIndex.foreach { case ((t, sel), i) =>
-        s.sql(s"CREATE TABLE $t USING parquet LOCATION '$tmp/$t' AS $sel")
-        // FOR COLUMNS computes table stats (rowCount/sizeInBytes) AND the
-        // per-column NDV/min/max the filter-selectivity estimator needs.
-        s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR COLUMNS ${analyzeCols(i)}")
-      }
-      val Seq(lt, ot, ct) = tables.map(_._1)
-      Engine.withConf(s, "spark.sql.cbo.enabled" -> cbo.toString,
-                      "spark.sql.cbo.joinReorder.enabled" -> cbo.toString) {
-        val df = s.sql(
-          s"""SELECT o.o_orderstatus AS status, COUNT(*) AS n,
-             |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
-             |                AS BIGINT)) AS BIGINT) AS cents
-             |FROM $lt l
-             |JOIN $ot o ON l.l_orderkey = o.o_orderkey
-             |JOIN $ct c ON o.o_custkey = c.c_custkey
-             |WHERE c.c_mktsegment = 'BUILDING'
-             |GROUP BY 1 ORDER BY 1""".stripMargin)
-        inspect(df)
-        df.localCheckpoint(true)
-      }
-    } finally drop()
   }
 
+  /** Scratch-table lifecycle shared by the DDL gates (sql18/sql21):
+    * register views, run `body(tbl, loc)` with a fresh empty LOCATION (an
+    * explicit LOCATION makes the table external, and CTAS/CREATE refuse a
+    * non-empty dir), then DROP the table and delete the location. `body`
+    * must materialize its result (localCheckpoint) — the table is gone
+    * when it returns.
+    */
   private def withScratchTable(
-      s: SparkSession, d: String, prefix: String)(
+      s: SparkSession, d: String, tbl: String)(
       body: (String, String) => DataFrame): DataFrame = {
     graft.Engine.registerViews(s, d)
-    // Tag = fixture-dir hash + PID: the dir hash keeps Bench's in-process
-    // passes reusing (and pre-cleaning) one table per fixture, while the
-    // PID keeps two JVMs benching the same fixture from racing on one
-    // tmp LOCATION / table name (r7 ADVICE).
-    val tag = java.lang.Integer.toHexString(d.hashCode & 0x7fffffff) +
-      "p" + java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"${prefix}_$tag"
-    val loc = s"${System.getProperty("java.io.tmpdir")}/$prefix-$tag"
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    graft.streaming.EventStreams.deleteRecursively(
-      java.nio.file.Paths.get(loc))
-    try body(tbl, loc)
-    finally s.sql(s"DROP TABLE IF EXISTS $tbl")
+    Scratch.using(tbl) { loc =>
+      try body(tbl, loc.toString)
+      finally s.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,17 +24,12 @@ import org.apache.spark.sql.functions._
   *    opens a pruned file, which at 100 TB is the difference between
   *    reading 100 TB and reading one year's slice.
   *
-  * Scratch data lives under java.io.tmpdir, keyed by the source dir, and is
-  * written once per (session, dir) — the marker lives in the session conf
-  * (like [[graft.Engine.registerViews]]); a fresh session re-registers the
-  * catalog tables it needs.
+  * Layouts live in this JVM's [[graft.Scratch]] root, keyed by the source
+  * dir. The bucketed tables are written once per (session, dir) — the
+  * marker lives in the session conf (like [[graft.Engine.registerViews]]);
+  * a fresh session re-registers the catalog tables it needs.
   */
 object LayoutOps {
-
-  private def scratch(kind: String, dir: String): String = {
-    val tag = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
-    s"${System.getProperty("java.io.tmpdir")}/graft-layout/$kind-$tag"
-  }
 
   /** Small-file COMPACTION — the standing maintenance task of any large
     * lake (streaming sinks, per-partition writers, and incremental loads
@@ -69,7 +64,7 @@ object LayoutOps {
                              buckets: Int = 8): (DataFrame, DataFrame) = {
     val marker = "graft.layout.bucketed.dir"
     if (!spark.conf.getOption(marker).contains(dir)) {
-      val base = scratch("bucketed", dir)
+      val base = Scratch.dir("bucketed", dir)
       Tables.load(spark, dir, "orders").write
         .bucketBy(buckets, "o_custkey").sortBy("o_custkey")
         .mode("overwrite").option("path", s"$base/orders")
@@ -109,7 +104,7 @@ object LayoutOps {
     * fact-to-dim star-join prune (read one year, not the decade).
     */
   def orderYearDim(spark: SparkSession, dir: String): DataFrame = {
-    val base = scratch("order_year_dim", dir)
+    val base = Scratch.dir("order_year_dim", dir)
     val done = new java.io.File(s"$base/_SUCCESS")
     if (!done.isFile) {
       val counts = Tables.load(spark, dir, "orders")
@@ -122,12 +117,12 @@ object LayoutOps {
   }
 
   /** `lineitem` re-written partitioned by ship year (one directory per
-    * year). Written once per source dir — keyed by a `_SUCCESS` probe so a
-    * fresh session (the common case: Verify and Bench are separate JVMs)
-    * reuses the layout instead of re-shuffling the fact table per run.
+    * year). Written once per JVM and source dir — keyed by a `_SUCCESS`
+    * probe so a later session or pass reuses the layout instead of
+    * re-shuffling the fact table.
     */
   def lineitemByShipYear(spark: SparkSession, dir: String): DataFrame = {
-    val base = scratch("lineitem_by_year", dir)
+    val base = Scratch.dir("lineitem_by_year", dir)
     val done = new java.io.File(s"$base/_SUCCESS")
     if (!done.isFile) {
       Tables.load(spark, dir, "lineitem")

@@ -699,12 +699,8 @@ object EventStreams {
       wait: org.apache.spark.sql.streaming.StreamingQuery => Unit =
         _.processAllAvailable())(
       start: String => org.apache.spark.sql.streaming.StreamingQuery)(
-      read: String => A): A = {
-    val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
-      System.getProperty("java.io.tmpdir")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(base), s"graft-ckpt-$tag-")
-    try {
+      read: String => A): A =
+    graft.Scratch.using(s"ckpt-$tag", tmpfs = true) { ckpt =>
       val q = start(ckpt.toString)
       // stop() before delete on EVERY exit path: deleting the checkpoint
       // under a still-running query (e.g. an interrupted wait) turns the
@@ -713,8 +709,7 @@ object EventStreams {
       // self-terminated AvailableNow run is a no-op.
       try wait(q) finally q.stop()
       read(ckpt.toString)
-    } finally deleteRecursively(ckpt)
-  }
+    }
 
   /** S23 — run a streaming frame under `Trigger.AvailableNow`: the
     * BACKFILL trigger — process everything available in rate-limited
@@ -730,14 +725,6 @@ object EventStreams {
     withScratchCheckpoint(name, wait = _.awaitTermination())(
       startMemorySink(spark, streaming, name, mode, availableNow = true))(
       _ => spark.table(name))
-
-  /** Best-effort recursive delete of a scratch directory. */
-  def deleteRecursively(dir: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
 
   /** batchId-keyed idempotent landing for a foreachBatch sink: each
     * micro-batch OVERWRITES its own `batch=<id>` directory, so a

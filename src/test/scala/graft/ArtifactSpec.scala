@@ -43,15 +43,15 @@ class ArtifactSpec extends SparkSpec {
     // The memo key is the dir PLUS the documents' file lengths and mtimes:
     // a rewritten corpus must never be served the previous corpus' pairs.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-artifact-").toString
-    def write(texts: Seq[String]): Unit =
-      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("doc_id", "text").write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-    def staged(): Set[(Long, Long)] =
-      spark.read.parquet(MatchGraph.ensure(spark, dir).pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    try {
+    Scratch.using("artifact") { path =>
+      val dir = path.toString
+      def write(texts: Seq[String]): Unit =
+        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+          .toDF("doc_id", "text").write.mode("overwrite")
+          .parquet(s"$dir/documents.parquet")
+      def staged(): Set[(Long, Long)] =
+        spark.read.parquet(MatchGraph.ensure(spark, dir).pairs)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       write(Seq("the quick brown fox jumps over the lazy dog",
                 "the quick brown fox jumps over the lazy dog",
                 "completely different text with other content"))
@@ -65,28 +65,55 @@ class ArtifactSpec extends SparkSpec {
         Tables.load(spark, dir, "documents"), 0.8)).map {
           case Seq(a: Long, b: Long, _) => (a, b)
         }.toSet)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("staging sweeps artifact trees whose JVM is gone and keeps live ones") {
     // No pid reaches 10^9 (Linux caps pid_max at 2^22), so that tree's
-    // process is gone; pid 1 and this JVM are alive.
-    val base = java.nio.file.Files.createTempDirectory("graft-sweep-").toFile
-    def tree(name: String): java.io.File = {
-      val f = new java.io.File(base, s"$name/match-t800000-n3-00/rep_pairs")
-      f.mkdirs()
-      new java.io.File(base, name)
+    // process is gone; pid 1 and this JVM are alive. Both Scratch bases
+    // (disk and tmpfs) are swept by one call.
+    Scratch.using("sweep-disk") { disk =>
+      Scratch.using("sweep-tmpfs", tmpfs = true) { tmpfs =>
+        val bases = Seq(disk.toFile, tmpfs.toFile)
+        def tree(base: java.io.File, name: String): java.io.File = {
+          val f = new java.io.File(base, s"$name/match-t800000-n3-00/rep_pairs")
+          f.mkdirs()
+          new java.io.File(base, name)
+        }
+        def trees(name: String) = bases.map(tree(_, name))
+        val dead = trees("jvm-1000000000")
+        val own = trees(s"jvm-${ProcessHandle.current().pid()}")
+        val live = trees("jvm-1")
+        val other = trees("not-a-jvm-tree")
+        Scratch.sweep(bases)
+        assert(!dead.exists(_.exists()), "a dead JVM's tree must be swept")
+        assert((own ++ live ++ other).forall(_.exists()),
+          "live JVMs' trees and non-JVM entries must stay")
+      }
     }
-    try {
-      val dead = tree("jvm-1000000000")
-      val own = tree(s"jvm-${ProcessHandle.current().pid()}")
-      val live = tree("jvm-1")
-      val other = tree("not-a-jvm-tree")
-      MatchGraph.sweepDeadScopes(base)
-      assert(!dead.exists(), "a dead JVM's tree must be swept")
-      assert(own.exists() && live.exists() && other.exists(),
-        "live JVMs' trees and non-JVM entries must stay")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
+
+  test("a Scratch.using directory is gone after its body returns or throws") {
+    Seq(false, true).foreach { tmpfs =>
+      var seen: java.nio.file.Path = null
+      val r = Scratch.using("using-spec", tmpfs) { d =>
+        seen = d
+        java.nio.file.Files.write(d.resolve("f"), Array[Byte](1))
+        java.nio.file.Files.createDirectories(d.resolve("a/b"))
+        42
+      }
+      assert(r == 42 && seen != null && !seen.toFile.exists(),
+        s"$seen survived a normal return")
+      val boom = intercept[IllegalStateException] {
+        Scratch.using("using-spec", tmpfs) { d =>
+          seen = d
+          java.nio.file.Files.write(d.resolve("f"), Array[Byte](1))
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(boom.getMessage == "boom")
+      assert(!seen.toFile.exists(), s"$seen survived a throw")
+    }
   }
 
   test("staged l50 / l64b survivorship equals the from-scratch map") {

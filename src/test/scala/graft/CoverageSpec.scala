@@ -105,6 +105,18 @@ class CoverageSpec extends AnyFunSuite {
     assert(unread.isEmpty, s"declared but never read: $unread")
   }
 
+  test("scratch directories are named only by Scratch") {
+    // One owner: a temp-dir base or a createTempDirectory call anywhere
+    // else under src/main is a scratch path that no exit hook or sweep
+    // covers, or one that two JVMs share.
+    val literals = Seq("java.io.tmpdir", "/dev/shm", "createTempDirectory")
+    val elsewhere = mainFiles.filterNot(_._1.endsWith("/graft/Scratch.scala"))
+      .flatMap { case (path, src) =>
+        literals.filter(src.contains).map(l => s"$path: $l")
+      }
+    assert(elsewhere.isEmpty, s"scratch literals outside Scratch: $elsewhere")
+  }
+
   test("every def under src/main is reachable from the engine or the bench harness") {
     // A def that nothing calls is a path no gate, bench or probe runs.
     // Name-level and lenient: a def counts as reached when its name

@@ -85,8 +85,8 @@ class EngineSqlSpec extends SparkSpec {
       val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
       assert(joins.nonEmpty, s"no joins in\n${df.queryExecution.optimizedPlan}")
       val s = joins.last.toString  // pre-order collect → last = innermost
-      (s.contains("graft_cbo_l_"), s.contains("graft_cbo_o_"),
-       s.contains("graft_cbo_c_"))
+      (s.contains("graft_cbo_l"), s.contains("graft_cbo_o"),
+       s.contains("graft_cbo_c"))
     }
     var withCbo: (Boolean, Boolean, Boolean) = null
     var withoutCbo: (Boolean, Boolean, Boolean) = null
@@ -281,17 +281,13 @@ class EngineSqlSpec extends SparkSpec {
     // index's split metadata, not a throwaway .rdd plan): one small
     // parquet file estimates ≪ cores splits, so the spread fires — also
     // through a filter/projection, the call sites' actual shape.
-    val dir = java.nio.file.Files.createTempDirectory("graft-spread-").toString
-    try {
+    Scratch.using("spread") { dir =>
       spark.range(1000).toDF("id").coalesce(1).write.parquet(s"$dir/t")
       val scan = spark.read.parquet(s"$dir/t")
       assert(Tables.spread(scan).rdd.getNumPartitions == p)
       val filtered = scan.filter(col("id") % 2 === 0).select(col("id") * 2)
       assert(Tables.spread(filtered).rdd.getNumPartitions == p)
       assert(Tables.spread(scan).agg(sum(col("id"))).head().getLong(0) == 499500L)
-    } finally {
-      graft.streaming.EventStreams.deleteRecursively(
-        java.nio.file.Paths.get(dir))
     }
   }
 

@@ -97,9 +97,7 @@ class LayoutSpec extends SparkSpec {
     // Run the gate (its write is part of the query), then open a part
     // file's footer with parquet-hadoop and check the column metadata.
     IoQueries.queries("io19_parquet_bloom")(spark, dir).collect()
-    val tag = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-io/pqbloom-$tag"
-    val part = new java.io.File(base).listFiles()
+    val part = new java.io.File(Scratch.dir("pqbloom", dir)).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     val conf = spark.sparkContext.hadoopConfiguration
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -118,23 +116,25 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("io9: compaction collapses file count, preserves rows, and never shuffles") {
-    val base = System.getProperty("java.io.tmpdir") + "/graft-layout-spec/compact"
-    val src = spark.read.parquet(s"$dir/documents.parquet")
-    src.repartition(10).write.mode("overwrite").parquet(s"$base/frag")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def nFiles(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))
-      .count(_.getPath.getName.endsWith(".parquet"))
-    assert(nFiles(s"$base/frag") == 10)
-    // Huge target -> everything fits one file.
-    val compacted = LayoutOps.compact(spark, s"$base/frag", s"$base/out",
-                                      targetBytes = 1L << 30)
-    assert(nFiles(s"$base/out") == 1)
-    assert(compacted.count() == src.count())
-    // The rewrite itself is exchange-free: scan -> coalesce -> write.
-    val rewritePlan = spark.read.parquet(s"$base/frag").coalesce(1)
-      .queryExecution.executedPlan.toString
-    assert(!rewritePlan.contains("Exchange"), rewritePlan)
+    Scratch.using("layout-compact") { path =>
+      val base = path.toString
+      val src = spark.read.parquet(s"$dir/documents.parquet")
+      src.repartition(10).write.mode("overwrite").parquet(s"$base/frag")
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def nFiles(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))
+        .count(_.getPath.getName.endsWith(".parquet"))
+      assert(nFiles(s"$base/frag") == 10)
+      // Huge target -> everything fits one file.
+      val compacted = LayoutOps.compact(spark, s"$base/frag", s"$base/out",
+                                        targetBytes = 1L << 30)
+      assert(nFiles(s"$base/out") == 1)
+      assert(compacted.count() == src.count())
+      // The rewrite itself is exchange-free: scan -> coalesce -> write.
+      val rewritePlan = spark.read.parquet(s"$base/frag").coalesce(1)
+        .queryExecution.executedPlan.toString
+      assert(!rewritePlan.contains("Exchange"), rewritePlan)
+    }
   }
 
   test("scan split sizing: task count tracks bytes/maxPartitionBytes on a multi-file table") {
@@ -147,46 +147,50 @@ class LayoutSpec extends SparkSpec {
     // ~2.7 MB here), because maxSplitBytes = min(maxPartitionBytes,
     // max(openCost, bytesPerCore)) — above that point the knob is
     // intentionally inert and task count is core-bound instead.
-    val base = System.getProperty("java.io.tmpdir") + "/graft-layout-spec/split"
-    spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-      .repartition(8).write.mode("overwrite").parquet(base)
-    // openCost=0 isolates the byte arithmetic from the per-file seek
-    // padding (which would blur the 2x ratio on 8 small files).
-    def tasksAt(maxPartitionBytes: Long): Int =
-      Engine.withConf(spark,
-          "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes.toString,
-          "spark.sql.files.openCostInBytes" -> "0") {
-        spark.read.parquet(base).rdd.getNumPartitions
-      }
-    val fine = tasksAt(512 * 1024)
-    val coarse = tasksAt(1024 * 1024)
-    assert(fine > coarse,
-      s"fine(512KB)=$fine tasks must exceed coarse(1MB)=$coarse")
-    val ratio = fine.toDouble / coarse
-    assert(ratio > 1.5 && ratio < 2.6,
-      s"halving maxPartitionBytes: $coarse tasks @1MB -> $fine tasks " +
-        s"@512KB (ratio $ratio, expected ~2x)")
+    Scratch.using("layout-split") { path =>
+      val base = path.toString
+      spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+        .repartition(8).write.mode("overwrite").parquet(base)
+      // openCost=0 isolates the byte arithmetic from the per-file seek
+      // padding (which would blur the 2x ratio on 8 small files).
+      def tasksAt(maxPartitionBytes: Long): Int =
+        Engine.withConf(spark,
+            "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes.toString,
+            "spark.sql.files.openCostInBytes" -> "0") {
+          spark.read.parquet(base).rdd.getNumPartitions
+        }
+      val fine = tasksAt(512 * 1024)
+      val coarse = tasksAt(1024 * 1024)
+      assert(fine > coarse,
+        s"fine(512KB)=$fine tasks must exceed coarse(1MB)=$coarse")
+      val ratio = fine.toDouble / coarse
+      assert(ratio > 1.5 && ratio < 2.6,
+        s"halving maxPartitionBytes: $coarse tasks @1MB -> $fine tasks " +
+          s"@512KB (ratio $ratio, expected ~2x)")
+    }
   }
 
   test("io10: dynamic overwrite replaces only the written partition's files") {
-    val base = System.getProperty("java.io.tmpdir") + "/graft-layout-spec/dynover"
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_orderkey"), col("o_orderstatus"))
-    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(status: String) =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/o_orderstatus=$status"))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => f.getPath.getName -> f.getModificationTime).toMap
-    val oBefore = files("O")
-    val fBefore = files("F")
-    Engine.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
-      orders.filter(col("o_orderstatus") === "F")
-        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
+    Scratch.using("layout-dynover") { path =>
+      val base = path.toString
+      val orders = spark.read.parquet(s"$dir/orders.parquet")
+        .select(col("o_orderkey"), col("o_orderstatus"))
+      orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def files(status: String) =
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/o_orderstatus=$status"))
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .map(f => f.getPath.getName -> f.getModificationTime).toMap
+      val oBefore = files("O")
+      val fBefore = files("F")
+      Engine.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        orders.filter(col("o_orderstatus") === "F")
+          .write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
+      }
+      assert(files("O") == oBefore, "untouched partition's files must not change")
+      assert(files("F") != fBefore, "overwritten partition must have new files")
     }
-    assert(files("O") == oBefore, "untouched partition's files must not change")
-    assert(files("F") != fBefore, "overwritten partition must have new files")
   }
 
   test("io21: the glob filter is load-bearing — the same read without it trips on the junk") {
@@ -194,8 +198,7 @@ class LayoutSpec extends SparkSpec {
     // prove the pathGlobFilter actually excludes them by running the SAME
     // recursive read without it and watching the footer read fail.
     IoQueries.queries("io21_glob_discovery")(spark, dir).collect() // plants + passes
-    val tag = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-io/glob-$tag"
+    val base = Scratch.dir("glob", dir)
     val ex = intercept[Exception] {
       spark.read
         .schema("p_partkey BIGINT, p_brand STRING, price DECIMAL(18,2)")
@@ -244,23 +247,25 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val grid = spark.range(64 * 64)
       .select(($"id" % 64).as("x"), ($"id" / 64).cast("long").as("y"))
-    val out = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    grid.withColumn("zv", ZOrder2($"x", $"y"))
-      .repartitionByRange(8, $"zv").sortWithinPartitions("zv")
-      .write.mode("overwrite").parquet(out)
-    val boxes = spark.read.parquet(out)
-      .groupBy(col("_metadata.file_name").as("f"))
-      .agg(min("x").as("x0"), max("x").as("x1"),
-           min("y").as("y0"), max("y").as("y1"))
-      .collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(boxes.length == 8)
-    val hitY = boxes.count(_._3 < 8)   // files whose y-range reaches below 8
-    assert(hitY <= 3, s"z-layout should bound y per file: ${boxes.mkString(", ")}")
-    // Both dimensions bounded: no file spans a full axis.
-    boxes.foreach { case (x0, x1, y0, y1) =>
-      assert(x1 - x0 < 63 || y1 - y0 < 63,
-        s"file box ($x0..$x1, $y0..$y1) spans both axes fully")
+    Scratch.using("zorder") { path =>
+      val out = path.toString
+      grid.withColumn("zv", ZOrder2($"x", $"y"))
+        .repartitionByRange(8, $"zv").sortWithinPartitions("zv")
+        .write.mode("overwrite").parquet(out)
+      val boxes = spark.read.parquet(out)
+        .groupBy(col("_metadata.file_name").as("f"))
+        .agg(min("x").as("x0"), max("x").as("x1"),
+             min("y").as("y0"), max("y").as("y1"))
+        .collect()
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      assert(boxes.length == 8)
+      val hitY = boxes.count(_._3 < 8)   // files whose y-range reaches below 8
+      assert(hitY <= 3, s"z-layout should bound y per file: ${boxes.mkString(", ")}")
+      // Both dimensions bounded: no file spans a full axis.
+      boxes.foreach { case (x0, x1, y0, y1) =>
+        assert(x1 - x0 < 63 || y1 - y0 < 63,
+          s"file box ($x0..$x1, $y0..$y1) spans both axes fully")
+      }
     }
   }
 
@@ -294,24 +299,26 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val grid = spark.range(64 * 64)
       .select(($"id" % 64).as("x"), ($"id" / 64).cast("long").as("y"))
-    val out = java.nio.file.Files.createTempDirectory("graft-hilbert").toString
-    grid.withColumn("hv", Hilbert2($"x", $"y"))
-      .repartitionByRange(8, $"hv").sortWithinPartitions("hv")
-      .write.mode("overwrite").parquet(out)
-    val boxes = spark.read.parquet(out)
-      .groupBy(col("_metadata.file_name").as("f"))
-      .agg(min("x").as("x0"), max("x").as("x1"),
-           min("y").as("y0"), max("y").as("y1"))
-      .collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(boxes.length == 8)
-    boxes.foreach { case (x0, x1, y0, y1) =>
-      // A contiguous 512-cell Hilbert segment fits in a box no larger
-      // than 32×48 on a 64-grid; assert the conservative bound that both
-      // extents stay at or under half+16 of the axis — far tighter than
-      // a single-column sort (which spans a full axis in every file).
-      assert(x1 - x0 <= 48 && y1 - y0 <= 48,
-        s"hilbert file box ($x0..$x1, $y0..$y1) is not locality-bounded")
+    Scratch.using("hilbert") { path =>
+      val out = path.toString
+      grid.withColumn("hv", Hilbert2($"x", $"y"))
+        .repartitionByRange(8, $"hv").sortWithinPartitions("hv")
+        .write.mode("overwrite").parquet(out)
+      val boxes = spark.read.parquet(out)
+        .groupBy(col("_metadata.file_name").as("f"))
+        .agg(min("x").as("x0"), max("x").as("x1"),
+             min("y").as("y0"), max("y").as("y1"))
+        .collect()
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      assert(boxes.length == 8)
+      boxes.foreach { case (x0, x1, y0, y1) =>
+        // A contiguous 512-cell Hilbert segment fits in a box no larger
+        // than 32×48 on a 64-grid; assert the conservative bound that both
+        // extents stay at or under half+16 of the axis — far tighter than
+        // a single-column sort (which spans a full axis in every file).
+        assert(x1 - x0 <= 48 && y1 - y0 <= 48,
+          s"hilbert file box ($x0..$x1, $y0..$y1) is not locality-bounded")
+      }
     }
   }
 

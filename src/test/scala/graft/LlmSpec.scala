@@ -286,20 +286,22 @@ class LlmSpec extends SparkSpec {
     // A documents fixture with MULTIPLE PII hits per row (the sf fixture
     // plants exactly one of each) — doc_id 5 also triggers the planted
     // suffix (5 % 5 == 0), so its counts include the plant.
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
-    Seq(
-      (1L, "mail a@b.com then c.d@e.org done", "en", "web"),
-      (2L, "call 555-1234 or 555-9999 now", "en", "web"),
-      (3L, "clean text", "en", "web"),
-      (5L, "x@y.io and 555-0000", "en", "web")
-    ).toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = graft.operators.LlmQueries.queries("l28_redact")(spark, dir)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(rows(1L) == ((2L, 0L)))
-    assert(rows(2L) == ((0L, 2L)))
-    assert(rows(3L) == ((0L, 0L)))
-    assert(rows(5L) == ((2L, 2L)))  // own PII + the doc_id%5 plant
+    Scratch.using("docs") { path =>
+      val dir = path.toString
+      Seq(
+        (1L, "mail a@b.com then c.d@e.org done", "en", "web"),
+        (2L, "call 555-1234 or 555-9999 now", "en", "web"),
+        (3L, "clean text", "en", "web"),
+        (5L, "x@y.io and 555-0000", "en", "web")
+      ).toDF("doc_id", "text", "lang", "source")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = graft.operators.LlmQueries.queries("l28_redact")(spark, dir)
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+      assert(rows(1L) == ((2L, 0L)))
+      assert(rows(2L) == ((0L, 2L)))
+      assert(rows(3L) == ((0L, 0L)))
+      assert(rows(5L) == ((2L, 2L)))  // own PII + the doc_id%5 plant
+    }
   }
 
   test("nfc_normalize composes decomposed marks, keeps ASCII and NULL intact") {
@@ -446,13 +448,13 @@ class LlmSpec extends SparkSpec {
       (2L, a + " okay", "en", "web", (a.length + 5).toLong),
       (3L, "zzz qqq vvv kkk www yyy xxx uuu", "en", "web", 31L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-l50-").toString
-    try {
+    Scratch.using("l50") { path =>
+      val dir = path.toString
       corpus.write.parquet(s"$dir/documents.parquet")
       val out = SparkEntry.queries("l50_survivorship")(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
       assert(out == List((1L, 1L, 2L), (2L, 1L, 2L), (3L, 3L, 3L)), out.toString)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("l51 global order: two-pass ranking equals the naive total-order window") {
@@ -881,14 +883,14 @@ class LlmSpec extends SparkSpec {
       (2L, "a b c d e f g h i j", "en", "web", 19L),
       (3L, "solo", "en", "web", 4L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-l54-").toString
-    try {
+    Scratch.using("l54") { path =>
+      val dir = path.toString
       corpus.write.parquet(s"$dir/documents.parquet")
       val out = SparkEntry.queries("l54_topgram_mass")(spark, dir).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toList
       assert(out == List(("web", 3L, 1L, 0.8182)), out.toString)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("l55 vocab growth: first-occurrence deciles and running vocabulary") {
@@ -901,15 +903,15 @@ class LlmSpec extends SparkSpec {
       (3L, "a", "en", "web", 1L), (4L, "d", "en", "web", 1L),
       (5L, "a e f", "en", "web", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-l55-").toString
-    try {
+    Scratch.using("l55") { path =>
+      val dir = path.toString
       corpus.write.parquet(s"$dir/documents.parquet")
       val out = SparkEntry.queries("l55_vocab_growth")(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toList
       assert(out == List((0L, 1L, 2L, 2L), (2L, 1L, 1L, 3L), (4L, 1L, 0L, 3L),
                          (6L, 1L, 1L, 4L), (8L, 1L, 2L, 6L)), out.toString)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("a saturated universe routes dense at any doc count; past denseUniverseMax routes sparse") {

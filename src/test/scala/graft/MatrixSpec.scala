@@ -140,11 +140,12 @@ class MatrixSpec extends SparkSpec {
 
   test("dense JSON write → read roundtrips the reference interchange format") {
     val a = matA(7, 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-mio")
-    val path = dir.resolve("m.json").toString
-    graft.sources.MatrixIO.writeDenseJson(a, 7, 5, path)
-    val back = graft.sources.MatrixIO.readDenseJson(spark, path)
-    assert(toMap(back) == toMap(a))
+    Scratch.using("mio") { dir =>
+      val path = dir.resolve("m.json").toString
+      graft.sources.MatrixIO.writeDenseJson(a, 7, 5, path)
+      val back = graft.sources.MatrixIO.readDenseJson(spark, path)
+      assert(toMap(back) == toMap(a))
+    }
     // and the fixture files parse to the formula matrices
     val fx = graft.sources.MatrixIO.readDenseJson(
       spark, "/root/repo/fixtures/matrix_A_50x50.json")

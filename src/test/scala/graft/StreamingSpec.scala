@@ -462,8 +462,7 @@ class StreamingSpec extends SparkSpec {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
         "true")
-    val ckpt = java.nio.file.Files.createTempDirectory("t-chlog-")
-    try Engine.withConf(spark, confs: _*) {
+    Scratch.using("t-chlog") { ckpt => Engine.withConf(spark, confs: _*) {
       val ms = MemoryStream[Ev]
       val q = EventStreams.tumblingCounts(ms.toDF()).writeStream
         .format("memory").queryName("t_s26c").outputMode("complete")
@@ -479,7 +478,7 @@ class StreamingSpec extends SparkSpec {
         .count()
       assert(changelogs > 0,
         "RocksDB changelog checkpointing produced no .changelog files")
-    } finally EventStreams.deleteRecursively(ckpt)
+    }}
   }
 
   test("s10 replayed micro-batch lands idempotently (batchId-keyed overwrite)") {
@@ -489,13 +488,11 @@ class StreamingSpec extends SparkSpec {
     // top of the original instead of appending a duplicate. Simulated
     // here by deleting the last checkpoint commit marker after a clean
     // run — the restart then re-delivers the final batch.
-    val src = java.nio.file.Files.createTempDirectory("t-fb-src-")
-    val out = java.nio.file.Files.createTempDirectory("t-fb-out-")
-    val ckpt = java.nio.file.Files.createTempDirectory("t-fb-ck-")
     val half0 = Seq(Ev(1, t(10), 1, "a", 1.0), Ev(2, t(70), 1, "b", 2.0))
     val half1 = Seq(Ev(3, t(130), 2, "c", 3.0), Ev(4, t(20), 2, "d", 4.0))
     val calls = new java.util.concurrent.atomic.AtomicInteger
-    try {
+    Scratch.using("t-fb") { root =>
+      val Seq(src, out, ckpt) = Seq("src", "out", "ckpt").map(root.resolve)
       def addFiles(rows: Seq[Ev]): Unit =
         rows.toDF().coalesce(1).write.mode("append").parquet(src.toString)
       def run(): Unit = {
@@ -532,10 +529,6 @@ class StreamingSpec extends SparkSpec {
       assert(calls.get() == 3, s"expected a replayed third batch, got ${calls.get()}")
       assert(landedIds() == Seq(1L, 2L, 3L, 4L),
         "replayed batch must overwrite its own directory, not append duplicates")
-    } finally {
-      EventStreams.deleteRecursively(src)
-      EventStreams.deleteRecursively(out)
-      EventStreams.deleteRecursively(ckpt)
     }
   }
 
@@ -703,8 +696,7 @@ class StreamingSpec extends SparkSpec {
   test("file sink: _spark_metadata manifest governs the read; stray files are invisible") {
     import graft.streaming.EventStreams.UserEvent
     implicit val sq = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-fsink-spec-")
-    try {
+    Scratch.using("fsink-spec") { out =>
       val ms = MemoryStream[UserEvent]
       ms.addData(Seq(UserEvent(1, t(0), 1.0), UserEvent(2, t(5), 2.0)))
       EventStreams.fileSinkEtl(spark, ms.toDF(), s"$out/landed")
@@ -724,7 +716,7 @@ class StreamingSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$out/landed/zz_stray.parquet"))
       assert(spark.read.parquet(s"$out/landed").count() == committed,
              "manifest-listed read must ignore files outside the manifest")
-    } finally EventStreams.deleteRecursively(out)
+    }
   }
 
   test("AvailableNow + maxFilesPerTrigger: backlog lands over MULTIPLE atomic commits") {
@@ -735,8 +727,7 @@ class StreamingSpec extends SparkSpec {
     // 100 TB backfill relies on (state and sink commits sized by the
     // trigger cap, not by backlog size) — with the SAME final table as
     // the batch read.
-    val root = java.nio.file.Files.createTempDirectory("graft-mfpt-")
-    try {
+    Scratch.using("mfpt") { root =>
       (0 until 4).foreach { i =>
         spark.range(i * 10, i * 10 + 10).selectExpr("id", "id * 2 AS v")
           .coalesce(1).write.mode("append").parquet(s"$root/in")
@@ -759,7 +750,7 @@ class StreamingSpec extends SparkSpec {
       assert(landed.count() == 40)
       assert(landed.agg(sum("v")).head.getLong(0) ==
              spark.read.parquet(s"$root/in").agg(sum("v")).head.getLong(0))
-    } finally EventStreams.deleteRecursively(root)
+    }
   }
 
   test("rate-limited restart mid-backlog: offsets resume, nothing reprocessed") {
@@ -775,8 +766,7 @@ class StreamingSpec extends SparkSpec {
     // `maxOffsetsPerTrigger` semantics expressed through the file
     // source's maxFilesPerTrigger + checkpoint, the engine-side half a
     // broker-backed source would reuse unchanged.
-    val root = java.nio.file.Files.createTempDirectory("graft-resume-")
-    try {
+    Scratch.using("resume") { root =>
       def addFiles(r: Range): Unit = r.foreach { i =>
         spark.range(i * 10, i * 10 + 10).selectExpr("id", "id * 2 AS v")
           .coalesce(1).write.mode("append").parquet(s"$root/in")
@@ -810,7 +800,7 @@ class StreamingSpec extends SparkSpec {
         .listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toInt)
       assert(commits.toSet == (0 until 6).toSet,
              s"offset log must continue across the restart, got ${commits.sorted.toSeq}")
-    } finally EventStreams.deleteRecursively(root)
+    }
   }
 
   test("stream-stream interval join matches views in the preceding hour only") {
