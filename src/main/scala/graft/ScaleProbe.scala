@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{DedupOps, SimilarityOps}
+import graft.operators.{DedupOps, SimHashOps, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -141,7 +141,7 @@ object ScaleProbe {
       val ops: Seq[(String, Long, () => Unit)] = Seq(
         ("l2_prefix_jaccard", nD,
          () => sink(DedupOps.prefixJaccardPairs(d, 0.8))),
-        ("l7_simhash", nD, () => sink(DedupOps.simhash(d))),
+        ("l7_simhash", nD, () => sink(SimHashOps.simhash(d))),
         ("l10_srp_lsh_pairs", nE,
          () => sink(SimilarityOps.cosinePairsLsh(e, 0.9))),
         ("l5_brute_topk", nE,
@@ -170,18 +170,18 @@ object ScaleProbe {
          () => sink(SimilarityOps.ivfPqTopK(e, e.filter(col("vec_id") <= 9), 5,
                                             codebookEntries = 256))),
         ("l16_simhash_components", nD,
-         () => sink(DedupOps.simhashComponents(d, 1))),
+         () => sink(SimHashOps.simhashComponents(d, 1))),
         ("l14b_simhash64_pairs", nD,
-         () => sink(DedupOps.simhashPairs(d, 3, bits = 64))),
+         () => sink(SimHashOps.simhashPairs(d, 3, bits = 64))),
         ("l20_embedding_gram", nE, () => sink(SimilarityOps.gramMatrix(e))),
         ("l25_containment", nD,
          () => sink(DedupOps.containmentPairs(d, 0.9))),
         ("l29_dup_shingle_frac", nD,
          () => sink(DedupOps.dupShingleFraction(d))),
         ("l33_triangle_count", nD,
-         () => sink(DedupOps.simhashTriangleCounts(d, 1))),
+         () => sink(SimHashOps.simhashTriangleCounts(d, 1))),
         ("l34_lm_score", nD,
-         () => sink(graft.operators.LlmQueries.lmScore(d))),
+         () => sink(graft.operators.TextQueries.lmScore(d))),
         ("l35_passage_dup", nD,
          () => sink(DedupOps.dupWindowFraction(d))),
         // Round-8 additions: the new heavy pipelines, probed with the
@@ -204,7 +204,7 @@ object ScaleProbe {
         ("l45_importance", nD,
          () => sink(graft.operators.TextAnalysis.importanceResample(d))),
         ("l46_lm_tertiles", nD, () => {
-          val scored = graft.operators.LlmQueries.lmScore(d)
+          val scored = graft.operators.TextQueries.lmScore(d)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("lang"))
             .orderBy(col("lm_score").desc, col("doc_id").asc)

@@ -45,7 +45,7 @@ object Multimodal {
     * prefer them to raw-byte bits), applied to the opaque payload the way
     * a real build applies it to a decoded luminance grid. Emitted with the
     * SimHash column convention (`simhash\$bits`) so the banded pair
-    * machinery ([[graft.operators.DedupOps.fingerprintPairs]]) rides
+    * machinery ([[graft.operators.SimHashOps.fingerprintPairs]]) rides
     * unchanged. The 16-bit default mirrors l14's replayable-width
     * convention (the fixture payloads cluster usefully there; a real
     * image pipeline runs 64). Iterator-to-iterator typed mapPartitions

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -45,7 +43,7 @@ object DedupOps {
     *   - `near_dup`  — survives exact but has a SimHash neighbor
     *     (Hamming ≤ `maxHamming`) in BASE — the fingerprint-index lookup;
     *   - `ingested`  — novel.
-    * Reuses [[simhashPairs]] over the union and keeps cross-side pairs
+    * Reuses [[SimHashOps.simhashPairs]] over the union and keeps cross-side pairs
     * only; a production pass band-joins increment fingerprints directly
     * against the persisted base fingerprint index — same plan shape,
     * minus the within-side candidates.
@@ -55,7 +53,7 @@ object DedupOps {
     val baseTexts = docs.filter(col("doc_id") % 2 === 0)
       .select(sha2(col("text"), 256).as("th")).distinct()
       .withColumn("in_base", lit(true))
-    val nearSet = simhashPairs(docs, maxHamming)
+    val nearSet = SimHashOps.simhashPairs(docs, maxHamming)
       .filter((col("da") % 2) =!= (col("db") % 2))
       .select(when(col("da") % 2 === 1, col("da")).otherwise(col("db"))
                 .as("doc_id"))
@@ -656,7 +654,7 @@ object DedupOps {
     * checkpointing it locally is cheap at any corpus scale; the
     * intermediates stay session-transient.
     */
-  private def materialize(df: DataFrame): DataFrame =
+  private[operators] def materialize(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
   /** Per-document duplicate-shingle fraction (the L29 gate): the share of
@@ -1043,416 +1041,6 @@ object DedupOps {
     cross.unionByName(within)
   }
 
-  /** SimHash near-dup pairs at Hamming distance ≤ `maxHamming`, with
-    * pigeonhole-banded candidate generation (the Manku/Jain/Sarma WWW'07
-    * "Detecting Near-Duplicates for Web Crawling" table-partition scheme):
-    * split the fingerprint into `maxHamming + 1` disjoint bit blocks — any
-    * pair within distance d must agree EXACTLY on at least one block (at
-    * most d blocks can contain a differing bit), so candidates come from an
-    * equi-join on (block index, block bits), never an all-pairs scan.
-    * Each candidate is then verified with one codegen'd
-    * `bit_count(fa ^ fb)` — exact output, identical to the quadratic
-    * formulation the oracle runs.
-    *
-    * 100 TB posture: the fingerprint frame is one narrow row per document
-    * (two LONGs); the banded join shuffles |docs|·(d+1) small rows on the
-    * block key. Block width shrinks as d grows (bits/(d+1)), so for large
-    * d or heavily-clustered corpora the production tuning is `bits = 64`
-    * (d+1 blocks of 64/(d+1) bits, same code shape) — the fixture's
-    * 16-bit default keeps the oracle replayable in small-integer SQL.
-    */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 1,
-                   bits: Int = 16): DataFrame =
-    fingerprintPairs(simhash(docs, bits), maxHamming, bits)
-
-  /** [[simhashPairs]] over a PRECOMPUTED fingerprint frame
-    * `(doc_id, simhash\$bits)` — the banding/class machinery is
-    * fingerprint-agnostic (pigeonhole blocks + class contraction +
-    * membership expansion), so any 16/32/48/64-bit hash rides it: SimHash
-    * (l14/l14b), the payload dHash (mm5). Same output contract:
-    * `(da < db, hamming)`, exact (every candidate verified by
-    * `bit_count(xor)`), eagerly materialized.
-    */
-  def fingerprintPairs(fp0: DataFrame, maxHamming: Int,
-                       bits: Int): DataFrame = {
-    val fpCol = s"simhash$bits"
-    val fp = fp0.select(col("doc_id"), col(fpCol)).persist()
-    val classes = fpClasses(fp, bits).persist()
-    val cp = classPairs(classes, maxHamming, bits)
-    // Expand class pairs to document pairs via fingerprint membership,
-    // plus the within-class pairs (identical fingerprints, hamming 0).
-    val ma = fp.select(col(fpCol).as("fa"), col("doc_id").as("ia"))
-    val mb = fp.select(col(fpCol).as("fb"), col("doc_id").as("ib"))
-    val cross = cp.join(ma, "fa").join(mb, "fb")
-      .select(least(col("ia"), col("ib")).as("da"),
-              greatest(col("ia"), col("ib")).as("db"), col("hamming"))
-    val within = fp.as("x")
-      .join(fp.as("y"),
-        col(s"x.$fpCol") === col(s"y.$fpCol") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-              lit(0L).as("hamming"))
-    val out = materialize(cross.unionByName(within))
-    classes.unpersist(blocking = false)
-    fp.unpersist(blocking = false)
-    out
-  }
-
-  /** Fingerprint CLASSES: one row per distinct fingerprint, with the class
-    * representative (min doc_id). Identical fingerprints are hamming-0
-    * twins, so all pair/component machinery runs over classes — a node set
-    * bounded by the fingerprint space, not the corpus (the same collapse
-    * [[clusteredJaccardPairs]] applies to exact-duplicate texts; measured
-    * at sf0.1 it shrinks 5000 docs to 1195 classes and 578k doc pairs to
-    * 3.1k class pairs).
-    */
-  private def fpClasses(fp: DataFrame, bits: Int = 16): DataFrame =
-    fp.groupBy(col(s"simhash$bits")).agg(min(col("doc_id")).as("cid"))
-
-  /** PageRank over the SimHash ≤`maxHamming` doc graph, evaluated on the
-    * fingerprint-class QUOTIENT (the l59 gate) — same contraction l16/l33
-    * ride: docs sharing a fingerprint are structurally interchangeable
-    * (identical neighbor sets), so by symmetry they carry identical rank
-    * and the whole damped iteration collapses onto the class graph with
-    * integer weights:
-    *
-    *   d_C        = (c_C − 1) + Σ_{D ~ C} c_D          (every doc in C)
-    *   contrib_C  = (c_C − 1)·(r_C div d_C) + Σ_{D ~ C} c_D·(r_D div d_D)
-    *   r'_C       = (15·SCALE + 85·contrib_C) div 100
-    *
-    * — exactly [[graft.operators.GraphOps.pageRank]]'s update summed
-    * class-wise (the spec pins the equality), but each round runs over
-    * Σ class-adjacency edges instead of Σ doc pairs.
-    * At sf0.1 that is ~20 k weighted edges standing in for 1.16 M directed
-    * doc edges × 5 rounds; at 100 TB the quotient is bounded by the
-    * fingerprint space while the doc graph is bounded by nothing.
-    * Output is doc-level — (doc_id, degree, pr_scaled), identical bits to
-    * the generic operator on [[simhashPairs]] — via one class→doc join.
-    */
-  def simhashPageRank(docs: DataFrame, maxHamming: Int = 1,
-                      iters: Int = 5, scale: Long = 1000000L): DataFrame = {
-    val fpCol = "simhash16"
-    val fp = simhash(docs).persist()
-    val cls = fpClasses(fp)
-      .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("csize")), fpCol)
-      .persist() // (fpCol, cid, csize) — bounded by the fingerprint space
-    try {
-      // DRIVER-LOCAL quotient iteration (round 15, guide §2.4): the class
-      // table and banded class adjacency are bounded by the fingerprint
-      // space (≤ 2^16 classes, ≤ 17·2^16/2 hamming-1 pairs) — the SAME
-      // frames [[simhashKCore]] already collects for its judge-reviewed
-      // driver peel — so the five damped rounds run as a local integer
-      // loop instead of 5 × (broadcast join + shuffle aggregate) Spark
-      // jobs whose wall-clock is pure scheduling at this state size
-      // (measured: the distributed loop held l59 at ~6.7 s while l60's
-      // driver peel over the same frames runs the whole gate in ~1.6 s).
-      // Arithmetic is REPLAYED EXACTLY: same LONG `div` truncation, same
-      // contribution sum — LlmSpec pins quotient ≡ generic
-      // [[graft.operators.GraphOps.pageRank]] on the doc graph.
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val sizeArr = cls.select(col("cid"), col("csize")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
-      val size = sizeArr.toMap
-      val adj = classPairs(cls.select(col(fpCol), col("cid")), maxHamming)
-        .select(col("ca"), col("cb")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      // Weighted quotient edges (s, t, w): cross-class both directions
-      // carry the SOURCE class size; csize ≥ 2 classes add a self-loop
-      // of weight csize − 1 — the doc graph's hamming-0 twin edges.
-      val edges = ArrayBuffer.empty[(Long, Long, Long)]
-      adj.foreach { case (a, b) =>
-        edges += ((a, b, size(a))); edges += ((b, a, size(b)))
-      }
-      sizeArr.foreach { case (c, w) => if (w >= 2) edges += ((c, c, w - 1)) }
-      // d_C = in-weighted degree (= (c_C − 1) + Σ_{D~C} c_D by symmetry).
-      val d = scala.collection.mutable.LongMap.empty[Long]
-      edges.foreach { case (_, t, w) => d(t) = d.getOrElse(t, 0L) + w }
-      // Rank init over nodes with ≥ 1 incident edge (the generic
-      // operator's node set); isolated singleton classes never rank —
-      // they drop out of the final inner join either way.
-      var r = scala.collection.mutable.LongMap.empty[Long]
-      edges.foreach { case (s0, _, _) => r(s0) = scale }
-      for (_ <- 1 to iters) {
-        val contrib = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (s0, t, w) =>
-          // Inner-join semantics: only currently-ranked sources emit.
-          r.get(s0).foreach { rs =>
-            contrib(t) = contrib.getOrElse(t, 0L) + w * (rs / d(s0))
-          }
-        }
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        contrib.foreach { case (t, c) =>
-          next(t) = (15L * scale + 85L * c) / 100L
-        }
-        r = next
-      }
-      val rankRows = sizeArr.collect {
-        case (c, _) if r.contains(c) => (c, d(c), r(c))
-      }.toSeq
-      materialize(
-        fp.join(cls.select(col(fpCol), col("cid")), Seq(fpCol))
-          .join(broadcast(rankRows.toDF("cid", "d", "r")), Seq("cid"))
-          .select(col("doc_id"), col("d").as("degree"),
-                  col("r").as("pr_scaled")))
-    } finally {
-      cls.unpersist(blocking = false)
-      fp.unpersist(blocking = false)
-    }
-  }
-
-  /** Verified fingerprint-class pairs within `maxHamming`, via pigeonhole
-    * banding (Manku/Jain/Sarma WWW'07): d+1 disjoint bit blocks — a ≤d pair
-    * must agree exactly on some block — so candidates are an equi-join on
-    * (block index, block bits), never an all-pairs scan. Returns
-    * (ca, cb, fa, fb, hamming) with ca < cb; DISTINCT fingerprints only,
-    * so hamming ≥ 1.
-    */
-  private def classPairs(classes: DataFrame, maxHamming: Int,
-                         bits: Int = 16): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bits,
-      s"maxHamming must be in [0, $bits)")
-    val fpCol = s"simhash$bits"
-    val nBlocks = maxHamming + 1
-    val blocks = (0 until nBlocks).map { bi =>
-      val lo = bi * bits / nBlocks
-      val width = (bi + 1) * bits / nBlocks - lo
-      // shift+MASK, never `%`: a 64-bit fingerprint with bit 63 set is a
-      // negative LONG, and remainder takes the dividend's sign — equal
-      // block bits could then land on different keys and the pigeonhole
-      // guarantee would silently drop pairs. bitwiseAND is sign-proof.
-      classes.select(col("cid"), col(fpCol), lit(bi).as("blk"),
-        shiftright(col(fpCol), lo)
-          .bitwiseAND(lit(if (width >= 64) -1L else (1L << width) - 1)).as("bb"))
-    }.reduce(_ unionByName _)
-    val a = blocks.select(col("cid").as("ca"), col(fpCol).as("fa"),
-                          col("blk"), col("bb"))
-    val b = blocks.select(col("cid").as("cb"), col(fpCol).as("fb"),
-                          col("blk"), col("bb"))
-    a.join(b, Seq("blk", "bb"))
-      .filter(col("ca") < col("cb"))
-      .select(col("ca"), col("cb"), col("fa"), col("fb"),
-        bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** Per-doc triangle counts over the SimHash ≤`maxHamming` graph (the L33
-    * gate), computed on the CONTRACTED fingerprint-class graph — the same
-    * collapse [[simhashComponents]] applies to connected components.
-    *
-    * Why contraction is mandatory here: identical-fingerprint docs form
-    * CLIQUES in the doc graph, and wedge enumeration — even degree-ordered
-    * — is quadratic in clique width (sf0.1: a handful of wide classes put
-    * a 15.2 s direct [[GraphOps.triangleCounts]] run — 5.9 s once
-    * localCheckpoint cut the 6× lineage re-execution, still ~50% over the
-    * ~4 s contracted path in BENCH_r07).
-    * Because adjacency depends only on fingerprints, the doc graph is the
-    * class graph with every node blown up to a clique of its width w, and
-    * each doc's triangle count has a CLOSED FORM over class aggregates:
-    *
-    *   T(doc ∈ A) = C(wA−1, 2)                 — both others in A
-    *              + (wA−1)·Σ_{B~A} wB          — one in A, one adjacent
-    *              + Σ_{B~A} C(wB, 2)           — both in one adjacent B
-    *              + Σ_{(A,B,C) class-triangle} wB·wC   — all distinct
-    *
-    * Only the last term enumerates triangles, and it runs on the class
-    * graph (sf0.1: 1195 nodes / ~3.1k edges vs 5000 nodes / ~578k edges).
-    * Equals the direct doc-graph counts — spec-pinned. Output: (doc_id,
-    * n_triangles), only docs in ≥1 triangle (the direct formulation's
-    * contract).
-    */
-  def simhashTriangleCounts(docs: DataFrame, maxHamming: Int = 1): DataFrame = {
-    val fpCol = "simhash16"
-    val fp = simhash(docs).persist()
-    val cls = fpClasses(fp)
-      .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("w")), fpCol)
-      .persist()
-    try {
-      // DRIVER-LOCAL closed form (round 15, guide §2.4): the class weights
-      // and banded class adjacency are the same fingerprint-space-bounded
-      // frames [[simhashKCore]] collects for its driver peel (≤ 2^16
-      // classes, ≤ 17·2^16/2 hamming-1 pairs), and every term of the
-      // closed form — neighbor sums, C(w,2) sums, class-triangle products
-      // — is a local integer fold over them; the distributed evaluation
-      // paid two localCheckpoints plus ~8 tiny joins whose wall-clock is
-      // pure scheduling at this state size. The arithmetic is identical
-      // LONG math (GraphPropSpec pins contraction ≡ direct doc-graph
-      // counts).
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val wArr = cls.select(col("cid"), col("w")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
-      val w = scala.collection.mutable.LongMap(wArr: _*)
-      val eArr = classPairs(cls.select(col(fpCol), col("cid")), maxHamming)
-        .select(col("ca"), col("cb")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val nbrs = scala.collection.mutable.LongMap.empty[ArrayBuffer[Long]]
-      eArr.foreach { case (a, b) =>
-        nbrs.getOrElseUpdate(a, ArrayBuffer.empty) += b
-        nbrs.getOrElseUpdate(b, ArrayBuffer.empty) += a
-      }
-      val nbrSet = nbrs.map { case (c, l) => c -> l.toSet }
-      val tt = scala.collection.mutable.LongMap.empty[Long]
-      // Each class triangle (a, b, z) counted once: a < b from the
-      // ordered pair list, z > b from the intersection filter.
-      eArr.foreach { case (a0, b0) =>
-        val (a, b) = if (a0 < b0) (a0, b0) else (b0, a0)
-        nbrs(a).foreach { z =>
-          if (z > b && nbrSet(b).contains(z)) {
-            tt(a) = tt.getOrElse(a, 0L) + w(b) * w(z)
-            tt(b) = tt.getOrElse(b, 0L) + w(a) * w(z)
-            tt(z) = tt.getOrElse(z, 0L) + w(a) * w(b)
-          }
-        }
-      }
-      val perClass = wArr.flatMap { case (c, wc) =>
-        val nc = nbrs.getOrElse(c, ArrayBuffer.empty[Long])
-        val s1 = nc.iterator.map(w).sum
-        val s2 = nc.iterator.map(n => w(n) * (w(n) - 1L) / 2L).sum
-        val n = (wc - 1L) * (wc - 2L) / 2L + (wc - 1L) * s1 + s2 +
-          tt.getOrElse(c, 0L)
-        if (n > 0L) Some((c, n)) else None
-      }.toSeq
-      materialize(
-        fp.join(cls.select(col(fpCol), col("cid")), Seq(fpCol))
-          .join(broadcast(perClass.toDF("cid", "n_triangles")), Seq("cid"))
-          .select(col("doc_id"), col("n_triangles")))
-    } finally {
-      cls.unpersist(blocking = false)
-      fp.unpersist(blocking = false)
-    }
-  }
-
-  /** k-core peel of the SimHash ≤`maxHamming` near-dup graph (the L60
-    * gate): iteratively remove every doc whose surviving degree is below
-    * k until a fixed point — the density-based graph filter (Seidman 1983
-    * "Network structure and minimum degree"; the web-graph spam/quality
-    * peel of Batagelj–Zaveršnik's O(m) algorithm, round-synchronous here).
-    * In a curation pipeline the deep core is the templated/boilerplate
-    * heart of a duplication neighborhood (docs whose near-dup degree
-    * survives every peel), while peel_round stratifies the periphery —
-    * the axis component membership (l16) and centrality (l59) both miss:
-    * a sprawling low-density component has a large cluster but an EMPTY
-    * core.
-    *
-    * k is not fixed a priori (degree scales with corpus duplication) but
-    * derived from the data: the lower median of the fingerprinted docs'
-    * degrees — smallest d with 2·|{deg ≤ d}| ≥ N — an integer-exact,
-    * engine-independent threshold (no cume_dist doubles; the r37 lesson).
-    *
-    * Scale design — the same fingerprint-class QUOTIENT l16/l33/l59 ride:
-    * docs sharing a fingerprint have identical neighbor sets, hence
-    * identical degree at every round, hence identical peel fate — the
-    * whole peel collapses onto the class graph with node weights
-    * (deg(doc ∈ A) = (w_A − 1) + Σ_{B~A, B alive} w_B). The class space
-    * is bounded by the fingerprint width (≤ 2^16 nodes, ≤ (d+1)-banded
-    * adjacency), so the class table and its adjacency collect to the
-    * driver in KBs AT ANY CORPUS SIZE and the peel itself is a bounded
-    * in-memory loop — the distributed work is one fingerprint pass, one
-    * class aggregate, the banded class-pair join, and one broadcast join
-    * back to docs. Nothing iterative touches a corpus-sized frame (vs the
-    * doc-level peel: rounds × full-graph degree aggregates).
-    *
-    * Output: (doc_id, deg0, k, peel_round) over docs with ≥1 token (the
-    * fingerprint universe); peel_round = 0 means the doc survives to the
-    * k-core, t ≥ 1 the synchronous round that removed it. Deterministic:
-    * round-synchronous removal has no tie-ordering freedom.
-    */
-  def simhashKCore(docs: DataFrame, maxHamming: Int = 1): DataFrame = {
-    val fpCol = "simhash16"
-    val fp = simhash(docs).persist()
-    try {
-      val cls = fpClasses(fp)
-        .join(fp.groupBy(col(fpCol)).agg(count(lit(1)).as("csize")), fpCol)
-        .persist() // ≤ 2^16 rows — bounded by the fingerprint space
-      try {
-        val classRows = cls.select(col("cid"), col("csize")).collect()
-        val adjRows = classPairs(cls.select(col(fpCol), col("cid")), maxHamming)
-          .select(col("ca"), col("cb")).collect()
-        val size = classRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val nbrs = scala.collection.mutable.Map
-          .empty[Long, ArrayBuffer[Long]]
-        adjRows.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          nbrs.getOrElseUpdate(a, ArrayBuffer.empty) += b
-          nbrs.getOrElseUpdate(b, ArrayBuffer.empty) += a
-        }
-        val deg0 = size.map { case (c, w) =>
-          c -> (w - 1 + nbrs.getOrElse(c, ArrayBuffer.empty[Long])
-                  .iterator.map(size).sum)
-        }
-        // Lower median over DOCS (classes weighted by csize): smallest
-        // degree d with 2·|{docs: deg ≤ d}| ≥ N. Integer comparisons only.
-        val n = size.values.sum
-        val k = {
-          var cum = 0L
-          deg0.toSeq.map { case (c, d) => (d, size(c)) }.groupBy(_._1)
-            .view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-            .collectFirst { case (d, w) if { cum += w; 2 * cum >= n } => d }
-            .getOrElse(0L)
-        }
-        // Round-synchronous peel to the fixed point on the class quotient.
-        val cur = scala.collection.mutable.Map(deg0.toSeq: _*)
-        val alive = scala.collection.mutable.Set(size.keys.toSeq: _*)
-        val peeled = scala.collection.mutable.Map.empty[Long, Long]
-        var round = 0L
-        var removed = alive.filter(cur(_) < k).toSeq
-        while (removed.nonEmpty) {
-          round += 1
-          removed.foreach { c => peeled(c) = round; alive -= c }
-          removed.foreach { c =>
-            nbrs.getOrElse(c, ArrayBuffer.empty[Long]).foreach { u =>
-              if (alive(u)) cur(u) -= size(c)
-            }
-          }
-          removed = alive.filter(cur(_) < k).toSeq
-        }
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val peelDF = size.keys.toSeq
-          .map(c => (c, deg0(c), peeled.getOrElse(c, 0L)))
-          .toDF("cid", "deg0", "peel_round")
-        materialize(
-          fp.join(cls.select(col(fpCol), col("cid")), Seq(fpCol))
-            .join(broadcast(peelDF), Seq("cid"))
-            .select(col("doc_id"), col("deg0"), lit(k).as("k"),
-                    col("peel_round")))
-      } finally cls.unpersist(blocking = false)
-    } finally fp.unpersist(blocking = false)
-  }
-
-  /** Dedup clusters in one call: SimHash fingerprints → class contraction →
-    * banded class pairs → [[connectedComponents]] on the CLASS graph →
-    * membership expansion. Output (doc_id, component_id) where
-    * component_id is the min doc_id of the cluster — equal to running CC
-    * over the full [[simhashPairs]] graph (unit-tested), but the iterative
-    * state is one row per distinct fingerprint instead of per document.
-    */
-  def simhashComponents(docs: DataFrame, maxHamming: Int = 1): DataFrame = {
-    val fp = simhash(docs).persist()
-    val classes = fpClasses(fp).persist()
-    val cp = classPairs(classes, maxHamming)
-      .select(col("ca").as("da"), col("cb").as("db"))
-    val comp = connectedComponents(
-      classes.select(col("cid").as("doc_id")), cp)
-      .select(col("doc_id").as("cid"), col("component_id"))
-    // LEFT join from the full doc set: a document with no tokens has no
-    // fingerprint (simhash emits nothing for it) but is still part of the
-    // corpus — it forms its own singleton component, exactly as the
-    // transitive-closure oracle (whose base case is every document) says.
-    val out = materialize(
-      docs.select(col("doc_id"))
-        .join(fp.join(classes, "simhash16").join(comp, "cid")
-                .select(col("doc_id"), col("component_id")),
-              Seq("doc_id"), "left")
-        .select(col("doc_id"),
-                coalesce(col("component_id"), col("doc_id")).as("component_id")))
-    classes.unpersist(blocking = false)
-    fp.unpersist(blocking = false)
-    out
-  }
-
   /** Connected components over a near-dup pair graph — the step that turns
     * pairwise matches into DEDUP CLUSTERS (component id = min doc_id, the
     * canonical document every dedup pipeline keeps). Iterative min-label
@@ -1590,53 +1178,6 @@ object DedupOps {
       throw new IllegalStateException(
         s"connectedComponents did not converge within $round rounds ($changed labels still changing)")
     labels.select(col("x").as("doc_id"), col("comp").as("component_id"))
-  }
-
-  /** Per-lane multipliers for the polynomial token hash: the mod-1000003
-    * hash carries ~20 useful bits, so fingerprints wider than 16 bits draw
-    * each 16-bit lane from an INDEPENDENT hash (distinct multiplier) rather
-    * than pretending one 20-bit hash has 64 independent bits.
-    */
-  private val laneMults = Seq(31L, 37L, 41L, 43L)
-
-  /** SimHash fingerprint (`bits` wide, default 16) per document: tokens
-    * hashed with the SQL-reproducible polynomial hash — one independent
-    * hash lane per 16 fingerprint bits — and each bit is the sign of the
-    * weighted bit-vote across tokens (duplicates count).
-    *
-    * All bit-votes are conditional sums of ONE hash aggregate on doc_id
-    * — the previous formulation crossJoined every token row with a 16-row
-    * bit table (16× row explosion) and shuffled twice on (doc_id, b) then
-    * doc_id; this shuffles once, with map-side partial aggregation, and
-    * produces the identical fingerprint (same votes, same sign rule).
-    *
-    * The 16-bit fixture path keeps the oracle replayable in small-integer
-    * SQL; `bits = 64` is the production width (the r5 verdict's scaladoc-
-    * only note, now code): a 16-bit space saturates on large corpora —
-    * 5000 sf0.1 docs already contract to 1195 distinct fingerprints — while
-    * 64 bits keep random-pair collisions negligible at corpus scale. Bit 63
-    * of a 64-bit fingerprint is the LONG sign bit; all downstream banding
-    * uses shift+mask (never `%`), so negative fingerprints are safe.
-    */
-  def simhash(docs: DataFrame, bits: Int = 16): DataFrame = {
-    require(bits % 16 == 0 && bits >= 16 && bits <= 64,
-      s"bits must be 16, 32, 48, or 64 (one hash lane per 16 bits); got $bits")
-    val lanes = bits / 16
-    val toks = docs.select(col("doc_id"),
-        explode(graft.functions.TextFunctions.tokens("text")).as("tok"))
-      .select(col("doc_id") +: (0 until lanes).map { k =>
-        graft.functions.TextFunctions.tokenHash("tok", laneMults(k)).as(s"h$k")
-      }: _*)
-    val kb = for (k <- 0 until lanes; b <- 0 until 16) yield (k, b)
-    val votes = kb.map { case (k, b) =>
-      sum(when(expr(s"shiftright(h$k, $b) & 1") === 1, 1L).otherwise(-1L)).as(s"s${k}_$b")
-    }
-    toks.groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        kb.map { case (k, b) =>
-          when(col(s"s${k}_$b") > 0, lit(1L << (16 * k + b))).otherwise(0L)
-        }.reduce(_ + _).as(s"simhash$bits"))
   }
 
   /** Sub-document SPAN dedup (the L65 gate) — the dedup granularity BELOW

@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
   * primitive; no reference analogue — the extended-surface mandate) and
   * PageRank. These are the arbitrary-graph operators; the dedup-graph
   * gates run on the fingerprint-class quotient instead
-  * ([[DedupOps.simhashTriangleCounts]], [[DedupOps.simhashPageRank]]),
+  * ([[SimHashOps.simhashTriangleCounts]], [[SimHashOps.simhashPageRank]]),
   * and the specs pin each quotient equal to its operator here.
   *
   * Representation: undirected simple graph as distinct `(da, db)` rows with
   * `da < db` — exactly the near-dup pair contract of
-  * [[DedupOps.simhashPairs]] / [[DedupOps.prefixJaccardPairs]], so the
+  * [[SimHashOps.simhashPairs]] / [[DedupOps.prefixJaccardPairs]], so the
   * dedup-graph outputs feed straight in.
   */
 object GraphOps {
@@ -40,7 +40,7 @@ object GraphOps {
     *
     * On dedup graphs, contract duplicate classes first: identical-
     * fingerprint docs form cliques, and clique wedge counts are quadratic
-    * in clique size — [[DedupOps.simhashTriangleCounts]] computes the same
+    * in clique size — [[SimHashOps.simhashTriangleCounts]] computes the same
     * per-doc counts from the class graph in closed form.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {

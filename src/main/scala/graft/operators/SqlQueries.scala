@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Engine, Scratch}
+import graft.{Engine, Gate, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Declared queries routed through the engine's SECOND entry point —
@@ -34,30 +34,41 @@ object SqlQueries {
       |       w2 AS (PARTITION BY o_custkey)
       |ORDER BY o_custkey, rn""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val gates: Seq[Gate] = Seq(
     // Pricing-summary shape (R2 family) parsed from ANSI SQL: exact
     // DECIMAL sums exported as DOUBLE, ordinal group-by.
-    "sql1_pricing" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql1_pricing", (s, d) => Engine.sql(s, d,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+        |  COUNT(*) AS n
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // Explicit GROUPING SETS through the parser — the grouping-set shape
     // neither ROLLUP (r13) nor CUBE (r13b) covers: two hand-picked sets,
     // (returnflag) and (linestatus), no grand total. SQL-only surface: the
     // DataFrame API exposes only rollup/cube, so the parser IS the
     // operator's entry point.
-    "sql3_grouping_sets" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql3_grouping_sets", (s, d) => Engine.sql(s, d,
       """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
         |  COALESCE(l_linestatus, 'ALL') AS status,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS n
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY flag, status""".stripMargin)),
+        |ORDER BY flag, status""".stripMargin),
+      """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
+        |  COALESCE(l_linestatus, 'ALL') AS status,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  COUNT(*) AS n
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+        |ORDER BY flag, status""".stripMargin),
 
     // The engine's custom native expression surface through the PARSER:
     // vec_dot is an extension-injected codegen'd Catalyst expression
@@ -66,14 +77,26 @@ object SqlQueries {
     // squared L2 norm, accumulated in index order — bit-identical to the
     // oracle's list_reduce fold, so MAX/MIN over exact doubles is
     // hash-stable with no rounding needed.
-    "sql4_vec_norms" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql4_vec_norms", (s, d) => Engine.sql(s, d,
       """SELECT label,
         |  MAX(vec_dot(CAST(embedding AS ARRAY<DOUBLE>),
         |              CAST(embedding AS ARRAY<DOUBLE>))) AS max_sq_norm,
         |  MIN(vec_dot(CAST(embedding AS ARRAY<DOUBLE>),
         |              CAST(embedding AS ARRAY<DOUBLE>))) AS min_sq_norm,
         |  COUNT(*) AS n
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin)),
+        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin),
+      // Same index-order fold as VecDot's generated loop: ((0+v1)+v2)+... —
+      // identical IEEE sequence, so the doubles match bit-for-bit.
+      """WITH e AS (SELECT label,
+        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS a
+        |           FROM embeddings)
+        |SELECT label,
+        |  MAX(list_reduce(list_prepend(0.0, list_transform(a, v -> v * v)),
+        |                  (acc, v) -> acc + v)) AS max_sq_norm,
+        |  MIN(list_reduce(list_prepend(0.0, list_transform(a, v -> v * v)),
+        |                  (acc, v) -> acc + v)) AS min_sq_norm,
+        |  COUNT(*) AS n
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Genuinely CORRELATED scalar subqueries through the parser —
     // complements r17, whose DataFrame form is pre-decorrelated by hand.
@@ -84,7 +107,7 @@ object SqlQueries {
     // MULTIPLICATION (price·n > Σ), all DECIMAL-exact — a decimal
     // DIVISION here would round at engine-specific scales and make the
     // filter boundary non-portable.
-    "sql5_correlated" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql5_correlated", (s, d) => Engine.sql(s, d,
       """SELECT o_orderkey, o_custkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
         |FROM orders o
@@ -93,14 +116,23 @@ object SqlQueries {
         |       WHERE i.o_custkey = o.o_custkey) >
         |      (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2)))
         |       FROM orders i WHERE i.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin)),
+        |ORDER BY o_orderkey""".stripMargin),
+      """SELECT o_orderkey, o_custkey,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
+        |FROM orders o
+        |WHERE CAST(o_totalprice AS DECIMAL(18,2)) *
+        |      (SELECT COUNT(*) FROM orders i
+        |       WHERE i.o_custkey = o.o_custkey) >
+        |      (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2)))
+        |       FROM orders i WHERE i.o_custkey = o.o_custkey)
+        |ORDER BY o_orderkey""".stripMargin),
 
     // LATERAL correlated subquery with LIMIT — each customer's single
     // most expensive order. The per-group top-1 expressed as the parser's
     // lateral-join shape (complementing r9's window formulation);
     // Catalyst plans the correlated limit via DomainJoin rewrites. Total
     // tie-break (price desc, orderkey asc) keeps the picked row unique.
-    "sql6_lateral" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql6_lateral", (s, d) => Engine.sql(s, d,
       """SELECT c.c_custkey, t.o_orderkey, t.price
         |FROM customer c
         |JOIN LATERAL (
@@ -109,7 +141,17 @@ object SqlQueries {
         |  FROM orders
         |  WHERE o_custkey = c.c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 1) t
-        |ORDER BY c_custkey""".stripMargin)),
+        |ORDER BY c_custkey""".stripMargin),
+      // DuckDB's grammar wants ON TRUE for JOIN LATERAL; same semantics.
+      """SELECT c.c_custkey, t.o_orderkey, t.price
+        |FROM customer c
+        |JOIN LATERAL (
+        |  SELECT o_orderkey,
+        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
+        |  FROM orders
+        |  WHERE o_custkey = c.c_custkey
+        |  ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 1) t ON TRUE
+        |ORDER BY c_custkey""".stripMargin),
 
     // Predicate subqueries through the parser: EXISTS and NOT EXISTS in
     // one WHERE clause, which Catalyst's RewritePredicateSubquery turns
@@ -117,7 +159,7 @@ object SqlQueries {
     // of sql5's scalar-subquery decorrelation (r6/r7 prove the same plans
     // from the DataFrame API; this gate proves the parser route). The
     // price threshold keeps NOT EXISTS selective rather than vacuous.
-    "sql7_exists" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql7_exists", (s, d) => Engine.sql(s, d,
       """SELECT c.c_mktsegment, COUNT(*) AS n_active
         |FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
@@ -127,7 +169,17 @@ object SqlQueries {
         |                  WHERE o.o_custkey = c.c_custkey
         |                    AND CAST(o.o_totalprice AS DECIMAL(18,2)) >
         |                        300000.00)
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      """SELECT c.c_mktsegment, COUNT(*) AS n_active
+        |FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey
+        |                AND o.o_orderstatus = 'F')
+        |  AND NOT EXISTS (SELECT 1 FROM orders o
+        |                  WHERE o.o_custkey = c.c_custkey
+        |                    AND CAST(o.o_totalprice AS DECIMAL(18,2)) >
+        |                        300000.00)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // RECURSIVE CTE (Spark 4's WITH RECURSIVE) — per-customer order-chain
     // walk: anchor = each customer's first order, step = LEAD successor in
@@ -147,7 +199,7 @@ object SqlQueries {
     // keeps the gate honest — the cache builds inside the timed recursion,
     // not at statement-registration time. This is the production posture
     // for iterating over a derived relation: materialize, then loop.
-    "sql8_recursive_chain" -> { (s, d) =>
+    Gate("sql8_recursive_chain", { (s, d) =>
       Engine.registerViews(s, d)
       val edgeSelect =
         """SELECT o_custkey, o_orderkey,
@@ -245,16 +297,40 @@ object SqlQueries {
             |FROM walk GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
       }
     },
+      // The identical statement runs in DuckDB — recursion, WINDOW clause,
+      // and exact-cents arithmetic are dialect-shared.
+      """WITH RECURSIVE edges AS (
+        |  SELECT o_custkey, o_orderkey,
+        |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+        |         LEAD(o_orderkey) OVER w AS next_key,
+        |         ROW_NUMBER() OVER w AS rn
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |),
+        |walk AS (
+        |  SELECT o_custkey, o_orderkey, next_key, cents, CAST(1 AS BIGINT) AS hop
+        |  FROM edges WHERE rn = 1
+        |  UNION ALL
+        |  SELECT e.o_custkey, e.o_orderkey, e.next_key, w.cents + e.cents, w.hop + 1
+        |  FROM walk w JOIN edges e ON w.next_key = e.o_orderkey
+        |)
+        |SELECT o_custkey, MAX(hop) AS chain_len, MAX(cents) AS chain_cents
+        |FROM walk GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
 
     // GROUP BY ALL: every non-aggregate select item becomes a group key —
     // the modern-warehouse convenience both dialects share verbatim. The
     // resolution happens in the analyzer; the plan is the same hash
     // aggregate an explicit GROUP BY 1, 2 produces.
-    "sql12_group_by_all" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql12_group_by_all", (s, d) => Engine.sql(s, d,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY ALL
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+      // Dialect-shared GROUP BY ALL — identical statement.
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem GROUP BY ALL
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
     // SQL22 — the named WINDOW clause: one window definition referenced by
     // several OVER clauses (ranking + running sum share `w`, the
@@ -264,7 +340,9 @@ object SqlQueries {
     // plan is the same two Window nodes the inline spelling produces, and
     // both dialects share the statement verbatim. Exact cents, total
     // (cents DESC, orderkey) order ⇒ deterministic running sums.
-    "sql22_window_clause" -> ((s, d) => Engine.sql(s, d, WindowClauseSql)),
+    Gate("sql22_window_clause", (s, d) => Engine.sql(s, d, WindowClauseSql),
+      // Dialect-shared named WINDOW clause — identical statement.
+      WindowClauseSql),
 
     // SQL23 — gaps-and-islands sessionization in PURE batch SQL: the
     // classic lag → break-flag → running-sum-of-breaks island id, here
@@ -275,7 +353,7 @@ object SqlQueries {
     // so a 100 TB replay is N independent per-user sorted scans.
     // Determinism: (ts, event_id) is a total order, durations are exact
     // integer microseconds.
-    "sql23_gaps_islands" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql23_gaps_islands", (s, d) => Engine.sql(s, d,
       """WITH o AS (
         |  SELECT user_id, ts, event_id,
         |    unix_micros(ts) - LAG(unix_micros(ts)) OVER w AS gap_us
@@ -298,7 +376,30 @@ object SqlQueries {
         |SELECT user_id, COUNT(*) AS n_sessions,
         |  CAST(MAX(n_events) AS BIGINT) AS max_events,
         |  CAST(SUM(dur_us) AS BIGINT) AS total_dur_us
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
+      """WITH o AS (
+        |  SELECT user_id, ts, event_id,
+        |    epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap_us
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |f AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN gap_us IS NULL OR gap_us > 600000000 THEN 1 ELSE 0 END
+        |      AS brk
+        |  FROM o),
+        |s AS (
+        |  SELECT user_id, ts,
+        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                   ROWS UNBOUNDED PRECEDING) AS sess
+        |  FROM f),
+        |g AS (
+        |  SELECT user_id, sess, COUNT(*) AS n_events,
+        |    epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS dur_us
+        |  FROM s GROUP BY 1, 2)
+        |SELECT user_id, COUNT(*) AS n_sessions,
+        |  CAST(MAX(n_events) AS BIGINT) AS max_events,
+        |  CAST(SUM(dur_us) AS BIGINT) AS total_dur_us
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL14 — named parameter markers: the statement is compiled with
     // `:status` / `:minprice` placeholders and the values bound at call
@@ -306,7 +407,7 @@ object SqlQueries {
     // surface every SQL-embedding application needs. The oracle is the
     // same statement with the bindings inlined as literals, proving
     // parameter binding ≡ literal substitution.
-    "sql14_named_params" -> { (s, d) =>
+    Gate("sql14_named_params", { (s, d) =>
       Engine.registerViews(s, d)
       s.sql(
         """SELECT o_orderpriority, COUNT(*) AS n,
@@ -317,6 +418,13 @@ object SqlQueries {
           |GROUP BY 1 ORDER BY 1""".stripMargin,
         Map("status" -> "F", "minprice" -> 1000))
     },
+      // The bindings inlined as literals — binding ≡ substitution.
+      """SELECT o_orderpriority, COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price
+        |FROM orders
+        |WHERE o_orderstatus = 'F' AND o_totalprice >= 1000
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL15 — error-safe try_* functions (ANSI mode's graceful half):
     // try_cast turns planted unparseable strings into NULLs instead of
@@ -324,7 +432,7 @@ object SqlQueries {
     // LONG overflow — each surviving NULL is COUNTED, so the gate pins
     // exactly which rows degraded. The dirty-input posture at 100 TB:
     // ANSI strictness with per-row degradation, not job-level failure.
-    "sql15_try_funcs" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql15_try_funcs", (s, d) => Engine.sql(s, d,
       """WITH r AS (
         |  SELECT o_orderkey AS k,
         |    CASE WHEN o_orderkey % 3 = 0
@@ -336,7 +444,16 @@ object SqlQueries {
         |  CAST(SUM(try_cast(ks AS BIGINT)) AS BIGINT) AS sum_parsed,
         |  COUNT(try_divide(100, k % 5)) AS n_div,
         |  COUNT(try_add(9223372036854775800, k % 10)) AS n_add
-        |FROM r""".stripMargin)),
+        |FROM r""".stripMargin),
+      // Replays each try_* degradation as its CASE condition: %3 rows are
+      // unparseable, %5=0 divides by zero, %10>7 overflows the LONG probe.
+      """WITH r AS (SELECT o_orderkey AS k FROM orders)
+        |SELECT COUNT(*) AS n,
+        |  COUNT(CASE WHEN k % 3 != 0 THEN 1 END) AS n_parsed,
+        |  CAST(SUM(CASE WHEN k % 3 != 0 THEN k END) AS BIGINT) AS sum_parsed,
+        |  COUNT(CASE WHEN k % 5 != 0 THEN 1 END) AS n_div,
+        |  COUNT(CASE WHEN k % 10 <= 7 THEN 1 END) AS n_add
+        |FROM r""".stripMargin),
 
     // SQL16 — ordered string aggregation through the parser: LISTAGG
     // WITHIN GROUP (new in Spark 4) — the reporting/export staple that
@@ -344,13 +461,20 @@ object SqlQueries {
     // pre-DISTINCTed and the WITHIN GROUP order is total, so the string
     // is deterministic on any partitioning — the r27 sort-before-export
     // rule, here enforced by the aggregate itself instead of a wrapper.
-    "sql16_listagg" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql16_listagg", (s, d) => Engine.sql(s, d,
       """WITH p AS (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders)
         |SELECT o_orderstatus,
         |  listagg(o_orderpriority, '|')
         |    WITHIN GROUP (ORDER BY o_orderpriority) AS priorities,
         |  COUNT(*) AS n
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin)),
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
+      // DuckDB's grammar spells the ordered fold string_agg(... ORDER BY).
+      """WITH p AS (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders)
+        |SELECT o_orderstatus,
+        |  string_agg(o_orderpriority, '|' ORDER BY o_orderpriority)
+        |    AS priorities,
+        |  COUNT(*) AS n
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL18 — the CATALOG/DDL surface: CREATE TABLE ... AS SELECT into an
     // explicit scratch LOCATION, INSERT INTO on top, read back through
@@ -359,7 +483,7 @@ object SqlQueries {
     // every other gate rides. DDL executes eagerly inside the builder;
     // the result is materialized (localCheckpoint) before DROP TABLE so
     // the caller never sees the dropped table.
-    "sql18_ctas" -> { (s, d) =>
+    Gate("sql18_ctas", { (s, d) =>
       withScratchTable(s, d, "graft_ctas") { (tbl, loc) =>
         s.sql(
           s"""CREATE TABLE $tbl USING parquet LOCATION '$loc' AS
@@ -371,6 +495,13 @@ object SqlQueries {
         s.table(tbl).orderBy("status").localCheckpoint(true)
       }
     },
+      // Replays CTAS + the inserted row.
+      """SELECT status, n, cents FROM (
+        |  SELECT o_orderstatus AS status, COUNT(*) AS n,
+        |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
+        |  FROM orders GROUP BY 1
+        |  UNION ALL SELECT 'X', 0, 0)
+        |ORDER BY status""".stripMargin),
 
     // SQL21 — partitioned DML through the parser: CREATE a partitioned
     // table, dynamic-partition INSERT INTO the full load, then INSERT
@@ -379,7 +510,7 @@ object SqlQueries {
     // warehouse restatement job actually runs. The explicit PARTITION
     // clause scopes the overwrite: every other partition's rows must
     // survive byte-for-byte (the oracle restates F and keeps the rest).
-    "sql21_insert_overwrite" -> { (s, d) =>
+    Gate("sql21_insert_overwrite", { (s, d) =>
       withScratchTable(s, d, "graft_part") { (tbl, loc) =>
         s.sql(
           s"""CREATE TABLE $tbl (k BIGINT, cents BIGINT, status STRING)
@@ -403,6 +534,14 @@ object SqlQueries {
           .localCheckpoint(true)
       }
     },
+      // Replays the load + the static-partition restatement: F carries
+      // doubled cents, every other partition its original.
+      """SELECT o_orderstatus AS status, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN o_orderstatus = 'F'
+        |    THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 200 AS BIGINT)
+        |    ELSE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |    END) AS BIGINT) AS sum_cents
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL19 — the CACHE surface: CACHE TABLE <name> AS SELECT pins the
     // derived relation in the columnar in-memory store; the downstream
@@ -410,7 +549,7 @@ object SqlQueries {
     // EngineSqlSpec), and at 100 TB this is the interactive-reuse lever
     // (pay the scan once per session, not per query). UNCACHE restores
     // session state; the result is materialized inside the cached scope.
-    "sql19_cache" -> { (s, d) =>
+    Gate("sql19_cache", { (s, d) =>
       graft.Engine.registerViews(s, d)
       // CACHE TABLE ... AS SELECT creates the temp view too — drop any
       // leftover from a prior pass (Bench runs each gate three times).
@@ -433,6 +572,13 @@ object SqlQueries {
         s.sql("DROP VIEW IF EXISTS graft_cached_orders")
       }
     },
+      // The cache is transparent to semantics — the oracle is the filtered
+      // aggregate itself.
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_price
+        |FROM orders WHERE o_totalprice > 1000
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // SQL20 — the HINT surface: /*+ BROADCAST */ forces the dim to the
     // build side even when the session's auto-broadcast is DISABLED —
@@ -440,7 +586,7 @@ object SqlQueries {
     // stats on a 100 TB fact table being the classic case). EngineSqlSpec
     // asserts the hinted plan broadcasts where the unhinted one
     // sort-merges; the result is hint-invariant (the oracle).
-    "sql20_hints" -> { (s, d) =>
+    Gate("sql20_hints", { (s, d) =>
       Engine.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         Engine.sql(s, d,
           """SELECT /*+ BROADCAST(customer) */ c_mktsegment,
@@ -452,6 +598,12 @@ object SqlQueries {
           .localCheckpoint(true)
       }
     },
+      // The hint changes the physical join, never the result.
+      """SELECT c_mktsegment, COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL24 — STATISTICS-DRIVEN PLANNING (the r8 verdict's last
     // first-order 100 TB lever with no gate): `ANALYZE TABLE ... COMPUTE
@@ -468,7 +620,18 @@ object SqlQueries {
     // the planner sees a selective dim filter BEFORE paying the fact
     // shuffle. The result is plan-invariant — the hash gate pins it to
     // the plain-join oracle; only the plan moves.
-    "sql24_cbo_reorder" -> { (s, d) => cboReorder(s, d) },
+    Gate("sql24_cbo_reorder", { (s, d) => cboReorder(s, d) },
+      // The CTAS copies are verbatim column projections of the fixture
+      // tables, so the oracle is the plain star join on the originals —
+      // statistics change the PLAN, never the result.
+      """SELECT o.o_orderstatus AS status, COUNT(*) AS n,
+        |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
+        |                AS BIGINT)) AS BIGINT) AS cents
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |WHERE c.c_mktsegment = 'BUILDING'
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL17 — PIVOT through the parser (r20 proves the DataFrame route;
     // the SQL clause is the warehouse-report spelling). Explicit value
@@ -477,221 +640,16 @@ object SqlQueries {
     // priority surfaces NULL (the SQL PIVOT contract — the oracle's
     // conditional SUM over zero rows is NULL likewise). Exact DECIMAL
     // sums exported as DOUBLE per the Q conventions.
-    "sql17_pivot" -> ((s, d) => Engine.sql(s, d,
+    Gate("sql17_pivot", (s, d) => Engine.sql(s, d,
       """SELECT * FROM (
         |  SELECT o_orderstatus, o_orderpriority,
         |    CAST(o_totalprice AS DECIMAL(18,2)) AS p
         |  FROM orders)
         |PIVOT (CAST(SUM(p) AS DOUBLE) FOR o_orderpriority
         |       IN ('1-URGENT' AS urgent, '2-HIGH' AS high, '5-LOW' AS low))
-        |ORDER BY o_orderstatus""".stripMargin)),
-
-    // SQL13 — the USER-function registration surface: a plain Scala UDF
-    // (acct_tier) and a typed Aggregator UDAF (sumsq_long) registered by
-    // name and called through the parser ([[graft.functions
-    // .UserFunctions]]). Deterministic integer semantics throughout, so
-    // the oracle replays the tier CASE and the exact sum of squares.
-    "sql13_udf" -> { (s, d) =>
-      graft.functions.UserFunctions.register(s)
-      Engine.sql(s, d,
-        """WITH c AS (
-          |  SELECT CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-          |    AS cents FROM customer)
-          |SELECT acct_tier(cents) AS tier, COUNT(*) AS n,
-          |  sumsq_long(cents) AS sumsq
-          |FROM c GROUP BY 1 ORDER BY 1""".stripMargin)
-    },
-
-    // ANSI FILTER-clause aggregates: per-group conditional aggregation
-    // without CASE-WHEN scaffolding — one scan, every FILTER evaluated
-    // inside the same hash aggregate (no per-condition passes). The
-    // statement is dialect-shared, so the oracle runs it verbatim.
-    "sql10_filtered_agg" -> ((s, d) => Engine.sql(s, d,
-      """SELECT l_returnflag,
-        |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_big,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |       FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS disc_price,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // Correlated LATERAL subquery: top-2 orders per customer written as a
-    // dependent join, the shape SQL users reach for before window
-    // functions. Catalyst decorrelates the LIMIT-per-group into a
-    // partitioned window under the hood — the gate proves the rewrite
-    // produces exactly the window-formulation's rows.
-    "sql11_lateral" -> ((s, d) => Engine.sql(s, d,
-      """SELECT c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer,
-        |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-        |         WHERE o_custkey = c_custkey
-        |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-        |ORDER BY c_custkey, t.o_orderkey""".stripMargin)),
-
-    // SQL UNPIVOT (the parser-level wide→long reshape, inverse of r20's
-    // PIVOT): two measure columns melted into (metric, val) rows with
-    // explicit labels. Plans as a single Expand — one scan, rows ×2, no
-    // shuffle — which is the shape that survives 100 TB (the UNION ALL
-    // equivalent scans the table once per measure). Measures are
-    // pre-cast to a shared DOUBLE so UNPIVOT's least-common-type
-    // coercion never invents a cross-engine type skew.
-    "sql9_unpivot" -> ((s, d) => Engine.sql(s, d,
-      """SELECT p_partkey, metric, val
-        |FROM (SELECT p_partkey, CAST(p_size AS DOUBLE) AS size_v,
-        |             p_retailprice AS retail_v FROM part)
-        |UNPIVOT (val FOR metric IN (size_v AS size, retail_v AS retail))
-        |ORDER BY p_partkey, metric""".stripMargin)),
-
-    // Hourly event counts through the SQL-registered events view — pins
-    // the view's microsecond TimestampType (a regression here surfaces as
-    // a ws hash mismatch, the exact failure mode the r3 ADVICE flagged).
-    "sql2_events_hourly" -> ((s, d) => Engine.sql(s, d,
-      """SELECT unix_micros(date_trunc('HOUR', ts)) AS ws, event_type,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sql1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sql3_grouping_sets" ->
-      """SELECT COALESCE(l_returnflag, 'ALL') AS flag,
-        |  COALESCE(l_linestatus, 'ALL') AS status,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY flag, status""".stripMargin,
-    "sql5_correlated" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-        |FROM orders o
-        |WHERE CAST(o_totalprice AS DECIMAL(18,2)) *
-        |      (SELECT COUNT(*) FROM orders i
-        |       WHERE i.o_custkey = o.o_custkey) >
-        |      (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2)))
-        |       FROM orders i WHERE i.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    // DuckDB's grammar wants ON TRUE for JOIN LATERAL; same semantics.
-    "sql6_lateral" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.price
-        |FROM customer c
-        |JOIN LATERAL (
-        |  SELECT o_orderkey,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-        |  FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 1) t ON TRUE
-        |ORDER BY c_custkey""".stripMargin,
-    "sql2_events_hourly" ->
-      """SELECT epoch_us(date_trunc('hour', ts)) AS ws, event_type,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sql7_exists" ->
-      """SELECT c.c_mktsegment, COUNT(*) AS n_active
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_orderstatus = 'F')
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND CAST(o.o_totalprice AS DECIMAL(18,2)) >
-        |                        300000.00)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // The identical statement runs in DuckDB — recursion, WINDOW clause,
-    // and exact-cents arithmetic are dialect-shared.
-    "sql8_recursive_chain" ->
-      """WITH RECURSIVE edges AS (
-        |  SELECT o_custkey, o_orderkey,
-        |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-        |         LEAD(o_orderkey) OVER w AS next_key,
-        |         ROW_NUMBER() OVER w AS rn
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |),
-        |walk AS (
-        |  SELECT o_custkey, o_orderkey, next_key, cents, CAST(1 AS BIGINT) AS hop
-        |  FROM edges WHERE rn = 1
-        |  UNION ALL
-        |  SELECT e.o_custkey, e.o_orderkey, e.next_key, w.cents + e.cents, w.hop + 1
-        |  FROM walk w JOIN edges e ON w.next_key = e.o_orderkey
-        |)
-        |SELECT o_custkey, MAX(hop) AS chain_len, MAX(cents) AS chain_cents
-        |FROM walk GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // The bindings inlined as literals — binding ≡ substitution.
-    "sql14_named_params" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders
-        |WHERE o_orderstatus = 'F' AND o_totalprice >= 1000
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Replays each try_* degradation as its CASE condition: %3 rows are
-    // unparseable, %5=0 divides by zero, %10>7 overflows the LONG probe.
-    "sql15_try_funcs" ->
-      """WITH r AS (SELECT o_orderkey AS k FROM orders)
-        |SELECT COUNT(*) AS n,
-        |  COUNT(CASE WHEN k % 3 != 0 THEN 1 END) AS n_parsed,
-        |  CAST(SUM(CASE WHEN k % 3 != 0 THEN k END) AS BIGINT) AS sum_parsed,
-        |  COUNT(CASE WHEN k % 5 != 0 THEN 1 END) AS n_div,
-        |  COUNT(CASE WHEN k % 10 <= 7 THEN 1 END) AS n_add
-        |FROM r""".stripMargin,
-
-    // Replays CTAS + the inserted row.
-    "sql18_ctas" ->
-      """SELECT status, n, cents FROM (
-        |  SELECT o_orderstatus AS status, COUNT(*) AS n,
-        |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
-        |  FROM orders GROUP BY 1
-        |  UNION ALL SELECT 'X', 0, 0)
-        |ORDER BY status""".stripMargin,
-
-    // Replays the load + the static-partition restatement: F carries
-    // doubled cents, every other partition its original.
-    "sql21_insert_overwrite" ->
-      """SELECT o_orderstatus AS status, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'F'
-        |    THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 200 AS BIGINT)
-        |    ELSE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |    END) AS BIGINT) AS sum_cents
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The cache is transparent to semantics — the oracle is the filtered
-    // aggregate itself.
-    "sql19_cache" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders WHERE o_totalprice > 1000
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // The hint changes the physical join, never the result.
-    "sql20_hints" ->
-      """SELECT c_mktsegment, COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The CTAS copies are verbatim column projections of the fixture
-    // tables, so the oracle is the plain star join on the originals —
-    // statistics change the PLAN, never the result.
-    "sql24_cbo_reorder" ->
-      """SELECT o.o_orderstatus AS status, COUNT(*) AS n,
-        |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
-        |                AS BIGINT)) AS BIGINT) AS cents
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Replays the pivot as conditional aggregation — SUM over zero rows
-    // is NULL on both engines, matching PIVOT's missing-cell contract.
-    "sql17_pivot" ->
+        |ORDER BY o_orderstatus""".stripMargin),
+      // Replays the pivot as conditional aggregation — SUM over zero rows
+      // is NULL on both engines, matching PIVOT's missing-cell contract.
       """SELECT o_orderstatus,
         |  CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
         |                THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
@@ -702,19 +660,24 @@ object SqlQueries {
         |  CAST(SUM(CASE WHEN o_orderpriority = '5-LOW'
         |                THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
         |       AS DOUBLE) AS low
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // DuckDB's grammar spells the ordered fold string_agg(... ORDER BY).
-    "sql16_listagg" ->
-      """WITH p AS (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders)
-        |SELECT o_orderstatus,
-        |  string_agg(o_orderpriority, '|' ORDER BY o_orderpriority)
-        |    AS priorities,
-        |  COUNT(*) AS n
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Replays the UDF tier CASE and the UDAF's exact sum of squares.
-    "sql13_udf" ->
+    // SQL13 — the USER-function registration surface: a plain Scala UDF
+    // (acct_tier) and a typed Aggregator UDAF (sumsq_long) registered by
+    // name and called through the parser ([[graft.functions
+    // .UserFunctions]]). Deterministic integer semantics throughout, so
+    // the oracle replays the tier CASE and the exact sum of squares.
+    Gate("sql13_udf", { (s, d) =>
+      graft.functions.UserFunctions.register(s)
+      Engine.sql(s, d,
+        """WITH c AS (
+          |  SELECT CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+          |    AS cents FROM customer)
+          |SELECT acct_tier(cents) AS tier, COUNT(*) AS n,
+          |  sumsq_long(cents) AS sumsq
+          |FROM c GROUP BY 1 ORDER BY 1""".stripMargin)
+    },
+      // Replays the UDF tier CASE and the UDAF's exact sum of squares.
       """WITH c AS (
         |  SELECT CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
         |    AS cents FROM customer)
@@ -723,78 +686,78 @@ object SqlQueries {
         |            ELSE 'high' END AS tier,
         |  COUNT(*) AS n,
         |  CAST(SUM(cents * cents) AS BIGINT) AS sumsq
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // Dialect-shared named WINDOW clause — identical statement.
-    "sql22_window_clause" -> WindowClauseSql,
-    "sql23_gaps_islands" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id,
-        |    epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap_us
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |f AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN gap_us IS NULL OR gap_us > 600000000 THEN 1 ELSE 0 END
-        |      AS brk
-        |  FROM o),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM f),
-        |g AS (
-        |  SELECT user_id, sess, COUNT(*) AS n_events,
-        |    epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS dur_us
-        |  FROM s GROUP BY 1, 2)
-        |SELECT user_id, COUNT(*) AS n_sessions,
-        |  CAST(MAX(n_events) AS BIGINT) AS max_events,
-        |  CAST(SUM(dur_us) AS BIGINT) AS total_dur_us
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Dialect-shared GROUP BY ALL — identical statement.
-    "sql12_group_by_all" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ALL
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    // Dialect-shared FILTER clause — identical statement.
-    "sql10_filtered_agg" ->
+    // ANSI FILTER-clause aggregates: per-group conditional aggregation
+    // without CASE-WHEN scaffolding — one scan, every FILTER evaluated
+    // inside the same hash aggregate (no per-condition passes). The
+    // statement is dialect-shared, so the oracle runs it verbatim.
+    Gate("sql10_filtered_agg", (s, d) => Engine.sql(s, d,
       """SELECT l_returnflag,
         |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_big,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
         |       FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS disc_price,
         |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Dialect-shared LATERAL — identical statement.
-    "sql11_lateral" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+      // Dialect-shared FILTER clause — identical statement.
+      """SELECT l_returnflag,
+        |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_big,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
+        |       FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS disc_price,
+        |  COUNT(*) AS n
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // Correlated LATERAL subquery: top-2 orders per customer written as a
+    // dependent join, the shape SQL users reach for before window
+    // functions. Catalyst decorrelates the LIMIT-per-group into a
+    // partitioned window under the hood — the gate proves the rewrite
+    // produces exactly the window-formulation's rows.
+    Gate("sql11_lateral", (s, d) => Engine.sql(s, d,
       """SELECT c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer,
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
         |         WHERE o_custkey = c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-        |ORDER BY c_custkey, t.o_orderkey""".stripMargin,
-    // DuckDB's UNPIVOT quotes labels differently, so the oracle uses the
-    // portable UNION ALL spelling — same rows, same types.
-    "sql9_unpivot" ->
+        |ORDER BY c_custkey, t.o_orderkey""".stripMargin),
+      // Dialect-shared LATERAL — identical statement.
+      """SELECT c_custkey, t.o_orderkey, t.o_totalprice
+        |FROM customer,
+        |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
+        |         WHERE o_custkey = c_custkey
+        |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
+        |ORDER BY c_custkey, t.o_orderkey""".stripMargin),
+
+    // SQL UNPIVOT (the parser-level wide→long reshape, inverse of r20's
+    // PIVOT): two measure columns melted into (metric, val) rows with
+    // explicit labels. Plans as a single Expand — one scan, rows ×2, no
+    // shuffle — which is the shape that survives 100 TB (the UNION ALL
+    // equivalent scans the table once per measure). Measures are
+    // pre-cast to a shared DOUBLE so UNPIVOT's least-common-type
+    // coercion never invents a cross-engine type skew.
+    Gate("sql9_unpivot", (s, d) => Engine.sql(s, d,
+      """SELECT p_partkey, metric, val
+        |FROM (SELECT p_partkey, CAST(p_size AS DOUBLE) AS size_v,
+        |             p_retailprice AS retail_v FROM part)
+        |UNPIVOT (val FOR metric IN (size_v AS size, retail_v AS retail))
+        |ORDER BY p_partkey, metric""".stripMargin),
+      // DuckDB's UNPIVOT quotes labels differently, so the oracle uses the
+      // portable UNION ALL spelling — same rows, same types.
       """SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS val
         |FROM part
         |UNION ALL
         |SELECT p_partkey, 'retail' AS metric, p_retailprice AS val FROM part
-        |ORDER BY p_partkey, metric""".stripMargin,
-    // Same index-order fold as VecDot's generated loop: ((0+v1)+v2)+... —
-    // identical IEEE sequence, so the doubles match bit-for-bit.
-    "sql4_vec_norms" ->
-      """WITH e AS (SELECT label,
-        |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS a
-        |           FROM embeddings)
-        |SELECT label,
-        |  MAX(list_reduce(list_prepend(0.0, list_transform(a, v -> v * v)),
-        |                  (acc, v) -> acc + v)) AS max_sq_norm,
-        |  MIN(list_reduce(list_prepend(0.0, list_transform(a, v -> v * v)),
-        |                  (acc, v) -> acc + v)) AS min_sq_norm,
+        |ORDER BY p_partkey, metric""".stripMargin),
+
+    // Hourly event counts through the SQL-registered events view — pins
+    // the view's microsecond TimestampType (a regression here surfaces as
+    // a ws hash mismatch, the exact failure mode the r3 ADVICE flagged).
+    Gate("sql2_events_hourly", (s, d) => Engine.sql(s, d,
+      """SELECT unix_micros(date_trunc('HOUR', ts)) AS ws, event_type,
         |  COUNT(*) AS n
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin
-  )
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      """SELECT epoch_us(date_trunc('hour', ts)) AS ws, event_type,
+        |  COUNT(*) AS n
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 
   /** The sql24 dataflow, parameterized so EngineSqlSpec can run it with
     * and without CBO and inspect the (pre-checkpoint) plan via `inspect`.

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupOps, LlmQueries, MatchGraph}
+import graft.operators.{DedupOps, DedupQueries, MatchGraph}
 
 /** The staged match-graph artifact (l64 family — and, since round 16,
   * every pair-derived gate: l2, l2b, l50, l57, l61) must be a PURE
@@ -119,7 +119,7 @@ class ArtifactSpec extends SparkSpec {
   test("staged l50 / l64b survivorship equals the from-scratch map") {
     val dd = docs
     val scratch =
-      LlmQueries.survivorshipMap(dd, LlmQueries.scratchComponents(dd))
+      DedupQueries.survivorshipMap(dd, DedupQueries.scratchComponents(dd))
     same("l50_survivorship", scratch)
     same("l64b_artifact_survivorship", scratch)
   }
@@ -127,7 +127,7 @@ class ArtifactSpec extends SparkSpec {
   test("staged l61 / l64c source overlap equals the from-scratch matrix") {
     val dd = docs
     val scratch =
-      LlmQueries.sourceOverlapMatrix(dd, LlmQueries.scratchComponents(dd))
+      DedupQueries.sourceOverlapMatrix(dd, DedupQueries.scratchComponents(dd))
     same("l61_source_overlap", scratch)
     same("l64c_artifact_source_overlap", scratch)
   }

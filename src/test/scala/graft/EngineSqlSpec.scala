@@ -128,7 +128,7 @@ class EngineSqlSpec extends SparkSpec {
   }
 
   test("sql10 FILTER aggregates equal the CASE-WHEN formulation") {
-    val filtered = operators.SqlQueries.queries("sql10_filtered_agg")(spark, sfDir)
+    val filtered = SparkEntry.queries("sql10_filtered_agg")(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     val caseWhen = Engine.sql(spark, sfDir,
       """SELECT l_returnflag,
@@ -143,7 +143,7 @@ class EngineSqlSpec extends SparkSpec {
   }
 
   test("sql11 LATERAL top-2 equals the window formulation; no cartesian plan") {
-    val lateral = operators.SqlQueries.queries("sql11_lateral")(spark, sfDir)
+    val lateral = SparkEntry.queries("sql11_lateral")(spark, sfDir)
     val viaWindow = Engine.sql(spark, sfDir,
       """SELECT c_custkey, o_orderkey, o_totalprice FROM (
         |  SELECT c_custkey, o_orderkey, o_totalprice,
@@ -167,7 +167,7 @@ class EngineSqlSpec extends SparkSpec {
     // each customer exactly once, so chain_len must equal the customer's
     // order count and chain_cents its exact cents total — computed here
     // WITHOUT recursion.
-    val got = operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
+    val got = SparkEntry.queries("sql8_recursive_chain")(spark, sfDir)
     val want = spark.sql(
       """SELECT o_custkey, COUNT(*) AS chain_len,
         |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -186,7 +186,7 @@ class EngineSqlSpec extends SparkSpec {
     val nOrders = Engine.sql(spark, sfDir, "SELECT * FROM orders").count()
     def run(cap: Long): org.apache.spark.sql.DataFrame =
       Engine.withConf(spark, key -> cap.toString) {
-        operators.SqlQueries.queries("sql8_recursive_chain")(spark, sfDir)
+        SparkEntry.queries("sql8_recursive_chain")(spark, sfDir)
       }
     // The local walk returns a driver-built relation; the recursion does not.
     def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -253,7 +253,7 @@ class EngineSqlSpec extends SparkSpec {
       u -> ((sessions.length.toLong, sessions.map(_.length).max.toLong,
              sessions.map(s => s.last - s.head).sum))
     }
-    val got = graft.operators.SqlQueries.queries("sql23_gaps_islands")(
+    val got = SparkEntry.queries("sql23_gaps_islands")(
         spark, sfDir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
@@ -331,7 +331,7 @@ class EngineSqlSpec extends SparkSpec {
     // find the classes its first run compiled.
     def stream(): Long = {
       val c0 = compiled()
-      operators.EventQueries.queries("s3_session_stream")(spark, sfDir).collect()
+      SparkEntry.queries("s3_session_stream")(spark, sfDir).collect()
       compiled() - c0
     }
     val streamCold = stream()

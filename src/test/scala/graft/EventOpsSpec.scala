@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.EventQueries
 import org.apache.spark.sql.functions._
 
 /** Batch event-operator semantics that the sf-fixture oracle can't pin
@@ -20,7 +19,7 @@ class EventOpsSpec extends SparkSpec {
       rows.toDF("event_id", "event_type", "ts", "value", "props")
         .withColumn("user_id", lit(1L))
         .write.parquet(s"$dir/events.parquet")
-      EventQueries.queries(q)(spark, dir.toString).collect()
+      SparkEntry.queries(q)(spark, dir.toString).collect()
     }
 
   private val H = 3600L * 1000000000L // one hour in nanos

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, SimHashOps}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property check for the distributed connected-components operator: on
@@ -187,9 +187,9 @@ class GraphPropSpec extends SparkSpec {
   test("simhashTriangleCounts (class contraction) equals the direct doc-graph counts") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val direct = graft.operators.GraphOps.triangleCounts(
-        DedupOps.simhashPairs(docs, maxHamming = 1).select("da", "db"))
+        SimHashOps.simhashPairs(docs, maxHamming = 1).select("da", "db"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val contracted = DedupOps.simhashTriangleCounts(docs, maxHamming = 1)
+    val contracted = SimHashOps.simhashTriangleCounts(docs, maxHamming = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(contracted == direct,
       s"sizes: direct=${direct.size} contracted=${contracted.size}; " +

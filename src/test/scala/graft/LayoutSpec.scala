@@ -30,7 +30,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("io4: bucketed result equals the plain-table join") {
-    val bucketed = IoQueries.queries("io4_bucketed_join")(spark, dir).collect()
+    val bucketed = SparkEntry.queries("io4_bucketed_join")(spark, dir).collect()
     val plain = Tables.load(spark, dir, "customer")
       .join(Tables.load(spark, dir, "orders"), col("c_custkey") === col("o_custkey"))
       .groupBy(col("c_custkey"), col("c_mktsegment"))
@@ -60,7 +60,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("io7: the dim filter reaches the fact scan as a DYNAMIC pruning filter") {
-    val df = IoQueries.queries("io7_dpp_join")(spark, dir)
+    val df = SparkEntry.queries("io7_dpp_join")(spark, dir)
     df.queryExecution.toRdd.foreach(_ => ())
     val formatted = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
@@ -96,7 +96,7 @@ class LayoutSpec extends SparkSpec {
   test("io19: the footer carries a bloom filter for the configured column only") {
     // Run the gate (its write is part of the query), then open a part
     // file's footer with parquet-hadoop and check the column metadata.
-    IoQueries.queries("io19_parquet_bloom")(spark, dir).collect()
+    SparkEntry.queries("io19_parquet_bloom")(spark, dir).collect()
     val part = new java.io.File(Scratch.dir("pqbloom", dir)).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     val conf = spark.sparkContext.hadoopConfiguration
@@ -197,7 +197,7 @@ class LayoutSpec extends SparkSpec {
     // The gate plants non-parquet strays beside the nested data files;
     // prove the pathGlobFilter actually excludes them by running the SAME
     // recursive read without it and watching the footer read fail.
-    IoQueries.queries("io21_glob_discovery")(spark, dir).collect() // plants + passes
+    SparkEntry.queries("io21_glob_discovery")(spark, dir).collect() // plants + passes
     val base = Scratch.dir("glob", dir)
     val ex = intercept[Exception] {
       spark.read
@@ -213,7 +213,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("io1/io2: text roundtrips are lossless against the direct aggregate") {
-    val viaCsv = IoQueries.queries("io1_csv_roundtrip")(spark, dir).collect()
+    val viaCsv = SparkEntry.queries("io1_csv_roundtrip")(spark, dir).collect()
     val direct = Tables.load(spark, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(sum(Q.dec2(col("l_quantity"))).cast("double").as("sum_qty"),
@@ -222,7 +222,7 @@ class LayoutSpec extends SparkSpec {
       .orderBy("l_returnflag").collect()
     assert(viaCsv.toSeq == direct.toSeq)
 
-    val viaJson = IoQueries.queries("io2_jsonl_roundtrip")(spark, dir).collect()
+    val viaJson = SparkEntry.queries("io2_jsonl_roundtrip")(spark, dir).collect()
     val directJ = Tables.load(spark, dir, "orders")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
@@ -380,7 +380,7 @@ class LayoutSpec extends SparkSpec {
       }
     } finally reader.close()
     // The range predicate must reach the parquet scan as a pushed filter.
-    val df = IoQueries.queries("io22_rowgroup_stats")(spark, dir)
+    val df = SparkEntry.queries("io22_rowgroup_stats")(spark, dir)
     df.queryExecution.toRdd.foreach(_ => ())
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)

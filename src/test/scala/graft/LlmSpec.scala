@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.{TextFunctions, VectorFunctions, VectorMean}
 import graft.multimodal.Multimodal
-import graft.operators.{DedupOps, OrderOps, SimilarityOps}
+import graft.operators.{DedupOps, OrderOps, SimHashOps, SimilarityOps}
 import org.apache.spark.sql.functions._
 
 /** LLM-pipeline operator semantics: dedup (exact + prefix-filter equivalence),
@@ -90,7 +90,7 @@ class LlmSpec extends SparkSpec {
         (i, Seq.fill(6)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
         .toDF("doc_id", "text"))
     for (bits <- Seq(16, 64)) {
-      val fp = DedupOps.simhash(wide, bits).collect()
+      val fp = SimHashOps.simhash(wide, bits).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       if (bits == 64)
         assert(fp.exists(_._2 < 0L),
@@ -100,7 +100,7 @@ class LlmSpec extends SparkSpec {
           (ia, fa) <- fp; (ib, fb) <- fp if ia < ib
           h = java.lang.Long.bitCount(fa ^ fb) if h <= d
         } yield (ia, ib, h.toLong)).toSet
-        val banded = DedupOps.simhashPairs(wide, d, bits).collect()
+        val banded = SimHashOps.simhashPairs(wide, d, bits).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(banded == expected, s"bits $bits maxHamming $d")
       }
@@ -130,9 +130,9 @@ class LlmSpec extends SparkSpec {
       (8L, ""), (9L, "   ")).toDF("doc_id", "text"))
     for (d <- Seq(0, 1, 3)) {
       val direct = DedupOps.connectedComponents(
-          withEmpty, DedupOps.simhashPairs(withEmpty, d)).collect()
+          withEmpty, SimHashOps.simhashPairs(withEmpty, d)).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val contracted = DedupOps.simhashComponents(withEmpty, d).collect()
+      val contracted = SimHashOps.simhashComponents(withEmpty, d).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(contracted == direct, s"maxHamming $d")
       assert(contracted.contains((8L, 8L)) && contracted.contains((9L, 9L)))
@@ -242,7 +242,7 @@ class LlmSpec extends SparkSpec {
     // has probability 1 and the doc scores exactly 1.0.
     // doc 2 has a single token -> zero bigrams -> score 0 via the left join.
     val dd = Seq((1L, "a b a b"), (2L, "solo")).toDF("doc_id", "text")
-    val got = graft.operators.LlmQueries.lmScore(dd).orderBy("doc_id")
+    val got = graft.operators.TextQueries.lmScore(dd).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == Seq((1L, 3L, 1.0), (2L, 0L, 0.0)))
   }
@@ -252,7 +252,7 @@ class LlmSpec extends SparkSpec {
     // Prefix "x" continues to "y" twice and "z" once across the corpus:
     // P(y|x) = ⌊2e6/3⌋/1e6, P(z|x) = ⌊1e6/3⌋/1e6.
     val dd = Seq((1L, "x y"), (2L, "x y"), (3L, "x z")).toDF("doc_id", "text")
-    val got = graft.operators.LlmQueries.lmScore(dd).orderBy("doc_id")
+    val got = graft.operators.TextQueries.lmScore(dd).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toMap
     assert(got(1L) == 0.6667 && got(2L) == 0.6667 && got(3L) == 0.3333)
   }
@@ -295,7 +295,7 @@ class LlmSpec extends SparkSpec {
         (5L, "x@y.io and 555-0000", "en", "web")
       ).toDF("doc_id", "text", "lang", "source")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val rows = graft.operators.LlmQueries.queries("l28_redact")(spark, dir)
+      val rows = SparkEntry.queries("l28_redact")(spark, dir)
         .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
       assert(rows(1L) == ((2L, 0L)))
       assert(rows(2L) == ((0L, 2L)))
@@ -599,7 +599,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("l59 quotient pagerank equals the generic edge-list pagerank on real docs") {
-    // The class-quotient evaluation (DedupOps.simhashPageRank) must be
+    // The class-quotient evaluation (SimHashOps.simhashPageRank) must be
     // bit-identical to GraphOps.pageRank over the expanded doc graph —
     // the symmetry argument (same-fingerprint docs have identical
     // neighbor sets, hence identical rank) checked end-to-end on the
@@ -610,12 +610,12 @@ class LlmSpec extends SparkSpec {
       rows.map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("degree"), r.getAs[Long]("pr_scaled")))).toMap
     val genericDf = graft.operators.GraphOps.pageRank(
-      DedupOps.simhashPairs(docsDf, maxHamming = 1)
+      SimHashOps.simhashPairs(docsDf, maxHamming = 1)
         .select(col("da"), col("db")))
     val generic =
       try m(genericDf.collect())
       finally genericDf.unpersist(blocking = false)
-    val quotient = m(DedupOps.simhashPageRank(docsDf).collect())
+    val quotient = m(SimHashOps.simhashPageRank(docsDf).collect())
     assert(generic.nonEmpty, "fixture graph unexpectedly empty")
     assert(quotient == generic)
   }
@@ -627,11 +627,11 @@ class LlmSpec extends SparkSpec {
     */
   private def naiveKCore(docsDf: org.apache.spark.sql.DataFrame)
       : (Map[Long, (Long, Long, Long)], Long, Boolean) = {
-    val nodes = DedupOps.simhash(docsDf).select("doc_id")
+    val nodes = SimHashOps.simhash(docsDf).select("doc_id")
       .collect().map(_.getLong(0))
     val adj = scala.collection.mutable.Map(
       nodes.map(_ -> scala.collection.mutable.Set.empty[Long]).toSeq: _*)
-    DedupOps.simhashPairs(docsDf, maxHamming = 1).select("da", "db")
+    SimHashOps.simhashPairs(docsDf, maxHamming = 1).select("da", "db")
       .collect().foreach { r =>
         adj(r.getLong(0)) += r.getLong(1); adj(r.getLong(1)) += r.getLong(0)
       }
@@ -661,7 +661,7 @@ class LlmSpec extends SparkSpec {
         r.getAs[Long]("peel_round")))).toMap
 
   test("l60 quotient k-core peel equals a naive doc-level peel on real docs") {
-    // The class-quotient peel (DedupOps.simhashKCore at the default
+    // The class-quotient peel (SimHashOps.simhashKCore at the default
     // 16-bit width) must equal the textbook round-synchronous doc-level
     // peel — same symmetry argument as l59 (same-fingerprint docs share
     // degree at every round).
@@ -669,7 +669,7 @@ class LlmSpec extends SparkSpec {
     val (want, rounds, coreNonEmpty) = naiveKCore(docsDf)
     assert(rounds >= 1, "fixture corpus unexpectedly peels nothing")
     assert(coreNonEmpty, "fixture corpus unexpectedly has an empty core")
-    assert(kCoreMap(DedupOps.simhashKCore(docsDf)) == want)
+    assert(kCoreMap(SimHashOps.simhashKCore(docsDf)) == want)
   }
 
   test("BottomK aggregator equals sorted-distinct-take-k across partitionings") {
@@ -838,7 +838,7 @@ class LlmSpec extends SparkSpec {
     val far = ("completely different content with other bytes " * 8).trim
     val docsDf = Seq((1L, base), (2L, twin), (3L, near), (4L, far))
       .toDF("doc_id", "text")
-    val synth = graft.operators.DedupOps.fingerprintPairs(
+    val synth = graft.operators.SimHashOps.fingerprintPairs(
         graft.multimodal.Multimodal.dHash(
           graft.multimodal.Multimodal.withPayload(docsDf), bits = 64),
         maxHamming = 3, bits = 64)
@@ -1330,7 +1330,7 @@ class LlmSpec extends SparkSpec {
     val droppedByCluster = pairs.filter { case (a, b) => cid(a) == cid(b) }
       .map { case (_, b) => (cid(b), b) }.distinct
       .groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    val got = graft.operators.LlmQueries.queries("l41_semdedup")(spark, dir)
+    val got = SparkEntry.queries("l41_semdedup")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
     got.foreach { case (c, (members, dropped, kept)) =>
       assert(dropped == droppedByCluster.getOrElse(c, 0L),
@@ -1387,7 +1387,7 @@ class LlmSpec extends SparkSpec {
       val r = (BigInt(20000) * p.abs + q) / (q * 2)
       (if (p < 0) -r else r).toDouble / 10000.0
     }
-    val got = graft.operators.LlmQueries.queries("l49_mix_independence")(
+    val got = SparkEntry.queries("l49_mix_independence")(
         spark, dir).collect()
     assert(got.length == obs.size)
     got.foreach { r =>
@@ -1431,7 +1431,7 @@ class LlmSpec extends SparkSpec {
 
   test("l46 tertiles are balanced per language and score-monotone across buckets") {
     val dir = "/root/testdata/sf0.001"
-    val rows = graft.operators.LlmQueries.queries("l46_perplexity_buckets")(
+    val rows = SparkEntry.queries("l46_perplexity_buckets")(
         spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
                  r.getDouble(4), r.getDouble(5)))  // lang, bucket, n, max, min
@@ -1462,7 +1462,7 @@ class LlmSpec extends SparkSpec {
     val cu = toks.groupBy(identity).view.mapValues(_.length.toLong).toMap
     val cb = bigrams.groupBy(identity).view.mapValues(_.length.toLong).toMap
     val n1 = BigInt(toks.length); val n2 = BigInt(bigrams.length)
-    val got = graft.operators.LlmQueries.queries("l47_collocation_lift")(
+    val got = SparkEntry.queries("l47_collocation_lift")(
         spark, dir).collect()
     assert(got.length == 10)
     got.foreach { r =>
@@ -1491,7 +1491,7 @@ class LlmSpec extends SparkSpec {
       .groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val minN = counts.values.min
-    val got = graft.operators.LlmQueries.queries("l44_mixture_sample")(spark, dir)
+    val got = SparkEntry.queries("l44_mixture_sample")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     counts.foreach { case (lang, n) =>

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 /** Asserted physical-plan audit (r5 verdict item 5): PlanAudit computed the
   * anti-pattern flags but only printed them — nothing failed if a regression
   * introduced a cartesian product or dropped a pushdown/broadcast from a
-  * gated query. This spec executes every query in `PlanAudit.defaultQueries`
-  * at sf0.001 and fails on any cartesian product or any missing
+  * gated query. This spec executes every query in its curated `required`
+  * table at sf0.001 and fails on any cartesian product or any missing
   * design-required plan feature.
   */
 class PlanAuditSpec extends SparkSpec {
@@ -196,7 +196,7 @@ class PlanAuditSpec extends SparkSpec {
     // the joined plan's features are cut with the lineage (the io18
     // precedent), so only the cartesian flag is assertable here; the
     // broadcast of the ≤ 2^16-row class verdicts is structural
-    // (explicit broadcast() in DedupOps.simhashKCore).
+    // (explicit broadcast() in SimHashOps.simhashKCore).
     "l60_kcore" -> Set.empty[String],
     // Pair engine + components + source rollup — codegen'd projections,
     // no cartesian (the per-component self-join is source-bounded).
@@ -238,12 +238,6 @@ class PlanAuditSpec extends SparkSpec {
     "l5h_pq_distortion" -> Set("WholeStageCodegen", "BroadcastHashJoin"))
 
   test("every audited gated query is cartesian-free with its required plan features") {
-    // Keep the spec's coverage locked to the audit's default set — adding a
-    // query there without declaring expectations here must fail.
-    assert(required.keySet == PlanAudit.defaultQueries,
-           s"expectation table out of sync with PlanAudit.defaultQueries: " +
-           s"only-here=${required.keySet -- PlanAudit.defaultQueries} " +
-           s"only-there=${PlanAudit.defaultQueries -- required.keySet}")
     val failures = required.toSeq.sortBy(_._1).flatMap { case (name, need) =>
       val flags = PlanAudit.audit(SparkEntry.queries(name)(spark, dir))
       val missing = need.filterNot(flags(_)).toSeq.sorted
@@ -280,13 +274,12 @@ class PlanAuditSpec extends SparkSpec {
     // r12 verdict brief 3: the no-cartesian assertion extends from the
     // curated audit set to the whole declared surface, so a regression
     // that sneaks a cartesian product into ANY gated batch plan fails the
-    // build. Queries in PlanAudit.defaultQueries are skipped here only
+    // build. Queries in `required` are skipped here only
     // because the test above already executes them with the same flag.
     assert(streamingGates.subsetOf(SparkEntry.queries.keySet),
            s"exempted names not in the declared surface: " +
            s"${(streamingGates -- SparkEntry.queries.keySet).toSeq.sorted}")
-    val batch = SparkEntry.queries.keySet -- streamingGates --
-      PlanAudit.defaultQueries
+    val batch = SparkEntry.queries.keySet -- streamingGates -- required.keySet
     val offenders = batch.toSeq.sorted.filter { name =>
       PlanAudit.audit(SparkEntry.queries(name)(spark, dir))("CartesianProduct(!)")
     }

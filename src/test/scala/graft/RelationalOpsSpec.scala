@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.{IoQueries, RelationalQueries, SqlQueries}
 import org.apache.spark.sql.functions._
 
 /** Semantics of the r25/r26/io11/sql9 additions, checked against
@@ -15,14 +14,14 @@ class RelationalOpsSpec extends SparkSpec {
     // cardinality (hundreds) sits far below saturation, so the gate's
     // declared 5% band must hold for BOTH estimate paths — the query now
     // exports the verdict booleans themselves (hash-gated since round 8).
-    val r = RelationalQueries.queries("r30_hll_merge")(spark, dir).head()
+    val r = SparkEntry.queries("r30_hll_merge")(spark, dir).head()
     assert(r.getAs[Long]("exact_custkeys") > 0)
     assert(r.getAs[Boolean]("merged_within_band"), "merged estimate out of band")
     assert(r.getAs[Boolean]("direct_within_band"), "direct estimate out of band")
   }
 
   test("r31 count-min: estimates are one-sided (est >= truth) and tight here") {
-    val rows = RelationalQueries.queries("r31_countmin")(spark, dir)
+    val rows = SparkEntry.queries("r31_countmin")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.length == 10)
     rows.foreach { case (k, est, truth) =>
@@ -70,7 +69,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("sql16 listagg is deterministic: WITHIN GROUP order fixes the string") {
-    val rows = SqlQueries.queries("sql16_listagg")(spark, dir).collect()
+    val rows = SparkEntry.queries("sql16_listagg")(spark, dir).collect()
     rows.foreach { r =>
       val parts = r.getString(1).split("\\|").toSeq
       assert(parts == parts.sorted, s"unsorted listagg: ${r.getString(1)}")
@@ -80,7 +79,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("r25 grouping sets: three levels, margins fold to the grand total") {
-    val rows = RelationalQueries.queries("r25_grouping_sets")(spark, dir)
+    val rows = SparkEntry.queries("r25_grouping_sets")(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
                  r.getDouble(3), r.getLong(4)))
@@ -102,7 +101,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("r26 ignore-nulls windows carry the last F price across non-F rows") {
-    val got = RelationalQueries.queries("r26_ignore_nulls")(spark, dir)
+    val got = SparkEntry.queries("r26_ignore_nulls")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
                  if (r.isNullAt(2)) None else Some(r.getDouble(2)),
@@ -133,7 +132,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("sql9 UNPIVOT melts two measures into labeled rows, one Expand pass") {
-    val df = SqlQueries.queries("sql9_unpivot")(spark, dir)
+    val df = SparkEntry.queries("sql9_unpivot")(spark, dir)
     val parts = spark.read.parquet(s"$dir/part.parquet")
     val got = df.collect()
     assert(got.length == 2 * parts.count())
@@ -145,7 +144,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("r27 collect_set output is a total-ordered join of the distinct values") {
-    val got = RelationalQueries.queries("r27_collect")(spark, dir)
+    val got = SparkEntry.queries("r27_collect")(spark, dir)
       .collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2))))
       .toMap
@@ -159,7 +158,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("io11 _metadata file names and per-file counts match the fixtures") {
-    val got = IoQueries.queries("io11_file_metadata")(spark, dir)
+    val got = SparkEntry.queries("io11_file_metadata")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val expected = Seq("orders", "events", "documents").map(t =>
       s"$t.parquet" -> spark.read.parquet(s"$dir/$t.parquet").count()).toMap
@@ -187,7 +186,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("r40 exact-moment variance equals Spark's var_samp within float tolerance") {
-    val gate = RelationalQueries.queries("r40_var_stddev")(spark, dir)
+    val gate = SparkEntry.queries("r40_var_stddev")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
     val ref = spark.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_returnflag"),
@@ -243,7 +242,7 @@ class RelationalOpsSpec extends SparkSpec {
       }
       flag -> ((ordered.length.toLong, seen.size.toLong, saturation))
     }
-    val got = RelationalQueries.queries("r38_running_distinct")(spark, dir)
+    val got = SparkEntry.queries("r38_running_distinct")(spark, dir)
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap

@@ -177,16 +177,16 @@ class StreamingSpec extends SparkSpec {
 
   test("restart recovery: resumed incarnation equals the whole-input batch") {
     val d = "/root/testdata/sf0.001"
-    val got = graft.operators.EventQueries.queries("s19_restart_recovery")(spark, d)
+    val got = SparkEntry.queries("s19_restart_recovery")(spark, d)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    val want = graft.operators.EventQueries.queries("s1_tumbling_window")(spark, d)
+    val want = SparkEntry.queries("s1_tumbling_window")(spark, d)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(got.nonEmpty && got.toSeq == want.toSeq)
   }
 
   test("s28 fingerprint index: cross-batch state classifies the increment") {
     val d = "/root/testdata/sf0.001"
-    val got = graft.operators.EventQueries.queries("s28_fp_index_stream")(spark, d)
+    val got = SparkEntry.queries("s28_fp_index_stream")(spark, d)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
@@ -265,7 +265,7 @@ class StreamingSpec extends SparkSpec {
 
   test("s30 LSH index: gate pairs equal an independent replay, cross-batch") {
     val d = "/root/testdata/sf0.001"
-    val got = graft.operators.EventQueries.queries("s30_lsh_index_stream")(spark, d)
+    val got = SparkEntry.queries("s30_lsh_index_stream")(spark, d)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // Independent replay in plain Scala: word 3-grams, the poly fold,
@@ -333,7 +333,7 @@ class StreamingSpec extends SparkSpec {
 
   test("s31 span index: gate masks equal an independent arrival-order replay") {
     val d = "/root/testdata/sf0.001"
-    val got = graft.operators.EventQueries.queries("s31_span_index_stream")(spark, d)
+    val got = SparkEntry.queries("s31_span_index_stream")(spark, d)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
@@ -429,7 +429,7 @@ class StreamingSpec extends SparkSpec {
     val want =
       phaseSketch(_ % 2 == 0).map { case (l, s) => reading(l, 1L, s) } ++
       phaseSketch(_ => true).map { case (l, s) => reading(l, 2L, s) }
-    val got = graft.operators.EventQueries.queries("s29_kmv_monitor_stream")(
+    val got = SparkEntry.queries("s29_kmv_monitor_stream")(
         spark, d).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getAs[Long]("n_sketch"), r.getAs[Long]("hk"),
@@ -445,9 +445,9 @@ class StreamingSpec extends SparkSpec {
 
   test("s26 changelog restart equals the whole-input batch") {
     val d = "/root/testdata/sf0.001"
-    val got = graft.operators.EventQueries.queries("s26_changelog_restart")(spark, d)
+    val got = SparkEntry.queries("s26_changelog_restart")(spark, d)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    val want = graft.operators.EventQueries.queries("s1_tumbling_window")(spark, d)
+    val want = SparkEntry.queries("s1_tumbling_window")(spark, d)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(got.nonEmpty && got.toSeq == want.toSeq)
   }

@@ -6,7 +6,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 Reads <verifyOutDir>/<name>/ parquet (Spark output) and oracle_sql.json,
 runs each oracle SQL in DuckDB with the sf tables registered as views,
 sorts columns by name, and compares row-by-row. Reports per-query
-match/mismatch with first differing cell.
+match/mismatch with first differing cell. Exits 1 on any mismatch, on a
+name with no oracle, and when no query was checked.
 """
 import sys, json, glob, math
 import duckdb
@@ -19,6 +20,10 @@ def main():
               "lineitem","events","documents","embeddings"]:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(only - set(oracle))
+    if unknown:
+        print(f"unknown query names (no oracle): {', '.join(unknown)}")
+        sys.exit(1)
     n_pass = n_fail = 0
     for name in sorted(oracle):
         if only and name not in only:
@@ -78,7 +83,7 @@ def main():
             print(f"ERROR {name}: {str(ex)[:300]}")
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
-    sys.exit(1 if n_fail else 0)
+    sys.exit(1 if n_fail or not n_pass else 0)
 
 def q(c):
     return f'"{c}"'

@@ -30,9 +30,11 @@ run() {
   SPARK_GRAFT_CONF="$conf" tools/run.sh graft.Verify "$SF" "$OUT/$label" "$@" \
     2>"$OUT/$label.log" >/dev/null
   local summary
-  summary=$(python3 tools/check.py "$SF" "$OUT/$label" "$@" | tee "$OUT/$label.check" | tail -1)
+  # check.py's own exit status: 1 on a failing gate, an unknown name, a
+  # missing oracle file or an empty run.
+  summary=$(python3 tools/check.py "$SF" "$OUT/$label" "$@" 2>&1 |
+    tee "$OUT/$label.check" | tail -1; exit "${PIPESTATUS[0]}") || status=1
   echo "$label${conf:+ ($conf)}: $summary"
-  grep -q "FAIL\|ERROR" "$OUT/$label.check" && status=1
 }
 
 mkdir -p "$OUT"
