@@ -1,7 +1,11 @@
 package graft
 
 import graft.operators.{MatrixGen, MatrixOps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** Benchmark harness — driver-run per round → BENCH_r{N}.json.
   *
@@ -72,6 +76,7 @@ object Bench {
       .fold(Set.empty[String])(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val all = SparkEntry.named(everything, only)
 
+    val sched = new Sched
     def build(): SparkSession = {
       val s = Engine.configure(
         SparkSession.builder()
@@ -86,6 +91,7 @@ object Bench {
       // run's configuration.
       Engine.applyConfOverrides(s)
       s.sparkContext.setLogLevel("WARN")
+      s.sparkContext.addSparkListener(sched)
       s
     }
     var spark = build()
@@ -175,6 +181,7 @@ object Bench {
     val timings = (1 to passes).map { pass =>
       all.map { case (name, fn) =>
         val s = session(s"pass$pass.$name")
+        val u0 = sched.settled()
         val c0 = compiled()
         val t0 = System.nanoTime()
         val ok =
@@ -186,22 +193,31 @@ object Bench {
           }
         val dt = (System.nanoTime() - t0) / 1e9
         val nc = compiled() - c0
-        System.err.println(f"[bench] pass$pass $name%-28s $dt%9.3f s $nc%5d compiles${if (ok) "" else "  FAILED"}")
-        (name, dt, ok, nc)
+        val u = sched.settled() - u0
+        System.err.println(f"[bench] pass$pass $name%-28s $dt%9.3f s $nc%5d compiles ${u.cpuS}%8.3f cpu-s ${u.jobs}%4d jobs ${u.stages}%4d stages ${u.tasks}%6d tasks${if (ok) "" else "  FAILED"}")
+        (name, dt, ok, nc, u)
       }
     }
     // min over successful runs only; a query that failed every pass reports -1
     // alongside its errors entry (rc=1), never a bogus fast-failure timing.
     val results = all.map { case (name, _) =>
-      val okRuns = timings.flatMap(_.collect { case (`name`, dt, true, _) => dt })
+      val okRuns = timings.flatMap(_.collect { case (`name`, dt, true, _, _) => dt })
       name -> (if (okRuns.nonEmpty) okRuns.min else -1.0)
     }
 
     val qs = results.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
-    val cs = all.map { case (name, _) =>
-      val perPass = timings.flatMap(_.collect { case (`name`, _, _, nc) => nc })
-      s"${jsonString(name)}:${perPass.mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
+    // One block per per-pass figure: {entry: [pass1, pass2, …]}.
+    def perPass(field: String)(f: (Long, Sched.Usage) => Any): String =
+      all.map { case (name, _) =>
+        val xs = timings.flatMap(_.collect { case (`name`, _, _, nc, u) => f(nc, u) })
+        s"${jsonString(name)}:${xs.mkString("[", ",", "]")}"
+      }.mkString(s""""$field":{""", ",", "}")
+    val cs = Seq(
+      perPass("compiles")((nc, _) => nc),
+      perPass("cpu_s")((_, u) => math.round(u.cpuS * 1000) / 1000.0),
+      perPass("jobs")((_, u) => u.jobs),
+      perPass("stages")((_, u) => u.stages),
+      perPass("tasks")((_, u) => u.tasks)).mkString(",")
     val es = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // Host-load bracket for the whole run: a quiet host sits near the
@@ -217,7 +233,7 @@ object Bench {
       else gauge.map { case (k, v) => s"${jsonString(k)}:$v" }
         .mkString("\"gauge\":{", ",", "},")
     val loads = s"""$ov$gj"load1_start":$loadStart,"load1_end":${load1()}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec",$loads,"queries":$qs,"compiles":$cs,"errors":$es,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec",$loads,"queries":$qs,$cs,"errors":$es,"sf":"$sfDir"}"""
     // Round-5 postmortem: the single full line outgrew the driver's stdout
     // tail-capture window, so BENCH_r05.json came back `parsed: null` with
     // the per-query head truncated. Emit the full map FIRST (and persist it
@@ -239,5 +255,54 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec",$loads,"n_queries":${results.size},"n_errors":${errors.size},$fullRef"sf":"$sfDir"}""")
     if (!spark.sparkContext.isStopped) spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+}
+
+/** Executor CPU and scheduling counts of a session, from one listener:
+  * jobs started, stages completed, tasks ended and those tasks' executor
+  * CPU time. Listener events arrive asynchronously, so [[settled]] reads
+  * the counts once every started job has ended and no event has arrived
+  * for 50 ms (at most 5 s); the difference of two readings around an
+  * entry is that entry's use.
+  */
+private final class Sched extends SparkListener {
+  private[this] val jobsStarted, jobsEnded, stages, tasks, cpuNs, events =
+    new AtomicLong
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    jobsStarted.incrementAndGet(); events.incrementAndGet()
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+    jobsEnded.incrementAndGet(); events.incrementAndGet()
+  }
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    stages.incrementAndGet(); events.incrementAndGet()
+  }
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    tasks.incrementAndGet()
+    if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
+    events.incrementAndGet()
+  }
+
+  def settled(): Sched.Usage = {
+    val deadline = System.nanoTime() + 5000000000L
+    var seen = -1L
+    var quietSince = System.nanoTime()
+    var quiet = false
+    while (!quiet && System.nanoTime() < deadline) {
+      Thread.sleep(5)
+      val n = events.get
+      val now = System.nanoTime()
+      if (n != seen) { seen = n; quietSince = now }
+      else quiet = jobsStarted.get == jobsEnded.get && now - quietSince >= 50000000L
+    }
+    Sched.Usage(cpuNs.get / 1e9, jobsStarted.get, stages.get, tasks.get)
+  }
+}
+
+private object Sched {
+  final case class Usage(cpuS: Double, jobs: Long, stages: Long, tasks: Long) {
+    def -(o: Usage): Usage =
+      Usage(cpuS - o.cpuS, jobs - o.jobs, stages - o.stages, tasks - o.tasks)
   }
 }

@@ -46,9 +46,14 @@ object GraftConf {
     Key("spark.graft.dedup.attachBroadcastCap", 512L << 20, 0L)
 
   /** Largest shingle universe the dense bitset kernel takes (16 384
-    * codes: ≤ 2 KB/doc bitsets); 0 disables it.
+    * codes: ≤ 2 KB/doc bitsets); 0 disables it. The route decision
+    * collects up to this many codes + 1 to the driver (8 B each) and
+    * broadcasts them as a `HashMap[Long, Integer]` of about 72 B per entry
+    * (a 32 B node, two 16 B boxes and an 8 B share of its table), so the
+    * bound of 2^18 codes keeps the two near 2^18 · 80 B = 21 MB.
     */
-  val denseUniverseMax = Key("spark.graft.dedup.denseUniverseMax", 16384L, 0L)
+  val denseUniverseMax =
+    Key("spark.graft.dedup.denseUniverseMax", 16384L, 0L, 1L << 18)
 
   /** Corpus size from which the verify stage spreads its candidate pairs;
     * 0 forces the spread on, `Long.MaxValue` forces it off.

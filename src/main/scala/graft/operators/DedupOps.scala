@@ -276,14 +276,14 @@ object DedupOps {
     * plus a broadcast join to attach it. One sorted-distinct TOP-(max+1)
     * collect answers both — `length > max` means "sparse regime" with at
     * most max+1 rows ever reaching the driver (≤ 128 KB of longs at the
-    * default 16 384 cap, the k-centroid collect discipline), and the
-    * array's position IS the old `row_number() - 1` index (same
-    * ascending code order). The shingle frame loses one full aggregation
+    * default 16 384 cap, ≤ 2 MB at the key's 2^18 bound; the k-centroid
+    * collect discipline), and the array's position IS the old
+    * `row_number() - 1` index (same ascending code order). The shingle frame loses one full aggregation
     * pass and the bitset build loses its join.
     */
   private[graft] def denseCodeIndex(sh: DataFrame, denseMax: Long): Array[Long] =
     sh.select(col("code")).distinct().orderBy(col("code"))
-      .limit(math.min(denseMax, Int.MaxValue - 2L).toInt + 1)
+      .limit(denseMax.toInt + 1)
       .collect().map(_.getLong(0))
 
   /** Smallest AND/popcount work, in 64-bit word-ops, worth one grid cell

@@ -35,8 +35,12 @@ final case class BlockShape(bs: Int, p: Int, q: Int, r: Int, budget: Long) {
 object BlockShape {
 
   /** Widest tile. Past ~2 MB the kernel's streamed B tile falls out of
-    * per-core cache and the GEMM goes DRAM-bound: 4000² at bs = 1000
-    * measured 25.1 s against 14.7 s at bs = 500 (interleaved A/B).
+    * per-core cache. 4000² through `MatrixOps.blockMatmul` on a 4-core
+    * AVX-512 host (`local[4]`, P = Q = 2, R = 1, warm ops of two JVMs
+    * each) ran in 5.4–7.3 s at bs = 256 (`kernelTime` 13.8–18.8 CPU-s),
+    * 8.2–10.8 s at 512 (21.9–27.5) and 9.1–10.8 s at 1024 (24.9–31.5).
+    * The cap stays at 512 until a narrower width is measured end to end
+    * as a layout change of its own.
     */
   val MaxTile = 512
 
@@ -152,26 +156,55 @@ final class TilePart(val row: Long, val col: Long, val dense: Array[Long],
       var x = 0
       while (x < offs.length) { acc(offs(x)) += vals(x); x += 1 }
     }
+
+  /** Adds this part into `rows`, a dense tile held as its bs row arrays. */
+  def addTo(rows: Array[Array[Long]]): Unit = {
+    val bs = rows.length
+    if (dense != null) {
+      var li = 0
+      while (li < bs) {
+        val r = rows(li)
+        val off = li * bs
+        var lk = 0
+        while (lk < bs) { r(lk) += dense(off + lk); lk += 1 }
+        li += 1
+      }
+    } else {
+      var x = 0
+      while (x < offs.length) { rows(offs(x) / bs)(offs(x) % bs) += vals(x); x += 1 }
+    }
+  }
 }
 
 object TilePart {
-  /** The smaller shipping form of dense tile `d`: dense (a copy) or its
-    * nonzero cells.
+  /** The smaller shipping form of dense tile `rows` (its bs row arrays):
+    * dense (a row-major copy) or its nonzero cells.
     */
-  def of(row: Long, col: Long, d: Array[Long]): TilePart = {
+  def of(row: Long, col: Long, rows: Array[Array[Long]]): TilePart = {
+    val bs = rows.length
     var nnz = 0
-    var x = 0
-    while (x < d.length) { if (d(x) != 0L) nnz += 1; x += 1 }
-    if (nnz * 12L >= d.length * 8L)
-      new TilePart(row, col, d.clone(), null, null)
-    else {
+    rows.foreach { r =>
+      var lk = 0
+      while (lk < bs) { if (r(lk) != 0L) nnz += 1; lk += 1 }
+    }
+    if (nnz * 12L >= bs.toLong * bs * 8L) {
+      val d = new Array[Long](bs * bs)
+      var li = 0
+      while (li < bs) { System.arraycopy(rows(li), 0, d, li * bs, bs); li += 1 }
+      new TilePart(row, col, d, null, null)
+    } else {
       val offs = new Array[Int](nnz)
       val vals = new Array[Long](nnz)
       var o = 0
-      x = 0
-      while (x < d.length) {
-        if (d(x) != 0L) { offs(o) = x; vals(o) = d(x); o += 1 }
-        x += 1
+      var li = 0
+      while (li < bs) {
+        val r = rows(li)
+        var lk = 0
+        while (lk < bs) {
+          if (r(lk) != 0L) { offs(o) = li * bs + lk; vals(o) = r(lk); o += 1 }
+          lk += 1
+        }
+        li += 1
       }
       new TilePart(row, col, null, offs, vals)
     }
@@ -208,6 +241,7 @@ case class BlockMatMulExec(left: SparkPlan, right: SparkPlan,
     "densifyPeak" -> SQLMetrics.createSizeMetric(sparkContext, "densify buffer peak"),
     "keyPeak" -> SQLMetrics.createSizeMetric(sparkContext, "key tiles peak"),
     "kernelTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "kernel time"),
+    "kernelMadds" -> SQLMetrics.createMetric(sparkContext, "kernel multiply-adds"),
     "emitTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "emit time"),
     "aTiles" -> SQLMetrics.createMetric(sparkContext, "A tiles shipped"),
     "aBytes" -> SQLMetrics.createSizeMetric(sparkContext, "A bytes shipped"),
@@ -227,7 +261,7 @@ case class BlockMatMulExec(left: SparkPlan, right: SparkPlan,
     val s = shape
     val (densifyTime, densifyPeak) = (longMetric("densifyTime"), longMetric("densifyPeak"))
     val keyPeak = longMetric("keyPeak")
-    val kernelTime = longMetric("kernelTime")
+    val (kernelTime, kernelMadds) = (longMetric("kernelTime"), longMetric("kernelMadds"))
     val emitTime = longMetric("emitTime")
     val numOutputRows = longMetric("numOutputRows")
     val (aTiles, aBytes) = (longMetric("aTiles"), longMetric("aBytes"))
@@ -248,7 +282,7 @@ case class BlockMatMulExec(left: SparkPlan, right: SparkPlan,
       }
     }.partitionBy(keyed).setName("BlockMatMul B tiles")
     val products = aSide.zipPartitions(bSide) { (as, bs) =>
-      multiply(as.map(_._2), bs.map(_._2), s.bs, kernelTime, keyPeak)
+      multiply(as.map(_._2), bs.map(_._2), s.bs, kernelTime, kernelMadds, keyPeak)
     }.setName("BlockMatMul gemm")
 
     if (s.r == 1)
@@ -408,66 +442,90 @@ object BlockMatMulExec {
     }
   }
 
-  /** Sums the partial tiles of one key into dense tiles by (row, col). */
-  private def sumParts(parts: Iterator[TilePart], bs: Int)
-      : java.util.HashMap[(Long, Long), Array[Long]] = {
-    val tiles = new java.util.HashMap[(Long, Long), Array[Long]]()
+  /** Sums the partial tiles of one key by (row, col): `start` makes the
+    * first part of a tile its accumulator, `add` adds each later part.
+    */
+  private def sumParts[T <: AnyRef](parts: Iterator[TilePart])(start: TilePart => T)
+      (add: (TilePart, T) => Unit): java.util.HashMap[(Long, Long), T] = {
+    val tiles = new java.util.HashMap[(Long, Long), T]()
     parts.foreach { t =>
       val k = (t.row, t.col)
       val acc = tiles.get(k)
-      if (acc != null) t.addTo(acc)
-      else if (t.dense != null) tiles.put(k, t.dense)
-      else { val d = new Array[Long](bs * bs); t.addTo(d); tiles.put(k, d) }
+      if (acc != null) add(t, acc) else tiles.put(k, start(t))
     }
     tiles
   }
 
   /** One key's products: every output tile (i, j) that some A(i, k),
-    * B(k, j) pair of the key reaches, as (i, j, cells). The cell array is
-    * reused: it is valid until the next tile is requested. `peak` records
-    * the largest set of tiles a key of this task held.
+    * B(k, j) pair of the key reaches, as (i, j, rows). A tiles are summed
+    * flat (row-major); B tiles and the output accumulator are summed as bs
+    * row arrays, the layout [[kernel]] needs. The accumulator is reused: it
+    * is valid until the next tile is requested. `madds` counts bs per
+    * nonzero A cell of each pair that meets; `peak` records the largest
+    * set of tiles a key of this task held.
     */
   def multiply(as: Iterator[TilePart], bs: Iterator[TilePart], width: Int,
-               kernelTime: SQLMetric, peak: SQLMetric): Iterator[(Long, Long, Array[Long])] = {
+               kernelTime: SQLMetric, madds: SQLMetric,
+               peak: SQLMetric): Iterator[(Long, Long, Array[Array[Long]])] = {
     import scala.jdk.CollectionConverters._
-    val aTiles = sumParts(as, width)
-    val bTiles = sumParts(bs, width)
+    val aTiles = sumParts(as) { t =>
+      if (t.dense != null) t.dense
+      else { val d = new Array[Long](width * width); t.addTo(d); d }
+    }(_ addTo _)
+    val bTiles = sumParts(bs) { t =>
+      val rows = Array.ofDim[Long](width, width); t.addTo(rows); rows
+    }(_ addTo _)
     if (aTiles.isEmpty || bTiles.isEmpty) return Iterator.empty
     val held = (aTiles.size + bTiles.size + 1L) * width * width * 8
     if (held > peak.value) peak.set(held)
     val byRow = aTiles.asScala.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1)
-      .map { case (i, ts) => (i, ts.map { case ((_, k), a) => (k, a) }.sortBy(_._1)) }
+      .map { case (i, ts) =>
+        (i, ts.map { case ((_, k), a) => (k, a, a.count(_ != 0L) * width.toLong) }.sortBy(_._1))
+      }
     val cols = bTiles.keySet.asScala.map(_._2).toArray.sorted
-    val acc = new Array[Long](width * width)
+    val acc = Array.ofDim[Long](width, width)
     byRow.iterator.flatMap { case (i, row) =>
       cols.iterator.flatMap { j =>
         val t0 = System.nanoTime()
-        java.util.Arrays.fill(acc, 0L)
+        acc.foreach(java.util.Arrays.fill(_, 0L))
         var met = false
-        row.foreach { case (k, a) =>
+        var n = 0L
+        row.foreach { case (k, a, aMadds) =>
           val b = bTiles.get((k, j))
-          if (b != null) { kernel(acc, a, b, width); met = true }
+          if (b != null) { kernel(acc, a, b, width); n += aMadds; met = true }
         }
         kernelTime += System.nanoTime() - t0
+        madds += n
         if (met) Iterator.single((i, j, acc)) else Iterator.empty
       }
     }
   }
 
-  /** acc += a·b over row-major bs×bs tiles: the ikj loop, skipping zero A
-    * cells, so the inner loop streams one B row into one acc row.
+  /** acc += a·b over bs×bs tiles: `a` row-major, `acc` and `b` as their
+    * bs row arrays. The ikj loop skips zero A cells, and its inner loop
+    * adds av times B row lj into acc row li. Both rows are indexed by the
+    * same lk, which is what lets HotSpot C2 compile that loop to SIMD
+    * multiply-adds: over flat tiles, acc(li·bs + lk) += av·b(lj·bs + lk)
+    * stayed scalar, since C2 cannot rule out that the two differently
+    * offset accesses overlap. The additions and their order are the same
+    * in both forms, so results, wrapped overflow included, are too. On a
+    * 4-core AVX-512 host (`local[4]`, bs = 512, P = Q = 2, warm ops), a
+    * 1000² product's `kernelTime` fell from 0.81–1.16 to 0.27–0.49 CPU-s
+    * summed over its tasks, about 2.8 Gmadd per kernel-second.
     */
-  def kernel(acc: Array[Long], a: Array[Long], b: Array[Long], bs: Int): Unit = {
+  def kernel(acc: Array[Array[Long]], a: Array[Long], b: Array[Array[Long]],
+             bs: Int): Unit = {
     var li = 0
     while (li < bs) {
+      val c = acc(li)
       val aOff = li * bs
       var lj = 0
       while (lj < bs) {
         val av = a(aOff + lj)
         if (av != 0L) {
-          val bOff = lj * bs
+          val br = b(lj)
           var lk = 0
-          while (lk < bs) { acc(aOff + lk) += av * b(bOff + lk); lk += 1 }
+          while (lk < bs) { c(lk) += av * br(lk); lk += 1 }
         }
         lj += 1
       }
@@ -475,8 +533,10 @@ object BlockMatMulExec {
     }
   }
 
-  /** The nonzero cells of output tiles as `(i, k, v)` rows. */
-  private def emit(tiles: Iterator[(Long, Long, Array[Long])], bs: Int,
+  /** The nonzero cells of output tiles, held as bs row arrays, as
+    * `(i, k, v)` rows.
+    */
+  private def emit(tiles: Iterator[(Long, Long, Array[Array[Long]])], bs: Int,
                    emitTime: SQLMetric, numOutputRows: SQLMetric): Iterator[InternalRow] = {
     val row = new UnsafeRow(3)
     row.pointTo(new Array[Byte](UnsafeRow.calculateBitSetWidthInBytes(3) + 24),
@@ -485,15 +545,20 @@ object BlockMatMulExec {
     tiles.flatMap { case (i, j, acc) =>
       val t0 = System.nanoTime()
       var n = 0
-      var x = 0
-      while (x < acc.length) { if (acc(x) != 0L) { nz(n) = x; n += 1 }; x += 1 }
+      var li = 0
+      while (li < bs) {
+        val c = acc(li)
+        var lk = 0
+        while (lk < bs) { if (c(lk) != 0L) { nz(n) = li * bs + lk; n += 1 }; lk += 1 }
+        li += 1
+      }
       emitTime += System.nanoTime() - t0
       numOutputRows += n
       val i0 = i * bs; val j0 = j * bs
-      Iterator.range(0, n).map { c =>
-        val off = nz(c)
-        row.setLong(0, i0 + off / bs); row.setLong(1, j0 + off % bs)
-        row.setLong(2, acc(off))
+      Iterator.range(0, n).map { x =>
+        val li = nz(x) / bs; val lk = nz(x) % bs
+        row.setLong(0, i0 + li); row.setLong(1, j0 + lk)
+        row.setLong(2, acc(li)(lk))
         row: InternalRow
       }
     }
@@ -506,12 +571,12 @@ object BlockMatMulExec {
                         emitTime: SQLMetric,
                         numOutputRows: SQLMetric): Iterator[InternalRow] = {
     val sorted = parts.buffered
-    val acc = new Array[Long](bs * bs)
-    val tiles = new Iterator[(Long, Long, Array[Long])] {
+    val acc = Array.ofDim[Long](bs, bs)
+    val tiles = new Iterator[(Long, Long, Array[Array[Long]])] {
       override def hasNext: Boolean = sorted.hasNext
-      override def next(): (Long, Long, Array[Long]) = {
+      override def next(): (Long, Long, Array[Array[Long]]) = {
         val key = sorted.head._1
-        java.util.Arrays.fill(acc, 0L)
+        acc.foreach(java.util.Arrays.fill(_, 0L))
         while (sorted.hasNext && sorted.head._1 == key) sorted.next()._2.addTo(acc)
         (key._1, key._2, acc)
       }

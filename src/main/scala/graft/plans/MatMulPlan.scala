@@ -183,9 +183,10 @@ object MatMulStrategy {
   /** [[BlockShape.choose]] over the operands' size statistics: each is
     * read as a dense n×n COO matrix of sizeInBytes / 32 cells (3 longs +
     * row overhead, Catalyst's own size model for this schema), n from the
-    * larger. The estimate runs high for range-generated operands (n = 2309
-    * for a true 1000); tiles stay ≤ 512 wide either way, and a split sized
-    * for the estimated grid only leaves some keys without tiles.
+    * larger. The estimate runs high for range-generated operands: n =
+    * 653, 1632, 3265 and 6531 for a true 400, 1000, 2000 and 4000. Tiles
+    * stay ≤ 512 wide either way, and a split sized for the estimated grid
+    * only leaves some keys without tiles.
     */
   private def choose(left: LogicalPlan, right: LogicalPlan, parallelism: Int,
                      budget: Long): BlockShape = {

@@ -128,13 +128,15 @@ class DedupFallbackSpec extends SparkSpec {
   }
 
   test("a malformed numeric dedup conf fails naming its key") {
-    // A typo'd or negative cap must neither surface as a bare
-    // NumberFormatException mid-query nor silently run with the default
-    // or read as "off".
+    // A typo'd, negative or out-of-range cap must neither surface as a
+    // bare NumberFormatException mid-query nor silently run with the
+    // default or read as "off". 262145 is one past denseUniverseMax's
+    // bound, 2^18 codes.
     Seq("spark.graft.dedup.denseUniverseMax" -> "16k",
         "spark.graft.dedup.attachBroadcastCap" -> "512MB",
         "spark.graft.dedup.pairSpreadMinDocs" -> "many",
-        "spark.graft.dedup.denseUniverseMax" -> "-1").foreach {
+        "spark.graft.dedup.denseUniverseMax" -> "-1",
+        "spark.graft.dedup.denseUniverseMax" -> "262145").foreach {
       case (key, bad) =>
         // The two caps are read on the sparse route only, which a
         // saturated universe reaches under denseUniverseMax=0.

@@ -196,6 +196,57 @@ class MatMulPlanSpec extends SparkSpec {
     assert(parts > 64, s"$parts partial tiles: the buffer never flushed")
   }
 
+  test("the tile kernel equals the naive triple loop, cell for cell, wraps included") {
+    // The kernel's inner loop compiles to SIMD, so widths on and off a
+    // vector's lane count (1, 3, 7, 63, 64, 65, 130) reach both its vector
+    // body and its scalar tail. Values near Long.MaxValue and
+    // Long.MinValue make products and sums wrap. A carries zero cells and
+    // all-zero rows (the skip-zero branch), and the accumulator starts
+    // nonzero, since the kernel adds into it. Ten rounds give the JIT time
+    // to compile the loop it is checking.
+    import graft.plans.BlockMatMulExec
+    val rnd = new scala.util.Random(20261019L)
+    def value(): Long = rnd.nextInt(4) match {
+      case 0 => rnd.nextInt(2001) - 1000L
+      case 1 => Long.MaxValue - rnd.nextInt(1000)
+      case 2 => Long.MinValue + rnd.nextInt(1000)
+      case _ => rnd.nextLong()
+    }
+    for (round <- 1 to 10; bs <- Seq(1, 3, 7, 63, 64, 65, 130)) {
+      val a = Array.tabulate(bs * bs) { x =>
+        if ((x / bs) % 5 == 1 || rnd.nextInt(4) == 0) 0L else value()
+      }
+      val b = Array.fill(bs, bs)(value())
+      val acc = Array.fill(bs, bs)(value())
+      val want = Array.tabulate(bs, bs) { (i, k) =>
+        var c = acc(i)(k)
+        for (j <- 0 until bs) c += a(i * bs + j) * b(j)(k)
+        c
+      }
+      BlockMatMulExec.kernel(acc, a, b, bs)
+      for (i <- 0 until bs)
+        assert(acc(i).sameElements(want(i)), s"round $round, bs $bs, row $i")
+    }
+  }
+
+  test("kernelMadds counts bs per nonzero A cell of each tile pair that meets") {
+    // A = [1 0 2; 0 0 0; 3 4 0] and B = [1 0 5; 0 1 0; 0 0 1] as nonzero
+    // cells, in 2×2 tiles. A's tiles (0,0), (0,1) and (1,0) hold 1, 1 and
+    // 2 nonzero cells; B's tiles are (0,0), (0,1) and (1,1). The pairs that
+    // meet: A(0,0) and A(1,0) with B(0,0) and B(0,1), A(0,1) with B(1,1),
+    // so 2·(1 + 2) + 1 = 7 nonzero A cells take bs = 2 multiply-adds each:
+    // 14, whatever the layout.
+    import spark.implicits._
+    val a = Seq((0L, 0L, 1L), (0L, 2L, 2L), (2L, 0L, 3L), (2L, 1L, 4L)).toDF("i", "j", "v")
+    val b = Seq((0L, 0L, 1L), (0L, 2L, 5L), (1L, 1L, 1L), (2L, 2L, 1L)).toDF("i", "j", "v")
+    Seq((1, 1, 1), (2, 2, 2)).foreach { case (p, q, r) =>
+      val c = MatrixOps.blockMatmul(a, b, 2, p, q, r)
+      assert(canon(c) == Seq((0L, 0L, 1L), (0L, 2L, 7L), (2L, 0L, 3L), (2L, 1L, 4L), (2L, 2L, 15L)))
+      val Seq(node) = blockNodes(c)
+      assert(node.metrics("kernelMadds").value == 14L, s"P=$p Q=$q R=$r")
+    }
+  }
+
   test("MatMulReassociate rotates (A·B)·C right-deep iff C is the small operand") {
     import graft.plans.MatMul
     val a = MatrixGen.matA(spark, 40, 30)

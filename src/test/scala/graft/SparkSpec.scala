@@ -61,10 +61,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (r, () => plans.synchronized(plans.toSeq))
   }
 
-  /** The layout of every block-route multiply in `df`'s physical plan,
-    * looking inside adaptive plans and their query stages.
+  /** The layout of every block-route multiply in `df`'s physical plan. */
+  protected def blockShapes(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BlockShape] =
+    blockNodes(df).map(_.shape)
+
+  /** Every block-route multiply node in `df`'s physical plan, looking
+    * inside adaptive plans and their query stages.
     */
-  protected def blockShapes(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BlockShape] = {
+  protected def blockNodes(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BlockMatMulExec] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
@@ -73,7 +77,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case _ => p.children.flatMap(nodes)
     })
     nodes(df.queryExecution.executedPlan).collect {
-      case b: graft.plans.BlockMatMulExec => b.shape
+      case b: graft.plans.BlockMatMulExec => b
     }
   }
 
