@@ -51,6 +51,23 @@ object Engine {
     // s3_session_stream run). The engine adds no per-session jars or
     // files, so the isolation guards nothing here.
     .config("spark.sql.artifact.isolation.enabled", "false")
+    // Local files go through the engine's fork-free `file:` filesystem
+    // (sources/LocalFs.scala). Without native libhadoop the stock one forks
+    // a `chmod` per mkdir and file create and a `readlink` per
+    // getFileLinkStatus: a JFR recording of one perfbench query_mix run
+    // counted 943 started processes (481 chmod, 448 readlink, the readlinks
+    // all from s3's checkpoint and state-store commits); with this
+    // filesystem it counts 9, none of them Hadoop's.
+    // Two keys, because Hadoop resolves `file:` twice: `fs.file.impl` for
+    // FileSystem (Parquet sinks and sources, the commit protocol) and
+    // `fs.AbstractFileSystem.file.impl` for FileContext (streaming
+    // checkpoints and the state store). FileSystem's cache is keyed on
+    // scheme and user, not on conf, so the first `file:` instance in a JVM
+    // wins: both must be set here, before the session's first FileSystem.get.
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.sources.ForkFreeLocalFs].getName)
 
   /** Apply `spec`, by default `SPARK_GRAFT_CONF="k=v,k=v"`, as session-conf
     * overrides — the probe, bench and verify harnesses' shared mechanism

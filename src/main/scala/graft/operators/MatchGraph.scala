@@ -62,14 +62,23 @@ object MatchGraph {
     // Keyed on the dir AND the documents input's file lengths and
     // modification times: a corpus rewritten under the same path gets a
     // fresh artifact from `ensure` instead of the old one's pairs.
-    val docs = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-    val it = docs.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .listFiles(docs, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
-      .toSeq.sorted
     val t = math.round(threshold * 1e6)
-    Scratch.dir("match", (s"t$t-n$n" +: sfDir +: files).mkString("\n"))
+    Scratch.dir("match", (s"t$t-n$n" +: sfDir +: corpusFiles(s, sfDir)).mkString("\n"))
+  }
+
+  /** `path|len|mtime` of every file under the documents input, sorted.
+    * A recursive `listStatus`, not `listFiles`: the located statuses
+    * `listFiles` builds read each file's owner and permission, which the
+    * local filesystem gets by forking `ls -ld` per file.
+    */
+  private[graft] def corpusFiles(s: SparkSession, sfDir: String): Seq[String] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val docs = new Path(s"$sfDir/documents.parquet")
+    val fs = docs.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) files(f.getPath) else Seq(f)
+    }
+    files(docs).map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted
   }
 
   /** Read-through: build once per JVM per corpus, then hand every

@@ -68,6 +68,27 @@ class ArtifactSpec extends SparkSpec {
     }
   }
 
+  test("the memo key's file list equals listFiles' path|len|mtime") {
+    // A single-file corpus and a nested, partitioned one with `_SUCCESS`.
+    import spark.implicits._
+    Scratch.using("artifact-key") { path =>
+      Seq((1L, "a", 0), (2L, "b", 1)).toDF("doc_id", "text", "p").write
+        .partitionBy("p").parquet(s"$path/documents.parquet")
+      Seq(d, path.toString).foreach { dir =>
+        val docs = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+        val it = docs.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listFiles(docs, true)
+        val want = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").toSeq.sorted
+        assert(want.nonEmpty && MatchGraph.corpusFiles(spark, dir) == want, dir)
+      }
+    }
+  }
+
+  test("a match-graph rebuild forks no process") {
+    assertNoForks("MatchGraph.rebuild")(MatchGraph.rebuild(spark, d))
+  }
+
   test("staging sweeps artifact trees whose JVM is gone and keeps live ones") {
     // No pid reaches 10^9 (Linux caps pid_max at 2^22), so that tree's
     // process is gone; pid 1 and this JVM are alive. Both Scratch bases

@@ -81,6 +81,41 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The Hadoop `Shell` processes started while `body` runs, each as its
+    * command line and stack. Spark's own cleanup forks (`rm -rf`) do not go
+    * through `Shell` and are not counted.
+    */
+  protected def shellForks(body: => Unit): Seq[String] = Scratch.using("jfr") { dir =>
+    import scala.jdk.CollectionConverters._
+    val r = new jdk.jfr.Recording()
+    try {
+      r.enable("jdk.ProcessStart").withStackTrace()
+      r.start()
+      body
+      r.stop()
+      val f = dir.resolve("forks.jfr")
+      r.dump(f)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map { e =>
+          val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(fr => s"${fr.getMethod.getType.getName}.${fr.getMethod.getName}")
+          (e.getString("command") +: frames).mkString("\n  at ")
+        }
+        .filter(_.contains("org.apache.hadoop.util.Shell"))
+    } finally r.close()
+  }
+
+  /** Fails when `body` starts a Hadoop `Shell` process. */
+  protected def assertNoForks(what: String)(body: => Unit): Unit = {
+    // The session and Shell's one-time start-up probes come first, so the
+    // recording holds only what `body` does.
+    spark.range(1).count()
+    assert(!org.apache.hadoop.util.Shell.WINDOWS)
+    val forks = shellForks(body)
+    assert(forks.isEmpty, s"$what forked ${forks.size}:\n${forks.take(3).mkString("\n")}")
+  }
+
   protected def awaitUntil(cond: () => Boolean, timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond() && System.currentTimeMillis() < deadline) Thread.sleep(50)
