@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory with the engine's standard configuration.
   *
@@ -166,7 +167,76 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema inferred once per file set.
+    *
+    * Without a schema, every `spark.read.parquet` call runs a one-task job
+    * that reads a footer (`ParquetFileFormat.mergeSchemasInParallel`), even
+    * for a single file, so a warm pass paid a Spark job per table load
+    * before any of its own work. This keeps each inferred `StructType` and
+    * reads with `spark.read.schema(s)`, which starts no job.
+    *
+    * The memo key is the path, the session's explicitly set
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` entries (they
+    * change what inference returns: `nanosAsLong`, `binaryAsString`,
+    * `inferTimestampNTZ.enabled`, ...), and the `path|len|mtime` of every
+    * file under the path ([[files]]): a file set rewritten under the same
+    * path is inferred afresh. One entry is kept per path and conf set, so
+    * rewrites replace their entry instead of growing the memo. A schema
+    * read with `spark.read.schema` is marked nullable exactly as an
+    * inferred one is, so both reads plan the same relation.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val (key, listing) = schemaKey(spark, path)
+    val schema = Option(schemas.get(key)).collect { case (l, s) if l == listing => s }
+      .getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (listing, s))
+        s
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** Write `df` to `path` as Parquet, replacing what is there, and record
+    * the written schema as the [[parquet]] memo entry of the new files: a
+    * rewritten file set would miss the memo, so its first reader would
+    * otherwise run the schema job this write already knows the answer to.
+    * The entry is `df`'s schema, which Spark also keeps in the footers it
+    * writes; a read marks it nullable as it marks an inferred one.
+    */
+  def writeParquet(df: DataFrame, path: String): Unit = {
+    df.write.mode("overwrite").parquet(path)
+    val (key, listing) = schemaKey(df.sparkSession, path)
+    schemas.put(key, (listing, df.schema))
+  }
+
+  /** (path and parquet confs) -> (file listing, schema); see [[parquet]]. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], StructType)]()
+
+  private def schemaKey(spark: SparkSession, path: String): (String, Seq[String]) = {
+    val confs = spark.sessionState.conf.getAllConfs.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted.map { case (k, v) => s"$k=$v" }
+    ((path +: confs).mkString("\n"), files(spark, path))
+  }
+
+  /** `path|len|mtime` of every file under `path` (the path itself when it
+    * is a file), sorted. A recursive `listStatus`, not `listFiles`: the
+    * located statuses `listFiles` builds read each file's owner and
+    * permission, which the local filesystem gets by forking `ls -ld` per
+    * file.
+    */
+  def files(spark: SparkSession, path: String): Seq[String] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath) else Seq(f)
+    }
+    walk(root).map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted
+  }
 
   /** Scale-adaptive spread for a CPU-heavy first stage over a narrow scan
     * (optimization guide §2.5, "input skew … repartition immediately after
@@ -257,7 +327,7 @@ object Tables {
     // lives in [[withEventTime]], which pins UTC only for the duration
     // of its own analysis — r7 ADVICE: no session-global tz mutation.)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    parquet(spark, s"$dir/events.parquet")
   }
 
   /** Fixture `ts` (nanos LONG or NTZ micros) → microsecond TimestampType.

@@ -888,14 +888,9 @@ object DedupOps {
     */
   def minhashCalibration(docs: DataFrame, threshold: Double,
                          n: Int = 3, numHashes: Int = 64): DataFrame = {
-    val h = docs.select(col("doc_id"), col("text"),
-                        sha2(col("text"), 256).as("ch"))
     // Persisted: the rep frame is consumed by the pair engine (twice — a
-    // routing count plus the shingle explode) and the signature path.
-    val reps = h.groupBy(col("ch")).agg(min(col("doc_id")).as("doc_id"))
-      .join(h.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .select(col("doc_id"), col("text"))
-      .persist()
+    // routing collect plus the shingle explode) and the signature path.
+    val reps = exactContraction(docs)._2.persist()
     try calibrationFromPairs(reps, prefixJaccardPairs(reps, threshold, n),
                              n, numHashes)
     finally reps.unpersist(blocking = false)
@@ -970,19 +965,28 @@ object DedupOps {
     * match-graph artifact ([[MatchGraph]]), so the contraction semantics
     * (sha2 grouping, min-id rep election) cannot drift between the
     * from-scratch and staged paths.
+    *
+    * Both outputs come from one window over the text hash: rep_id =
+    * min(doc_id) and csize = count over the doc's `ch` group, so the
+    * corpus is exchanged once and text crosses the network at most once
+    * (`members` alone prunes it before the exchange). The hash travels as
+    * its 32 bytes, not as 64 hex characters.
+    * NULL RULE: null-text docs are in neither output. A null text has a
+    * null hash, and the window would group every null-text doc together,
+    * so they are filtered out before it. doc_id must be unique, as it is
+    * in every corpus the engine reads.
     */
-  private[operators] def exactContraction(docs: DataFrame)
+  private[graft] def exactContraction(docs: DataFrame)
       : (DataFrame, DataFrame) = {
-    val h = docs.select(col("doc_id"), col("text"),
-                        sha2(col("text"), 256).as("ch"))
-    val clusters = h.groupBy(col("ch"))
-      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("csize"))
-    val members = h.join(clusters, "ch")
-      .select(col("doc_id"), col("rep_id"), col("csize"))
-    val reps = h.join(clusters.select(col("rep_id")),
-                      col("doc_id") === col("rep_id"))
-      .select(col("doc_id"), col("text"))
-    (members, reps)
+    import org.apache.spark.sql.expressions.Window
+    val group = Window.partitionBy(col("ch"))
+    val c = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), col("text"), unhex(sha2(col("text"), 256)).as("ch"))
+      .select(col("doc_id"), col("text"),
+              min(col("doc_id")).over(group).as("rep_id"),
+              count(lit(1)).over(group).as("csize"))
+    (c.select(col("doc_id"), col("rep_id"), col("csize")),
+     c.filter(col("doc_id") === col("rep_id")).select(col("doc_id"), col("text")))
   }
 
   /** Doc-level match-graph COMPONENTS via the representative graph —
@@ -996,10 +1000,13 @@ object DedupOps {
     * rep_id (each rep IS the min doc_id of its cluster); multi-member
     * clusters whose rep touches no rep pair are components of their own
     * with component_id = rep_id. Returns (doc_id, component_id), matched
-    * docs only. ONE definition, shared by the l50/l61 gates and the
-    * staged artifact ([[MatchGraph.build]]) so the from-scratch and
-    * staged component semantics cannot drift; `ArtifactSpec` pins the
-    * staged ≡ from-scratch equality, `LlmSpec` the CC equivalences.
+    * docs only. The CC node set is the distinct endpoints of `repPairs`
+    * (the matched reps), so [[connectedComponents]]' local route reads
+    * nodes and edges from its one collect of the pairs. ONE definition,
+    * shared by the l50/l61 gates and the staged artifact
+    * ([[MatchGraph.build]]) so the from-scratch and staged component
+    * semantics cannot drift; `ArtifactSpec` pins the staged ≡
+    * from-scratch equality, `LlmSpec` the CC equivalences.
     *
     * Why not CC over the expanded doc pairs (the pre-r15 l50/l61 shape):
     * the expansion multiplies every rep pair by the product of its two
@@ -1008,12 +1015,9 @@ object DedupOps {
     * zero extra component information (guide §2.3: shuffle fewer bytes —
     * here, iterate over fewer edges).
     */
-  private[operators] def repComponents(members: DataFrame,
-                                       repPairs: DataFrame): DataFrame = {
-    val matchedReps = repPairs.select(col("da").as("doc_id"))
-      .unionByName(repPairs.select(col("db").as("doc_id"))).distinct()
-    val repComp = connectedComponents(
-        matchedReps, repPairs.select(col("da"), col("db")))
+  private[graft] def repComponents(members: DataFrame,
+                                   repPairs: DataFrame): DataFrame = {
+    val repComp = connectedComponents(repPairs.select(col("da"), col("db")))
       .select(col("doc_id").as("rep_id"), col("component_id"))
     members.join(repComp, Seq("rep_id"), "left")
       .filter(col("component_id").isNotNull || col("csize") >= 2)
@@ -1061,8 +1065,21 @@ object DedupOps {
     * iteration lesson). Convergence is a driver-side count of changed
     * labels — one scalar per round, not a data collect.
     */
-  def connectedComponents(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
+  def connectedComponents(docs: DataFrame, pairs: DataFrame): DataFrame =
+    components(pairs, Some(docs))
+
+  /** [[connectedComponents]] of the graph whose nodes are exactly the
+    * endpoints of `pairs` (da, db), so no node is isolated. The local
+    * route takes the nodes from the edges it collected, one collect in
+    * all; with nodes ≤ 2·pairs its cap rule reads on the pairs alone.
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame = components(pairs, None)
+
+  /** The two routes of [[connectedComponents]]; `docs` None means the
+    * node set is the endpoints of `pairs`.
+    */
+  private def components(pairs: DataFrame, docs: Option[DataFrame]): DataFrame = {
+    val spark = pairs.sparkSession
     // LOCAL FINISH (round 15, guide §2.4 "remove shuffles outright"): when
     // the graph fits the driver comfortably, run the union-find there
     // instead of paying O(log d) rounds × ~6 stages of near-empty
@@ -1074,7 +1091,9 @@ object DedupOps {
     // come back, and the graph is local when max(nodes, 2·pairs) ≤
     // localMax (each pair is two directed edges) — a measured size, not
     // an estimate (the attachStrategy discipline), and one job per input
-    // instead of checkpoint + count + collect. The distributed pointer-
+    // instead of checkpoint + count + collect; when the nodes are the
+    // pairs' endpoints they come from the collected edges, and the pairs
+    // are the only input. The distributed pointer-
     // jumping loop below is the at-scale route: match graphs at 100 TB are
     // corpus-sized and must never be collected, and the bound caps what a
     // too-large graph costs the driver before it gets there. The cap is
@@ -1091,8 +1110,11 @@ object DedupOps {
     if (localMax > 0) {
       val edgeRows = pairs.select(col("da"), col("db"))
         .limit(localMax / 2 + 1).collect()
-      lazy val nodeIds = docs.select(col("doc_id")).limit(localMax + 1)
-        .collect().map(_.getLong(0))
+      lazy val nodeIds = docs match {
+        case Some(d) => d.select(col("doc_id")).limit(localMax + 1)
+          .collect().map(_.getLong(0))
+        case None => edgeRows.flatMap(e => Array(e.getLong(0), e.getLong(1))).distinct
+      }
       if (2L * edgeRows.length <= localMax && nodeIds.length <= localMax) {
         import spark.implicits._
         val parent = new java.util.HashMap[Long, Long](nodeIds.length * 2)
@@ -1123,7 +1145,9 @@ object DedupOps {
     val edges0 = pairs.select(col("da").as("x"), col("db").as("y"))
       .unionByName(pairs.select(col("db").as("x"), col("da").as("y")))
       .localCheckpoint(true)
-    val labels0 = docs.select(col("doc_id").as("x"), col("doc_id").as("comp"))
+    val nodes = docs.getOrElse(pairs.select(col("da").as("doc_id"))
+      .unionByName(pairs.select(col("db").as("doc_id"))).distinct())
+    val labels0 = nodes.select(col("doc_id").as("x"), col("doc_id").as("comp"))
       .localCheckpoint(true)
     // Size the iterative state's parallelism to the DATA, not the session
     // default: each round re-scans these frames across ~6 stages, so 32

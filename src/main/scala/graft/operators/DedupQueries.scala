@@ -94,25 +94,14 @@ object DedupQueries {
     cross.unionByName(diag).orderBy("src_a", "src_b")
   }
 
-  /** The exact-contraction representatives (doc_id, text) — the
-    * signature input of the calibration gates (l57/l64d).
-    */
-  private def contractionReps(dd: DataFrame): DataFrame = {
-    val h = dd.select(col("doc_id"), col("text"),
-                      sha2(col("text"), 256).as("ch"))
-    h.groupBy(col("ch")).agg(min(col("doc_id")).as("doc_id"))
-      .join(h.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .select(col("doc_id"), col("text"))
-  }
-
   /** MinHash calibration from the staged rep-pairs Parquet — only the
     * match-sized signature work runs ([[DedupOps.calibrationFromPairs]]);
     * the pair engine never re-executes. Shared by l57 and l64d.
     */
   private def artifactCalibration(s: SparkSession, d: String): DataFrame = {
     val art = MatchGraph.ensure(s, d, 0.8)
-    val reps = contractionReps(docs(s, d)).persist()
-    try DedupOps.calibrationFromPairs(reps, s.read.parquet(art.repPairs))
+    val reps = DedupOps.exactContraction(docs(s, d))._2.persist()
+    try DedupOps.calibrationFromPairs(reps, Tables.parquet(s, art.repPairs))
       .orderBy("da", "db")
     finally reps.unpersist(blocking = false)
   }
@@ -323,7 +312,7 @@ object DedupQueries {
     // [[DedupOps.clusteredJaccardPairs]]; ArtifactSpec pins staged ≡
     // from-scratch and the oracle stays the exact all-pairs SQL.
     Gate("l2_near_dup", (s, d) =>
-      s.read.parquet(MatchGraph.ensure(s, d, 0.8).pairs)
+      Tables.parquet(s, MatchGraph.ensure(s, d, 0.8).pairs)
         .orderBy("da", "db"),
       nearDupOracle),
 
@@ -331,7 +320,7 @@ object DedupQueries {
     // same staged `pairs` (one engine run per corpus, guide §2.4); the
     // oracle is the same exact all-pairs SQL.
     Gate("l2b_minhash_lsh", (s, d) =>
-      s.read.parquet(MatchGraph.ensure(s, d, 0.8).pairs)
+      Tables.parquet(s, MatchGraph.ensure(s, d, 0.8).pairs)
         .orderBy("da", "db"),
       // l2b answers the SAME question as l2 (both read the staged pairs),
       // so its oracle is the identical exact all-pairs computation.
@@ -521,7 +510,7 @@ object DedupQueries {
       // verbatim via [[survivorshipMap]]. ArtifactSpec pins this against
       // the from-scratch twin ([[scratchComponents]] + the same map).
       survivorshipMap(docs(s, d),
-        s.read.parquet(MatchGraph.ensure(s, d, 0.8).components))
+        Tables.parquet(s, MatchGraph.ensure(s, d, 0.8).components))
     },
       survivorshipOracle),
 
@@ -709,7 +698,7 @@ object DedupQueries {
       // shared verbatim with l64c via [[sourceOverlapMatrix]].
       // ArtifactSpec pins this against the from-scratch twin.
       sourceOverlapMatrix(docs(s, d),
-        s.read.parquet(MatchGraph.ensure(s, d, 0.8).components))
+        Tables.parquet(s, MatchGraph.ensure(s, d, 0.8).components))
     },
       sourceOverlapOracle),
 
@@ -727,7 +716,7 @@ object DedupQueries {
     // one (~25–30 s of the sf0.1 bench before staging).
     Gate("l64_match_artifact", { (s, d) =>
       val art = MatchGraph.rebuild(s, d, 0.8)
-      s.read.parquet(art.pairs).orderBy("da", "db")
+      Tables.parquet(s, art.pairs).orderBy("da", "db")
     },
       nearDupOracle),
 
@@ -738,7 +727,7 @@ object DedupQueries {
     // verbatim; ArtifactSpec additionally pins engine-side equality.
     Gate("l64b_artifact_survivorship", { (s, d) =>
       survivorshipMap(docs(s, d),
-        s.read.parquet(MatchGraph.ensure(s, d, 0.8).components))
+        Tables.parquet(s, MatchGraph.ensure(s, d, 0.8).components))
     },
       survivorshipOracle),
 
@@ -748,7 +737,7 @@ object DedupQueries {
     // diagonal are all that run. Oracle = l61's verbatim.
     Gate("l64c_artifact_source_overlap", { (s, d) =>
       sourceOverlapMatrix(docs(s, d),
-        s.read.parquet(MatchGraph.ensure(s, d, 0.8).components))
+        Tables.parquet(s, MatchGraph.ensure(s, d, 0.8).components))
     },
       sourceOverlapOracle),
 

@@ -1049,7 +1049,7 @@ object EventQueries {
     Gate("s28_fp_index_stream", { (s, d) =>
       import s.implicits._
       withRocksDb(s) {
-        val raw = s.read.parquet(s"$d/documents.parquet")
+        val raw = Tables.load(s, d, "documents")
           .select(col("doc_id"), col("text"))
         withBaseIncrementStream(raw) { dir =>
           val stream = s.readStream.schema(raw.schema)
@@ -1115,7 +1115,7 @@ object EventQueries {
     Gate("s29_kmv_monitor_stream", { (s, d) =>
       import s.implicits._
       withRocksDb(s) {
-        val raw = s.read.parquet(s"$d/documents.parquet")
+        val raw = Tables.load(s, d, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
         withBaseIncrementStream(raw) { dir =>
           val grams = s.readStream.schema(raw.schema)
@@ -1202,7 +1202,7 @@ object EventQueries {
     Gate("s30_lsh_index_stream", { (s, d) =>
       import s.implicits._
       withRocksDb(s) {
-        val raw = s.read.parquet(s"$d/documents.parquet")
+        val raw = Tables.load(s, d, "documents")
           .select(col("doc_id"), col("text"))
         withBaseIncrementStream(raw) { dir =>
           // WORD 3-gram basis, not char shingles: this corpus's 3-char
@@ -1290,7 +1290,7 @@ object EventQueries {
     Gate("s31_span_index_stream", { (s, d) =>
       import s.implicits._
       withRocksDb(s) {
-        val raw = s.read.parquet(s"$d/documents.parquet")
+        val raw = Tables.load(s, d, "documents")
           .select(col("doc_id"), col("text"))
         withBaseIncrementStream(raw) { dir =>
           // THE batch generator, applied to the unbounded frame (every op

@@ -598,7 +598,7 @@ object IoQueries {
     // the oracle states them as literals.
     Gate("io11_file_metadata", { (s, d) =>
       Seq("orders", "events", "documents")
-        .map(tn => s.read.parquet(s"$d/$tn.parquet")
+        .map(tn => Tables.parquet(s, s"$d/$tn.parquet")
           .select(col("_metadata.file_name").as("file_name")))
         .reduce(_ unionAll _)
         .groupBy(col("file_name"))

@@ -63,22 +63,8 @@ object MatchGraph {
     // modification times: a corpus rewritten under the same path gets a
     // fresh artifact from `ensure` instead of the old one's pairs.
     val t = math.round(threshold * 1e6)
-    Scratch.dir("match", (s"t$t-n$n" +: sfDir +: corpusFiles(s, sfDir)).mkString("\n"))
-  }
-
-  /** `path|len|mtime` of every file under the documents input, sorted.
-    * A recursive `listStatus`, not `listFiles`: the located statuses
-    * `listFiles` builds read each file's owner and permission, which the
-    * local filesystem gets by forking `ls -ld` per file.
-    */
-  private[graft] def corpusFiles(s: SparkSession, sfDir: String): Seq[String] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val docs = new Path(s"$sfDir/documents.parquet")
-    val fs = docs.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { f =>
-      if (f.isDirectory) files(f.getPath) else Seq(f)
-    }
-    files(docs).map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted
+    Scratch.dir("match",
+      (s"t$t-n$n" +: sfDir +: Tables.files(s, s"$sfDir/documents.parquet")).mkString("\n"))
   }
 
   /** Read-through: build once per JVM per corpus, then hand every
@@ -115,19 +101,19 @@ object MatchGraph {
       // already an eager local checkpoint on both routes, so the two
       // expansions below read that frame, not the file just written.
       val repPairs = DedupOps.prefixJaccardPairs(reps, threshold, n)
-      repPairs.write.mode("overwrite").parquet(s"$r/rep_pairs")
+      // Each write seeds the Parquet schema memo ([[Tables.writeParquet]]),
+      // so the gates that read the artifact back infer no schema.
+      Tables.writeParquet(repPairs, s"$r/rep_pairs")
 
       // Doc-level expansion — the l2 output contract, the shared
       // [[DedupOps.expandRepPairs]] definition.
-      DedupOps.expandRepPairs(members, repPairs)
-        .write.mode("overwrite").parquet(s"$r/pairs")
+      Tables.writeParquet(DedupOps.expandRepPairs(members, repPairs), s"$r/pairs")
 
       // Components on the REP graph (match-sized iterative state), then
       // one broadcast-scale expansion back to docs — the shared
       // [[DedupOps.repComponents]] definition (round 15: l50/l61 now ride
       // the same rep-graph construction, so it lives in DedupOps).
-      DedupOps.repComponents(members, repPairs)
-        .write.mode("overwrite").parquet(s"$r/components")
+      Tables.writeParquet(DedupOps.repComponents(members, repPairs), s"$r/components")
     } finally members.unpersist(blocking = false)
     Artifact(s"$r/rep_pairs", s"$r/pairs", s"$r/components")
   }

@@ -80,9 +80,20 @@ class ArtifactSpec extends SparkSpec {
           .listFiles(docs, true)
         val want = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
           .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").toSeq.sorted
-        assert(want.nonEmpty && MatchGraph.corpusFiles(spark, dir) == want, dir)
+        assert(want.nonEmpty && Tables.files(spark, s"$dir/documents.parquet") == want, dir)
       }
     }
+  }
+
+  test("a warm match-graph rebuild runs at most 20 Spark jobs") {
+    // The sf0.001 build at the test session's width: the contraction, the
+    // code-index collect and the dense kernel, the three artifact writes
+    // and the rep graph's one collect. A job more is a regression: a
+    // schema read, a corpus re-exchange or a collect the driver could do
+    // without.
+    MatchGraph.rebuild(spark, d)
+    val (_, jobs) = jobsOf(MatchGraph.rebuild(spark, d))
+    assert(jobs <= 20, s"a warm rebuild ran $jobs jobs")
   }
 
   test("a match-graph rebuild forks no process") {

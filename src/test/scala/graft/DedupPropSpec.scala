@@ -57,6 +57,57 @@ class DedupPropSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  test("exact-dup contraction equals the group-by + join formulation on random corpora") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    // The earlier formulation: one group-by on the text hash, joined back
+    // once per output.
+    def joined(docs: DataFrame): (DataFrame, DataFrame) = {
+      val h = docs.select(col("doc_id"), col("text"), sha2(col("text"), 256).as("ch"))
+      val clusters = h.groupBy(col("ch"))
+        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("csize"))
+      (h.join(clusters, "ch").select(col("doc_id"), col("rep_id"), col("csize")),
+       h.join(clusters.select(col("rep_id")), col("doc_id") === col("rep_id"))
+         .select(col("doc_id"), col("text")))
+    }
+    // 1–6 distinct texts, each in an exact-dup cluster of 1–4 docs, plus
+    // 0–3 null texts, under shuffled unique doc ids.
+    val genCase = for {
+      nTexts <- Gen.choose(1, 6)
+      texts <- Gen.listOfN(nTexts, Gen.listOfN(4, Gen.oneOf(vocab)).map(_.mkString(" ")))
+      sizes <- Gen.listOfN(nTexts, Gen.choose(1, 4))
+      nNull <- Gen.choose(0, 3)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield {
+      val ts = texts.distinct.zip(sizes).flatMap { case (t, k) => Seq.fill(k)(Option(t)) } ++
+        Seq.fill(nNull)(Option.empty[String])
+      val ids = new scala.util.Random(seed).shuffle((0L until ts.size.toLong).map(_ * 7 + 3))
+      ids.zip(ts)
+    }
+    def sorted(df: DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    def same(rows: Seq[(Long, Option[String])]): Boolean = {
+      val docs = rows.toDF("doc_id", "text").repartition(3)
+      val (members, reps) = DedupOps.exactContraction(docs)
+      val (oldMembers, oldReps) = joined(docs)
+      val nullIds = rows.collect { case (id, None) => id }.toSet
+      // The one difference: the earlier `reps` joined on doc_id, so the
+      // null-text group's min doc_id came back as a rep with a null text
+      // (it has no shingles, so it paired with nothing). Both outputs now
+      // leave out every null-text doc.
+      val oldRepsText = sorted(oldReps).filter(_(1) != null)
+      sorted(members) == sorted(oldMembers) &&
+        sorted(reps) == oldRepsText &&
+        sorted(oldReps).size - oldRepsText.size == math.min(nullIds.size, 1) &&
+        sorted(members).forall(r => !nullIds(r.head.asInstanceOf[Long]))
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8), Prop.forAllNoShrink(genCase)(same))
+    assert(res.passed, res.status.toString)
+    assert(same(Seq(5L -> Some("a b"), 2L -> None, 9L -> Some("a b"), 1L -> None,
+                    4L -> Some("c"), 3L -> Some("a b"), 8L -> Some("c"))))
+  }
+
   test("span dedup masks a planted boilerplate run and keeps the first occurrence") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta unique1 unique2"),

@@ -27,17 +27,18 @@ class GraphPropSpec extends SparkSpec {
     (0L until n).map(i => i -> find(i)).toMap
   }
 
-  test("connectedComponents equals union-find on random graphs") {
-    val genCase = for {
-      n <- Gen.choose(2, 24)
-      nEdges <- Gen.choose(0, 2 * n)
-      edges <- Gen.listOfN(nEdges, for {
-        a <- Gen.choose(0, n - 1)
-        b <- Gen.choose(0, n - 1)
-      } yield (math.min(a, b).toLong, math.max(a, b).toLong))
-    } yield (n.toLong, edges.filter(e => e._1 != e._2).distinct)
+  /** (n, edges): 2–24 nodes, up to 2n distinct id-ordered edges, no loops. */
+  private val randomGraph = for {
+    n <- Gen.choose(2, 24)
+    nEdges <- Gen.choose(0, 2 * n)
+    edges <- Gen.listOfN(nEdges, for {
+      a <- Gen.choose(0, n - 1)
+      b <- Gen.choose(0, n - 1)
+    } yield (math.min(a, b).toLong, math.max(a, b).toLong))
+  } yield (n.toLong, edges.filter(e => e._1 != e._2).distinct)
 
-    val prop = Prop.forAllNoShrink(genCase) { case (n, edges) =>
+  test("connectedComponents equals union-find on random graphs") {
+    val prop = Prop.forAllNoShrink(randomGraph) { case (n, edges) =>
       val nodes = (0L until n).map(i => (i, "")).toDF("doc_id", "text")
       val pairs = edges.toDF("da", "db")
       val got = DedupOps.connectedComponents(nodes, pairs).collect()
@@ -56,17 +57,8 @@ class GraphPropSpec extends SparkSpec {
     // with each other and the reference union-find — including the
     // inert-edge semantics (an edge endpoint absent from the node set
     // neither receives nor conducts labels on either route).
-    val genCase = for {
-      n <- Gen.choose(2, 24)
-      nEdges <- Gen.choose(0, 2 * n)
-      edges <- Gen.listOfN(nEdges, for {
-        a <- Gen.choose(0, n - 1)
-        b <- Gen.choose(0, n - 1)
-      } yield (math.min(a, b).toLong, math.max(a, b).toLong))
-    } yield (n.toLong, edges.filter(e => e._1 != e._2).distinct)
-
     val key = "spark.graft.cc.localMaxRows"
-    val prop = Prop.forAllNoShrink(genCase) { case (n, edges) =>
+    val prop = Prop.forAllNoShrink(randomGraph) { case (n, edges) =>
       val nodes = (0L until n).map(i => (i, "")).toDF("doc_id", "text")
       val pairs = edges.toDF("da", "db")
       def run(): Map[Long, Long] =
@@ -102,6 +94,74 @@ class GraphPropSpec extends SparkSpec {
           }
         }
       }
+  }
+
+  test("repComponents: one-collect local route ≡ distributed route ≡ union-find") {
+    // The rep graph's nodes are the endpoints of its pairs, so the local
+    // route takes them from the edges it collected: one job in all. Pairs
+    // come from a one-partition RDD, like the checkpointed rep pairs, so
+    // that the bounded collect is one job (over more partitions, a limit
+    // collect may take a job per round of partitions).
+    val key = "spark.graft.cc.localMaxRows"
+    def pairsOf(edges: Seq[(Long, Long)]) =
+      spark.sparkContext.parallelize(edges, 1).toDF("da", "db")
+    def comps(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    // Reps are 0..n-1; rep r's cluster has 1 + (r % 3) members, ids
+    // 1000·r + i, and a doc's component is its rep's: the min rep of the
+    // rep's union-find component when the rep is in a pair, else the rep
+    // itself when its cluster has 2 or more members; lone docs are absent.
+    def want(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val uf = unionFind(n, edges)
+      val matched = edges.flatMap(e => Seq(e._1, e._2)).toSet
+      (0L until n).flatMap { r =>
+        val size = 1 + (r % 3)
+        if (matched(r)) (0L until size).map(i => (1000 * r + i) -> uf(r))
+        else if (size >= 2) (0L until size).map(i => (1000 * r + i) -> r)
+        else Nil
+      }.toMap
+    }
+    val prop = Prop.forAllNoShrink(randomGraph) { case (n, edges) =>
+      val members = (0L until n).flatMap { r =>
+        val size = 1 + (r % 3)
+        (0L until size).map(i => (1000 * r + i, r, size))
+      }.toDF("doc_id", "rep_id", "csize")
+      val repPairs = pairsOf(edges)
+      val (local, jobs) = jobsOf(comps(DedupOps.connectedComponents(repPairs)))
+      val dist = Engine.withConf(spark, key -> "0")(
+        comps(DedupOps.connectedComponents(repPairs)))
+      val docs = comps(DedupOps.repComponents(members, repPairs))
+      val docsDist = Engine.withConf(spark, key -> "0")(
+        comps(DedupOps.repComponents(members, repPairs)))
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSet
+      import Prop.propBoolean
+      (jobs == 1L) :| s"local route ran $jobs jobs" &&
+        (local == dist) :| "local != distributed" &&
+        (local == unionFind(n, edges).filter(kv => nodes(kv._1))) :| "local != union-find" &&
+        (docs == docsDist) :| "repComponents: local != distributed" &&
+        (docs == want(n, edges)) :| s"repComponents != reference: $docs"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
+
+    // At the cap's boundary: with nodes ≤ 2·pairs the rule reads on the
+    // pairs alone, so cap = 2·pairs finishes locally and cap − 1 takes
+    // the distributed loop, with equal outputs.
+    val edges = Seq((0L, 1L), (1L, 2L), (5L, 7L), (2L, 3L))
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSet
+    val expect = unionFind(8, edges).filter(kv => nodes(kv._1))
+    Seq(2L * edges.size -> true, (2L * edges.size - 1) -> false).foreach {
+      case (cap, wantLocal) =>
+        Engine.withConf(spark, key -> cap.toString) {
+          val out = DedupOps.connectedComponents(pairsOf(edges))
+          assert(isLocal(out) == wantLocal, s"localMaxRows=$cap")
+          assert(comps(out) == expect, s"localMaxRows=$cap")
+        }
+    }
   }
 
   test("connectedComponents walks CYCLIC graphs (the sql8 recursion boundary)") {

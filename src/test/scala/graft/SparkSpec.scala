@@ -116,6 +116,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(forks.isEmpty, s"$what forked ${forks.size}:\n${forks.take(3).mkString("\n")}")
   }
 
+  /** `body`'s result and the Spark jobs it started, counted by the
+    * [[Sched]] listener `graft.Bench` reads.
+    */
+  protected def jobsOf[A](body: => A): (A, Long) = {
+    val sched = new Sched
+    spark.sparkContext.addSparkListener(sched)
+    try {
+      val before = sched.settled()
+      val r = body
+      (r, (sched.settled() - before).jobs)
+    } finally spark.sparkContext.removeSparkListener(sched)
+  }
+
   protected def awaitUntil(cond: () => Boolean, timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond() && System.currentTimeMillis() < deadline) Thread.sleep(50)
