@@ -241,10 +241,12 @@ object Bench {
     // FINAL line — short enough to always survive tail capture and parse.
     println(full)
     // Persist ONLY full (unfiltered) runs: a SPARK_GRAFT_BENCH_ONLY
-    // iteration run must not clobber the committed full-map artifact.
+    // iteration run must not clobber the committed full-map artifact. The
+    // file goes to the working directory, the checkout the run starts from
+    // (sbt's forked run and tools/run.sh both start there).
     if (only.isEmpty) try {
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/bench_full.json"),
+        java.nio.file.Paths.get("bench_full.json"),
         (full + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // best-effort; stdout already has it
     // The `full` pointer is only honest when this run actually rewrote

@@ -103,56 +103,53 @@ object DedupOps {
   /** Payload-size estimates understate the in-memory broadcast relation —
     * UnsafeRow field offsets, array headers, and the HashedRelation's
     * load-factor slack roughly double the raw 8 B/value arithmetic — so
-    * every cap comparison pads the estimate 2× before comparing (r9
-    * ADVICE: an unpadded estimate near the 512 MB cap is a latent driver
-    * OOM).
+    * every cap comparison pads the estimate 2× before comparing: an
+    * unpadded estimate near the 512 MB cap is a latent driver OOM.
     */
   private val BroadcastEstimatePad = 2L
 
-  /** The session's auto-broadcast threshold in bytes, as Spark parses it
-    * (`1k`, `20MB`, `-1`; the same value Catalyst uses), for operators that make exact-arithmetic broadcast
-    * decisions on frames whose statistics Catalyst cannot see through
-    * (aggregates).
+  /** The operator broadcast decision, shared by every attach site, over a
+    * persisted per-doc `sets` frame (`codes` arrays): its doc count and
+    * the attach. One driver action measures the frame (8 bytes per code
+    * plus per-row overhead; Catalyst cannot see through the aggregate that
+    * built it) and warms the cache both attach joins reuse. The decision
+    * widens the session's auto-broadcast threshold to the operator cap
+    * (the attach economics are operator knowledge Catalyst lacks), but
+    * never overrides a non-positive session threshold —
+    * `autoBroadcastJoinThreshold = -1` is the standard "this driver cannot
+    * afford broadcasts" switch and it must win. Past the decision the
+    * fallback is always a shuffled HASH join, never sort-merge: the
+    * streamed side in these pipelines is the byte-heavy
+    * array-attached/fan-out frame, whose per-task sort ran out of memory
+    * at the 8× rung.
     */
-  private def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.sessionState.conf.autoBroadcastJoinThreshold
-
-  /** The operator broadcast decision, shared by every attach site: widen
-    * the session threshold to the operator cap (the attach economics are
-    * operator knowledge Catalyst lacks), but NEVER override a non-positive
-    * session threshold — `autoBroadcastJoinThreshold = -1` is the standard
-    * "this driver cannot afford broadcasts" switch and it must win (r9
-    * ADVICE, medium). Past the decision the fallback is always a shuffled
-    * HASH join, never sort-merge: the streamed side in these pipelines is
-    * the byte-heavy array-attached/fan-out frame whose per-task sort was
-    * the r8 8× OOM.
-    */
-  private def attachStrategy(spark: org.apache.spark.sql.SparkSession,
-                             estBytes: Long, cap: Long): DataFrame => DataFrame = {
-    val session = broadcastThreshold(spark)
-    if (session > 0 && estBytes <= math.max(session, cap) / BroadcastEstimatePad)
-      broadcast
-    else _.hint("shuffle_hash")
+  private def attachStrategy(sets: DataFrame): (Long, DataFrame => DataFrame) = {
+    val spark = sets.sparkSession
+    val Array(nDocs, nCodes) = sets
+      .agg(count(lit(1)), sum(size(col("codes")))).head().toSeq
+      .map(v => Option(v).fold(0L)(_.toString.toLong)).toArray
+    val session = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val cap = graft.GraftConf.attachBroadcastCap.get(spark)
+    (nDocs,
+     if (session > 0 && nCodes * 8L + nDocs * 32L <= math.max(session, cap) / BroadcastEstimatePad)
+       broadcast
+     else _.hint("shuffle_hash"))
   }
 
   /** Run `body` — which must EXECUTE its heavy work before returning
     * (every near-dup pipeline here ends in an eager [[materialize]]) —
     * with AQE's INITIAL shuffle width raised to 256, so byte-aware
     * coalescing OWNS every planner-inserted exchange instead of
-    * inheriting the session's pinned width.
-    *
-    * This is the r8 verdict's l25 fix, generalized: per-task memory is
-    * fixed while candidate volume grows superlinearly with the corpus,
-    * so any exchange pinned at the session width is a latent OOM — the
-    * 8× probe rung died with SparkOutOfMemory sorting the array-attached
-    * verify stream through 32 partitions, and l2's 8× rung ran 2.7×
-    * faster at 256. Raising `initialPartitionNum` (not the session
-    * width) lets AQE start fine-grained and coalesce DOWN by measured
-    * bytes — at 1× every exchange lands at the same ~32 partitions as
-    * before (parallelismFirst targets the core count), at 8× the
-    * byte-heavy exchanges keep the width they need. User-specified
-    * repartitions (the verify spread) are untouched by AQE. Scoped by
-    * [[graft.Engine.withConf]], whose concurrency contract applies.
+    * inheriting the session's pinned width. Per-task memory is fixed
+    * while candidate volume grows superlinearly with the corpus, so any
+    * exchange pinned at the session width is a latent OOM: the 8× probe
+    * rung died sorting the array-attached verify stream through 32
+    * partitions, and l2's 8× rung ran 2.7× faster at 256. AQE starts
+    * fine-grained and coalesces DOWN by measured bytes — at 1× every
+    * exchange lands at the same ~32 partitions (parallelismFirst targets
+    * the core count), at 8× the byte-heavy ones keep the width they need.
+    * User-specified repartitions (the verify spread) are untouched. Scoped
+    * by [[graft.Engine.withConf]], whose concurrency contract applies.
     */
   private def withWideAqe[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
     graft.Engine.withConf(spark,
@@ -161,8 +158,7 @@ object DedupOps {
   /** Exact-Jaccard verification of candidate pairs `(da, db)`: one
     * codegen'd two-pointer intersect per pair over the two docs' sorted
     * code sets — cost strictly linear in |candidates|·avg-set-size, immune
-    * to hot-shingle fan-out (the round-1 caveat, VERDICT.md "What's
-    * wrong" 5).
+    * to hot-shingle fan-out.
     *
     * Plan shape (profiled at sf0.1, 3.4M candidates on the
     * high-background fixture): exactly TWO joins attach the per-doc code
@@ -185,58 +181,42 @@ object DedupOps {
       .agg(sort_array(collect_list(col("code"))).as("codes"),
            count(lit(1)).cast("long").as("nsh"))
       .persist()
-    // Measured (not estimated) broadcast decision: 8 bytes per code plus
-    // per-row overhead, against the session's broadcast threshold. The two
-    // driver actions run over the now-cached sets frame.
-    val Array(nDocs, nCodes) = sets
-      .agg(count(lit(1)), sum(size(col("codes")))).head().toSeq
-      .map(v => Option(v).fold(0L)(_.toString.toLong)).toArray
-    val estBytes = nCodes * 8L + nDocs * 32L
-    // The attach broadcasts up to an OPERATOR cap of 512 MB — far past
-    // the session's 10 MB dim threshold — because the alternative ships
-    // the candidate stream WITH ARRAYS ATTACHED (1.5 KB+ per row, ~50×
-    // the sets frame) through an exchange: the r9 probe measured the
-    // shuffled-attach 8× rung disk-bound at ~24 GB of spill (431 s)
-    // while the sets frame it was avoiding broadcasting was 61 MB.
-    // Per-doc code sets are 8 B/code, so the cap covers ~300M corpus
-    // shingle codes; past it, the fallback is a shuffled HASH join,
-    // never sort-merge — SMJ sorting the array-attached stream through
-    // partitions AQE could no longer split (it only merges below the
-    // initial width) was the 8× OOM. The hash join builds its per-
-    // partition map from the sets side (small at any width) and STREAMS
-    // the candidate side unsorted — memory-safe at any partition count,
-    // disk-bandwidth-bound by the attached stream (the honest 100 TB
-    // cost once per-doc sets outgrow cluster broadcast).
-    val attach: DataFrame => DataFrame =
-      attachStrategy(spark, estBytes,
-                     graft.GraftConf.attachBroadcastCap.get(spark))
+    // The measured attach decision ([[attachStrategy]]) broadcasts up to
+    // an OPERATOR cap of 512 MB — far past the session's 10 MB dim
+    // threshold — because the alternative ships the candidate stream WITH
+    // ARRAYS ATTACHED (1.5 KB+ per row, ~50× the sets frame) through an
+    // exchange: the shuffled-attach 8× rung was measured disk-bound at
+    // ~24 GB of spill (431 s) while the sets frame was 61 MB. Per-doc code
+    // sets are 8 B/code, so the cap covers ~300M corpus shingle codes;
+    // past it, a shuffled HASH join builds its per-partition map from the
+    // sets side (small at any width) and STREAMS the candidate side
+    // unsorted — memory-safe at any partition count, disk-bound by the
+    // attached stream (the honest 100 TB cost once per-doc sets outgrow
+    // cluster broadcast). Sort-merge there, sorting the array-attached
+    // stream through partitions AQE could no longer split, ran out of
+    // memory at 8×.
+    val (nDocs, attach) = attachStrategy(sets)
     // The CPU-heavy verify spread: the candidate rows are tiny in bytes,
     // so AQE's byte-aware coalescing would squash them into a few tasks —
     // the explicit repartition pins full-CPU width for the intersects, on
-    // the PAIR key (round 10; was `da` alone): one hot doc — a prefix
-    // code shared corpus-wide, a duplicate-cluster representative — is
-    // `da` of MANY candidates, and a single-key hash put its whole
-    // fan-out's intersect CPU in one task. Spreading by (da, db) cut the
-    // l2 8× probe rung 72.6 → 31.5 s (and 1× 4.9 → 4.2) at identical
-    // output; the broadcast attach preserves the layout, and the
-    // past-cap hash join re-exchanges on its own key regardless.
-    // Memory safety at scale comes from the CALLERS running under
-    // [[withWideAqe]]: every planner-inserted exchange downstream (the
-    // shuffled-attach joins whose array-attached rows ARE byte-heavy)
-    // starts fine-grained and coalesces by measured bytes instead of
-    // inheriting a pinned session width (the r8 l25 OOM).
-    // COUNT-CONDITIONAL (round 11): the r10 gate-scale drift was real —
-    // the same-host A/B (spread forced off, 2-query bench protocol)
-    // read l2 6.4 / l2b 7.8 s without the spread vs 10.4 / 10.5 s with
-    // it at 1× (5 000 docs), while the 8×
-    // rungs NEED it (l2 72.6 → 31.5 s). Below a corpus-size threshold the
-    // candidate volume is too small to be spread-bound and the extra
-    // exchange is pure cost, so the spread auto-disables on the ALREADY
-    // MEASURED `nDocs` (the sets count the attach decision runs anyway —
-    // a candidate count() would re-execute the whole candidate subtree).
-    // Crossover sits between the measured −3 s at 10 000 docs and +40 s
-    // at 40 000; default 16 000 (`spark.graft.dedup.pairSpreadMinDocs`;
-    // 0 forces the spread on, Long.MaxValue forces it off).
+    // the PAIR key: one hot doc — a prefix code shared corpus-wide, a
+    // duplicate-cluster representative — is `da` of MANY candidates, and
+    // a single-key hash put its whole fan-out's intersect CPU in one task.
+    // Spreading by (da, db) instead of `da` cut the l2 8× probe rung
+    // 72.6 → 31.5 s (and 1× 4.9 → 4.2) at identical output; the broadcast
+    // attach preserves the layout, and the past-cap hash join re-exchanges
+    // on its own key regardless. Memory safety at scale comes from the
+    // CALLERS running under [[withWideAqe]].
+    // The spread is COUNT-CONDITIONAL: a same-host A/B (spread forced off)
+    // read l2 6.4 / l2b 7.8 s without it vs 10.4 / 10.5 s with it at 1×
+    // (5 000 docs), while the 8× rungs need it. Below a corpus-size
+    // threshold the candidate volume is too small to be spread-bound and
+    // the extra exchange is pure cost, so the spread turns off on the
+    // already measured `nDocs` (a candidate count() would re-execute the
+    // whole candidate subtree). Crossover sits between the measured −3 s
+    // at 10 000 docs and +40 s at 40 000; default 16 000
+    // (`spark.graft.dedup.pairSpreadMinDocs`; 0 forces the spread on,
+    // Long.MaxValue forces it off).
     val spreadOn = nDocs >= graft.GraftConf.pairSpreadMinDocs.get(spark)
     val repartitioned =
       if (spreadOn) candidates
@@ -268,56 +248,20 @@ object DedupOps {
     out
   }
 
-  /** The dense regime's code index, collected ONCE from the shingle frame
-    * with a LIMIT that bounds the driver regardless of the true universe
-    * (round 16, guide §2.4 "remove shuffles outright"): the callers used
-    * to pay a countDistinct probe pass to DECIDE the regime, then
-    * [[densePairs]] paid a second distinct pass for the row_number index
-    * plus a broadcast join to attach it. One sorted-distinct TOP-(max+1)
-    * collect answers both — `length > max` means "sparse regime" with at
-    * most max+1 rows ever reaching the driver (≤ 128 KB of longs at the
-    * default 16 384 cap, ≤ 2 MB at the key's 2^18 bound; the k-centroid
-    * collect discipline), and the array's position IS the old
-    * `row_number() - 1` index (same ascending code order). The shingle frame loses one full aggregation
-    * pass and the bitset build loses its join.
+  /** The dense regime's code index, collected once from the shingle frame
+    * with a LIMIT that bounds the driver whatever the true universe. One
+    * sorted-distinct TOP-(max+1) collect both decides the regime and is
+    * the index: `length > max` means the sparse regime, with at most max+1
+    * rows reaching the driver (≤ 128 KB of longs at the default 16 384
+    * cap, ≤ 2 MB at the key's 2^18 bound), and a code's position in the
+    * array is its bit. It replaces a countDistinct probe pass, a second
+    * distinct pass for a row_number index and the broadcast join that
+    * attached it.
     */
   private[graft] def denseCodeIndex(sh: DataFrame, denseMax: Long): Array[Long] =
     sh.select(col("code")).distinct().orderBy(col("code"))
       .limit(denseMax.toInt + 1)
       .collect().map(_.getLong(0))
-
-  /** Smallest AND/popcount work, in 64-bit word-ops, worth one grid cell
-    * of [[densePairs]]: 2^23 ≈ 8.4M.
-    *
-    * Measured on a 4-core host (`local[4]`, the sf0.1 corpus at 1×, 2× and
-    * 4×, grids 1–3 driven directly): the kernel runs 2–4 × 10^8 word-ops
-    * per CPU-second, so a 2^23 cell is 20–40 ms of kernel, the order of
-    * the 15–55 ms of CPU an extra cell task was measured to add; smaller
-    * cells cannot pay for their task. Splitting paid at every rung, down
-    * to cells of ~2^24: 5 000 docs × 6 words ran in 1.0–1.1 s on six
-    * cells against 1.2–1.7 s on one, 10 000 × 11 in 1.4–1.6 s against
-    * 3.2–3.5 s, 20 000 × 18 in 6.2–6.5 s against 15.1–15.8 s.
-    */
-  private val DenseCellWordOps = 1L << 23
-
-  /** Blocks per axis of [[densePairs]]' upper-triangular B×B grid for N
-    * bitset rows of w words under `parallelism` task slots.
-    *
-    * The pairs cost N²·w/2 word-ops in all. B is the largest width whose
-    * off-diagonal cells, (N/B)²·w word-ops each, still carry
-    * [[DenseCellWordOps]] — so a 500-doc, 6-word corpus runs as one cell
-    * instead of the 3×3 grid a 4-core width would force on it — capped at
-    * ⌈√(2·parallelism)⌉, whose B(B+1)/2 ≥ parallelism cells fill every
-    * slot. The 64 MB per-block memory bound floors the result: a cell
-    * holds two blocks of N/B rows of (8·w + 48) bytes, so B ≥
-    * ⌈N·(8·w + 48) / 64 MB⌉ whatever the work says.
-    */
-  private[graft] def denseGrid(nDocs: Long, w: Int, parallelism: Int): Int = {
-    val memB = (nDocs * (w * 8L + 48L) + (64L << 20) - 1) / (64L << 20)
-    val parB = math.ceil(math.sqrt(2.0 * parallelism)).toLong
-    val workB = (nDocs * math.sqrt(w.toDouble / DenseCellWordOps)).toLong
-    math.max(memB, math.min(parB, workB)).max(1L).min(Int.MaxValue).toInt
-  }
 
   /** Dense-regime exact pair join: a blocked Boolean GEMM with popcount
     * over per-doc bitsets, serving [[prefixJaccardPairs]] (`symmetric`,
@@ -325,31 +269,21 @@ object DedupOps {
     * T/10^6) when the shingle universe saturates (see the regime-pick
     * rationale in [[containmentPairs]]).
     *
-    * Shape: (1) a dense code index 0..U−1 (`codes`, U ≤ denseUniverseMax
-    * by the caller's measured pick, [[denseCodeIndex]]); (2) one
-    * aggregation pass builds each doc's w = ⌈U/64⌉-word bitset, cached
-    * and counted — N is exactly the docs that carry shingles, and the
-    * grid pass then reads the cached rows, so the count costs no extra
-    * pass; (3) docs hash into B blocks (`grid`, or [[denseGrid]] of N
-    * when 0), every doc ships to its B grid cells (row i of the
-    * upper-triangular B×B grid plus column i above the diagonal — an
-    * output-grid split like [[MatrixOps.blockMatmul]]'s P×Q cuboid keys,
-    * with no contraction axis and one operand on both sides; N·B rows
-    * through one exchange with a partition per cell), and each cell
-    * compares its two blocks ALL-PAIRS with an AND/popcount loop —
-    * candidate generation and verification are the same exact pass, so
-    * there is no candidate blow-up to mitigate and no second join.
-    *
-    * The symmetric test and value replicate [[verifyJaccard]]'s exactly:
-    * c > 0 ∧ c/(na+nb−c) ≥ t on the same IEEE doubles, id-ordered pairs,
-    * the shared integer half-up ROUND ratio.
+    * One aggregation pass collects each doc's codes, and the planned
+    * [[graft.plans.DensePairs]] node turns them into w = ⌈U/64⌉-word
+    * bitsets over the dense code index `codes` ([[denseCodeIndex]]) and
+    * pairs them: [[graft.plans.DensePairsExec]] sizes its grid from the
+    * row count AQE measured for that aggregate's stage, unless `pinned`
+    * fixes it. The symmetric test and value replicate [[verifyJaccard]]'s
+    * exactly: c > 0 ∧ c/(na+nb−c) ≥ t on the same IEEE doubles,
+    * id-ordered pairs, the shared integer half-up ROUND ratio.
     *
     * Scale: per-task memory is 2·(N/B)·⌈U/8⌉ bytes by construction (the
     * grid's memory floor), so "bigger corpus" becomes "more cells", the
     * dimension a cluster scales with, exactly like the GEMM tile cap.
     * Work is Θ(N²·U/64) — in the saturated-universe regime that
     * activates this path, Θ(N²) candidate pairs are already genuine
-    * (measured: the r11 16× rung verified 591M distinct candidates for
+    * (measured: the 16× rung verified 591M distinct candidates for
     * 2.57M true pairs), so the quadratic term is the problem's own; this
     * kernel minimizes its constant (measured at 16×: the whole dense pass
     * runs in seconds where the prefix join's candidate stage alone took
@@ -357,112 +291,21 @@ object DedupOps {
     */
   private[graft] def densePairs(sh: DataFrame, T: Long, threshold: Double,
                                 codes: Array[Long], symmetric: Boolean,
-                                grid: Int = 0): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val w = ((codes.length + 63) / 64).max(1)
-    val codeIdx = new java.util.HashMap[Long, Integer](codes.length * 2)
-    codes.indices.foreach(i => codeIdx.put(codes(i), i))
-    val bcIdx = spark.sparkContext.broadcast(codeIdx)
-    val vecs = sh.groupBy(col("doc_id")).agg(collect_list(col("code")).as("cs"))
-      .as[(Long, Seq[Long])]
-      .map { case (id, cs) =>
-        val m = bcIdx.value
-        val words = new Array[Long](w)
-        cs.foreach(c => { val i = m.get(c).intValue(); words(i >> 6) |= 1L << (i & 63) })
-        (id, words, cs.size)
-      }
-      // Cached as JVM objects, not as a columnar Dataset cache: building
-      // the columnar cache of the array column cost ~1.2 CPU-s more at
-      // 10 000 docs × 11 words on a 4-core host (its plan also keeps every
-      // shuffle partition), and the cell shuffle below is an RDD shuffle
-      // anyway.
-      .rdd.persist()
-    try {
-      val b =
-        if (grid > 0) grid
-        else denseGrid(vecs.count(), w, spark.sparkContext.defaultParallelism)
-      // Upper-triangular cell (i, j), i ≤ j, numbered row-major 0..C−1.
-      // Each cell is its own partition of an RDD shuffle: HashPartitioner
-      // puts Int key c (hash code c) in partition c, and AQE never
-      // coalesces an RDD exchange, so compute-heavy cells (a few MB of
-      // bitsets, N²-sized work) cannot be folded into one task.
-      val nCells = b * (b + 1) / 2
-      def cell(i: Int, j: Int): Int = i * b - i * (i - 1) / 2 + (j - i)
-      val diagCells = (0 until b).map(i => cell(i, i)).toSet
-      val pairs = vecs.flatMap { case (id, words, na) =>
-        val blk = ((id * 0x9E3779B97F4A7C15L >>> 33) % b).toInt
-        val out = new Array[(Int, (Byte, Long, Array[Long], Int))](b)
-        var o = 0
-        var j = blk
-        while (j < b) { out(o) = (cell(blk, j), (0: Byte, id, words, na)); j += 1; o += 1 }
-        var i = 0
-        while (i < blk) { out(o) = (cell(i, blk), (1: Byte, id, words, na)); i += 1; o += 1 }
-        out
-      }.partitionBy(new org.apache.spark.HashPartitioner(nCells))
-      .mapPartitionsWithIndex { (part, it) =>
-        val left = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Int)]
-        val right = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long], Int)]
-        it.foreach { case (_, (side, id, words, na)) =>
-          (if (side == 0) left else right) += ((id, words, na))
-        }
-        val diag = diagCells(part)
-        def test(p: (Long, Array[Long], Int),
-                 q: (Long, Array[Long], Int)): Option[(Long, Long, Long, Long)] = {
-          var c = 0L
-          var k = 0
-          val wp = p._2; val wq = q._2
-          while (k < w) { c += java.lang.Long.bitCount(wp(k) & wq(k)); k += 1 }
-          if (symmetric) {
-            // verifyJaccard's exact test and orientation: c > 0, the SAME
-            // IEEE double compare (both engines divide the same integers),
-            // pairs id-ordered.
-            if (c > 0 && c.toDouble / (p._3 + q._3 - c) >= threshold) {
-              val (da, db) = if (p._1 < q._1) (p._1, q._1) else (q._1, p._1)
-              Some((da, db, c, p._3.toLong + q._3 - c))
-            } else None
-          } else {
-            // Orient smaller-set-into-larger, id tie-break — the sparse
-            // path's contract; the threshold compares the same scaled
-            // integers. c > 0 matches the sparse path's shared-prefix-code
-            // precondition (r12 ADVICE: at a degenerate threshold < 1e-6,
-            // T = 0 and a zero intersection would otherwise pass).
-            val (xa, xb) =
-              if (p._3 < q._3 || (p._3 == q._3 && p._1 < q._1)) (p, q) else (q, p)
-            if (c > 0 && c * 1000000L >= xa._3.toLong * T)
-              Some((xa._1, xb._1, c, xa._3.toLong))
-            else None
-          }
-        }
-        // Pairs stream out LAZILY (r12 ADVICE): the per-task memory bound
-        // 2·(N/B)·⌈U/8⌉ covers the cell's INPUT rows; the passing-pair
-        // output can approach (N/B)² tuples at low thresholds and must
-        // never be buffered whole. One left row's hits (≤ N/B tuples) are:
-        // a plain loop per row instead of a nested iterator per pair
-        // cuts the kernel's CPU by ~40% (measured on a 4-core host at
-        // 20 000 docs × 18 words, 3×3 grid, two JVMs each: 9.0–11.1 vs
-        // 15.7–17.6 CPU-s).
-        val rs = if (diag) left else right
-        Iterator.range(0, left.length).flatMap { i =>
-          val p = left(i)
-          val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-          var j = if (diag) i + 1 else 0
-          while (j < rs.length) { test(p, rs(j)).foreach(hits += _); j += 1 }
-          hits
-        }
-      }.setName("densePairs").toDF("ida", "idb", "c", "den")
-      // den carries the ratio's denominator out of the kernel: |x| for
-      // containment, |x∪y| for Jaccard — round4Ratio is the shared
-      // cross-engine rounding convention either way.
-      val result =
-        if (symmetric)
-          pairs.select(col("ida").as("da"), col("idb").as("db"),
-            graft.Q.round4Ratio(col("c"), col("den")).as("jaccard"))
-        else
-          pairs.select(col("ida").as("contained_id"), col("idb").as("container_id"),
-            graft.Q.round4Ratio(col("c"), col("den")).as("containment"))
-      materialize(result)
-    } finally vecs.unpersist(blocking = false)
+                                pinned: Option[Int] = None): DataFrame = {
+    val lists = sh.groupBy(col("doc_id")).agg(collect_list(col("code")))
+    val pairs = org.apache.spark.sql.GraftSqlShim.ofRows(sh.sparkSession,
+      graft.plans.DensePairs(lists.queryExecution.analyzed, codes, T, threshold,
+        symmetric, pinned))
+    // den carries the ratio's denominator out of the kernel: |x| for
+    // containment, |x∪y| for Jaccard — round4Ratio is the shared
+    // cross-engine rounding convention either way.
+    materialize(
+      if (symmetric)
+        pairs.select(col("ida").as("da"), col("idb").as("db"),
+          graft.Q.round4Ratio(col("c"), col("den")).as("jaccard"))
+      else
+        pairs.select(col("ida").as("contained_id"), col("idb").as("container_id"),
+          graft.Q.round4Ratio(col("c"), col("den")).as("containment")))
   }
 
   /** CONTAINMENT near-dup pairs — ASYMMETRIC Jaccard: C(x→y) = |x∩y|/|x|,
@@ -493,39 +336,31 @@ object DedupOps {
   def containmentPairs(docs: DataFrame, threshold: Double,
                        n: Int = 3): DataFrame = {
     val T = math.floor(threshold * 1e6).toLong
-    // One shingle frame shared by the regime probe and BOTH engines (r12
-    // ADVICE: the probe previously re-exploded the corpus, once for the
-    // countDistinct and again for whichever engine ran). Spread before the
-    // explode (guide §2.5, Tables.spread scaladoc).
-    val sh = shingles(graft.Tables.spread(docs), n).persist()
-    // REGIME PICK (round 12). Signature-based candidate generation — any
+    // REGIME PICK ([[byRegime]]). Signature-based candidate generation — any
     // inverted-index join on shingle codes — has enumeration mass
     // Σ_code pref_df(code)·df(code), which is near-linear when the code
     // UNIVERSE grows with the corpus (real pipelines: hashed word
     // 5..13-grams, |universe| ≫ |docs|) but quadratic when the universe
     // SATURATES (char-3-grams over a 26-letter alphabet: ≤ ~26³ codes, so
     // df ∝ N). Measured on the 16× probe corpus (80k docs, 11.4M shingle
-    // rows): the universe is 2 534 codes and the r11 prefix join's mass is
+    // rows): the universe is 2 534 codes and the prefix join's mass is
     // 4.33 G occurrence rows (346 of 414 s). Two candidate-cut designs
-    // were built and MEASURED before this branch:
+    // were measured and rejected:
     //  - adaptive prefix extension (AdaptJoin pigeonhole, k=8): cut
     //    DISTINCT candidates 15× but grew the pair aggregate's groups and
-    //    its input 2.3× — the actual cost drivers; ladder REGRESSED 35.2 →
-    //    86.3 s at 4×, 92.4 → 205.9 s at 8×. Rejected and removed.
+    //    its input 2.3× — the actual cost drivers; the ladder went from
+    //    35.2 to 86.3 s at 4× and from 92.4 to 205.9 s at 8×.
     //  - PPJoin+-style pair-of-prefix-codes join (the two smallest common
     //    codes both rank within each side's (len − ⌈t·len⌉ + 2)-prefix):
     //    evaluated offline in DuckDB at 16× — 6.87 G join occurrences,
     //    positional bound cut ZERO — the pair-key space saturates too.
-    //    Rejected without implementation.
     // In the saturated regime the exact problem is Ω(candidate pairs)
-    // (background similarity makes Θ(N²) pairs genuine candidates — the
-    // r11 ladder's 57× distinct-pair growth over 16× data), so the right
-    // representation is DENSE: each doc is a ⌈U/64⌉-word bitset and the
-    // whole join is a blocked Boolean GEMM with popcount — the m2 tile
-    // discipline over the AND/popcount semiring, candidate generation and
-    // verify collapsed into one exact pass with a ~1000× smaller per-pair
-    // constant than hash-join machinery. The pick is MEASURED per call
-    // (one countDistinct pass over the shingle frame): universe ≤
+    // (background similarity makes Θ(N²) pairs genuine candidates: 57×
+    // distinct-pair growth over 16× data), so the right representation is
+    // DENSE: each doc is a ⌈U/64⌉-word bitset and the whole join is a
+    // blocked Boolean GEMM with popcount ([[densePairs]]) — candidate
+    // generation and verify collapsed into one exact pass with a ~1000×
+    // smaller per-pair constant than hash-join machinery. Universe ≤
     // `spark.graft.dedup.denseUniverseMax` (default 16 384 → ≤ 2 KB/doc
     // bitsets; 0 disables) routes dense, else the prefix join below.
     //
@@ -535,42 +370,51 @@ object DedupOps {
     // docs, min-of-3): dense 6.65 s vs sparse 8.87 s, and the gap only
     // widens (16×: 33.4 vs 363.7 s) — the asymmetric prefix join lacks
     // the symmetric path's PPJoin length filter (a short doc contained in
-    // a long one is exactly what it must NOT prune). `denseUniverseMax=0`
-    // remains the escape hatch.
-    val denseMax = graft.GraftConf.denseUniverseMax.get(docs.sparkSession)
-    try {
-      if (denseMax > 0) {
-        // One bounded sorted-distinct collect decides the regime AND is
-        // the dense kernel's code index ([[denseCodeIndex]]) — the old
-        // flow paid a separate two-countDistinct probe pass (Expand ×2
-        // over the whole shingle frame) before the kernel's own index
-        // pass. The kernel sizes its grid from its own bitset rows.
-        val codes = denseCodeIndex(sh, denseMax)
-        if (codes.length <= denseMax)
-          return densePairs(sh, T, Double.NaN, codes, symmetric = false)
-      }
-      containmentSparse(sh, T)
-    } finally sh.unpersist(blocking = false)
+    // a long one is exactly what it must NOT prune). The shingle frame is
+    // spread before the explode (guide §2.5, Tables.spread scaladoc).
+    byRegime(shingles(graft.Tables.spread(docs), n), T, Double.NaN,
+             symmetric = false)(containmentSparse(_, T))
+  }
+
+  /** The near-dup pairs of shingle frame `sh`, which this persists for the
+    * regime pick and whichever engine it picks: [[densePairs]] when the
+    * code universe is at most `spark.graft.dedup.denseUniverseMax` (0
+    * disables it), else `sparse`. One bounded collect decides the regime
+    * and is the dense code index ([[denseCodeIndex]]).
+    */
+  private def byRegime(sh0: DataFrame, T: Long, threshold: Double, symmetric: Boolean)
+                      (sparse: DataFrame => DataFrame): DataFrame = {
+    val sh = sh0.persist()
+    val denseMax = graft.GraftConf.denseUniverseMax.get(sh.sparkSession)
+    try Option.when(denseMax > 0)(denseCodeIndex(sh, denseMax))
+      .filter(_.length <= denseMax)
+      .fold(sparse(sh))(densePairs(sh, T, threshold, _, symmetric))
+    finally sh.unpersist(blocking = false)
+  }
+
+  /** `sh` with each doc's rank of every code, rarest first by global
+    * frequency with a code tie-break (`r`), and its set size (`nsh`): the
+    * order both prefix filters read.
+    */
+  private def rarityRanked(sh: DataFrame): DataFrame = {
+    val freq = sh.groupBy(col("code")).agg(count(lit(1)).as("cf"))
+    val byRarity = Window.partitionBy(col("doc_id"))
+      .orderBy(col("cf").asc, col("code").asc)
+    sh.join(freq, "code")
+      .withColumn("r", row_number().over(byRarity))
+      .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
   }
 
   /** The sparse (prefix-filter) engine of [[containmentPairs]] over an
     * already-persisted shingle frame.
     */
   private def containmentSparse(sh: DataFrame, T: Long): DataFrame = {
-    val freq = sh.groupBy(col("code")).agg(count(lit(1)).as("cf"))
-    val byRarity = Window.partitionBy(col("doc_id"))
-      .orderBy(col("cf").asc, col("code").asc)
-    val ranked = sh.join(freq, "code")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      .persist()
-    // withWideAqe (the r8 verdict's l25 fix): the candidate join and the
-    // array-attached verify exchanges inherit NO pinned width — volumes
-    // here grow superlinearly with the corpus (the 8× probe rung DNF'd
-    // with SparkOutOfMemory sorting through the session's 32 partitions,
-    // completed at 256), so every planner-inserted exchange starts
-    // fine-grained and AQE coalesces it to the width its MEASURED bytes
-    // need; at 1× that lands on the same ~core-count layout as before.
+    val ranked = rarityRanked(sh).persist()
+    // withWideAqe: the candidate join and the array-attached verify
+    // exchanges grow superlinearly with the corpus (the 8× probe rung ran
+    // out of memory sorting through the session's 32 partitions and
+    // completed at 256), so each starts fine-grained and AQE coalesces it
+    // to the width its measured bytes need.
     try withWideAqe(sh.sparkSession) {
       val prefix = ranked
         .filter(col("r") <=
@@ -593,39 +437,21 @@ object DedupOps {
                                  col("nb") - col("rb")))
                   * 1000000L >= col("na") * T)
         // Distinct on the PAIR KEY ALONE (na re-derives from the verify
-        // arrays; carrying nb doubled the r11 exchange bytes).
+        // arrays; carrying nb doubled the exchange bytes).
         .select("xa", "xb").distinct()
-        // NO explicit verify spread here, unlike [[verifyJaccard]] — a
-        // round-10 probe tried pinning full-core width on the pair key
-        // after the distinct and the 4×/8× rungs REGRESSED (26.8/108.4 s
-        // vs 24.8/92.5 without): the candidate volume is large enough in
-        // bytes that the distinct's AQE-owned exchange already lands at
-        // useful width, so the extra exchange of the candidate stream is
-        // pure cost. The r9 "CPU spread" residual at 8× is host-level
-        // scheduling noise, not a layout defect.
+        // NO explicit verify spread here, unlike [[verifyJaccard]]: pinning
+        // full-core width on the pair key after the distinct REGRESSED the
+        // 4×/8× rungs (26.8/108.4 s vs 24.8/92.5 without). The candidate
+        // volume is large enough in bytes that the distinct's AQE-owned
+        // exchange already lands at useful width.
       val sets = ranked.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("code"))).as("codes"))
         .persist()
-      // Measured attach decision (the [[verifyJaccard]] rule, same
-      // operator cap and the same rationale: shipping the candidate
-      // stream with arrays attached costs ~50× broadcasting the sets
-      // frame — the r9 probe's disk-bound 8× rung): broadcast while the
-      // code sets fit — Catalyst can't see through the collect_list
-      // aggregate to make that call — else a hash-join attach, never SMJ
-      // (the array-attached stream must not be sorted; the sets build
-      // side stays small per partition). The counts RIDE the persisted
-      // sets frame (one row per doc; count + sum(size) equal the ranked
-      // frame's distinct-doc and row counts exactly) instead of a second
-      // pass over the per-shingle ranked frame — the r9 verdict's
-      // finding 3, l25's only gate-scale regression — and the same
-      // action warms the cache both attach joins reuse, where the
-      // aggregate previously re-ran once per join side.
-      val Array(nDocsL, nCodesL) = sets
-        .agg(count(lit(1)), sum(size(col("codes")))).head().toSeq
-        .map(v => Option(v).fold(0L)(_.toString.toLong)).toArray
-      val attach: DataFrame => DataFrame =
-        attachStrategy(sh.sparkSession, nCodesL * 8L + nDocsL * 32L,
-                       graft.GraftConf.attachBroadcastCap.get(sh.sparkSession))
+      // The measured attach decision, [[verifyJaccard]]'s rule and cap.
+      // Its counts ride the persisted sets frame (one row per doc) instead
+      // of a second pass over the per-shingle ranked frame, and the same
+      // action warms the cache both attach joins reuse.
+      val (_, attach) = attachStrategy(sets)
       val result = candidates
         .join(attach(sets.select(col("doc_id").as("xa"), col("codes").as("ca"))), "xa")
         .join(attach(sets.select(col("doc_id").as("xb"), col("codes").as("cb"))), "xb")
@@ -751,12 +577,12 @@ object DedupOps {
     */
   def prefixJaccardPairs(docs: DataFrame, threshold: Double,
                          n: Int = 3): DataFrame = {
-    // REGIME PICK (round 12, shared with [[containmentPairs]] — full
-    // rationale there): on a saturated shingle universe the candidate
-    // self-join below is Θ(N²) occurrence mass with a join-sized constant
-    // (measured 91.2 s at the l2 ladder's 16× rung; at sf0.01 the prefix
-    // rule alone pairs 94% of all doc pairs), so route to the dense-bitset
-    // blocked Boolean GEMM ([[densePairs]]), whose one exact pass replaces
+    // REGIME PICK, shared with [[containmentPairs]] (full rationale
+    // there): on a saturated shingle universe the candidate self-join
+    // below is Θ(N²) occurrence mass with a join-sized constant (measured
+    // 91.2 s at the l2 ladder's 16× rung; at sf0.01 the prefix rule alone
+    // pairs 94% of all doc pairs), so route to the dense-bitset blocked
+    // Boolean GEMM ([[densePairs]]), whose one exact pass replaces
     // candidates + verify. The clustered gate inherits the pick through
     // its representative-pair engine — contraction FIRST still matters
     // (exact-dup clusters multiply every df, and the dense path's N² term
@@ -767,34 +593,15 @@ object DedupOps {
     // at sf0.1, `local[32]` on a 4-core host, min of 3, several runs):
     // 5 000 docs 16.7–19.8 s sparse vs 5.0–5.4 s dense, 10 000 docs
     // 29.0–34.2 s vs 5.2–5.5 s.
-    val denseMax = graft.GraftConf.denseUniverseMax.get(docs.sparkSession)
-    // One shingle frame shared by the regime probe and BOTH engines (r12
-    // ADVICE: the probe previously re-exploded the corpus once per call).
-    val sh = shingles(docs, n).persist()
-    try {
-      if (denseMax > 0) {
-        // Bounded sorted-distinct collect = regime decision + dense code
-        // index in one pass ([[denseCodeIndex]]; r16 — replaces the
-        // countDistinct probe pass and the kernel's index join).
-        val codes = denseCodeIndex(sh, denseMax)
-        if (codes.length <= denseMax)
-          return densePairs(sh, 0L, threshold, codes, symmetric = true)
-      }
-      prefixJaccardSparse(sh, threshold)
-    } finally sh.unpersist(blocking = false)
+    byRegime(shingles(docs, n), 0L, threshold, symmetric = true)(
+      prefixJaccardSparse(_, threshold))
   }
 
   /** The sparse (prefix-filter) engine of [[prefixJaccardPairs]] over an
     * already-persisted shingle frame.
     */
   private def prefixJaccardSparse(sh: DataFrame, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val freq = sh.groupBy(col("code")).agg(count(lit(1)).as("cf"))
-    val byRarity = Window.partitionBy(col("doc_id"))
-      .orderBy(col("cf").asc, col("code").asc)
-    val ranked = sh.join(freq, "code")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+    val ranked = rarityRanked(sh)
     // All threshold arithmetic is SCALED LONG integers (T = ⌊t·10^6⌋):
     // exact for the usual 1–6-decimal thresholds, and when t has more
     // decimals T/10^6 < t only RELAXES every bound below (longer prefix,
@@ -842,22 +649,21 @@ object DedupOps {
     * expand verified representative pairs back to member pairs (plus the
     * within-cluster pairs, which have Jaccard exactly 1).
     *
-    * Why this exists (measured, round 5): prefix-filter candidate
-    * generation is quadratic in duplicate-cluster size — a shared code
-    * with document frequency df yields df² join pairs, and a corpus
-    * where every document has N exact twins multiplies every df by N
-    * (the ScaleProbe 4x run wedged >12 min in that join). Web-scale
-    * corpora are duplicate-heavy by nature — it is WHY dedup pipelines
-    * exist — so the production shape collapses identical texts (one
-    * cheap sha2 group-by, the L1 operator) before any shingling. Output
-    * is exactly the all-pairs answer: members of one cluster share
-    * their representative's shingle set, so cross-cluster member pairs
-    * inherit the representative pair's Jaccard verbatim and
-    * within-cluster pairs are 1.0 ≥ any threshold.
+    * Pair generation is quadratic in duplicate-cluster size — a shared
+    * code with document frequency df yields df² join pairs, and N exact
+    * twins per document multiply every df by N (the ScaleProbe 4× run
+    * wedged >12 min in that join) — and web-scale corpora are
+    * duplicate-heavy by nature, so identical texts collapse first (one
+    * sha2 group-by). Output is exactly the all-pairs answer: members of
+    * one cluster share their representative's shingle set, so
+    * cross-cluster member pairs inherit the representative pair's Jaccard
+    * and within-cluster pairs are 1.0 ≥ any threshold.
     */
   def clusteredJaccardPairs(docs: DataFrame, threshold: Double,
-                            n: Int = 3): DataFrame =
-    clusteredPairs(docs, reps => prefixJaccardPairs(reps, threshold, n))
+                            n: Int = 3): DataFrame = {
+    val (members, reps) = exactContraction(docs)
+    expandRepPairs(members, prefixJaccardPairs(reps, threshold, n))
+  }
 
   /** MinHash estimator CALIBRATION over the true near-dup pairs (the L57
     * gate) — the dedup-family counterpart of the ANN ladder's recall band
@@ -947,17 +753,6 @@ object DedupOps {
     finally sig.unpersist(blocking = false)
   }
 
-  /** The exact-duplicate contraction shared by the clustered near-dup
-    * variants: collapse identical texts (sha2 group-by), run `repPairs`
-    * over unique representatives only, expand representative pairs back
-    * to member pairs and add within-cluster pairs at Jaccard 1.0.
-    */
-  private def clusteredPairs(docs: DataFrame,
-                             repPairFn: DataFrame => DataFrame): DataFrame = {
-    val (members, reps) = exactContraction(docs)
-    expandRepPairs(members, repPairFn(reps))
-  }
-
   /** The exact-duplicate contraction itself: `members` (doc_id, rep_id,
     * csize — one row per doc, rep = min doc_id of its text group) and
     * `reps` (doc_id, text — one row per distinct text). ONE definition,
@@ -990,7 +785,7 @@ object DedupOps {
   }
 
   /** Doc-level match-graph COMPONENTS via the representative graph —
-    * [[MatchGraph]]'s expansion argument as a shared operator (round 15):
+    * [[MatchGraph]]'s expansion argument as a shared operator:
     * connected components run over the VERIFIED REP PAIRS (iterative
     * state = matched representatives, a subset of the match graph), then
     * one membership join expands labels to docs. Provably equal to CC
@@ -1008,12 +803,10 @@ object DedupOps {
     * semantics cannot drift; `ArtifactSpec` pins the staged ≡
     * from-scratch equality, `LlmSpec` the CC equivalences.
     *
-    * Why not CC over the expanded doc pairs (the pre-r15 l50/l61 shape):
-    * the expansion multiplies every rep pair by the product of its two
-    * cluster sizes and adds C(csize, 2) within-cluster edges — on a
-    * duplicate-heavy corpus that is quadratically more edges carrying
-    * zero extra component information (guide §2.3: shuffle fewer bytes —
-    * here, iterate over fewer edges).
+    * CC over the expanded doc pairs would multiply every rep pair by the
+    * product of its two cluster sizes and add C(csize, 2) within-cluster
+    * edges: on a duplicate-heavy corpus, quadratically more edges carrying
+    * no extra component information.
     */
   private[graft] def repComponents(members: DataFrame,
                                    repPairs: DataFrame): DataFrame = {
@@ -1075,48 +868,61 @@ object DedupOps {
     */
   def connectedComponents(pairs: DataFrame): DataFrame = components(pairs, None)
 
+  /** `df`'s LONG columns, row after row, or None when it has more than
+    * `max` rows with no null field (a row with one is skipped). One job
+    * over all of `df`'s partitions, each task shipping at most max + 1
+    * rows, and the driver keeps at most 2·max + 1 of them: a LIMIT collect
+    * would run a job per round of partitions, and coalescing to one
+    * partition would run the upstream stage as one task.
+    */
+  private def collectAtMost(df: DataFrame, max: Int): Option[Array[Long]] = {
+    val width = df.schema.length
+    val parts = df.queryExecution.toRdd.mapPartitions { rows =>
+      val out = Array.newBuilder[Long]
+      var n = 0
+      while (n <= max && rows.hasNext) {
+        val r = rows.next()
+        if (!r.anyNull) { (0 until width).foreach(c => out += r.getLong(c)); n += 1 }
+      }
+      Iterator.single(out.result())
+    }
+    val kept = Array.newBuilder[Long]
+    var n = 0L
+    df.sparkSession.sparkContext.runJob(parts, (it: Iterator[Array[Long]]) => it.next(),
+      (_: Int, part: Array[Long]) => if (n <= max) { kept ++= part; n += part.length / width })
+    Option.when(n <= max)(kept.result())
+  }
+
   /** The two routes of [[connectedComponents]]; `docs` None means the
     * node set is the endpoints of `pairs`.
     */
   private def components(pairs: DataFrame, docs: Option[DataFrame]): DataFrame = {
     val spark = pairs.sparkSession
-    // LOCAL FINISH (round 15, guide §2.4 "remove shuffles outright"): when
-    // the graph fits the driver comfortably, run the union-find there
-    // instead of paying O(log d) rounds × ~6 stages of near-empty
-    // distributed jobs — the "finish small graphs on one machine" step of
-    // the MapReduce-CC literature (Kiveris et al. SOCC'14 run their final
-    // rounds locally once the contracted graph is small; GraphFrames' CC
-    // has the same endgame). The route is decided by one bounded collect
-    // per input: at most ⌊localMax/2⌋ + 1 pairs and localMax + 1 nodes
-    // come back, and the graph is local when max(nodes, 2·pairs) ≤
-    // localMax (each pair is two directed edges) — a measured size, not
-    // an estimate (the attachStrategy discipline), and one job per input
-    // instead of checkpoint + count + collect; when the nodes are the
-    // pairs' endpoints they come from the collected edges, and the pairs
-    // are the only input. The distributed pointer-
-    // jumping loop below is the at-scale route: match graphs at 100 TB are
-    // corpus-sized and must never be collected, and the bound caps what a
-    // too-large graph costs the driver before it gets there. The cap is
-    // rows, not bytes: both inputs are two LONGs per row (≤ 16 B + row
-    // overhead), so the default 1M-row cap bounds each collect at ~16 MB
-    // — dim-table scale. `spark.graft.cc.localMaxRows=0` forces the
-    // distributed loop (the A/B and property-test handle). Output is
-    // provably identical: both compute the min node id per component
-    // (min-label union-find ≡ converged min-label propagation), and
-    // GraphPropSpec pins the equality on random graphs over both routes
-    // and at the cap's boundary.
+    // LOCAL FINISH (guide §2.4 "remove shuffles outright"): when the graph
+    // fits the driver comfortably, run the union-find there instead of
+    // O(log d) rounds × ~6 stages of near-empty distributed jobs — the
+    // MapReduce-CC endgame (Kiveris et al. SOCC'14; GraphFrames' CC). One
+    // bounded collect per input ([[collectAtMost]], one job each) decides
+    // the route on measured sizes: at most ⌊localMax/2⌋ pairs (each is two
+    // directed edges) and localMax nodes, taken from the collected edges
+    // when they are the pairs' endpoints. The cap is rows: two LONGs each,
+    // so the default 1M rows bound a collect at ~16 MB. Past it, the
+    // distributed pointer-jumping loop below is the at-scale route; match
+    // graphs at 100 TB are corpus-sized and must never be collected.
+    // `spark.graft.cc.localMaxRows=0` forces that loop. Both routes compute
+    // the min node id per component (min-label union-find ≡ converged
+    // min-label propagation); GraphPropSpec pins the equality on random
+    // graphs and at the cap's boundary.
     val localMax = math.min(graft.GraftConf.ccLocalMaxRows.get(spark),
                             Int.MaxValue - 1L).toInt
     if (localMax > 0) {
-      val edgeRows = pairs.select(col("da"), col("db"))
-        .limit(localMax / 2 + 1).collect()
-      lazy val nodeIds = docs match {
-        case Some(d) => d.select(col("doc_id")).limit(localMax + 1)
-          .collect().map(_.getLong(0))
-        case None => edgeRows.flatMap(e => Array(e.getLong(0), e.getLong(1))).distinct
+      val edges = collectAtMost(pairs.select(col("da"), col("db")), localMax / 2)
+      lazy val nodes = docs match {
+        case Some(d) => collectAtMost(d.select(col("doc_id")), localMax)
+        case None => edges.map(_.distinct)
       }
-      if (2L * edgeRows.length <= localMax && nodeIds.length <= localMax) {
-        import spark.implicits._
+      if (edges.isDefined && nodes.isDefined) {
+        val (e, nodeIds) = (edges.get, nodes.get)
         val parent = new java.util.HashMap[Long, Long](nodeIds.length * 2)
         nodeIds.foreach(n => parent.put(n, n))
         def find(x0: Long): Long = {
@@ -1126,19 +932,19 @@ object DedupOps {
           while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
           r
         }
-        edgeRows.foreach { e =>
+        e.indices.by(2).foreach { k =>
           // An edge with an endpoint absent from `docs` is inert — exactly
           // the distributed loop's semantics (the neighbor join only
           // propagates labels between nodes that HAVE labels; an unlabeled
           // endpoint neither receives nor conducts). Every current caller
           // passes nodes ⊇ endpoints, so this only matters for exactness.
-          val a0 = e.getLong(0); val b0 = e.getLong(1)
+          val a0 = e(k); val b0 = e(k + 1)
           if (parent.containsKey(a0) && parent.containsKey(b0)) {
             val a = find(a0); val b = find(b0)
             if (a < b) parent.put(b, a) else if (b < a) parent.put(a, b)
           }
         }
-        return nodeIds.toSeq.map(n => (n, find(n)))
+        return spark.createDataFrame(nodeIds.toSeq.map(n => (n, find(n))))
           .toDF("doc_id", "component_id")
       }
     }

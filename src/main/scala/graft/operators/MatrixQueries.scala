@@ -190,8 +190,8 @@ object MatrixQueries {
     // the mm50 oracle.
     Gate("m9_dense_json_io", (s, _) =>
       MatrixOps.multiplyPlanned(
-        graft.sources.MatrixIO.readDenseJson(s, "/root/repo/fixtures/matrix_A_50x50.json"),
-        graft.sources.MatrixIO.readDenseJson(s, "/root/repo/fixtures/matrix_B_50x50.json"))
+        graft.sources.MatrixIO.readDenseJson(s, graft.sources.MatrixIO.fixture("matrix_A_50x50.json")),
+        graft.sources.MatrixIO.readDenseJson(s, graft.sources.MatrixIO.fixture("matrix_B_50x50.json")))
         .orderBy("i", "k"),
       mm50))
 }

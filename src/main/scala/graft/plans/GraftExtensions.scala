@@ -8,95 +8,53 @@ import org.apache.spark.sql.types.IntegerType
 
 /** Engine extension entry point, registered via `spark.sql.extensions`
   * ([[graft.Engine.configure]]) — the public `SparkSessionExtensions` hook
-  * for custom expressions and for the one operator with planner
+  * for custom expressions and for the operators with planner
   * participation: [[MatMul]], whose physical formulation (row join vs
-  * block GEMM) is selected by [[MatMulStrategy]] from cost statistics.
+  * block GEMM) is selected by [[MatMulStrategy]] from cost statistics,
+  * and [[DensePairs]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(session => new MatMulStrategy(session))
     ext.injectOptimizerRule(_ => MatMulReassociate)
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-                         "sorted_intersect_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "sorted_intersect_count expects exactly 2 arguments")
-        SortedIntersectCount(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("z_order2"),
-      new ExpressionInfo(classOf[ZOrder2].getName, "z_order2"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "z_order2 expects exactly 2 arguments")
-        ZOrder2(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("hilbert2"),
-      new ExpressionInfo(classOf[Hilbert2].getName, "hilbert2"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "hilbert2 expects exactly 2 arguments")
-        Hilbert2(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "nfc_normalize expects exactly 1 argument")
-        NfcNormalize(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_dot expects exactly 2 arguments")
-        VecDot(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_min_hash"),
-      new ExpressionInfo(classOf[RollingMinHash].getName, "rolling_min_hash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "rolling_min_hash expects exactly 2 arguments")
-        val w = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"rolling_min_hash window must be an INT literal, got $other")
-        }
-        RollingMinHash(children(0), w)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgramsGen].getName, "word_ngrams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "word_ngrams expects exactly 2 arguments")
-        val n = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"word_ngrams width must be an INT literal, got $other")
-        }
-        WordNgramsGen(children(0), n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("poly_token_hash"),
-      new ExpressionInfo(classOf[PolyTokenHash].getName, "poly_token_hash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "poly_token_hash expects exactly 2 arguments")
-        PolyTokenHash(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("srp_bands"),
-      new ExpressionInfo(classOf[SrpBands].getName, "srp_bands"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "srp_bands expects exactly 3 arguments")
-        (children(1), children(2)) match {
-          case (Literal(b: Int, IntegerType), Literal(r: Int, IntegerType)) =>
-            SrpBands(children(0), b, r)
-          case other => throw new IllegalArgumentException(
-            s"srp_bands bands/rowsPerBand must be INT literals, got $other")
-        }
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, arity, build) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity,
+            s"$name expects exactly $arity argument${if (arity == 1) "" else "s"}")
+          build(children)
+        }))
+    }
+  }
+}
+
+object GraftExtensions {
+  /** Every SQL function the engine registers: (name, expression class,
+    * arity, builder over exactly `arity` arguments).
+    */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("sorted_intersect_count", classOf[SortedIntersectCount], 2,
+      c => SortedIntersectCount(c(0), c(1))),
+    ("z_order2", classOf[ZOrder2], 2, c => ZOrder2(c(0), c(1))),
+    ("hilbert2", classOf[Hilbert2], 2, c => Hilbert2(c(0), c(1))),
+    ("nfc_normalize", classOf[NfcNormalize], 1, c => NfcNormalize(c(0))),
+    ("vec_dot", classOf[VecDot], 2, c => VecDot(c(0), c(1))),
+    ("rolling_min_hash", classOf[RollingMinHash], 2,
+      c => RollingMinHash(c(0), intLiteral(c(1), "rolling_min_hash window"))),
+    ("word_ngrams", classOf[WordNgramsGen], 2,
+      c => WordNgramsGen(c(0), intLiteral(c(1), "word_ngrams width"))),
+    ("poly_token_hash", classOf[PolyTokenHash], 2, c => PolyTokenHash(c(0), c(1))),
+    ("srp_bands", classOf[SrpBands], 3, c => (c(1), c(2)) match {
+      case (Literal(b: Int, IntegerType), Literal(r: Int, IntegerType)) =>
+        SrpBands(c(0), b, r)
+      case other => throw new IllegalArgumentException(
+        s"srp_bands bands/rowsPerBand must be INT literals, got $other")
+    }))
+
+  private def intLiteral(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an INT literal, got $other")
   }
 }

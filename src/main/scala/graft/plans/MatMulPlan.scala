@@ -4,7 +4,7 @@ import graft.operators.MatrixOps
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, LogicalQueryStage, Project}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.LongType
@@ -15,9 +15,8 @@ import org.apache.spark.sql.types.LongType
   * physical formulation — row-level join+aggregate vs 2-D block GEMM — is
   * chosen by [[MatMulStrategy]] at planning time from the children's cost
   * statistics, the way Spark itself picks broadcast vs sort-merge joins
-  * (SURVEY §7's declared-optional `extraStrategies` hook, r5 verdict
-  * item 9). `pinned` fixes the block route and its layout instead
-  * ([[MatrixOps.blockMatmul]]).
+  * (SURVEY §7's declared-optional `extraStrategies` hook). `pinned` fixes
+  * the block route and its layout instead ([[MatrixOps.blockMatmul]]).
   *
   * Zero rule: the result holds the NONZERO cells only. A cell whose
   * products cancel to exact 0 is dropped on both routes — the block
@@ -98,7 +97,7 @@ object MatMulReassociate
   * as the physical node over the planned children, with the layout
   * [[BlockShape.choose]] derives from the same size statistics. Its
   * shuffle volume is O(tiles) rather than the dense row join's
-  * |A⋈B| = m·n·p intermediate (the r3 scale-killer).
+  * |A⋈B| = m·n·p intermediate.
   *
   * AQE plans the node once up front and again after every query stage
   * completes. A re-plan of the block route only reruns the cost function.
@@ -110,6 +109,12 @@ object MatMulReassociate
   * node whose children AQE has rewritten (a finished broadcast stage
   * inside an operand) gets a fresh one. A later query over the same frame
   * optimizes its own copy of the node, so it decides its route afresh.
+  *
+  * It also plans the product's second kernel, [[DensePairs]], as
+  * [[DensePairsExec]]. Its grid needs the row count, which only exists
+  * once the per-document aggregate's stage has run, so the first plan
+  * takes one cell and AQE's re-plan after that stage sizes the grid. A
+  * run without adaptive execution keeps the one cell.
   */
 class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -128,6 +133,17 @@ class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
           }
           planLater(joined) :: Nil
       }
+    case d: DensePairs =>
+      // The rows under the node as AQE measured them: the records its first
+      // finished stage, the per-document aggregate's shuffle, wrote. Its
+      // partial-aggregate records bound the row count from above.
+      val rows = d.child.collectFirst {
+        case s: LogicalQueryStage if s.isMaterialized => s.stats.rowCount
+      }.flatten.map(_.toLong)
+      val grid = d.pinned.getOrElse(DensePairsExec.grid(rows.getOrElse(0L), d.words,
+        spark.sparkContext.defaultParallelism))
+      DensePairsExec(planLater(d.child), d.output, d.codes, d.t, d.threshold,
+        d.symmetric, grid, rows) :: Nil
     case _ => Nil
   }
 

@@ -31,6 +31,18 @@ class EngineSqlSpec extends SparkSpec {
     assert(r.getLong(0) == r.getLong(1))
   }
 
+  test("an engine function with the wrong arity or a non-literal width fails, naming it") {
+    def failure(sql: String): String =
+      intercept[Exception](spark.sql(sql).collect()).getMessage
+    val arity = failure("SELECT z_order2(1L)")
+    assert(arity.contains("z_order2 expects exactly 2 arguments"), arity)
+    val unary = failure("SELECT nfc_normalize('a', 'b')")
+    assert(unary.contains("nfc_normalize expects exactly 1 argument"), unary)
+    val width = failure(
+      "SELECT word_ngrams(t, n) FROM VALUES ('a b c', 2) AS v(t, n)")
+    assert(width.contains("word_ngrams width must be an INT literal"), width)
+  }
+
   test("sql19: the aggregate scans the columnar cache (InMemoryRelation)") {
     Engine.registerViews(spark, sfDir)
     spark.sql("UNCACHE TABLE IF EXISTS graft_cached_orders")

@@ -99,12 +99,11 @@ class GraphPropSpec extends SparkSpec {
   test("repComponents: one-collect local route ≡ distributed route ≡ union-find") {
     // The rep graph's nodes are the endpoints of its pairs, so the local
     // route takes them from the edges it collected: one job in all. Pairs
-    // come from a one-partition RDD, like the checkpointed rep pairs, so
-    // that the bounded collect is one job (over more partitions, a limit
-    // collect may take a job per round of partitions).
+    // span several partitions, as the dense kernel's rep pairs do (one per
+    // grid cell), and the bounded collect is still one job.
     val key = "spark.graft.cc.localMaxRows"
     def pairsOf(edges: Seq[(Long, Long)]) =
-      spark.sparkContext.parallelize(edges, 1).toDF("da", "db")
+      spark.sparkContext.parallelize(edges, 3).toDF("da", "db")
     def comps(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =

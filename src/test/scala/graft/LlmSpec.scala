@@ -399,7 +399,7 @@ class LlmSpec extends SparkSpec {
     // must replicate verifyJaccard's exact test (c > 0, IEEE double
     // compare, id-ordered pairs, round4Ratio value) — pinned against the
     // sparse path at two thresholds, on the derived grid (the default
-    // route) and on grids 1, 3 and 5 driven through the kernel directly.
+    // route) and on grids 1, 3 and 5 pinned on the planned node.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sh = DedupOps.shingles(docs).persist()
     try {
@@ -411,7 +411,7 @@ class LlmSpec extends SparkSpec {
           s"threshold $t (derived grid)")
         Seq(1, 3, 5).foreach { g =>
           val gridded = canonPairs(
-            DedupOps.densePairs(sh, 0L, t, codes, symmetric = true, grid = g))
+            DedupOps.densePairs(sh, 0L, t, codes, symmetric = true, pinned = Some(g)))
           assert(gridded == sparse, s"threshold $t grid $g")
         }
       }
@@ -918,18 +918,22 @@ class LlmSpec extends SparkSpec {
     // The pick reads the shingle universe alone: the 500-doc fixture's
     // 3-gram universe saturates, so both pair engines take the dense
     // bitset kernel by default, and denseUniverseMax=0 (a universe past
-    // the cap) takes the sparse prefix join. Routing is observed through
-    // the physical plan: only the dense kernel scans its named cell RDD
-    // ("Scan densePairs"); the sparse path is joins + window + hash
-    // aggregates.
+    // the cap) takes the sparse prefix join. The route is the planned
+    // DensePairsExec node among the plans executed during the call (the
+    // returned frame is localCheckpoint'd, so its own plan has no lineage),
+    // and that node must have run: its cells metric counts the cell tasks.
+    // Its grid is the cost function's over the row count AQE measured for
+    // the bitset aggregate's stage, so no job sized it.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    // The returned frame is localCheckpoint'd (lineage cut), so the route
-    // can't be read off its plan; read it off the plans executed during
-    // the call instead.
     def usedDenseKernel(run: => org.apache.spark.sql.DataFrame): Boolean = {
-      val (_, plans) = capturePlans(run.count())
-      awaitUntil(() => plans().nonEmpty)
-      plans().exists(_.contains("Scan densePairs"))
+      val nodes = densePairsNodes(run.count())
+      nodes.foreach { d =>
+        assert(d.metrics("cells").value == d.cells, d.simpleString(10))
+        assert(d.rows.exists(_ >= 500) && d.grid == graft.plans.DensePairsExec.grid(
+          d.rows.get, (d.codes.length + 63) / 64, spark.sparkContext.defaultParallelism),
+          d.simpleString(10))
+      }
+      nodes.nonEmpty
     }
     assert(usedDenseKernel(DedupOps.prefixJaccardPairs(docs, 0.8)),
            "a saturated universe must route the symmetric join dense at 500 docs")
@@ -946,16 +950,16 @@ class LlmSpec extends SparkSpec {
   test("densePairs derives its grid from the work, floored by the per-block memory bound") {
     // 500 docs × 6 words is ~750k word-ops of pairs: one cell, not the
     // 3×3 grid a 4-core width used to force on it (8×8 at 32 cores).
-    assert(DedupOps.denseGrid(500, 6, 4) == 1)
-    assert(DedupOps.denseGrid(500, 6, 32) == 1)
-    assert(DedupOps.denseGrid(0, 1, 4) == 1)
+    assert(graft.plans.DensePairsExec.grid(500, 6, 4) == 1)
+    assert(graft.plans.DensePairsExec.grid(500, 6, 32) == 1)
+    assert(graft.plans.DensePairsExec.grid(0, 1, 4) == 1)
     // Enough work for many cells: the parallelism width caps it.
-    assert(DedupOps.denseGrid(20000, 256, 4) == 3)
-    assert(DedupOps.denseGrid(20000, 256, 32) == 8)
+    assert(graft.plans.DensePairsExec.grid(20000, 256, 4) == 3)
+    assert(graft.plans.DensePairsExec.grid(20000, 256, 32) == 8)
     // 10M docs × 256 words of bitsets is ~21 GB: the 64 MB per-block
     // memory bound wins over the parallelism cap.
     val memB = (10000000L * (256 * 8 + 48) + (64L << 20) - 1) / (64L << 20)
-    assert(DedupOps.denseGrid(10000000, 256, 4) == memB)
+    assert(graft.plans.DensePairsExec.grid(10000000, 256, 4) == memB)
     assert(memB > 3)
   }
 
@@ -964,27 +968,17 @@ class LlmSpec extends SparkSpec {
     // which AQE never coalesces: a grid of B blocks per axis must run its
     // B(B+1)/2 cells as that many tasks, however few bytes they carry
     // (on this 6-doc corpus some cells are empty, and still one task each).
+    // The node's cells metric counts one per cell task it ran.
     val sh = DedupOps.shingles(corpus).persist()
-    val cellStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "densePairs"))
-          cellStages.add(e.stageInfo.numTasks)
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       val codes = DedupOps.denseCodeIndex(sh, 16384)
       Seq(1, 3, 5).foreach { g =>
-        cellStages.clear()
-        DedupOps.densePairs(sh, 0L, 0.5, codes, symmetric = true, grid = g)
-        awaitUntil(() => !cellStages.isEmpty)
-        assert(cellStages.toArray.toSeq == Seq(g * (g + 1) / 2), s"grid $g")
+        val nodes = densePairsNodes(
+          DedupOps.densePairs(sh, 0L, 0.5, codes, symmetric = true, pinned = Some(g)))
+        assert(nodes.map(_.grid) == Seq(g), s"grid $g")
+        assert(nodes.map(_.metrics("cells").value) == Seq(g * (g + 1) / 2L), s"grid $g")
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      sh.unpersist()
-    }
+    } finally sh.unpersist()
   }
 
   test("containmentPairs dense bitset regime ≡ sparse prefix join, across grid widths") {
@@ -1007,7 +1001,7 @@ class LlmSpec extends SparkSpec {
         val T = math.floor(t * 1e6).toLong
         Seq(1, 3, 5).foreach { g =>
           val gridded = canonPairs(DedupOps.densePairs(
-            sh, T, Double.NaN, codes, symmetric = false, grid = g))
+            sh, T, Double.NaN, codes, symmetric = false, pinned = Some(g)))
           assert(gridded == sparse, s"threshold $t grid $g")
         }
       }

@@ -27,12 +27,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * assertions should poll [[awaitUntil]] on the returned accessor.
     */
   protected def capturePlans[A](body: => A): (A, () => Seq[String]) = {
-    val plans = new scala.collection.mutable.ArrayBuffer[String]()
+    val (r, plans) = captureExecuted(body)
+    (r, () => plans().map(_.toString))
+  }
+
+  /** [[capturePlans]]' executed plans as plan trees. */
+  protected def captureExecuted[A](body: => A)
+      : (A, () => Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val plans = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.execution.SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
+        plans.synchronized { plans += qe.executedPlan }
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
@@ -68,17 +75,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Every block-route multiply node in `df`'s physical plan, looking
     * inside adaptive plans and their query stages.
     */
-  protected def blockNodes(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BlockMatMulExec] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case _ => p.children.flatMap(nodes)
-    })
-    nodes(df.queryExecution.executedPlan).collect {
+  protected def blockNodes(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BlockMatMulExec] =
+    planNodes(df.queryExecution.executedPlan).collect {
       case b: graft.plans.BlockMatMulExec => b
     }
+
+  /** Every dense pair-join node of the plans `run` executed, with the
+    * metrics of its run.
+    */
+  protected def densePairsNodes(run: => Any): Seq[graft.plans.DensePairsExec] = {
+    val (_, plans) = captureExecuted(run)
+    awaitUntil(() => plans().nonEmpty)
+    plans().flatMap(planNodes).collect { case d: graft.plans.DensePairsExec => d }
+  }
+
+  /** `p` and every node under it, looking inside adaptive plans and their
+    * query stages.
+    */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case s: QueryStageExec => planNodes(s.plan)
+      case _ => p.children.flatMap(planNodes)
+    })
   }
 
   /** The Hadoop `Shell` processes started while `body` runs, each as its
