@@ -272,11 +272,11 @@ object DedupOps {
     * One aggregation pass collects each doc's codes, and the planned
     * [[graft.plans.DensePairs]] node turns them into w = ⌈U/64⌉-word
     * bitsets over the dense code index `codes` ([[denseCodeIndex]]) and
-    * pairs them: [[graft.plans.DensePairsExec]] sizes its grid from the
-    * row count AQE measured for that aggregate's stage, unless `pinned`
-    * fixes it. The symmetric test and value replicate [[verifyJaccard]]'s
-    * exactly: c > 0 ∧ c/(na+nb−c) ≥ t on the same IEEE doubles,
-    * id-ordered pairs, the shared integer half-up ROUND ratio.
+    * pairs them on the grid [[graft.plans.DensePairsExec]] sizes from the
+    * aggregate's row count, unless `pinned` fixes it. The symmetric test
+    * and value replicate [[verifyJaccard]]'s exactly: c > 0 ∧
+    * c/(na+nb−c) ≥ t on the same IEEE doubles, id-ordered pairs, the
+    * shared integer half-up ROUND ratio.
     *
     * Scale: per-task memory is 2·(N/B)·⌈U/8⌉ bytes by construction (the
     * grid's memory floor), so "bigger corpus" becomes "more cells", the
@@ -869,27 +869,30 @@ object DedupOps {
   def connectedComponents(pairs: DataFrame): DataFrame = components(pairs, None)
 
   /** `df`'s LONG columns, row after row, or None when it has more than
-    * `max` rows with no null field (a row with one is skipped). One job
-    * over all of `df`'s partitions, each task shipping at most max + 1
-    * rows, and the driver keeps at most 2·max + 1 of them: a LIMIT collect
-    * would run a job per round of partitions, and coalescing to one
-    * partition would run the upstream stage as one task.
+    * `max` rows with no null field (a row with one is skipped) or one of
+    * its P partitions holds more than s = ⌈2·max/P⌉: a task ships its rows
+    * only when they number at most s, so the driver receives at most
+    * 2·max + P rows in one job (a LIMIT collect runs a job per round of
+    * partitions; coalescing runs the upstream stage as one task).
     */
   private def collectAtMost(df: DataFrame, max: Int): Option[Array[Long]] = {
-    val width = df.schema.length
-    val parts = df.queryExecution.toRdd.mapPartitions { rows =>
+    val (width, rdd) = (df.schema.length, df.queryExecution.toRdd)
+    val p = rdd.getNumPartitions.max(1)
+    val share = math.min(max, (2L * max + p - 1) / p).toInt
+    val parts = rdd.mapPartitions { rows =>
       val out = Array.newBuilder[Long]
       var n = 0
-      while (n <= max && rows.hasNext) {
+      while (n <= share && rows.hasNext) {
         val r = rows.next()
         if (!r.anyNull) { (0 until width).foreach(c => out += r.getLong(c)); n += 1 }
       }
-      Iterator.single(out.result())
+      Iterator.single(Option.when(n <= share)(out.result()))
     }
     val kept = Array.newBuilder[Long]
     var n = 0L
-    df.sparkSession.sparkContext.runJob(parts, (it: Iterator[Array[Long]]) => it.next(),
-      (_: Int, part: Array[Long]) => if (n <= max) { kept ++= part; n += part.length / width })
+    df.sparkSession.sparkContext.runJob(parts, (it: Iterator[Option[Array[Long]]]) => it.next(),
+      (_: Int, part: Option[Array[Long]]) =>
+        if (n <= max) n = part.fold(max + 1L) { r => kept ++= r; n + r.length / width })
     Option.when(n <= max)(kept.result())
   }
 

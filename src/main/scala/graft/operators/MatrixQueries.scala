@@ -187,11 +187,11 @@ object MatrixQueries {
     // M9 — ingest the reference's ACTUAL storage format (dense JSON
     // array-of-arrays, orchestrator/main.py:58-64) and multiply; the
     // fixtures hold exactly the formula matrices, so the result shares
-    // the mm50 oracle.
+    // the mm50 oracle. The path is relative: runs start in the checkout.
     Gate("m9_dense_json_io", (s, _) =>
       MatrixOps.multiplyPlanned(
-        graft.sources.MatrixIO.readDenseJson(s, graft.sources.MatrixIO.fixture("matrix_A_50x50.json")),
-        graft.sources.MatrixIO.readDenseJson(s, graft.sources.MatrixIO.fixture("matrix_B_50x50.json")))
+        graft.sources.MatrixIO.readDenseJson(s, "fixtures/matrix_A_50x50.json"),
+        graft.sources.MatrixIO.readDenseJson(s, "fixtures/matrix_B_50x50.json"))
         .orderBy("i", "k"),
       mm50))
 }

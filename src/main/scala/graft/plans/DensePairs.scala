@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.LongType
 /** Logical exact near-dup pair join over per-document code lists `(id
   * LONG, codes ARRAY<LONG>)`, each list distinct and drawn from the
   * ascending code index `codes`: a document is the bitset of its codes'
-  * index positions, [[words]] 64-bit words wide. Every pair whose
+  * index positions, ⌈|codes|/64⌉ 64-bit words wide. Every pair whose
   * intersection passes the test comes out once as `(ida, idb, c, den)`:
   * c = |x∩y|, den the ratio's denominator. `symmetric` tests Jaccard
   * c/(na+nb−c) ≥ `threshold` (den = |x∪y|, ids ordered); otherwise
@@ -28,7 +28,6 @@ case class DensePairs(child: LogicalPlan, codes: Array[Long], t: Long, threshold
                       symmetric: Boolean, pinned: Option[Int] = None,
                       output: Seq[Attribute] = Seq("ida", "idb", "c", "den")
                         .map(AttributeReference(_, LongType)())) extends UnaryNode {
-  def words: Int = ((codes.length + 63) / 64).max(1)
   override def producedAttributes: AttributeSet = outputSet
   override def references: AttributeSet = child.outputSet
   override protected def withNewChildInternal(newChild: LogicalPlan): DensePairs =
@@ -50,15 +49,25 @@ case class DensePairs(child: LogicalPlan, codes: Array[Long], t: Long, threshold
   *      and verification are the same exact pass, so there is no candidate
   *      blow-up and no second join.
   * A cell holds 2·(N/grid) rows, so per-task memory is bounded by the
-  * grid's memory floor and a bigger corpus becomes more cells. `rows` is
-  * the measured row count the grid came from, shown in the plan string.
+  * grid's memory floor and a bigger corpus becomes more cells. The grid
+  * is `pinned` or sized from `rows`, the row count AQE measured; a node
+  * planned with neither (adaptive execution off, or an input that needed
+  * no exchange) counts its input's rows when it runs, one job, so the
+  * memory floor holds on every route.
   */
 case class DensePairsExec(child: SparkPlan, output: Seq[Attribute], codes: Array[Long],
                           t: Long, threshold: Double, symmetric: Boolean,
-                          grid: Int, rows: Option[Long]) extends UnaryExecNode {
-  require(grid >= 1, s"dense pair grid must be at least 1, got $grid")
+                          pinned: Option[Int], rows: Option[Long]) extends UnaryExecNode {
+  require(pinned.forall(_ >= 1), s"dense pair grid must be at least 1, got $pinned")
 
-  def cells: Int = grid * (grid + 1) / 2
+  /** The grid the plan knows: pinned, or sized from the measured rows. */
+  def grid: Option[Int] = pinned.orElse(rows.map(sized))
+
+  private def sized(n: Long): Int =
+    DensePairsExec.grid(n, ((codes.length + 63) / 64).max(1), sparkContext.defaultParallelism)
+
+  /** The planned grid's cell count, 0 while the grid is unknown. */
+  def cells: Int = grid.fold(0)(g => g * (g + 1) / 2)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "pairs out"),
@@ -68,14 +77,16 @@ case class DensePairsExec(child: SparkPlan, output: Seq[Attribute], codes: Array
   override def outputPartitioning: Partitioning = UnknownPartitioning(cells)
 
   override def simpleString(maxFields: Int): String =
-    s"$nodeName grid=$grid cells=$cells codes=${codes.length} rows=${rows.fold("?")(_.toString)}"
+    s"$nodeName grid=${grid.getOrElse("?")} cells=$cells codes=${codes.length} rows=${rows.getOrElse("?")}"
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val (b, codes, t, threshold, symmetric) = (grid, this.codes, this.t, this.threshold, this.symmetric)
+    val (codes, t, threshold, symmetric) = (this.codes, this.t, this.threshold, this.symmetric)
+    val in = child.execute()
+    val b = grid.getOrElse(sized(in.count()))
     val (cellCount, kernelTime, pairsOut) =
       (longMetric("cells"), longMetric("kernelTime"), longMetric("numOutputRows"))
-    child.execute().mapPartitions(_.flatMap(DensePairsExec.ship(_, codes, b)))
-      .partitionBy(new HashPartitioner(cells))
+    in.mapPartitions(_.flatMap(DensePairsExec.ship(_, codes, b)))
+      .partitionBy(new HashPartitioner(b * (b + 1) / 2))
       .mapPartitionsWithIndex { (part, it) =>
         cellCount += 1
         DensePairsExec.pairs(part, it, b, t, threshold, symmetric, kernelTime, pairsOut)

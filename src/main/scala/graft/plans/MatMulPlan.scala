@@ -112,9 +112,9 @@ object MatMulReassociate
   *
   * It also plans the product's second kernel, [[DensePairs]], as
   * [[DensePairsExec]]. Its grid needs the row count, which only exists
-  * once the per-document aggregate's stage has run, so the first plan
-  * takes one cell and AQE's re-plan after that stage sizes the grid. A
-  * run without adaptive execution keeps the one cell.
+  * once the per-document aggregate's stage has run, so AQE's re-plan
+  * after that stage sizes the grid; with no such stage the node counts
+  * its rows when it runs.
   */
 class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -134,16 +134,13 @@ class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
           planLater(joined) :: Nil
       }
     case d: DensePairs =>
-      // The rows under the node as AQE measured them: the records its first
-      // finished stage, the per-document aggregate's shuffle, wrote. Its
-      // partial-aggregate records bound the row count from above.
+      // The rows AQE measured under the node: the per-document aggregate's
+      // shuffle records, whose partial aggregates bound the rows from above.
       val rows = d.child.collectFirst {
         case s: LogicalQueryStage if s.isMaterialized => s.stats.rowCount
       }.flatten.map(_.toLong)
-      val grid = d.pinned.getOrElse(DensePairsExec.grid(rows.getOrElse(0L), d.words,
-        spark.sparkContext.defaultParallelism))
       DensePairsExec(planLater(d.child), d.output, d.codes, d.t, d.threshold,
-        d.symmetric, grid, rows) :: Nil
+        d.symmetric, d.pinned, rows) :: Nil
     case _ => Nil
   }
 

@@ -21,17 +21,6 @@ object MatrixIO {
 
   private val denseSchema = ArrayType(ArrayType(LongType))
 
-  /** Path of `fixtures/<name>` in the checkout these classes were built
-    * from: the nearest directory above their class files or jar that
-    * holds it, else the working directory's `fixtures/`.
-    */
-  def fixture(name: String): String = {
-    val code = java.nio.file.Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-    Iterator.iterate(code)(_.getParent).takeWhile(_ != null)
-      .map(_.resolve("fixtures").resolve(name)).find(java.nio.file.Files.exists(_))
-      .getOrElse(java.nio.file.Paths.get("fixtures", name)).toString
-  }
-
   /** Dense JSON array-of-arrays file → COO DataFrame (i, j, v). */
   def readDenseJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("wholetext", "true").text(path)

@@ -163,6 +163,37 @@ class GraphPropSpec extends SparkSpec {
     }
   }
 
+  test("an over-cap pair graph on many partitions takes the distributed route, shipping O(cap) rows") {
+    // 64 partitions of 500 pairs each against a cap of 1 000 pairs: each
+    // partition fits the cap alone, but the driver must receive at most
+    // 2·cap + 64 rows (16 bytes each, plus each task result's framing, its
+    // metric updates: ~1.3 KB), not 500 from every partition (all 32 000
+    // pairs, 512 KB).
+    val key = "spark.graft.cc.localMaxRows"
+    val pairs = spark.sparkContext.parallelize(0L until 32000L, 64)
+      .map(i => (2 * i, 2 * i + 1)).toDF("da", "db")
+    val collectStages = new java.util.concurrent.atomic.AtomicReference[Set[Int]]
+    val shipped = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        collectStages.compareAndSet(null, e.stageIds.toSet)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (Option(collectStages.get).exists(_(e.stageId)) && e.taskMetrics != null)
+          shipped.addAndGet(e.taskMetrics.resultSize)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (out, _) = try jobsOf(Engine.withConf(spark, key -> "2000") {
+      val df = DedupOps.connectedComponents(pairs)
+      (df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
+    }) finally spark.sparkContext.removeSparkListener(listener)
+    assert(!out._1, "32 000 pairs over a 1 000-pair cap must route distributed")
+    assert(out._2 == (0L until 64000L).map(v => v -> (v & ~1L)).toMap)
+    assert(shipped.get > 0 && shipped.get <= 16L * (2 * 1000 + 64) + 64 * 2048,
+      s"the collect shipped ${shipped.get} bytes")
+  }
+
   test("connectedComponents walks CYCLIC graphs (the sql8 recursion boundary)") {
     // sql8's WITH RECURSIVE is UNION ALL-only in the pinned Spark (the
     // 4.1.2 parser raises UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), so a

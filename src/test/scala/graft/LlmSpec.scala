@@ -929,8 +929,8 @@ class LlmSpec extends SparkSpec {
       val nodes = densePairsNodes(run.count())
       nodes.foreach { d =>
         assert(d.metrics("cells").value == d.cells, d.simpleString(10))
-        assert(d.rows.exists(_ >= 500) && d.grid == graft.plans.DensePairsExec.grid(
-          d.rows.get, (d.codes.length + 63) / 64, spark.sparkContext.defaultParallelism),
+        assert(d.rows.exists(_ >= 500) && d.grid.contains(graft.plans.DensePairsExec.grid(
+          d.rows.get, (d.codes.length + 63) / 64, spark.sparkContext.defaultParallelism)),
           d.simpleString(10))
       }
       nodes.nonEmpty
@@ -963,6 +963,32 @@ class LlmSpec extends SparkSpec {
     assert(memB > 3)
   }
 
+  test("densePairs with no measured stage counts its rows for the grid") {
+    // With adaptive execution off no finished stage under the node holds
+    // its row count, so the node counts its input when it runs and still
+    // takes the cost function's grid: 800 docs of 16 384-code bitsets are
+    // work enough for the 4-slot width's 3×3 grid, not one cell. Pairs
+    // (doc d duplicates doc d + 400) match the adaptive run's.
+    val sh = spark.range(800).select(col("id").as("doc_id"))
+      .withColumn("k", explode(sequence(lit(0L), lit(39L))))
+      .select(col("doc_id"), (((col("doc_id") % 400) * 7919 + col("k") * 104729) % 16384).as("code"))
+      .distinct().persist()
+    try {
+      val codes = DedupOps.denseCodeIndex(sh, 16384)
+      def run() = canonPairs(DedupOps.densePairs(sh, 0L, 0.9, codes, symmetric = true))
+      val adaptive = run()
+      assert(adaptive.size == 400)
+      val g = graft.plans.DensePairsExec.grid(800, (codes.length + 63) / 64,
+        spark.sparkContext.defaultParallelism)
+      assert(g == 3)
+      Engine.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+        val nodes = densePairsNodes(assert(run() == adaptive))
+        assert(nodes.map(d => (d.grid, d.rows, d.metrics("cells").value)) ==
+          Seq((None, None, g * (g + 1) / 2L)), nodes.map(_.simpleString(10)))
+      }
+    } finally sh.unpersist()
+  }
+
   test("densePairs runs each grid cell as its own task") {
     // The cell exchange has one partition per cell and is an RDD shuffle,
     // which AQE never coalesces: a grid of B blocks per axis must run its
@@ -975,7 +1001,7 @@ class LlmSpec extends SparkSpec {
       Seq(1, 3, 5).foreach { g =>
         val nodes = densePairsNodes(
           DedupOps.densePairs(sh, 0L, 0.5, codes, symmetric = true, pinned = Some(g)))
-        assert(nodes.map(_.grid) == Seq(g), s"grid $g")
+        assert(nodes.map(_.grid) == Seq(Some(g)), s"grid $g")
         assert(nodes.map(_.metrics("cells").value) == Seq(g * (g + 1) / 2L), s"grid $g")
       }
     } finally sh.unpersist()

@@ -148,7 +148,7 @@ class MatrixSpec extends SparkSpec {
     }
     // and the fixture files parse to the formula matrices
     val fx = graft.sources.MatrixIO.readDenseJson(
-      spark, graft.sources.MatrixIO.fixture("matrix_A_50x50.json"))
+      spark, "fixtures/matrix_A_50x50.json")
     assert(toMap(fx) == toMap(matA(50, 50)))
   }
 }
