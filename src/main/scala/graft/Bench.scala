@@ -54,10 +54,12 @@ object Bench {
     val loadStart = load1()
 
     // Matrix scaling sweep, mirroring the reference's size sweep, every
-    // rung through the PLANNER-selected node (m12's MatMulStrategy): its
-    // cost statistics flip row-join → block-GEMM between 200² and 400²,
-    // and on the block route it derives the tile layout
-    // ([[graft.plans.BlockShape.choose]]) from the same statistics. The sweep
+    // rung through the PLANNER-selected node (m12's MatMulStrategy): from
+    // the operands' exact dimensions it keeps the row join at 50² and
+    // flips to block-GEMM from 100² up, where the row join's own m·n·p
+    // intermediate no longer fits the broadcast threshold, and on the
+    // block route it derives the tile layout
+    // ([[graft.plans.BlockShape.choose]]) from the same dimensions. The sweep
     // records the chosen path's wall-clock where the reference's own
     // baseline stops at 200² = 46.1 s (BASELINE.md). Strategy choice per
     // size is pinned by MatMulPlanSpec; here the numbers show the chosen

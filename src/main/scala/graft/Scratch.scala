@@ -13,20 +13,32 @@ import org.apache.spark.sql.DataFrame
   * two JVMs over one fixture off each other's files, and no other process
   * reads them, so an exit hook deletes both of this JVM's roots. A JVM
   * killed before its hook ran leaves its roots behind; the first use of
-  * this object in any later JVM sweeps the roots whose process is gone.
+  * this object in any later JVM sweeps the roots whose process is gone,
+  * and the pid-tagged table directories builds before this object left
+  * in the temp dir.
   */
 object Scratch {
 
+  private val tmp = new File(System.getProperty("java.io.tmpdir"))
   private val bases: Seq[File] =
-    (new File(System.getProperty("java.io.tmpdir")) +:
-      Some(new File("/dev/shm")).filter(_.isDirectory).toSeq)
+    (tmp +: Some(new File("/dev/shm")).filter(_.isDirectory).toSeq)
       .map(new File(_, "graft-scratch"))
 
   private val scope = s"jvm-${ProcessHandle.current().pid()}"
   private val disk = new File(bases.head, scope)
   private val tmpfs = new File(bases.last, scope)
 
-  sweep(bases)
+  /** A JVM root under a base: `jvm-<pid>`. */
+  private val Root = """jvm-(\d+)""".r
+
+  /** A table directory sql18 and sql21 wrote to the temp dir before this
+    * object existed: `graft_ctas-<fixture hash>p<pid>`, `graft_part-…`,
+    * both in hex. Those with fixed names (`graft-layout`, `graft-io`, …)
+    * carry no pid to tell a live owner from a dead one, and stay.
+    */
+  private val OldTable = """graft_(?:ctas|part)-\p{XDigit}+p(\p{XDigit}+)""".r
+
+  sweep(bases, tmp)
   sys.addShutdownHook(Seq(disk, tmpfs).foreach(f => delete(f.toPath)))
 
   /** A stable directory for `kind` and `key` (a fixture dir, a corpus
@@ -71,14 +83,20 @@ object Scratch {
     delete(staging)
   }
 
-  /** Deletes the `jvm-<pid>` roots under each base whose process is gone.
-    * Live processes' roots, this JVM's among them, and entries that are not
-    * a JVM root stay.
+  /** Deletes the `jvm-<pid>` roots under each base, and the [[OldTable]]
+    * directories under `tmp`, whose process is gone. Live processes'
+    * entries, this JVM's among them, and other entries stay.
     */
-  private[graft] def sweep(bases: Seq[File]): Unit =
-    bases.flatMap(b => Option(b.listFiles()).toSeq.flatten).foreach { d =>
-      val pid = Some(d.getName).filter(_.startsWith("jvm-"))
-        .flatMap(_.stripPrefix("jvm-").toLongOption)
-      if (pid.exists(ProcessHandle.of(_).isEmpty)) delete(d.toPath)
-    }
+  private[graft] def sweep(bases: Seq[File], tmp: File): Unit = {
+    def entries(d: File) = Option(d.listFiles()).toSeq.flatten
+    def gone(pid: String, radix: Int) =
+      pid.length <= 15 && ProcessHandle.of(java.lang.Long.parseLong(pid, radix)).isEmpty
+    (bases.flatMap(entries).filter(_.getName match {
+      case Root(pid) => gone(pid, 10)
+      case _ => false
+    }) ++ entries(tmp).filter(_.getName match {
+      case OldTable(pid) => gone(pid, 16)
+      case _ => false
+    })).foreach(d => delete(d.toPath))
+  }
 }

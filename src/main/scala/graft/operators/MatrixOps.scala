@@ -217,14 +217,16 @@ object MatrixOps {
   * formula over the cell coordinates: v = (i·fa + j·fb + fc) mod m.
   */
 object MatrixGen {
+  /** The `rows`×`cols` matrix, one row per cell (exact zeros included).
+    * Its plan is one leaf ([[graft.plans.FormulaMatrix]]) that reports the
+    * exact shape to the planner and runs as a single `range` of rows·cols
+    * cell ids projected to i = id div cols and j = id mod cols: one
+    * codegen'd stage, no join.
+    */
   def formula(spark: SparkSession, rows: Long, cols: Long,
-              fa: Long, fb: Long, fc: Long, mod: Long): DataFrame = {
-    val i = spark.range(rows).select(col("id").as("i"))
-    val j = spark.range(cols).select(col("id").as("j"))
-    i.crossJoin(j)
-      .select(col("i"), col("j"),
-        ((col("i") * fa + col("j") * fb + fc) % mod).as("v"))
-  }
+              fa: Long, fb: Long, fc: Long, mod: Long): DataFrame =
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      graft.plans.FormulaMatrix.node(rows, cols, fa, fb, fc, mod))
 
   /** A-side standard test matrix (values 0..96, contains exact zeros). */
   def matA(spark: SparkSession, rows: Long, cols: Long): DataFrame =

@@ -34,15 +34,16 @@ final case class BlockShape(bs: Int, p: Int, q: Int, r: Int, budget: Long) {
 
 object BlockShape {
 
-  /** Widest tile. Past ~2 MB the kernel's streamed B tile falls out of
-    * per-core cache. 4000² through `MatrixOps.blockMatmul` on a 4-core
-    * AVX-512 host (`local[4]`, P = Q = 2, R = 1, warm ops of two JVMs
-    * each) ran in 5.4–7.3 s at bs = 256 (`kernelTime` 13.8–18.8 CPU-s),
-    * 8.2–10.8 s at 512 (21.9–27.5) and 9.1–10.8 s at 1024 (24.9–31.5).
-    * The cap stays at 512 until a narrower width is measured end to end
-    * as a layout change of its own.
+  /** Widest tile. A 256-wide B tile (512 KB) stays in per-core cache
+    * while the kernel streams it; a 512-wide one (2 MB) does not. Through
+    * `MatrixOps.blockMatmul` on a 4-core AVX-512 host (`local[4]`,
+    * P = Q = 2, R = 1, warm ops), bs = 256 against 512 ran 1000² in
+    * 0.247 s against 0.282 s (0.43 against 0.52 CPU-s), 2000² in 0.855 s
+    * against 0.941 s, and 4000² in 5.4–7.3 s against 8.2–10.8 s
+    * (`kernelTime` 13.8–18.8 against 21.9–27.5 CPU-s); 1024 ran 4000² in
+    * 9.1–10.8 s.
     */
-  val MaxTile = 512
+  val MaxTile = 256
 
   /** Most keys one multiply may run as tasks. */
   private val MaxKeys = 1 << 20

@@ -3,8 +3,11 @@ package graft.plans
 import graft.operators.MatrixOps
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, LogicalQueryStage, Project}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, AttributeMap, AttributeReference, Cast, IntegralDivide, Literal, Multiply, Remainder}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, ColumnStat, LeafNode, LogicalPlan, LogicalQueryStage, Project, Range, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.LongType
@@ -45,6 +48,15 @@ case class MatMul(left: LogicalPlan, right: LogicalPlan,
   // strategy then fails to resolve (i, j, v) against.
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(left.output ++ right.output)
+  /** With both operands' exact dimensions ([[MatMul.dims]]), the product's
+    * own: rows(A)×cols(B), every cell counted, as a dense product fills
+    * them. So a chain's outer node sees the inner product's true shape.
+    * Otherwise Catalyst's default for a binary node.
+    */
+  override def stats: Statistics = (MatMul.dims(left), MatMul.dims(right)) match {
+    case (Some((rows, _, _)), Some((_, cols, _))) => MatMul.exactStats(output, rows, cols)
+    case _ => super.stats
+  }
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): MatMul =
     copy(left = newLeft, right = newRight)
@@ -60,16 +72,83 @@ object MatMul {
     */
   def node(left: LogicalPlan, right: LogicalPlan,
            pinned: Option[BlockShape] = None): MatMul =
-    MatMul(left, right, Seq(
-      AttributeReference("i", LongType)(),
-      AttributeReference("j", LongType)(),
-      AttributeReference("v", LongType)()), pinned)
+    MatMul(left, right, coo(), pinned)
+
+  /** Fresh `(i, j, v)` LONG attributes. */
+  private[plans] def coo(): Seq[Attribute] = Seq("i", "j", "v").map(AttributeReference(_, LongType)())
+
+  /** (rows, cols, nnz) of COO plan `p` when its statistics give them: a
+    * row count (nnz, counting zero and repeated cells) and non-negative
+    * min/max for its `i` and `j` columns, rows = max(i) + 1 and cols =
+    * max(j) + 1. [[FormulaMatrix]] and a MatMul over two such operands
+    * report them; a file source or a filtered operand does not.
+    */
+  private[plans] def dims(p: LogicalPlan): Option[(Long, Long, Long)] = {
+    val s = p.stats
+    val resolver = SQLConf.get.resolver
+    def extent(name: String): Option[Long] =
+      p.output.find(a => resolver(a.name, name)).flatMap(s.attributeStats.get)
+        .flatMap(c => (c.min, c.max) match {
+          case (Some(lo: java.lang.Number), Some(hi: java.lang.Number))
+              if lo.longValue >= 0 && hi.longValue < Long.MaxValue => Some(hi.longValue + 1)
+          case _ => None
+        })
+    for (n <- s.rowCount if n.isValidLong; r <- extent("i"); c <- extent("j"))
+      yield (r, c, n.toLong)
+  }
+
+  /** Exact statistics of a dense `rows`×`cols` COO matrix over `output`
+    * (i, j, v): a row per cell, i over [0, rows), j over [0, cols).
+    */
+  private[plans] def exactStats(output: Seq[Attribute], rows: Long, cols: Long): Statistics = {
+    val cells = BigInt(rows) * cols
+    def extent(n: Long) = ColumnStat(distinctCount = Some(BigInt(n)), min = Some(0L),
+      max = Some(n - 1), nullCount = Some(BigInt(0)))
+    Statistics(EstimationUtils.getOutputSize(output, cells), Some(cells),
+      if (cells == 0) AttributeMap.empty[ColumnStat]
+      else AttributeMap(Seq(output(0) -> extent(rows), output(1) -> extent(cols))))
+  }
+}
+
+/** The leaf [[graft.operators.MatrixGen.formula]] builds: the `rows`×`cols`
+  * COO matrix v = (i·fa + j·fb + fc) mod `mod` over every cell. It reports
+  * exact statistics ([[MatMul.exactStats]]), the shape [[MatMulStrategy]]
+  * plans a product from, and is planned as [[expand]].
+  */
+case class FormulaMatrix(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long,
+                         mod: Long, output: Seq[Attribute])
+    extends LeafNode with MultiInstanceRelation {
+  require(rows >= 0 && cols >= 0, s"a matrix needs rows, cols ≥ 0, got $rows×$cols")
+  private val cells = Math.multiplyExact(rows, cols)
+
+  override def newInstance(): FormulaMatrix = copy(output = output.map(_.newInstance()))
+  override def computeStats(): Statistics = MatMul.exactStats(output, rows, cols)
+
+  /** One range of rows·cols cell ids projected to i = id div cols, j = id
+    * mod cols and v, under this node's attribute ids: one codegen'd stage.
+    */
+  def expand: LogicalPlan = {
+    val range = Range(0, cells, 1, None)
+    val id = range.output.head
+    val i = IntegralDivide(id, Literal(cols))
+    val j = Remainder(id, Literal(cols))
+    val v = Remainder(Add(Add(Multiply(i, Literal(fa)), Multiply(j, Literal(fb))),
+      Literal(fc)), Literal(mod))
+    Project(Seq(i, j, v).zip(output).map { case (e, a) =>
+      Alias(e, a.name)(exprId = a.exprId)
+    }, range)
+  }
+}
+
+object FormulaMatrix {
+  def node(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long, mod: Long): FormulaMatrix =
+    FormulaMatrix(rows, cols, fa, fb, fc, mod, MatMul.coo())
 }
 
 /** Optimizer rule: reassociate LEFT-DEEP MatMul chains toward the cheaper
   * association — the matrix-chain-ordering decision, made from Catalyst
-  * cost statistics the way join reorder is. Model: a MatMul's default
-  * size estimate is the product of its children's (`BinaryNode` fallback),
+  * cost statistics the way join reorder is. Model: a product costs the
+  * product of its operands' sizes (Catalyst's default for a binary node),
   * under which the two associations of `(A·B)·C` share the `sA·sB·sC`
   * term and differ by `sA·sB` (left-deep) vs `sB·sC` (right-deep) — so
   * rotate right exactly when C is smaller than A (the small operand
@@ -89,14 +168,14 @@ object MatMulReassociate
   }
 }
 
-/** Plans [[MatMul]]: if either operand's estimated size fits the broadcast
-  * threshold, the row-level join+aggregate wins (the join becomes a
-  * broadcast hash join — no shuffle on the contraction index, and the
-  * block route's tile shuffles would be pure overhead). Otherwise both
-  * sides are big: the block route, [[BlockMatMulExec]], returned directly
-  * as the physical node over the planned children, with the layout
-  * [[BlockShape.choose]] derives from the same size statistics. Its
-  * shuffle volume is O(tiles) rather than the dense row join's
+/** Plans [[MatMul]]: the row-level join+aggregate wins while one operand
+  * fits the broadcast threshold and so does the join's own intermediate
+  * (the join becomes a broadcast hash join — no shuffle on the
+  * contraction index, and the block route's tile shuffles would be pure
+  * overhead). Otherwise the block route, [[BlockMatMulExec]], returned
+  * directly as the physical node over the planned children, with the
+  * layout [[BlockShape.choose]] derives from the operands' dimensions.
+  * Its shuffle volume is O(tiles) rather than the dense row join's
   * |A⋈B| = m·n·p intermediate.
   *
   * AQE plans the node once up front and again after every query stage
@@ -114,7 +193,8 @@ object MatMulReassociate
   * [[DensePairsExec]]. Its grid needs the row count, which only exists
   * once the per-document aggregate's stage has run, so AQE's re-plan
   * after that stage sizes the grid; with no such stage the node counts
-  * its rows when it runs.
+  * its rows when it runs. And it plans the generated operand leaf,
+  * [[FormulaMatrix]], as the range projection it stands for.
   */
 class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -141,6 +221,7 @@ class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
       }.flatten.map(_.toLong)
       DensePairsExec(planLater(d.child), d.output, d.codes, d.t, d.threshold,
         d.symmetric, d.pinned, rows) :: Nil
+    case g: FormulaMatrix => planLater(g.expand) :: Nil
     case _ => Nil
   }
 
@@ -176,41 +257,73 @@ object MatMulStrategy {
   private val rowJoinTag =
     TreeNodeTag[(LogicalPlan, LogicalPlan, LogicalPlan)]("graft.matmul.rowJoin")
 
-  /** Last block-route decision `(nnz estimate, derived n, bs)`, kept for
-    * the benchmark harness. The planned [[BlockMatMulExec]] carries the
-    * whole layout; read it there.
+  /** Last block-route decision `(nnz, n, bs)`: the larger operand's cell
+    * count, its largest dimension (the true one when the operands report
+    * exact dimensions) and the tile width. Kept for the benchmark harness;
+    * the planned [[BlockMatMulExec]] carries the whole layout.
     */
   @volatile var lastDerived: Option[(BigInt, Long, Int)] = None
 
-  /** The block route's layout for `m`, or None when a side fits the
-    * broadcast threshold and the row join wins.
+  /** Catalyst's size of a row of three longs. */
+  private val RowBytes = 32
+
+  /** A product's operand shapes: A `rows`×`inner` with `nnzA` cells, B
+    * `inner`×`cols` with `nnzB`.
+    */
+  private case class Operands(rows: Long, inner: Long, cols: Long, nnzA: Long, nnzB: Long) {
+    /** Rows the row join's contraction join produces: each of A's cells
+      * meets B's row of its column, nnzB / inner cells on average.
+      */
+    def joinRows: Double = nnzA.toDouble * nnzB / inner.max(1L)
+  }
+
+  /** The operands' exact shapes ([[MatMul.dims]]), when both report them. */
+  private def exact(left: LogicalPlan, right: LogicalPlan): Option[Operands] =
+    for ((rows, ka, nnzA) <- MatMul.dims(left); (kb, cols, nnzB) <- MatMul.dims(right))
+      yield Operands(rows, ka.max(kb), cols, nnzA, nnzB)
+
+  /** Without exact shapes, each operand is read as a dense n×n matrix of
+    * sizeInBytes / 32 cells, n from the larger. Catalyst's estimate runs
+    * high through joins and low through projections of a range, so this
+    * only sizes the layout; a split sized for a wrong grid leaves some
+    * keys without tiles or tiles narrower than they could be.
+    */
+  private def squareModel(left: LogicalPlan, right: LogicalPlan): Operands = {
+    def cells(p: LogicalPlan): Long =
+      (p.stats.sizeInBytes / RowBytes).max(BigInt(1)).min(BigInt(Long.MaxValue)).toLong
+    val (nnzA, nnzB) = (cells(left), cells(right))
+    val n = math.sqrt(nnzA.max(nnzB).toDouble).toLong.max(1L)
+    Operands(n, n, n, nnzA, nnzB)
+  }
+
+  /** The block route's layout for `m`, or None when the row join wins: a
+    * side fits the broadcast threshold and so does the join's own
+    * intermediate, [[Operands.joinRows]] at 32 bytes a row. Under the
+    * default 10 MB threshold dense operands fail the second test from 70²
+    * up; warm on `local[4]` the block route ran 400² in 0.25 s against
+    * the row join's 1.80 s, and 700² in 0.30 s against 7.17 s. The
+    * intermediate needs the operands' exact shapes; without them (a file
+    * source, a filtered operand) the side sizes decide alone, since the
+    * square model would take a sparse operand for a dense one.
     */
   private def blockShape(spark: SparkSession, m: MatMul): Option[BlockShape] = {
     val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val minSide = m.left.stats.sizeInBytes.min(m.right.stats.sizeInBytes)
-    if (bcThreshold > 0 && minSide <= bcThreshold) None
+    def joinFits = exact(m.left, m.right).forall(_.joinRows * RowBytes <= bcThreshold)
+    if (bcThreshold > 0 && minSide <= bcThreshold && joinFits) None
     else Some(choose(m.left, m.right, spark.sparkContext.defaultParallelism,
       BlockShape.taskBudget(spark)))
   }
 
-  /** [[BlockShape.choose]] over the operands' size statistics: each is
-    * read as a dense n×n COO matrix of sizeInBytes / 32 cells (3 longs +
-    * row overhead, Catalyst's own size model for this schema), n from the
-    * larger. The estimate runs high for range-generated operands: n =
-    * 653, 1632, 3265 and 6531 for a true 400, 1000, 2000 and 4000. Tiles
-    * stay ≤ 512 wide either way, and a split sized for the estimated grid
-    * only leaves some keys without tiles.
+  /** [[BlockShape.choose]] over the operands' exact shapes, or the square
+    * model's when they do not report them.
     */
   private def choose(left: LogicalPlan, right: LogicalPlan, parallelism: Int,
                      budget: Long): BlockShape = {
-    val rowBytes = 32
-    def cells(p: LogicalPlan): BigInt = (p.stats.sizeInBytes / rowBytes).max(BigInt(1))
-    def clamp(x: BigInt): Long = x.min(BigInt(Long.MaxValue)).toLong
-    val nnz = cells(left).max(cells(right))
-    val n = math.sqrt(clamp(nnz).toDouble).toLong.max(1L)
-    val shape = BlockShape.choose(n, n, n, clamp(cells(left)), clamp(cells(right)),
+    val o = exact(left, right).getOrElse(squareModel(left, right))
+    val shape = BlockShape.choose(o.rows, o.inner, o.cols, o.nnzA, o.nnzB,
       parallelism, budget)
-    lastDerived = Some((nnz, n, shape.bs))
+    lastDerived = Some((BigInt(o.nnzA.max(o.nnzB)), o.rows.max(o.inner).max(o.cols), shape.bs))
     shape
   }
 

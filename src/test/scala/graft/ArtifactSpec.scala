@@ -117,11 +117,32 @@ class ArtifactSpec extends SparkSpec {
         val own = trees(s"jvm-${ProcessHandle.current().pid()}")
         val live = trees("jvm-1")
         val other = trees("not-a-jvm-tree")
-        Scratch.sweep(bases)
+        Scratch.sweep(bases, tmpfs.resolve("no-old-tables").toFile)
         assert(!dead.exists(_.exists()), "a dead JVM's tree must be swept")
         assert((own ++ live ++ other).forall(_.exists()),
           "live JVMs' trees and non-JVM entries must stay")
       }
+    }
+  }
+
+  test("the sweep deletes pid-tagged table dirs from before Scratch whose JVM is gone") {
+    // sql18 and sql21 once wrote `graft_ctas-<hash>p<pid>` and
+    // `graft_part-<hash>p<pid>` (both hex) straight into the temp dir.
+    // A `jvm-<pid>` entry there is not ours, and fixed-name directories
+    // carry no pid: both stay.
+    Scratch.using("sweep-old") { tmp =>
+      def dir(name: String): java.io.File = {
+        val f = tmp.resolve(name).toFile
+        new java.io.File(f, "part-00000.parquet").mkdirs()
+        f
+      }
+      val own = java.lang.Long.toHexString(ProcessHandle.current().pid())
+      val dead = Seq(dir("graft_ctas-1a2b3cp3b9aca00"), dir("graft_part-7f00p3b9aca00"))
+      val kept = Seq(dir(s"graft_ctas-1a2b3cp$own"), dir("graft_part-7f00p1"),
+        dir("jvm-1000000000"), dir("graft-layout"), dir("graft_ctas-notapid"))
+      Scratch.sweep(Nil, tmp.toFile)
+      assert(!dead.exists(_.exists()), "a dead JVM's table dirs must be swept")
+      assert(kept.forall(_.exists()), s"kept: ${kept.filterNot(_.exists())}")
     }
   }
 

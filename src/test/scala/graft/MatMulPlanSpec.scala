@@ -111,34 +111,54 @@ class MatMulPlanSpec extends SparkSpec {
 
   test("cost statistics flip the physical path across the m1 size sweep") {
     // Planning only (no execution): MatMulStrategy decides from the
-    // children's size estimates, before AQE ever runs — so the choice is
-    // visible in the initial physical plan.
-    def shapesFor(n: Int) = blockShapes(MatrixOps.multiplyPlanned(
-      MatrixGen.matA(spark, n, n), MatrixGen.matB(spark, n, n)))
-    // 50²: COO estimate ~0.2 MB — a broadcastable side, row join.
-    assert(shapesFor(50).isEmpty, "50² should plan as the broadcast row join")
-    // 1000²/2000² (the bench's m1_sweep_1000/2000 rungs): estimates
-    // (~64 MB / ~256 MB) clear the broadcast threshold on BOTH sides, so
-    // the strategy flips to the block operator — the dense-operand shape
-    // whose row join would shuffle m·n·p rows.
-    assert(shapesFor(1000).size == 1, "1000² should plan as block GEMM")
-    assert(shapesFor(2000).size == 1, "2000² should plan as block GEMM")
+    // children's statistics, before AQE ever runs, so the choice is
+    // visible in the initial physical plan. Generated operands report
+    // their exact shapes, so the row join's own intermediate, nnzA·nnzB /
+    // inner rows at 32 B, is priced: under the default 10 MB threshold it
+    // fits at 50² (125k rows, 4 MB) and not from 70² up, where the block
+    // route won every measured rung.
+    def shapesFor(m: Int, k: Int, n: Int) = blockShapes(MatrixOps.multiplyPlanned(
+      MatrixGen.matA(spark, m, k), MatrixGen.matB(spark, k, n)))
+    Seq(100, 200, 400, 700, 1000, 2000).foreach { n =>
+      assert(shapesFor(n, n, n).size == 1, s"$n² should plan as block GEMM")
+    }
+    assert(shapesFor(50, 50, 50).isEmpty, "50² should plan as the broadcast row join")
+    assert(shapesFor(40, 30, 20).isEmpty, "40×30·30×20 should plan as the broadcast row join")
+    // m13's chain: both nodes, the inner 50²·50×10 product and the outer
+    // one over it, keep the row join.
+    val chain = MatrixOps.multiplyPlannedChain(MatrixGen.matA(spark, 50, 50),
+      MatrixGen.matB(spark, 50, 50), MatrixGen.matB(spark, 50, 10))
+    assert(chain.queryExecution.optimizedPlan.collect { case m: graft.plans.MatMul => m }.size == 2)
+    assert(blockShapes(chain).isEmpty, "m13's chain should plan as two row joins")
+    // A sparse 10,000² operand with 20k scattered nonzeros, built from
+    // `spark.range`, reports no exact shape: its 0.6 MB side fits the
+    // threshold alone, and the row join stays.
+    import org.apache.spark.sql.functions.col
+    def sparse(seed: Long) = spark.range(20000).select(
+      (col("id") * 7919L % 10000L).as("i"),
+      ((col("id") * 104729L + seed) % 10000L).as("j"),
+      (col("id") % 97L + 1L).as("v"))
+    assert(blockShapes(MatrixOps.multiplyPlanned(sparse(1), sparse(2))).isEmpty,
+      "a sparse 10,000² product should plan as the broadcast row join")
   }
 
   test("the planner derives the block tile width from operand statistics") {
-    // The layout is BlockShape.choose's, over the SAME size statistics the
-    // broadcast decision reads, and the planned node carries it. The
-    // pinned values encode Catalyst's size model for the crossJoin-of-
-    // ranges COO children (nnz ≈ sizeInBytes/32 ⇒ n ≈ 2.3× the true n) —
-    // if the size model shifts across Spark versions, this spec is MEANT
-    // to flag it.
-    import graft.plans.BlockShape
+    // Generated operands report their exact dimensions (rows·cols rows,
+    // i and j ranges) in Catalyst's statistics, so the layout is
+    // BlockShape.choose over the true (rows, inner, cols, nnz), the planned
+    // node carries it, and lastDerived records the true largest dimension.
+    import graft.plans.{BlockShape, MatMulStrategy}
     val cores = spark.sparkContext.defaultParallelism
     val budget = BlockShape.taskBudget(spark)
-    def shapeFor(n: Int): BlockShape = {
-      val Seq(shape) = blockShapes(MatrixOps.multiplyPlanned(
-        MatrixGen.matA(spark, n, n), MatrixGen.matB(spark, n, n)))
-      shape
+    def product(m: Long, k: Long, n: Long) =
+      MatrixOps.multiplyPlanned(MatrixGen.matA(spark, m, k), MatrixGen.matB(spark, k, n))
+    Seq((400L, 400L, 400L), (1000L, 1000L, 1000L), (4000L, 4000L, 4000L),
+        (300L, 700L, 200L)).foreach { case (m, k, n) =>
+      val Seq(shape) = blockShapes(product(m, k, n))
+      assert(shape == BlockShape.choose(m, k, n, m * k, k * n, cores, budget),
+        s"${m}×${k}·${k}×${n}: $shape")
+      assert(MatMulStrategy.lastDerived.map(_._2).contains(Seq(m, k, n).max),
+        s"${m}×${k}·${k}×${n}: ${MatMulStrategy.lastDerived}")
     }
     /** Bytes of tiles one key holds on an n×n product under `s`. */
     def keyBytes(s: BlockShape, n: Long): Long = {
@@ -146,20 +166,43 @@ class MatMulPlanSpec extends SparkSpec {
       val k = g(s.r)
       (g(s.p) * k + k * g(s.q) + 1) * s.bs.toLong * s.bs * 8
     }
-    // 1000² (estimated n = 2309): the widest tile, one key per core as a
-    // 2×2 output split, and no partial-tile reduce.
-    val s1 = shapeFor(1000)
-    assert(s1.bs == BlockShape.MaxTile && s1.r == 1 && s1.p == s1.q &&
-      s1.keys >= cores && s1.budget == budget, s"1000²: $s1")
     // 4000² and 8000²: bs stays at the cap however large the operands
     // get; the grid widens instead, and each key's tiles stay under the
     // per-task bound.
     Seq(4000, 8000).foreach { n =>
-      val s = shapeFor(n)
+      val Seq(s) = blockShapes(product(n, n, n))
       assert(s.bs == BlockShape.MaxTile && s.keys >= cores, s"$n²: $s")
       assert(keyBytes(s, n) <= budget,
         s"$n²: $s holds ${keyBytes(s, n)} B per key, budget $budget")
     }
+  }
+
+  test("every key of a planned 400² product receives tiles") {
+    // Sized from the true 400² grid, the split never reaches past it, so
+    // each key's task reads tiles (an A and a B tile at least); sized
+    // from a guessed n of 653, three of four keys read none.
+    val read = new java.util.concurrent.ConcurrentHashMap[Int, java.util.List[Long]]()
+    val gemmStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "BlockMatMul gemm"))
+          gemmStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        read.computeIfAbsent(e.stageId, _ => new java.util.concurrent.CopyOnWriteArrayList[Long]())
+          .add(e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    val df = MatrixOps.multiplyPlanned(MatrixGen.matA(spark, 400, 400), MatrixGen.matB(spark, 400, 400))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      df.queryExecution.toRdd.foreach(_ => ())
+      val Seq(shape) = blockShapes(df)
+      import scala.jdk.CollectionConverters._
+      def perKey = gemmStages.asScala.toSeq.flatMap(s => Option(read.get(s)).toSeq.flatMap(_.asScala))
+      awaitUntil(() => perKey.size == shape.keys)
+      assert(shape.keys >= 2 && perKey.size == shape.keys, s"$shape: $perKey")
+      assert(perKey.forall(_ >= 2), s"$shape: a key read at most one tile: $perKey")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("the densify buffer stays within its bound on a scattered 4000² operand") {

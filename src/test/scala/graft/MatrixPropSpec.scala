@@ -72,6 +72,32 @@ class MatrixPropSpec extends SparkSpec {
     assert(rows(MatrixOps.blockMatmul(a, b, 3, 2, 1, 4, 1L)) == want)
   }
 
+  test("the one-range generator equals the crossJoin-of-ranges formulation row for row") {
+    // MatrixGen.formula runs one range of rows·cols cell ids; the
+    // formulation it replaced crossed a range of rows with a range of
+    // cols. Shapes include empty, 1×n and n×1 ones; coefficients include
+    // negative ones, whose remainders keep the dividend's sign.
+    import org.apache.spark.sql.functions.col
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    def crossed(m: Long, n: Long, fa: Long, fb: Long, fc: Long, mod: Long) =
+      spark.range(m).select(col("id").as("i"))
+        .crossJoin(spark.range(n).select(col("id").as("j")))
+        .select(col("i"), col("j"), ((col("i") * fa + col("j") * fb + fc) % mod).as("v"))
+    def same(m: Long, n: Long, fa: Long, fb: Long, fc: Long, mod: Long): Boolean = {
+      val got = MatrixGen.formula(spark, m, n, fa, fb, fc, mod)
+      got.columns.toSeq == Seq("i", "j", "v") &&
+        rows(got) == rows(crossed(m, n, fa, fb, fc, mod))
+    }
+    Seq((1L, 37L), (37L, 1L), (1L, 1L), (0L, 5L)).foreach { case (m, n) =>
+      assert(same(m, n, 7, -3, 5, 11), s"$m×$n")
+    }
+    val side = Gen.frequency(1 -> Gen.const(1L), 4 -> Gen.choose(2L, 40L))
+    val coef = Gen.choose(-50L, 100L)
+    check(Prop.forAllNoShrink(side, side, coef, coef, coef, Gen.choose(1L, 101L))(same),
+      cases = 12)
+  }
+
   test("multiplyPlanned adds duplicate cells on both routes") {
     // Two COO entries at one (i, j) stand for their sum. The row join
     // sums their products; the block route must add them as it

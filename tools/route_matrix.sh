@@ -3,8 +3,10 @@
 # (sf0.001 takes about 10 min on 4 cores) once per forced side of a
 # measured route switch, each against the same DuckDB oracles:
 #   default    every gate on the routes its inputs select
-#   m-nobcast  the matrix gates (m<N>_*) with broadcast off, so every
-#              planner-selected multiply takes the block operator
+#   m-nobcast  the matrix gates (m<N>_*, at most 50², where the row join
+#              stays by default) with broadcast off, so every
+#              planner-selected multiply, m13's two included, takes the
+#              block operator
 #   sparse     every gate with the near-dup dense kernel off
 #              (spark.graft.dedup.denseUniverseMax=0)
 #   local-off  every gate with the driver-local cc union-find and sql8
