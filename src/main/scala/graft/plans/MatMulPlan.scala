@@ -4,12 +4,16 @@ import graft.operators.MatrixOps
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, AttributeMap, AttributeReference, Cast, IntegralDivide, Literal, Multiply, Remainder}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Ascending, Attribute, AttributeMap, AttributeReference, Cast, IntegralDivide, KnownNotNull, Literal, Multiply, Remainder, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, ColumnStat, LeafNode, LogicalPlan, LogicalQueryStage, Project, Range, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
 /** Logical matrix-multiply operator: `C = A · B` over COO children with
@@ -113,7 +117,8 @@ object MatMul {
 /** The leaf [[graft.operators.MatrixGen.formula]] builds: the `rows`×`cols`
   * COO matrix v = (i·fa + j·fb + fc) mod `mod` over every cell. It reports
   * exact statistics ([[MatMul.exactStats]]), the shape [[MatMulStrategy]]
-  * plans a product from, and is planned as [[expand]].
+  * plans a product from, and is planned as [[expand]] under
+  * [[FormulaMatrixExec]].
   */
 case class FormulaMatrix(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long,
                          mod: Long, output: Seq[Attribute])
@@ -130,8 +135,8 @@ case class FormulaMatrix(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long,
   def expand: LogicalPlan = {
     val range = Range(0, cells, 1, None)
     val id = range.output.head
-    val i = IntegralDivide(id, Literal(cols))
-    val j = Remainder(id, Literal(cols))
+    val i = KnownNotNull(IntegralDivide(id, Literal(cols)))
+    val j = KnownNotNull(Remainder(id, Literal(cols)))
     val v = Remainder(Add(Add(Multiply(i, Literal(fa)), Multiply(j, Literal(fb))),
       Literal(fc)), Literal(mod))
     Project(Seq(i, j, v).zip(output).map { case (e, a) =>
@@ -141,18 +146,59 @@ case class FormulaMatrix(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long,
 }
 
 object FormulaMatrix {
+  /** i and j are never null, as over a range's `id`: without that,
+    * Catalyst infers `isnotnull` filters on them from each join that uses
+    * them, and two uses of one operand no longer share an exchange.
+    */
   def node(rows: Long, cols: Long, fa: Long, fb: Long, fc: Long, mod: Long): FormulaMatrix =
-    FormulaMatrix(rows, cols, fa, fb, fc, mod, MatMul.coo())
+    FormulaMatrix(rows, cols, fa, fb, fc, mod, MatMul.coo().zipWithIndex.map {
+      case (a, c) => if (c < 2) a.withNullability(false) else a
+    })
+}
+
+/** The physical [[FormulaMatrix]]: its planned [[FormulaMatrix.expand]]
+  * (a projection over a range), with the order Spark cannot see through
+  * i = id div cols, j = id mod cols. Cell ids ascend within each range
+  * slice and from one slice to the next, and so does (i, j): the rows come
+  * out sorted by (i, j) and range-partitioned on it, and an `orderBy("i",
+  * "j")` over a generated matrix needs no exchange, no sampling job and no
+  * sort. The node adds no code to its codegen stage.
+  */
+case class FormulaMatrixExec(child: SparkPlan, cells: Long)
+    extends UnaryExecNode with CodegenSupport {
+  override def output: Seq[Attribute] = child.output
+  private def order: Seq[SortOrder] = output.take(2).map(SortOrder(_, Ascending))
+  override def outputOrdering: Seq[SortOrder] = order
+  override def outputPartitioning: Partitioning = child.outputPartitioning.numPartitions match {
+    case n if cells == 0 || n < 1 => child.outputPartitioning
+    case 1 => SinglePartition
+    case n => RangePartitioning(order, n)
+  }
+
+  private def codegenChild = child.asInstanceOf[CodegenSupport]
+  override def inputRDDs(): Seq[RDD[InternalRow]] = codegenChild.inputRDDs()
+  override protected def doProduce(ctx: CodegenContext): String = codegenChild.produce(ctx, this)
+  override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String =
+    consume(ctx, input)
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def withNewChildInternal(newChild: SparkPlan): FormulaMatrixExec =
+    copy(child = newChild)
 }
 
 /** Optimizer rule: reassociate LEFT-DEEP MatMul chains toward the cheaper
   * association — the matrix-chain-ordering decision, made from Catalyst
   * cost statistics the way join reorder is. Model: a product costs the
-  * product of its operands' sizes (Catalyst's default for a binary node),
-  * under which the two associations of `(A·B)·C` share the `sA·sB·sC`
-  * term and differ by `sA·sB` (left-deep) vs `sB·sC` (right-deep) — so
-  * rotate right exactly when C is smaller than A (the small operand
-  * belongs innermost, where it contracts the big ones early). Each
+  * product of its operands' sizes, under which the two associations of
+  * `(A·B)·C` share the `sA·sB·sC` term and differ by `sA·sB` (left-deep)
+  * vs `sB·sC` (right-deep) — so rotate right exactly when C is smaller
+  * than A (the small operand belongs innermost, where it contracts the big
+  * ones early). sA and sC are the operands' `sizeInBytes`. For a leaf
+  * that is its own statistic; when A is itself a product (a longer chain)
+  * it is [[MatMul.stats]]: the dense rows×cols size when both of A's
+  * operands report exact dimensions, else Catalyst's default for a binary
+  * node, the product of its operands' sizes. The shared-term argument is
+  * exact for leaf operands; over an inner product it holds only as far
+  * as that reported size stands for the product's cost. Each
   * rotation strictly shortens the left spine, so the fixed-point batch
   * terminates; a rotated plan no longer matches the pattern. The top
   * node keeps its attribute ids (parents resolve against them); the new
@@ -194,7 +240,8 @@ object MatMulReassociate
   * once the per-document aggregate's stage has run, so AQE's re-plan
   * after that stage sizes the grid; with no such stage the node counts
   * its rows when it runs. And it plans the generated operand leaf,
-  * [[FormulaMatrix]], as the range projection it stands for.
+  * [[FormulaMatrix]], as the range projection it stands for
+  * ([[FormulaMatrixExec]]).
   */
 class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -221,7 +268,8 @@ class MatMulStrategy(spark: SparkSession) extends SparkStrategy {
       }.flatten.map(_.toLong)
       DensePairsExec(planLater(d.child), d.output, d.codes, d.t, d.threshold,
         d.symmetric, d.pinned, rows) :: Nil
-    case g: FormulaMatrix => planLater(g.expand) :: Nil
+    case g: FormulaMatrix =>
+      FormulaMatrixExec(planLater(g.expand), Math.multiplyExact(g.rows, g.cols)) :: Nil
     case _ => Nil
   }
 

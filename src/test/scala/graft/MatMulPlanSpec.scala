@@ -166,6 +166,11 @@ class MatMulPlanSpec extends SparkSpec {
       val k = g(s.r)
       (g(s.p) * k + k * g(s.q) + 1) * s.bs.toLong * s.bs * 8
     }
+    // 1000² (a 4×4 grid of 256-wide tiles): the widest tile, one key per
+    // core as a 2×2 output split, and no partial-tile reduce.
+    val Seq(s1) = blockShapes(product(1000, 1000, 1000))
+    assert(s1.bs == BlockShape.MaxTile && s1.r == 1 && s1.p == s1.q &&
+      s1.keys >= cores && s1.budget == budget, s"1000²: $s1")
     // 4000² and 8000²: bs stays at the cap however large the operands
     // get; the grid widens instead, and each key's tiles stay under the
     // per-task bound.
@@ -174,6 +179,20 @@ class MatMulPlanSpec extends SparkSpec {
       assert(s.bs == BlockShape.MaxTile && s.keys >= cores, s"$n²: $s")
       assert(keyBytes(s, n) <= budget,
         s"$n²: $s holds ${keyBytes(s, n)} B per key, budget $budget")
+    }
+  }
+
+  test("an orderBy(i, j) over a generated matrix plans no exchange and no sort") {
+    // The generated leaf comes out in (i, j) order, range-partitioned on
+    // it, and says so; the order must hold row for row.
+    Seq((50L, 50L), (37L, 1L), (1L, 37L), (1L, 1L)).foreach { case (r, c) =>
+      val df = MatrixGen.matA(spark, r, c).orderBy("i", "j")
+      val plan = executedPlan(df)
+      Seq("Exchange", "Sort").foreach { n =>
+        assert(!plan.contains(n), s"$n over a sorted ${r}×$c operand:\n$plan")
+      }
+      val rows = df.collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
+      assert(rows == (for (i <- 0L until r; j <- 0L until c) yield (i, j)), s"${r}×$c")
     }
   }
 
